@@ -9,8 +9,11 @@
 # Usage: scripts/preflight.sh [--full]
 #   default : compile main + test sources (fast, ~10 s warm) — the minimum
 #             bar for ANY commit.
-#   --full  : also run the whole ScalaTest suite and the sf0.01 oracle
-#             check — the bar for end-of-round snapshots.
+#   --full  : also run the whole ScalaTest suite, the sf0.01 oracle
+#             check and the benchmark self-test — the bar for end-of-round
+#             snapshots. The benchmark (perfbench/) is its own sbt build
+#             that the root build does not compile, so its self-test is
+#             what catches a library change that breaks its calls.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -21,6 +24,7 @@ if [[ "${1:-}" == "--full" ]]; then
   rm -rf /tmp/preflight_vout
   sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/preflight_vout"
   python3 scripts/check_oracle.py /root/testdata/sf0.01 /tmp/preflight_vout
+  python3 perfbench/run.py --selftest
 fi
 
 echo "preflight OK"

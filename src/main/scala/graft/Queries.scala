@@ -1716,18 +1716,15 @@ object Queries {
       .orderBy("query_id")
   }
 
-  /** Persisted flat-PQ index ([[Similarity.pqBuild]] +
-    * [[Similarity.pqProbeTopK]]): the layout that closes PQ's
-    * bytes-scanned loop — narrow codes relation for the exhaustive ADC
-    * scan, id-bucketed vectors relation so the exact re-rank is a
-    * statically partition-pruned point lookup of the shortlist's buckets
-    * instead of a second full scan (end-to-end bytes 0.24× of the brute
-    * leg at 1M vectors, SCALEPROBE `pq_bytes_end_to_end`). Contract:
-    * pq_topk's bounded assertions PLUS a plan assertion that the re-rank
-    * touched fewer buckets than the index holds — all engine-verified
-    * booleans DuckDB expects true. Row-parity with the inline
-    * [[Similarity.pqTopK]] plan (same seed → same model → identical
-    * rows) is property-pinned in `SimilaritySpec` rather than re-run
+  /** Persisted ANN index ([[Similarity.ivfPqBuild]] +
+    * [[Similarity.ivfPqProbeTopK]]): the probe opens only the probed
+    * cells' directories — the ADC leg reads their codes column, the
+    * exact re-rank their vectors for the shortlist alone. Contract:
+    * pq_topk's bounded assertions PLUS a plan assertion that the
+    * re-rank scan read fewer `__cell` directories than the index holds —
+    * all engine-verified booleans DuckDB expects true. Row parity with
+    * the inline [[Similarity.ivfPqTopK]] plan (same seed → same model →
+    * identical rows) is pinned in `SimilaritySpec` rather than re-run
     * here: the inline leg re-trains the whole model, doubling the
     * query's cost for a check the spec already holds. */
   private def pqIndexTopKQ(s: SparkSession, dir: String): DataFrame = {
@@ -1735,31 +1732,28 @@ object Queries {
     val queries = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding"))
     val corpus = emb.filter(col("vec_id") >= 5)
-    // 256 id-buckets: enough spread that the 5 queries' shortlists
-    // (≤400 ids, 201 distinct buckets measured — deterministic, the
-    // bucket is a hash of fixed ids) stay well under the bucket count,
-    // without 512 dirs' worth of tiny-file write overhead at this SF.
     // Built ONCE per JVM (fixed seed): the timed query is the PROBE —
     // the steady state a persisted index exists for, amortized over
-    // thousands of probes at scale; build walls live in SCALEPROBE
-    // `pq_bytes_end_to_end`
+    // thousands of probes at scale
     val path = fixtureRoot("pqidx", dir) { r =>
-      Similarity.pqBuild(corpus.select("vec_id", "embedding"), "embedding",
-        "vec_id", r, m = 16, ksub = 16, idBuckets = 256)
+      Similarity.ivfPqBuild(corpus.select("vec_id", "embedding"),
+        "embedding", r, nCells = PqIndexCells, m = 16, ksub = 16)
     }
-    val approx = Similarity.pqProbeTopK(s, path, queries, "embedding",
-      "vec_id", "query_id", k = 10, shortlistFactor = 8)
-    // plan assertion: the re-rank scan partition-pruned to fewer buckets
-    // than the index holds (per meta — cheaper than re-listing the
-    // vectors relation, and touched < declared implies touched < present)
-    val vecScans = approx.queryExecution.sparkPlan.collect {
+    val approx = Similarity.ivfPqProbeTopK(s, path, queries, "embedding",
+      "vec_id", "query_id", k = 10, nProbe = PqIndexProbe,
+      shortlistFactor = 8)
+    // plan assertion: the re-rank scan (the one reading the vectors)
+    // partition-pruned to fewer cells than the index holds
+    val rerankScans = approx.queryExecution.sparkPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec
-        if f.metadata.get("PartitionFilters").exists(_.contains("__vb")) =>
+        if f.metadata.get("PartitionFilters").exists(_.contains("__cell")) &&
+          f.output.exists(_.name == "embedding") =>
         f.selectedPartitions.partitionCount
     }
-    val total = s.read.parquet(s"$path/meta")
-      .select("id_buckets").collect()(0).getInt(0)
-    val pruned = vecScans.size == 1 && vecScans.head < total
+    val dataDir = new org.apache.hadoop.fs.Path(s"$path/data")
+    val held = dataDir.getFileSystem(s.sessionState.newHadoopConf())
+      .listStatus(dataDir).count(_.getPath.getName.startsWith("__cell="))
+    val pruned = rerankScans.size == 1 && rerankScans.head < held
     val exactTop = Similarity.bruteForceTopK(corpus, queries, "embedding",
         "vec_id", "query_id", k = 10)
       .select(col("query_id"), col("vec_id"), lit(true).as("__in_exact"))
@@ -1785,21 +1779,29 @@ object Queries {
       .orderBy("query_id")
   }
 
-  /** Recall-CALIBRATED flat-PQ probing —
-    * [[Similarity.pqShortlistForRecall]] measures the index's own
-    * recall-vs-shortlist-width curve from one bounded self-sample (exact
-    * ground truth + each true neighbor's exact ADC shortlist rank) and
-    * persists the smallest width meeting the target, which then becomes
-    * [[Similarity.pqProbeTopK]]'s DEFAULT — the
-    * [[Similarity.nProbeForRecall]] contract extended to the PQ family
-    * (the r16-measured gap: maintenance rebuilds restored quantization
-    * quality but recall stayed at widths tuned for the old corpus).
-    * Contract booleans, all DuckDB-expected true: the calibration
-    * persisted a usable width (nprobe 0 — flat-PQ probes no cells — and
-    * factor ≥ 1); the calibrator's own on-sample measured recall met the
-    * target (read back from its pqcal.json artifact); the sentinel-0
-    * default probe returns EXACTLY the explicit calibrated width's rows;
-    * probes stay full-k with exact re-ranked cosines. */
+  /** Cell count and probe width of the persisted-index contract queries
+    * (`pq_index_topk`, `ann_index_delete`; `pq_calibrated_topk` builds
+    * with the same cell count and calibrates its own widths). Measured
+    * (fixed seed — deterministic): the 5 queries' probed cells cover 29
+    * of 32 at sf0.01 and 30 at sf0.1, so the re-rank scan is pruned, and
+    * every query clears the recall floor of 6 (minimum 7 at sf0.01, 6 at
+    * sf0.1). The synthetic embeddings have no cluster structure, so
+    * partial probes need a wide probe fraction to hold that floor. */
+  private val PqIndexCells = 32
+  private val PqIndexProbe = 14
+
+  /** Recall-CALIBRATED probing — [[Similarity.ivfPqCalibrate]] measures
+    * the index's own recall over the (nProbe, shortlist) width plane from
+    * one bounded self-sample (exact ground truth + each true neighbor's
+    * cell rank and ADC shortlist rank) and persists the smallest widths
+    * meeting the target, which then become
+    * [[Similarity.ivfPqProbeTopK]]'s DEFAULTS. Contract booleans, all
+    * DuckDB-expected true: the calibration persisted usable widths
+    * (nprobe ≥ 1 and factor ≥ 1); the calibrator's own on-sample
+    * measured recall met the target (read back from its pqcal.json
+    * artifact); the default probe returns EXACTLY the explicit
+    * calibrated widths' rows; probes stay full-k with exact re-ranked
+    * cosines. */
   private def pqCalibratedTopKQ(s: SparkSession, dir: String): DataFrame = {
     val emb = tab(s, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < 5)
@@ -1809,23 +1811,14 @@ object Queries {
     // built + calibrated ONCE per JVM (fixed seed → deterministic
     // widths); the timed query is the calibrated-default PROBE
     val path = fixtureRoot("pqcal", dir) { r =>
-      Similarity.pqBuild(corpus.select("vec_id", "embedding"), "embedding",
-        "vec_id", r, m = 16, ksub = 16, idBuckets = 256)
-      Similarity.pqShortlistForRecall(s, r, "embedding", "vec_id", target,
-        k = 10)
+      Similarity.ivfPqBuild(corpus.select("vec_id", "embedding"),
+        "embedding", r, nCells = PqIndexCells, m = 16, ksub = 16)
+      Similarity.ivfPqCalibrate(s, r, "embedding", "vec_id", target, k = 10)
       ()
     }
-    // ONE set of model/meta/codes/cal/generation loads shared by the
-    // contract's calibration checks AND both probe constructions below
-    // (guide §6 + §1.2 — previously each probe paid its own codebook +
-    // meta reads and a full-tree codes open, and the calibration was read
-    // a third time here). A local of THIS construction, inside the timed
-    // region — never a cross-run cache; each probe still re-checks the
-    // generation post-plan.
-    val st = Similarity.pqProbeState(s, path)
-    val cal = st.cal
-    val factor = cal.map(_._2).getOrElse(0)
-    val calibrated = cal.exists(_._1 == 0) && factor >= 1
+    val (nProbe, factor) =
+      Similarity.calibratedPqWidths(s, path).getOrElse((0, 0))
+    val calibrated = nProbe >= 1 && factor >= 1
     val measuredOk = {
       val p = java.nio.file.Paths.get(path, "pqcal.json")
       java.nio.file.Files.exists(p) && {
@@ -1834,12 +1827,9 @@ object Queries {
           .flatMap(_.group(1).toDoubleOption).exists(_ >= target)
       }
     }
-    // The probes below share `st` but stay fully independent otherwise:
-    // each computes its own ADC shortlist, so the default-vs-explicit
-    // comparison verifies exactly what it did before.
     // materialized once (tiny: 5 queries × k rows): both the
     // default-is-calibrated comparison and the final contract plan read it
-    val viaDefault = Similarity.pqProbeTopKFrom(st, s, path, queries,
+    val viaDefault = Similarity.ivfPqProbeTopK(s, path, queries,
       "embedding", "vec_id", "query_id", k = 10).localCheckpoint(true)
     def rowSet(df: DataFrame) = df
       .select(col("query_id").cast("long"), col("vec_id").cast("long"),
@@ -1848,8 +1838,9 @@ object Queries {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
       .toSet
     val defaultIsCalibrated = rowSet(viaDefault) == rowSet(
-      Similarity.pqProbeTopKFrom(st, s, path, queries, "embedding",
-        "vec_id", "query_id", k = 10, shortlistFactor = math.max(1, factor)))
+      Similarity.ivfPqProbeTopK(s, path, queries, "embedding", "vec_id",
+        "query_id", k = 10, nProbe = math.max(1, nProbe),
+        shortlistFactor = math.max(1, factor)))
     val qv = queries.select(col("query_id").cast("long").as("query_id"),
       col("embedding").as("__qv"), V.norm(col("embedding")).as("__qn"))
     val allScores = corpus
@@ -1873,18 +1864,17 @@ object Queries {
   }
 
   /** Index opt-out deletion ([[Similarity.indexDelete]]) — the
-    * right-to-be-forgotten primitive for the serving indexes: deleting a
+    * right-to-be-forgotten primitive for the serving index: deleting a
     * user from the corpus store does nothing to the copies their vectors
     * an index holds, and maintenance rebuilds re-encode the index's OWN
     * rows, so without this the opted-out vectors stay retrievable
-    * forever. The deletion is bounded (hash-derived vector buckets +
-    * file-granular codes rewrite on flat-PQ — never a full rewrite;
-    * structural no-untouched-bucket-rewritten assertion in
-    * `SimilaritySpec`). Contract: `n_after` is an ENGINE-INDEPENDENT
-    * exact count DuckDB recomputes from the victim predicate
-    * (`vec_id % 7 = 3` — deterministic, no hash family involved); the
-    * booleans are engine-verified (codes and vectors agree, no victim
-    * row survives either relation, probes still serve full k). */
+    * forever. The deletion is bounded (only the victims' cells are
+    * rewritten — structural assertion in `SimilaritySpec`). Contract:
+    * `n_after` is an ENGINE-INDEPENDENT exact count DuckDB recomputes
+    * from the victim predicate (`vec_id % 7 = 3` — deterministic, no
+    * hash family involved); the booleans are engine-verified (every
+    * survivor still carries its codes, no victim row survives, probes
+    * still serve full k). */
   private def annIndexDeleteQ(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = tab(s, dir, "embeddings")
@@ -1893,40 +1883,25 @@ object Queries {
     // read state (counts + a probe), deterministic across passes because
     // replaying a delete of absent ids is a no-op
     val path = fixtureRoot("idxdel", dir) { r =>
-      Similarity.pqBuild(corpus.select("vec_id", "embedding"), "embedding",
-        "vec_id", r, m = 16, ksub = 16, idBuckets = 256)
+      Similarity.ivfPqBuild(corpus.select("vec_id", "embedding"),
+        "embedding", r, nCells = PqIndexCells, m = 16, ksub = 16)
       Similarity.indexDelete(s, r,
         corpus.filter(col("vec_id") % 7 === 3).select("vec_id"),
         idCol = "vec_id")
       ()
     }
-    // one aggregation pass per relation (total + victim counts together)
-    // instead of two counts each: halves the reads — and for the
-    // directory-partitioned vectors relation each read pays a
-    // bucket-count directory listing before any byte is scanned
-    // (guide §6), so fewer reads is the lever here
-    def totalAndVictims(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)),
-        count(when(col("vec_id") % 7 === 3, 1))).head
-      (r.getLong(0), r.getLong(1))
-    }
-    // list the 256 bucket dirs driver-side instead of in a 256-task
-    // discovery job (bounded path set; private cloned session so the
-    // caller's threshold is untouched — the probe-side rationale in
-    // Similarity.pqProbeTopK)
-    val lister = org.apache.spark.sql.graftbridge.Bridge.cloneSession(s)
-    lister.conf.set(
-      "spark.sql.sources.parallelPartitionDiscovery.threshold", "16384")
-    val (nAfter, vecVictims) =
-      totalAndVictims(lister.read.parquet(s"$path/vectors"))
-    val (nCodes, codeVictims) =
-      totalAndVictims(lister.read.parquet(s"$path/codes"))
-    val codesMatch = nCodes == nAfter
-    val victimsGone = vecVictims == 0L && codeVictims == 0L
+    // one aggregation pass: total, surviving victims and code-less rows
+    val counts = s.read.parquet(s"$path/data").agg(count(lit(1)),
+      count(when(col("vec_id") % 7 === 3, 1)),
+      count(when(col("__codes").isNull, 1))).head
+    val nAfter = counts.getLong(0)
+    val victimsGone = counts.getLong(1) == 0L
+    val codesMatch = counts.getLong(2) == 0L
     val queries = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding"))
-    val probeFullK = Similarity.pqProbeTopK(s, path, queries, "embedding",
-        "vec_id", "query_id", k = 10, shortlistFactor = 8)
+    val probeFullK = Similarity.ivfPqProbeTopK(s, path, queries,
+        "embedding", "vec_id", "query_id", k = 10, nProbe = PqIndexProbe,
+        shortlistFactor = 8)
       .groupBy("query_id").count()
       .filter(col("count") =!= 10).count() == 0L
     Seq((nAfter, codesMatch, victimsGone, probeFullK))

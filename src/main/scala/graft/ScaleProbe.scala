@@ -5,16 +5,12 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Joins, Packing, Similarity}
 
-/** Scale probe for the exact pair-join variants (dev tool, not part of the
-  * driver contract): measures, on a corpus N× the largest local fixture,
-  * the default single-pass string-keyed inverted-index join against the
-  * opt-in two-phase hashed-candidate tail (`hashedCandidates = true`).
-  *
-  * The claim under test: the two-phase path exchanges 8-byte xxhash64 keys
-  * instead of shingle strings, which should start paying once the corpus —
-  * and so the shuffle — is large enough that key width dominates; at sf0.1
-  * it LOSES (the re-explode/re-join second pass costs more than the
-  * narrower keys save, measured every round since it landed). No sf1
+/** Scale probes (dev tool, not part of the Verify/Bench contract): each named
+  * probe measures one operator family on manufactured volume. The first,
+  * `pair_join_scale`, measures the pair-join strategies on a corpus N×
+  * the largest local fixture: the exact single-pass string-keyed
+  * inverted-index join, the MinHash prefilter, and the stats-gated
+  * `auto` choice between them. No sf1
   * fixture exists, so this probe manufactures scale: `SCALE` replicas of
   * the sf0.1 documents, each with a per-replica letter rotation
   * (`translate`) so replica shingle sets are disjoint — the pair structure
@@ -78,7 +74,7 @@ object ScaleProbe {
     // Probe selection (comma list): re-run one probe and merge its entry
     // into SCALEPROBE.json without paying for the others.
     val probes = sys.env.getOrElse("SPARK_GRAFT_PROBES",
-        "pair_join_scale,clusters_chain,ann_scale,ivf_recall_curve,ivf_maintain,ivf_autotune,pq_drift,asof_skew,skew_autostrategy,asof_merge_scale,cdf_scale,delete_scale,asof_enrich_stream,sessionize_stream,snapshot_cluster,zorder_cluster,zorder_drift,zorder_maintain,zorder_gauge,pq_crossover,pq_bytes,pq_bytes_end_to_end,line_dedup_scale,bpe_train,embcos_scale,semdedup_scale,minhash_planted_scale,packing_skew,image_dedup_scale,shared_spans_scale,events_scale,charlm_scale,heavy_hitters_scale,incremental_dedup_scale,index_delete_scale")
+        "pair_join_scale,clusters_chain,ann_scale,ivf_recall_curve,ivf_maintain,ivf_autotune,pq_drift,asof_skew,skew_autostrategy,asof_merge_scale,cdf_scale,delete_scale,asof_enrich_stream,sessionize_stream,snapshot_cluster,zorder_cluster,zorder_drift,zorder_maintain,zorder_gauge,pq_crossover,pq_bytes,line_dedup_scale,bpe_train,embcos_scale,semdedup_scale,minhash_planted_scale,packing_skew,image_dedup_scale,shared_spans_scale,events_scale,charlm_scale,heavy_hitters_scale,incremental_dedup_scale,index_delete_scale")
       .split(",").map(_.trim).filter(_.nonEmpty).toSet
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -113,15 +109,9 @@ object ScaleProbe {
       "ngram_single" -> (() => Dedup.ngramJaccardPairs(
         corpus, "text", "doc_id", shingleSize = 3, threshold = 0.1,
         strategy = "single").count()),
-      "ngram_hashed" -> (() => Dedup.ngramJaccardPairs(
-        corpus, "text", "doc_id", shingleSize = 3, threshold = 0.1,
-        strategy = "hashed").count()),
       "chargram_single" -> (() => Dedup.charJaccardPairs(
         corpus, "text", "doc_id", shingleSize = 12, threshold = 0.3,
         maxDf = 50L * scale, strategy = "single").count()),
-      "chargram_hashed" -> (() => Dedup.charJaccardPairs(
-        corpus, "text", "doc_id", shingleSize = 12, threshold = 0.3,
-        maxDf = 50L * scale, strategy = "hashed").count()),
       // MinHash prefilter → exact verify: corpus-linear candidate
       // generation instead of the |shared shingles|-bound self-join;
       // recall is probabilistic (r=2, b=64 → ~0.998 per pair at j=0.3)
@@ -210,10 +200,11 @@ object ScaleProbe {
 
     if (probes("ann_scale")) {
     // ANN probe at SCALE×: per-query-batch cost of brute force (scores
-    // every corpus row) vs a PERSISTED IVF index (ivfBuild once — paid
-    // separately and reported as build_sec — then ivfProbeTopK reads only
-    // the probed ~nProbe/nCells of the data via static partition pruning
-    // and reuses persisted norms). The INLINE ivfTopK is deliberately not
+    // every corpus row) vs the PERSISTED index (ivfPqBuild once — paid
+    // separately and reported as index_build_sec — then ivfPqProbeTopK
+    // reads only the probed ~nProbe/nCells of the data via static
+    // partition pruning, ADC-scores their codes and re-ranks the
+    // shortlist with persisted norms). The INLINE ivfTopK is deliberately not
     // the variant here: its per-call cell assignment does nCells dot
     // products per corpus row, which can never beat a 20-query brute pass
     // (20 < nCells) — the amortized index is the actual scale path.
@@ -240,10 +231,11 @@ object ScaleProbe {
     val nProbe = math.max(1, cells / 8)
     val tBuild = System.nanoTime()
     // pass the pre-computed cell count: the label and the built index then
-    // agree by construction, and ivfBuild skips its own corpus count
-    Similarity.ivfBuild(annCorpus, "embedding", ivfPath, nCells = cells)
+    // agree by construction, and ivfPqBuild skips its own corpus count
+    Similarity.ivfPqBuild(annCorpus, "embedding", ivfPath, nCells = cells,
+      m = 16, ksub = 16)
     val buildSec = (System.nanoTime() - tBuild) / 1e9
-    // PQ amortized regime, same accounting as IVF: fit + encode paid once
+    // flat PQ amortized regime, same accounting: fit + encode paid once
     // (pq_encode_sec), the per-batch cost is the ADC scan over the
     // persisted (id, codes, norm) parquet — 16 byte-codes per row instead
     // of 64 floats — plus the exact re-rank of the bounded shortlist.
@@ -259,9 +251,9 @@ object ScaleProbe {
       "brute_force" -> (() => Similarity.bruteForceTopK(
         annCorpus, annQueries, "embedding", "vec_id", "query_id",
         k = 10).count()),
-      s"ivf_probe_nprobe${nProbe}_of$cells" -> (() => Similarity.ivfProbeTopK(
+      s"ivfpq_probe_nprobe${nProbe}_of$cells" -> (() => Similarity.ivfPqProbeTopK(
         spark, ivfPath, annQueries, "embedding", "vec_id", "query_id",
-        k = 10, nProbe = nProbe).count()),
+        k = 10, nProbe = nProbe, shortlistFactor = 8).count()),
       "pq_adc_m16" -> (() => Similarity.pqTopKEncoded(
         pqEncoded, annCorpus, pqModel, annQueries, "embedding", "vec_id",
         "query_id", k = 10, shortlistFactor = 8).count())
@@ -279,7 +271,7 @@ object ScaleProbe {
       s""""$k":{"sec":$secs,"rows":$rows}"""
     }.mkString("{", ",", "}")
     val aEntry = s"""{"scale":$scale,"vectors":$nVecs,"queries":20,""" +
-      s""""passes":$passes,"ivf_build_sec":$buildSec,"cells":$cells,""" +
+      s""""passes":$passes,"index_build_sec":$buildSec,"cells":$cells,""" +
       s""""pq_encode_sec":$pqEncodeSec,""" +
       s""""variants":$aq,"sf":"$sfDir"}"""
     println(s"""{"probe":"ann_scale",${aEntry.tail}""")
@@ -289,8 +281,9 @@ object ScaleProbe {
     // What the nProbe knob buys: sweep the probed-cell budget on a
     // persisted index at SCALE× and record recall@10 (vs brute force) and
     // wall per 20-query batch — the context for ivf_maintain's
-    // partial-probe recall numbers and for the guidance table in
-    // [[Similarity.ivfProbeTopK]]'s scaladoc. Replicas here are array
+    // partial-probe recall numbers. The shortlist is held deep (factor
+    // 32) so the sweep isolates the probe width, not ADC truncation.
+    // Replicas here are array
     // ROTATIONS of the base vectors (distinct directions, same norm/
     // coordinate distribution) rather than ann_scale's verbatim copies:
     // verbatim copies make every true neighbor a co-located duplicate of
@@ -313,7 +306,8 @@ object ScaleProbe {
     val rcIdx = java.nio.file.Files.createTempDirectory("graft_ivf_rci")
       .toString
     val rcCells = Similarity.autoCells(nRcVecs)
-    Similarity.ivfBuild(rcCorpus, "embedding", rcIdx, nCells = rcCells)
+    Similarity.ivfPqBuild(rcCorpus, "embedding", rcIdx, nCells = rcCells,
+      m = 16, ksub = 16)
     val rcBrute = Similarity.bruteForceTopK(rcCorpus, rcQueries,
         "embedding", "vec_id", "query_id", k = 10)
       .select("query_id", "vec_id").persist()
@@ -326,8 +320,9 @@ object ScaleProbe {
     val rcResults = sweep.map { case (label, np) =>
       val times = (1 to passes).map { _ =>
         val t0 = System.nanoTime()
-        val hits = Similarity.ivfProbeTopK(spark, rcIdx, rcQueries,
-            "embedding", "vec_id", "query_id", k = 10, nProbe = np)
+        val hits = Similarity.ivfPqProbeTopK(spark, rcIdx, rcQueries,
+            "embedding", "vec_id", "query_id", k = 10, nProbe = np,
+            shortlistFactor = 32)
           .select("query_id", "vec_id")
           .join(rcBrute, Seq("query_id", "vec_id"), "left_semi").count()
         ((System.nanoTime() - t0) / 1e9, hits)
@@ -778,19 +773,16 @@ object ScaleProbe {
     }
 
     if (probes("ivf_maintain")) {
-    // Index-drift probe: build an IVF index, append +50% mass concentrated
+    // Index-drift probe: build the index, append +50% mass concentrated
     // near ONE direction (0.7·hot + 0.3·vᵢ blends — distinct vectors, one
-    // dense region: the "distribution shifted" regime ivfAppend warns
-    // about), and measure partial-probe recall@10 and cell skew before the
-    // append, after it, and after ivfMaintain's automatic rebuild. The
-    // claim under test: maintain notices the skew, refits the quantizer on
-    // the drifted distribution, and recall/balance recover without manual
-    // intervention. Maintain runs WITH a recall target (the shipped
-    // operational mode since nProbeForRecall landed): the post-rebuild
-    // recalibration makes "maintained" recall reflect the calibrated
-    // default probe width — earlier entries measured the uncalibrated
-    // cells/8 floor (0.475) and read as a live defect after calibration
-    // became ivfProbeTopK's default.
+    // dense region: the "distribution shifted" regime ivfPqAppend warns
+    // about), and measure default-width recall@10 and cell skew before the
+    // append, after it, and after ivfPqMaintain's automatic rebuild. The
+    // claim under test: maintain notices the skew, refits quantizer and
+    // codebooks on the drifted distribution, and recall/balance recover
+    // without manual intervention. Maintain runs WITH a recall target, so
+    // "maintained" recall reflects the widths ivfPqCalibrate chose for the
+    // rebuilt index.
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select("vec_id", "embedding")
     val ivfMntPath = java.nio.file.Files.createTempDirectory("graft_ivf_mnt").toString
@@ -800,7 +792,7 @@ object ScaleProbe {
     def recallNow(corpusNow: org.apache.spark.sql.DataFrame): Double = {
       val brute = Similarity.bruteForceTopK(corpusNow, mq,
         "embedding", "vec_id", "query_id", k = 10).select("query_id", "vec_id")
-      val probe = Similarity.ivfProbeTopK(spark, ivfMntPath, mq,
+      val probe = Similarity.ivfPqProbeTopK(spark, ivfMntPath, mq,
         "embedding", "vec_id", "query_id", k = 10).select("query_id", "vec_id")
       probe.join(brute, Seq("query_id", "vec_id"), "left_semi").count()
         .toDouble / brute.count()
@@ -811,7 +803,7 @@ object ScaleProbe {
       val nCells = spark.read.parquet(s"$ivfMntPath/centroids").count()
       counts.max.toDouble / (counts.sum.toDouble / nCells)
     }
-    Similarity.ivfBuild(corpus0, "embedding", ivfMntPath)
+    Similarity.ivfPqBuild(corpus0, "embedding", ivfMntPath, m = 16, ksub = 16)
     val recallBase = recallNow(corpus0)
     val skewBase = skewNow()
     val hotVec = corpus0.orderBy("vec_id").limit(1)
@@ -822,7 +814,7 @@ object ScaleProbe {
         transform(zip_with(col("embedding"), col("__hot"),
           (a, b) => a * lit(0.3) + b * lit(0.7)),
           x => x.cast("float")).as("embedding"))
-    Similarity.ivfAppend(appended, "embedding", ivfMntPath)
+    Similarity.ivfPqAppend(appended, "embedding", ivfMntPath)
     // the appended expression is deterministic (seeded sample, fixed
     // blend), so the union reconstructs the grown corpus without reading
     // back the index directory the rebuild below will replace
@@ -831,16 +823,20 @@ object ScaleProbe {
     val skewDrifted = skewNow()
     val tMnt = System.nanoTime()
     val mntTarget = 0.9
-    val decision = Similarity.ivfMaintain(spark, ivfMntPath, "embedding",
-      maxSkew = 2.0, recallTarget = Some(mntTarget))
+    // maxSkew is in build-time units (ratio vs the recorded fit_skew)
+    val decision = Similarity.ivfPqMaintain(spark, ivfMntPath, "embedding",
+      maxSkew = 2.0, recallTarget = Some(mntTarget), idCol = "vec_id",
+      maxShortlistFactor = 256)
     val maintainSec = (System.nanoTime() - tMnt) / 1e9
-    val mntNProbe = Similarity.calibratedNProbe(spark, ivfMntPath).getOrElse(-1)
+    val (mntNProbe, mntFactor) =
+      Similarity.calibratedPqWidths(spark, ivfMntPath).getOrElse((-1, -1))
     val recallMaintained = recallNow(grown)
     val skewMaintained = skewNow()
-    val mEntry = s"""{"base_vectors":${corpus0.count()},""" +
+    val mEntry = s"""{"index":"ivf-pq","base_vectors":${corpus0.count()},""" +
       s""""appended":${appended.count()},"decision":"$decision",""" +
       s""""maintain_sec":$maintainSec,""" +
       s""""recall_target":$mntTarget,"calibrated_nprobe":$mntNProbe,""" +
+      s""""calibrated_shortlist_factor":$mntFactor,""" +
       s""""recall":{"base":$recallBase,"drifted":$recallDrifted,""" +
       s""""maintained":$recallMaintained},""" +
       s""""skew":{"base":$skewBase,"drifted":$skewDrifted,""" +
@@ -850,17 +846,16 @@ object ScaleProbe {
     }
 
     if (probes("ivf_autotune")) {
-    // Recall-targeted probe-width calibration on DRIFTED data — the
-    // operational answer to ivf_maintain's finding that default-probe
-    // recall collapses (~0.47) once appended mass concentrates: instead
-    // of a scaladoc table and caller judgment, nProbeForRecall measures
-    // the index's own recall curve (one brute-force pass over a bounded
-    // self-sample) and persists the width that meets the target, which
-    // ivfProbeTopK's default then uses. Claims under test: (a) on the
-    // drifted, UN-rebuilt index the calibrated default restores
-    // recall ≥ target for corpus-distribution queries; (b) after
-    // ivfMaintain(recallTarget=…) rebuilds, the post-rebuild
-    // recalibration holds the target on the refit quantizer too.
+    // Recall-targeted width calibration on DRIFTED data — the operational
+    // answer to ivf_maintain's finding that default-width recall collapses
+    // once appended mass concentrates: instead of a table and caller
+    // judgment, ivfPqCalibrate measures the index's own recall over the
+    // (nProbe, shortlist) plane (one bounded self-sample) and persists the
+    // widths that meet the target, which ivfPqProbeTopK's defaults then
+    // use. Claims under test: (a) on the drifted, UN-rebuilt index the
+    // calibrated defaults restore recall ≥ target for corpus-distribution
+    // queries; (b) after ivfPqMaintain(recallTarget=…) rebuilds, the
+    // post-rebuild recalibration holds the target on the refit model too.
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select("vec_id", "embedding")
     val atPath = java.nio.file.Files.createTempDirectory("graft_ivf_at").toString
@@ -868,18 +863,21 @@ object ScaleProbe {
       .select(col("vec_id").as("query_id"), col("embedding"))
     val corpus0 = emb.filter(col("vec_id") >= 20)
     val target = 0.9
-    // recall of the DEFAULT-width probe (calibrated once nprobe.json
+    // the shortlist cap is raised for the same reason as in pq_drift: a
+    // 0.9 target on a drifted corpus can be cap-bound at the default 64
+    val maxFactor = 256
+    // recall of the DEFAULT-width probe (calibrated once pqcal.json
     // exists) against brute force, for an arbitrary query set
     def recallDefault(corpusNow: org.apache.spark.sql.DataFrame,
                       qs: org.apache.spark.sql.DataFrame): Double = {
       val brute = Similarity.bruteForceTopK(corpusNow, qs,
         "embedding", "vec_id", "query_id", k = 10).select("query_id", "vec_id")
-      val probe = Similarity.ivfProbeTopK(spark, atPath, qs,
+      val probe = Similarity.ivfPqProbeTopK(spark, atPath, qs,
         "embedding", "vec_id", "query_id", k = 10).select("query_id", "vec_id")
       probe.join(brute, Seq("query_id", "vec_id"), "left_semi").count()
         .toDouble / brute.count()
     }
-    Similarity.ivfBuild(corpus0, "embedding", atPath)
+    Similarity.ivfPqBuild(corpus0, "embedding", atPath, m = 16, ksub = 16)
     // same drift recipe as ivf_maintain: +50% mass blended toward one
     // hot direction
     val hotVec = corpus0.orderBy("vec_id").limit(1)
@@ -890,7 +888,7 @@ object ScaleProbe {
         transform(zip_with(col("embedding"), col("__hot"),
           (a, b) => a * lit(0.3) + b * lit(0.7)),
           x => x.cast("float")).as("embedding"))
-    Similarity.ivfAppend(appended, "embedding", atPath)
+    Similarity.ivfPqAppend(appended, "embedding", atPath)
     val grown = corpus0.unionByName(appended)
     // corpus-distribution queries (20 members of the drifted corpus) —
     // the population the self-sample calibration speaks for; baseQ is the
@@ -900,23 +898,28 @@ object ScaleProbe {
     val recallUncalSelf = recallDefault(grown, selfQ)
     val recallUncalBase = recallDefault(grown, baseQ)
     val tCal = System.nanoTime()
-    val chosen = Similarity.nProbeForRecall(spark, atPath, "embedding",
-      target = target, k = 10, sampleQueries = 64)
+    val (chosen, chosenFactor) = Similarity.ivfPqCalibrate(spark, atPath,
+      "embedding", "vec_id", target = target, k = 10, sampleQueries = 64,
+      maxShortlistFactor = maxFactor)
     val calSec = (System.nanoTime() - tCal) / 1e9
     val recallCalSelf = recallDefault(grown, selfQ)
     val recallCalBase = recallDefault(grown, baseQ)
     // maintain with a recall target: rebuild on the drifted distribution,
     // then the post-rebuild recalibration must hold the target as well
-    val decision = Similarity.ivfMaintain(spark, atPath, "embedding",
-      maxSkew = 2.0, recallTarget = Some(target))
-    val chosenAfter = Similarity.calibratedNProbe(spark, atPath).getOrElse(-1)
+    val decision = Similarity.ivfPqMaintain(spark, atPath, "embedding",
+      maxSkew = 2.0, recallTarget = Some(target), idCol = "vec_id",
+      maxShortlistFactor = maxFactor)
+    val (chosenAfter, factorAfter) =
+      Similarity.calibratedPqWidths(spark, atPath).getOrElse((-1, -1))
     val cellsAfter = spark.read.parquet(s"$atPath/centroids").count()
     val recallMntSelf = recallDefault(grown, selfQ)
     val recallMntBase = recallDefault(grown, baseQ)
-    val atEntry = s"""{"vectors":${grown.count()},"target":$target,""" +
-      s""""calibrate_sec":$calSec,""" +
-      s""""chosen_nprobe":$chosen,"decision":"$decision",""" +
+    val atEntry = s"""{"index":"ivf-pq","vectors":${grown.count()},""" +
+      s""""target":$target,"calibrate_sec":$calSec,""" +
+      s""""chosen_nprobe":$chosen,"chosen_shortlist_factor":$chosenFactor,""" +
+      s""""decision":"$decision",""" +
       s""""chosen_nprobe_after_rebuild":$chosenAfter,""" +
+      s""""chosen_shortlist_factor_after_rebuild":$factorAfter,""" +
       s""""cells_after_rebuild":$cellsAfter,""" +
       s""""recall_self_queries":{"uncalibrated":$recallUncalSelf,""" +
       s""""calibrated":$recallCalSelf,"maintained":$recallMntSelf},""" +
@@ -2128,7 +2131,8 @@ object ScaleProbe {
       val cells = Similarity.autoCells(n)
       val nProbe = math.max(1, cells / 8)
       val idx = java.nio.file.Files.createTempDirectory(s"graft_pqc_ivf").toString
-      Similarity.ivfBuild(corpus, "embedding", idx, nCells = cells)
+      Similarity.ivfPqBuild(corpus, "embedding", idx, nCells = cells,
+        m = 16, ksub = 16)
       val model = Similarity.fitPq(corpus, "embedding", m = 16, ksub = 16)
       val encPath = java.nio.file.Files.createTempDirectory("graft_pqc_enc")
         .resolve("encoded.parquet").toString
@@ -2141,20 +2145,21 @@ object ScaleProbe {
       }.min
       val brute = best(() => Similarity.bruteForceTopK(corpus, pqcQueries,
         "embedding", "vec_id", "query_id", k = 10).count())
-      val ivf = best(() => Similarity.ivfProbeTopK(spark, idx, pqcQueries,
-        "embedding", "vec_id", "query_id", k = 10, nProbe = nProbe).count())
+      val ivf = best(() => Similarity.ivfPqProbeTopK(spark, idx, pqcQueries,
+        "embedding", "vec_id", "query_id", k = 10, nProbe = nProbe,
+        shortlistFactor = 8).count())
       val pq = best(() => Similarity.pqTopKEncoded(encoded, corpus, model,
         pqcQueries, "embedding", "vec_id", "query_id", k = 10,
         shortlistFactor = 8).count())
       (label, n, brute, ivf, pq)
     }
     val winnerAt = sizeResults.map { case (label, n, b, i, p) =>
-      val w = Seq("brute_force" -> b, "ivf" -> i, "pq_adc" -> p).minBy(_._2)._1
+      val w = Seq("brute_force" -> b, "ivf_pq" -> i, "pq_adc" -> p).minBy(_._2)._1
       s""""$label":"$w""""
     }.mkString("{", ",", "}")
     val crossed = sizeResults.exists { case (_, _, b, _, p) => p < b }
     val sizesJson = sizeResults.map { case (label, n, b, i, p) =>
-      s""""$label":{"vectors":$n,"brute_sec":$b,"ivf_sec":$i,"pq_adc_sec":$p}"""
+      s""""$label":{"vectors":$n,"brute_sec":$b,"ivf_pq_sec":$i,"pq_adc_sec":$p}"""
     }.mkString("{", ",", "}")
     val pqcEntry = s"""{"passes":$passes,"sizes":$sizesJson,""" +
       s""""winner_at":$winnerAt,"pq_beats_brute_somewhere":$crossed,""" +
@@ -2174,9 +2179,8 @@ object ScaleProbe {
     // codes parquet simply doesn't contain one); the exact re-rank leg
     // re-reads the vector relation (a broadcast shortlist join prunes
     // no row groups locally), so the full PQ path's local byte total is
-    // codes + vectors — the honest caveat; at 100 TB the re-rank is a
-    // point-lookup against an id-bucketed corpus, not a second full
-    // scan, and the ADC leg's narrowness is the dominant term.
+    // codes + vectors — the honest caveat; the persisted IVF-PQ index
+    // narrows both legs to the probed cells' files.
     // (Task-level inputMetrics.bytesRead was tried first and reports
     // only ~0.2 MB per leg on local[n] — RawLocalFileSystem reads
     // bypass the Hadoop statistics the metric is fed from — so file
@@ -2218,71 +2222,6 @@ object ScaleProbe {
       s""""sf":"$sfDir"}"""
     println(s"""{"probe":"pq_bytes",${pqbEntry.tail}""")
     writeArtifact("pq_bytes", pqbEntry)
-    }
-
-    if (probes("pq_bytes_end_to_end")) {
-    // Closes pq_bytes' honest caveat: with the persisted pqBuild layout
-    // (id-bucketed vectors, narrow codes relation) the exact re-rank is a
-    // statically partition-pruned read of the shortlist ids' buckets, so
-    // the FULL path's bytes are codes + touched buckets — measured here
-    // against the brute leg (the full vectors relation) at the same ~1M
-    // point, with result parity against the inline pqTopKEncoded plan
-    // (same seed -> same model) asserted on the side. Bytes are file
-    // footprints as in pq_bytes (task-level bytesRead is blind to
-    // RawLocalFileSystem); partition pruning makes the touched-bucket
-    // footprint exact — unselected directories are never opened.
-    val corpusE = pqcCorpusAt(512)
-    val nVecE = corpusE.count()
-    val idxPath = "/tmp/graft_probe_cache/pqb_idx_512"
-    if (!new java.io.File(s"$idxPath/meta").exists())
-      Similarity.pqBuild(corpusE, "embedding", "vec_id", idxPath,
-        m = 16, ksub = 16)
-    def dirBytesE(p: String): Long = {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-      try s.filter(java.nio.file.Files.isRegularFile(_))
-        .mapToLong(java.nio.file.Files.size(_)).sum()
-      finally s.close()
-    }
-    val (shortlistE, touchedE) = Similarity.pqShortlistAndBuckets(
-      spark, idxPath, pqcQueries, "embedding", "vec_id", "query_id",
-      shortlistK = 80)
-    val shortIds = shortlistE.select("vec_id").distinct().count()
-    val bucketsE = spark.read.parquet(s"$idxPath/meta")
-      .select("id_buckets").collect()(0).getInt(0)
-    val vecTotal = dirBytesE(s"$idxPath/vectors")
-    val codesTotal = dirBytesE(s"$idxPath/codes")
-    val touchedBytes = touchedE.map(b =>
-      dirBytesE(s"$idxPath/vectors/__vb=$b")).sum
-    val endToEnd = codesTotal + touchedBytes
-    // result parity vs the inline plan (same corpus + seed -> identical
-    // model, shortlist, and exact re-rank scores)
-    val resE = Similarity.pqProbeTopK(spark, idxPath, pqcQueries,
-        "embedding", "vec_id", "query_id", k = 10, shortlistFactor = 8)
-      .collect().map(_.toString).toSet
-    val modelE = Similarity.fitPq(corpusE, "embedding", m = 16, ksub = 16)
-    val encPathE = "/tmp/graft_probe_cache/pqb_enc_512/encoded.parquet"
-    if (!new java.io.File(encPathE).exists())
-      Similarity.pqEncode(corpusE, "embedding", modelE).drop("embedding")
-        .write.mode("overwrite").parquet(encPathE)
-    val inlineE = Similarity.pqTopKEncoded(spark.read.parquet(encPathE),
-        corpusE, modelE, pqcQueries, "embedding", "vec_id", "query_id",
-        k = 10, shortlistFactor = 8)
-      .collect().map(_.toString).toSet
-    val pqeEntry = s"""{"vectors":$nVecE,"id_buckets":$bucketsE,""" +
-      s""""shortlist_distinct_ids":$shortIds,""" +
-      s""""touched_buckets":${touchedE.length},""" +
-      s""""touched_fraction":${touchedE.length.toDouble / bucketsE},""" +
-      s""""brute_leg_bytes":$vecTotal,""" +
-      s""""codes_leg_bytes":$codesTotal,""" +
-      s""""rerank_pruned_bytes":$touchedBytes,""" +
-      s""""end_to_end_bytes":$endToEnd,""" +
-      s""""end_to_end_over_brute":${endToEnd.toDouble / vecTotal},""" +
-      s""""end_to_end_under_brute":${endToEnd < vecTotal},""" +
-      s""""matches_inline_pq":${resE == inlineE},""" +
-      s""""result_rows":${resE.size},""" +
-      s""""sf":"$sfDir"}"""
-    println(s"""{"probe":"pq_bytes_end_to_end",${pqeEntry.tail}""")
-    writeArtifact("pq_bytes_end_to_end", pqeEntry)
     }
 
     if (probes("line_dedup_scale")) {
@@ -2730,31 +2669,23 @@ object ScaleProbe {
 
     if (probes("index_delete_scale")) {
     // Similarity.indexDelete's claim (the delete_scale economy carried to
-    // the serving indexes): a small opt-out batch against a big flat-PQ
-    // index rewrites ONLY the victims' hash-derived vector buckets and
-    // the codes FILES that held them — never the relations. The naive
-    // alternative (an unbucketed layout's only option) anti-joins and
-    // rewrites BOTH relations in full, measured on an identical twin.
-    // Bytes are the REWRITE sets: touched bucket dirs + matched codes
-    // files vs the whole index (the victim-locating scan additionally
-    // reads the codes relation once — the narrow one by design, ~10x
-    // fewer bytes than the vectors, the same cost class as one ADC
-    // probe).
+    // the serving index): a small opt-out batch against a big index
+    // rewrites ONLY the cells that held the victims — never the relation.
+    // The naive alternative anti-joins and rewrites the whole data
+    // relation, measured on an identical twin. Bytes are the REWRITE
+    // sets: touched cell dirs vs the whole relation (the victim-locating
+    // scan additionally reads the id column once — column-pruned, the
+    // vectors and codes stay unread).
     val embI = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select("vec_id", "embedding")
     // 200x the pair-probe replication: the pruned leg's cost is a
-    // handful of fixed-size jobs (hash-derived buckets, one narrow
-    // locate scan, 8 bucket rewrites), so the wall contrast with the
-    // O(index) naive leg only shows once the index dwarfs those
-    // constants — measured COLD pruned wall stays roughly FLAT across
-    // 1M -> 4M rows (~3-7s across runs) while the naive rewrite grows
-    // with the index (3.0s at 1M -> 5-12s at 4M). The LOCAL wall ratio
-    // is too noisy to headline (r18 measured 0.7x and 2.4x on
-    // back-to-back identical runs — both legs' constants are
-    // comparable to one local parquet job's scheduling jitter); the
-    // rewrite-bytes fraction (~0.04) is the STABLE scale-transferable
-    // figure, and at storage-bandwidth-bound sizes it IS the wall
-    // ratio.
+    // handful of fixed-size jobs (one narrow locate scan, a few cell
+    // rewrites), so the wall contrast with the O(index) naive leg only
+    // shows once the index dwarfs those constants. The LOCAL wall ratio
+    // is noisy (both legs' constants are comparable to one local parquet
+    // job's scheduling jitter); the rewrite-bytes fraction is the STABLE
+    // scale-transferable figure, and at storage-bandwidth-bound sizes it
+    // IS the wall ratio.
     val reps = scale * 200
     // scan-side fan-out (ONE plan node), not a reps-way union: a
     // 500-deep union tree overflows plan serialization before it runs
@@ -2764,16 +2695,15 @@ object ScaleProbe {
       .select((col("vec_id") + col("__rep") * lit(10000000L)).as("vec_id"),
         col("embedding"))
       .repartition(cpus.toInt)
-    val bucketsI = 256
     def mkIndexI(tag: String): String = {
       val r = java.nio.file.Files
         .createTempDirectory(s"graft_idxdel_$tag").resolve("index").toString
-      Similarity.pqBuild(corpusI, "embedding", "vec_id", r, m = 16,
-        ksub = 16, idBuckets = bucketsI)
+      Similarity.ivfPqBuild(corpusI, "embedding", r, m = 16, ksub = 16)
       r
     }
     val (idxP, idxN) = (mkIndexI("p"), mkIndexI("n"))
-    val rowsI = spark.read.parquet(s"$idxP/vectors").count()
+    val rowsI = spark.read.parquet(s"$idxP/data").count()
+    val cellsI = spark.read.parquet(s"$idxP/centroids").count()
     val victimsI = corpusI.select("vec_id")
       .filter(col("vec_id") % lit(12501) === 3)
       .limit(8).localCheckpoint(true)
@@ -2785,78 +2715,51 @@ object ScaleProbe {
       val fsl = fp.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fsl.exists(fp)) 0L else fsl.getContentSummary(fp).getLength
     }
-    val vecBytes = dirBytesI(s"$idxP/vectors")
-    val codeBytes = dirBytesI(s"$idxP/codes")
-    // the pruned path's rewrite set, measured on the PRUNED index itself
-    // from METADATA only (getContentSummary / directory listings — no
-    // data read, so the timed legs both run fully cold): bucket sizes up
-    // front, and the codes rewrite set OBSERVED post-delete as the diff
-    // of the codes file listing — the files the delete actually removed,
-    // with their pre-delete sizes
-    val touchedI = victimsI
-      .select(pmod(xxhash64(col("vec_id").cast("long")),
-        lit(bucketsI.toLong)).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val touchedVecBytes = touchedI.map(b =>
-      dirBytesI(s"$idxP/vectors/__vb=$b")).sum
-    def codesListing(): Map[String, Long] = {
-      val fp = new org.apache.hadoop.fs.Path(s"$idxP/codes")
-      fp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .listStatus(fp).toSeq
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .map(st => st.getPath.getName -> st.getLen).toMap
-    }
-    val codesBefore = codesListing()
-    val totalCodesFiles = codesBefore.size
+    val dataBytes = dirBytesI(s"$idxP/data")
+    // the pruned path's rewrite set, measured on the PRUNED index itself:
+    // the victims' cells (one column-pruned locate read, outside the timed
+    // legs) and their pre-delete sizes from METADATA only
+    val touchedI = spark.read.parquet(s"$idxP/data")
+      .select("vec_id", "__cell")
+      .join(broadcast(victimsI), Seq("vec_id"), "left_semi")
+      .select("__cell").distinct().collect().map(_.getInt(0)).toSeq
+    val touchedBytes = touchedI.map(c =>
+      dirBytesI(s"$idxP/data/__cell=$c")).sum
     val t0i = System.nanoTime()
     val nDelI = Similarity.indexDelete(spark, idxP, victimsI,
       idCol = "vec_id")
     val prunedSecI = (System.nanoTime() - t0i) / 1e9
     require(nDelI == nVictimsI,
       s"pruned index delete removed $nDelI of $nVictimsI")
-    // the OBSERVED codes rewrite set: exactly the files the delete
-    // removed, with their pre-delete sizes (listing diff, metadata only)
-    val codesRemoved = codesBefore.keySet -- codesListing().keySet
-    val matchedCodesBytes = codesRemoved.toSeq.map(codesBefore).sum
-    // naive leg: full anti-join rewrite of BOTH relations on the twin
+    // naive leg: full anti-join rewrite of the data relation on the twin
     val t0ni = System.nanoTime()
-    spark.read.parquet(s"$idxN/vectors")
+    spark.read.parquet(s"$idxN/data")
       .join(broadcast(victimsI), Seq("vec_id"), "left_anti")
-      .repartition(col("__vb"))
-      .sortWithinPartitions(col("__vb"), col("vec_id"))
-      .write.mode("overwrite").partitionBy("__vb")
-      .parquet(s"$idxN/vectors_rw")
-    spark.read.parquet(s"$idxN/codes")
-      .join(broadcast(victimsI), Seq("vec_id"), "left_anti")
-      .write.mode("overwrite").parquet(s"$idxN/codes_rw")
+      .write.mode("overwrite").partitionBy("__cell")
+      .parquet(s"$idxN/data_rw")
     val naiveSecI = (System.nanoTime() - t0ni) / 1e9
-    val nRemainNaive = spark.read.parquet(s"$idxN/vectors_rw").count()
+    val nRemainNaive = spark.read.parquet(s"$idxN/data_rw").count()
     require(nRemainNaive == rowsI - nDelI,
       s"naive leg kept $nRemainNaive, expected ${rowsI - nDelI}")
     // post-delete health: the pruned index still serves, victims gone
     val qI = embI.filter(col("vec_id") < 3)
       .select(col("vec_id").as("query_id"), col("embedding"))
-    val served = Similarity.pqProbeTopK(spark, idxP, qI, "embedding",
+    val served = Similarity.ivfPqProbeTopK(spark, idxP, qI, "embedding",
       "vec_id", "query_id", k = 10, shortlistFactor = 8)
     val victimSet = victimsI.collect().map(_.getLong(0)).toSet
     val healthy = served.groupBy("query_id").count()
       .filter(col("count") =!= 10).count() == 0L &&
       served.filter(col("vec_id").isin(victimSet.toSeq: _*)).count() == 0L
-    val idxEntry = s"""{"scale":$scale,"rows":$rowsI,""" +
-      s""""buckets":$bucketsI,"victims":$nVictimsI,"deleted":$nDelI,""" +
-      s""""touched_buckets":${touchedI.size},""" +
-      s""""codes_files_rewritten":${codesRemoved.size},""" +
-      s""""codes_files_total":$totalCodesFiles,""" +
+    val idxEntry = s"""{"index":"ivf-pq","scale":$scale,"rows":$rowsI,""" +
+      s""""cells":$cellsI,"victims":$nVictimsI,"deleted":$nDelI,""" +
+      s""""touched_cells":${touchedI.size},""" +
       s""""pruned_sec":$prunedSecI,"naive_rewrite_sec":$naiveSecI,""" +
       s""""speedup":${
         if (prunedSecI > 0) naiveSecI / prunedSecI else -1.0},""" +
-      s""""touched_vector_bytes":$touchedVecBytes,""" +
-      s""""vector_bytes":$vecBytes,""" +
-      s""""matched_codes_bytes":$matchedCodesBytes,""" +
-      s""""codes_bytes":$codeBytes,""" +
+      s""""touched_cell_bytes":$touchedBytes,""" +
+      s""""data_bytes":$dataBytes,""" +
       s""""rewrite_bytes_fraction":${
-        (touchedVecBytes + matchedCodesBytes).toDouble /
-          math.max(1L, vecBytes + codeBytes)},""" +
+        touchedBytes.toDouble / math.max(1L, dataBytes)},""" +
       s""""post_delete_healthy":$healthy,""" +
       s""""sf":"$sfDir"}"""
     println(s"""{"probe":"index_delete_scale",${idxEntry.tail}""")

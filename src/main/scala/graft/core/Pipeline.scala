@@ -52,7 +52,6 @@ trait SourceNode extends Serializable {
 final case class Chain(nodes: Vector[Node] = Vector.empty) {
   def add(more: Node*): Chain = copy(nodes = nodes ++ more)
   def add(f: DataFrame => DataFrame): Chain = add(Node(f))
-  def andThen(other: Chain): Chain = Chain(nodes ++ other.nodes)
 
   def apply(in: DataFrame, ctx: RunContext): DataFrame =
     nodes.foldLeft(in)((df, node) => node(df, ctx))

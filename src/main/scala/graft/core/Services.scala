@@ -6,9 +6,6 @@ package graft.core
   * `tests/test_integration.py:171`: `services={'sqlalchemy.engine': engine}`).
   */
 final case class ServiceRegistry(services: Map[String, Any] = Map.empty) {
-  def withService(name: String, value: Any): ServiceRegistry =
-    copy(services = services + (name -> value))
-
   def apply[T](name: String): T =
     services
       .getOrElse(

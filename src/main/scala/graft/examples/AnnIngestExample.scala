@@ -11,10 +11,11 @@ import graft.operators.Similarity
   * governance, this = the index that serves retrieval over what they
   * curate):
   *
-  *  1. **Build once**: [[Similarity.ivfPqBuild]] persists the IVF-PQ
-  *     layout — the billion-scale regime where probes are statically
-  *     partition-pruned reads of byte codes (~nProbe/nCells of the data
-  *     at m bytes per vector), with exact re-ranked cosines.
+  *  1. **Build once**: [[Similarity.ivfPqBuild]] persists the index —
+  *     the one persisted layout, IVF-PQ: the billion-scale regime where
+  *     probes are statically partition-pruned reads of byte codes
+  *     (~nProbe/nCells of the data at m bytes per vector), with exact
+  *     re-ranked cosines.
   *  2. **Ingest appends in place**: each arriving batch is encoded with
   *     the STANDING quantizer and codebooks ([[Similarity.ivfPqAppend]])
   *     — no refit, no rewrite of standing data; a probe racing the
@@ -43,7 +44,7 @@ import graft.operators.Similarity
   * epochs (pause → maintain → resume from the same checkpoint: the
   * fence survives the rebuild swap, pinned in `StreamAnnIngestSpec`;
   * it must own the index exclusively — the single-writer contract
-  * every maintain path documents). */
+  * `Similarity.ivfPqMaintain` documents). */
 object AnnIngestExample {
 
   /** What one ingest-day did, for the pipeline's own logging: rows

@@ -201,7 +201,7 @@ object Dedup {
     * shingle → native-MinHash-signature → band pipeline [[minHashLsh]]
     * uses. Write this once for the retained corpus, append each accepted
     * batch's keys after ingest (the same standing-state discipline as
-    * `Similarity.ivfAppend`), and pass it as `oldKeys` — then a batch
+    * `Similarity.ivfPqAppend`), and pass it as `oldKeys` — then a batch
     * costs one scan of the BATCH plus a key join, never a re-tokenization
     * of the corpus. All banding parameters must match between the stored
     * keys and the queries that consume them. */
@@ -422,11 +422,10 @@ object Dedup {
     * oracle-checkable, unlike MinHash whose signatures depend on the hash
     * family). `maxDf` drops shingles appearing in more than that many docs
     * (stop-shingles) — the skew guard that keeps the self-join from going
-    * quadratic on boilerplate at 100 TB; 0 disables. `hashedCandidates`
-    * opts into the two-phase narrow-key candidate join (see
-    * [[jaccardPairsFromShingles]]); `maxBroadcastRows` caps the small-side
-    * broadcasts (stop set, candidate ids) — above it they degrade to
-    * shuffled joins instead of unbounded driver broadcasts.
+    * quadratic on boilerplate at 100 TB; 0 disables. `maxBroadcastRows`
+    * caps the small-side broadcasts (stop set, per-document set sizes) —
+    * above it they degrade to shuffled joins instead of unbounded driver
+    * broadcasts.
     * `strategy = "minhash"` swaps candidate generation for a banded
     * MinHash prefilter with exact per-pair verification
     * ([[minhashPrefilterPairs]]) — identical values on every emitted
@@ -438,8 +437,8 @@ object Dedup {
     * to the minhash prefilter above it ([[autoStrategy]], logged
     * decision) — so recall becomes probabilistic (≥95% per pair at
     * jaccard = threshold) exactly on corpora dense enough that the exact
-    * join was measured unusable; pin `"single"`/`"hashed"` when the
-    * contract is exactness at any volume.
+    * join was measured unusable; pin `"single"` when the contract is
+    * exactness at any volume.
     *
     * NOTE (eager construction): building the returned DataFrame runs
     * bounded probe/populate jobs (size-gate limit counts, cache
@@ -449,7 +448,7 @@ object Dedup {
     * them (CacheAutoRelease) or the caller clears the cache. */
   def ngramJaccardPairs(df: DataFrame, textCol: String, idCol: String,
                         shingleSize: Int = 3, threshold: Double = 0.1,
-                        maxDf: Long = 0L, hashedCandidates: Boolean = false,
+                        maxDf: Long = 0L,
                         maxBroadcastRows: Long = 1000000L,
                         strategy: String = "auto",
                         minhashHashes: Int = 128, minhashBands: Int = 0,
@@ -457,7 +456,7 @@ object Dedup {
     jaccardPairsDispatch(
       graft.core.ScanParallelism.ensure(df).select(col(idCol),
         H.wordShingles(T.tokens(lower(col(textCol))), shingleSize).as("__shs")),
-      idCol, threshold, maxDf, hashedCandidates, maxBroadcastRows, strategy,
+      idCol, threshold, maxDf, maxBroadcastRows, strategy,
       minhashHashes, minhashBands, maxBucket)
 
   /** Join `big` against a derived small relation (`left_semi`/`left_anti`
@@ -503,31 +502,14 @@ object Dedup {
     * stop-shingles (size-gated broadcast anti join — see
     * [[sizeGatedFilterJoin]]), self-join on the shingle string, count
     * shared shingles per pair, exact integer Jaccard. Engine-independent
-    * and oracle-checkable.
-    *
-    * `hashedCandidates = true` (opt-in): candidate pairs are first
-    * generated from a self-join on the 64-bit xxhash of each shingle — the
-    * exchange and sort-merge then compare 8-byte longs instead of n-char
-    * strings — and only candidate documents are re-verified through the
-    * exact string join (a hash collision can only MERGE shingles, so the
-    * estimated Jaccard is an upper bound and the candidate set a superset;
-    * final results are identical to the default path). MEASURED
-    * (graft.ScaleProbe round 7, 10× sf0.1 = 50k docs, disjoint-shingle
-    * replicas): the single pass wins — ngram 4.0 s vs 4.7 s hashed,
-    * chargram-12 95.7 s vs 195.9 s. On single-host shuffle the exchange is
-    * memory-speed, so the narrow key saves little while the second
-    * explode+join pass is pure extra work; the remaining case for this
-    * path is a NETWORK-bound cluster shuffle, where exchanged bytes (not
-    * local sort compares) dominate and 8-byte keys cut the wire volume
-    * ~2–3× for wide shingles. Hence: opt-in, not default. For DENSE
-    * shingle sets (char-grams) the measured scale path is the MinHash
-    * prefilter instead ([[minhashPrefilterPairs]], `strategy =
-    * "minhash"`): 18.5 s on the same chargram workload — 5.2× over the
-    * single pass with identical emitted pairs — at the price of
-    * probabilistic recall; see PLANS.md for the adoption decision. */
+    * and oracle-checkable. For DENSE shingle sets (char-grams) the
+    * measured scale path is the MinHash prefilter instead
+    * ([[minhashPrefilterPairs]], `strategy = "minhash"`): 18.5 s on a
+    * 50k-document chargram workload — 5.2× over the single pass with
+    * identical emitted pairs — at the price of probabilistic recall; see
+    * PLANS.md for the adoption decision. */
   private def jaccardPairsFromShingles(shingledIn: DataFrame, idCol: String,
                                        threshold: Double, maxDf: Long,
-                                       hashedCandidates: Boolean = false,
                                        maxBroadcastRows: Long = 1000000L): DataFrame = {
     // Persist at the ARRAY level: the shingle expression runs exactly once
     // per document; the size() projection and both join-side explodes then
@@ -543,9 +525,7 @@ object Dedup {
     // ~40% of it the na/nb columns). Sizes are recovered AFTER the pair
     // aggregation from the corpus-sized (id, n) relation — see
     // [[attachSizes]] below.
-    def explodeShingles(rel: DataFrame): DataFrame = rel
-      .select(col(idCol), explode(col("__shs")).as("__sh"))
-    val sh = explodeShingles(shingled)
+    val sh = shingled.select(col(idCol), explode(col("__shs")).as("__sh"))
     // Per-document PRE-drop set size (the stop anti join must not change
     // the union arithmetic — same contract as before this refactor, where
     // __n was computed before the drop). One row per input document,
@@ -645,12 +625,12 @@ object Dedup {
       .groupBy(col("__x").as("id_a"), col("__y").as("id_b"))
       .agg(count(lit(1)).as("inter")))
     val boundedBuckets = maxDf > 0 && maxDf <= 10000
-    val result = if (!hashedCandidates && boundedBuckets) {
+    val result = if (boundedBuckets) {
       // the grouped form reads the exploded relation exactly once; the
       // only other `shingled` consumer is the tiny sizes projection, and
       // the stop-set probe populates the cache before either runs
       groupedExactPairs(dropStopShingles(sh))
-    } else if (!hashedCandidates) {
+    } else {
       // both pair-join sides read the post-stop exploded relation; persist
       // it so the explode + stop anti join run ONCE. The intended
       // ReusedExchange never fires in practice — the stop set rides in as
@@ -669,32 +649,6 @@ object Dedup {
       val out = exactPairs(base)
       graft.core.CacheAutoRelease.afterFirstUse(base)
       out
-    } else {
-      // Candidate generation on hashed shingles (upper-bound Jaccard).
-      // Same na/nb slimming as the exact paths: the candidate exchange
-      // carries (id_a, id_b, count) partials and the sizes join back in
-      // for the estimate filter.
-      val hashed = dropStopShingles(sh)
-        .select(col(idCol), xxhash64(col("__sh")).as("__h"))
-      val ha = hashed.select(col(idCol).as("id_a"), col("__h"))
-      val hb = hashed.select(col(idCol).as("id_b"), col("__h"))
-      val cand = attachSizes(ha.join(hb, Seq("__h"))
-          .filter(col("id_a") < col("id_b"))
-          .groupBy("id_a", "id_b")
-          .agg(count(lit(1)).as("__est")))
-        .filter(col("__est").cast("double") /
-          (col("__na") + col("__nb") - col("__est")) >= threshold)
-      val candIds = cand.select(col("id_a").as(idCol))
-        .union(cand.select(col("id_b").as(idCol)))
-        .distinct()
-      // Exact verification: the string-keyed join, over candidate documents
-      // only — the semi-join runs at the ARRAY level so the second explode
-      // pass touches candidate documents, not the whole corpus. A pair that
-      // only clears the threshold on estimates fails the final exact filter
-      // (est ≥ exact), so no inner join against the candidate list is
-      // needed.
-      exactPairs(dropStopShingles(explodeShingles(sizeGatedFilterJoin(
-        shingled, candIds, Seq(idCol), "left_semi", maxBroadcastRows))))
     }
     graft.core.CacheAutoRelease.afterFirstUse(shingled)
     result
@@ -777,9 +731,7 @@ object Dedup {
     org.slf4j.LoggerFactory.getLogger("graft.operators.Dedup")
 
   /** The `strategy = "auto"` decision, factored out so the gate itself is
-    * testable: the legacy `hashedCandidates` boolean still forces the
-    * hashed exact path (explicit caller opt-in wins); otherwise the
-    * exploded shingle volume is ESTIMATED as docs × mean shingles/doc
+    * testable: the exploded shingle volume is ESTIMATED as docs × mean shingles/doc
     * and compared against the measured knee. The mean is taken over a
     * deterministic md5-coin sample of ~`sampleRows` ids — a corpus-wide
     * spread, unlike a `limit` prefix, whose leading partition often
@@ -791,30 +743,26 @@ object Dedup {
     * entirely). The decision is logged with its inputs so a production
     * run records WHY it took the path it took. */
   private[graft] def autoStrategy(shingled: DataFrame, idCol: String,
-                                  hashedCandidates: Boolean,
                                   knee: Long = AutoEscalateShingleRows,
-                                  sampleRows: Int = 1000): String =
-    if (hashedCandidates) "hashed"
-    else {
-      val nDocs = shingled.count()
-      if (nDocs == 0L) return "single"
-      val rate = math.min(1.0, sampleRows.toDouble / nDocs)
-      val meanShingles = shingled
-        .filter(substring(md5(col(idCol).cast("string")), 1, 8) <
-          lit(graft.functions.TextFunctions.coinThreshold(rate)))
-        .agg(coalesce(avg(size(col("__shs"))), lit(0.0)))
-        .head.getDouble(0)
-      val estimate = (nDocs * meanShingles).toLong
-      val chosen = if (estimate > knee) "minhash" else "single"
-      log.info(s"jaccard strategy=auto: $nDocs docs x $meanShingles mean " +
-        s"shingles/doc = ~$estimate exploded rows vs knee $knee -> $chosen")
-      chosen
-    }
+                                  sampleRows: Int = 1000): String = {
+    val nDocs = shingled.count()
+    if (nDocs == 0L) return "single"
+    val rate = math.min(1.0, sampleRows.toDouble / nDocs)
+    val meanShingles = shingled
+      .filter(substring(md5(col(idCol).cast("string")), 1, 8) <
+        lit(graft.functions.TextFunctions.coinThreshold(rate)))
+      .agg(coalesce(avg(size(col("__shs"))), lit(0.0)))
+      .head.getDouble(0)
+    val estimate = (nDocs * meanShingles).toLong
+    val chosen = if (estimate > knee) "minhash" else "single"
+    log.info(s"jaccard strategy=auto: $nDocs docs x $meanShingles mean " +
+      s"shingles/doc = ~$estimate exploded rows vs knee $knee -> $chosen")
+    chosen
+  }
 
   /** Routes a `strategy` name onto the pair operators' candidate-generation
     * paths: `"single"` forces the one-pass string-keyed inverted-index
-    * join, `"hashed"` forces the two-phase hashed-candidate join,
-    * `"minhash"` takes the [[minhashPrefilterPairs]] hybrid (exact values,
+    * join, `"minhash"` takes the [[minhashPrefilterPairs]] hybrid (exact values,
     * probabilistic recall — the only strategy whose OUTPUT may differ),
     * and `"auto"` is a stats-gated escalation ([[autoStrategy]]): the
     * exact single-pass default below the measured volume knee
@@ -823,24 +771,22 @@ object Dedup {
     * (≥95% per emitted-able pair at jaccard = threshold under
     * [[autoBands]]) precisely when the corpus is dense enough that the
     * exact join was measured quadratic-unusable; callers whose contract
-    * is exactness at ANY volume must pin `"single"`/`"hashed"`. The
-    * legacy `hashedCandidates` boolean still forces the hashed path under
-    * `"auto"`. */
+    * is exactness at ANY volume must pin `"single"`. */
   private def jaccardPairsDispatch(shingled: DataFrame, idCol: String,
                                    threshold: Double, maxDf: Long,
-                                   hashedCandidates: Boolean,
                                    maxBroadcastRows: Long,
                                    strategy: String,
                                    minhashHashes: Int,
                                    minhashBands: Int,
                                    maxBucket: Int): DataFrame = {
     val resolved = strategy match {
-      case "auto" => autoStrategy(shingled, idCol, hashedCandidates)
+      case "auto" => autoStrategy(shingled, idCol)
       case s      => s
     }
-    val hashed = resolved match {
-      case "single" => false
-      case "hashed" => true
+    resolved match {
+      case "single" =>
+        jaccardPairsFromShingles(shingled, idCol, threshold, maxDf,
+          maxBroadcastRows)
       case "minhash" =>
         // bands <= 0: derive the banding from the threshold (autoBands) —
         // a fixed default composes badly with low thresholds (recall
@@ -849,14 +795,12 @@ object Dedup {
         val bands =
           if (minhashBands > 0) minhashBands
           else autoBands(minhashHashes, threshold)
-        return minhashPrefilterPairs(shingled, idCol, threshold, maxDf,
+        minhashPrefilterPairs(shingled, idCol, threshold, maxDf,
           maxBroadcastRows, minhashHashes, bands, maxBucket)
       case other => throw new IllegalArgumentException(
         s"unknown jaccard pair strategy '$other' " +
-          "(expected auto|single|hashed|minhash)")
+          "(expected auto|single|minhash)")
     }
-    jaccardPairsFromShingles(shingled, idCol, threshold, maxDf,
-      hashedCandidates = hashed, maxBroadcastRows = maxBroadcastRows)
   }
 
   /** Character-n-gram variant of [[ngramJaccardPairs]]: shingles are
@@ -875,7 +819,7 @@ object Dedup {
     * them (CacheAutoRelease) or the caller clears the cache. */
   def charJaccardPairs(df: DataFrame, textCol: String, idCol: String,
                        shingleSize: Int = 5, threshold: Double = 0.1,
-                       maxDf: Long = 0L, hashedCandidates: Boolean = false,
+                       maxDf: Long = 0L,
                        maxBroadcastRows: Long = 1000000L,
                        strategy: String = "auto",
                        minhashHashes: Int = 128, minhashBands: Int = 0,
@@ -883,7 +827,7 @@ object Dedup {
     jaccardPairsDispatch(
       graft.core.ScanParallelism.ensure(df).select(col(idCol),
         H.charShingles(trim(lower(col(textCol))), shingleSize).as("__shs")),
-      idCol, threshold, maxDf, hashedCandidates, maxBroadcastRows, strategy,
+      idCol, threshold, maxDf, maxBroadcastRows, strategy,
       minhashHashes, minhashBands, maxBucket)
 
   /** Asymmetric shingle-CONTAINMENT pairs: for each document pair,
@@ -985,17 +929,6 @@ object Dedup {
         col("__na").as("n_a"), col("__nb").as("n_b"),
         col("cont_a"), col("cont_b"))
   }
-
-  /** N-gram Jaccard near-duplicate pairs with a cheap blocking key (the
-    * minimum shingle hash — documents sharing their rarest-hashed shingle
-    * collide), then exact verification. For corpora where full MinHash is
-    * overkill. */
-  def ngramJaccard(df: DataFrame, textCol: String, idCol: String,
-                   shingleSize: Int = 3, threshold: Double = 0.5,
-                   blockingHashes: Int = 8, maxBucket: Int = 1000): DataFrame =
-    minHashLsh(df, textCol, idCol, shingleSize,
-      numHashes = blockingHashes, bands = blockingHashes,
-      threshold = threshold, maxBucket = maxBucket)
 
   /** LINE-level boilerplate removal — the CCNet/RefinedWeb paragraph-hash
     * step of web-corpus curation: split each document on newlines, count

@@ -209,7 +209,7 @@ object Layout {
 
   /** Drift-triggered automatic refit for a z-ordered store — the
     * trigger/rebuild automation [[zOrderDriftStats]]'s REFIT RULE calls
-    * for, mirroring `Similarity.ivfMaintain`'s shape (bounded health
+    * for, mirroring `Similarity.ivfPqMaintain`'s shape (bounded health
     * read → threshold → in-place rebuild → returns the decision).
     *
     * Reads the drift report (one column-pruned scan, ≤ buckets rows per
@@ -225,7 +225,7 @@ object Layout {
     * `maxBalance` is in post-fit units: a fresh equi-depth fit starts at
     * balance ≈ 1 (each rank holds ~its fair share), so the default 4.0
     * means "the hottest rank holds 4× its fair share" — the same
-    * several-times-post-fit threshold `ivfMaintain.maxSkew` uses.
+    * several-times-post-fit threshold `ivfPqMaintain.maxSkew` uses.
     *
     * Crash ordering: the model property is replaced AFTER the rewrite
     * commits. A crash between the two leaves committed data ranked

@@ -253,7 +253,7 @@ object Similarity {
     * cells + the bounded [[TopKAggregator]] — recall < 1 by construction,
     * scores never approximate. Deterministic for a fixed seed. For a
     * persisted, physically cell-partitioned corpus (probes become
-    * partition-pruned reads) see [[ivfBuild]]/[[ivfProbeTopK]].
+    * partition-pruned reads) see [[ivfPqBuild]]/[[ivfPqProbeTopK]].
     * `nCells ≤ 0` (the default) sizes the quantizer as ~√n via
     * [[autoCells]] — one extra metadata-cheap count of the corpus.
     * `nProbe ≤ 0` (the default) probes cells/8: with auto-sized cells a
@@ -285,108 +285,6 @@ object Similarity {
     rankTopK(scored, queryIdCol, idCol, k)
   }
 
-  /** One-time physical clustering of a corpus for IVF probing: fit the
-    * quantizer (bounded sample), assign every row its cell, and write the
-    * corpus `partitionBy(__cell)` with per-row norms precomputed, plus the
-    * centroids, under `path`. After this, [[ivfProbeTopK]] reads ONLY the
-    * probed cells' directories — at 100 TB a probe is a partition-pruned
-    * read of ~nProbe/nCells of the data, with no quantizer refit, no
-    * assignment pass, and no norm recomputation per query batch.
-    * `nCells ≤ 0` (the default) sizes the quantizer as ~√n via
-    * [[autoCells]].
-    *
-    * A build overwrites BOTH halves (data, then centroids), so over an
-    * EXISTING index it is itself a torn-window writer: it holds the same
-    * `.rebuilding` fence [[ivfMaintain]] uses for the whole write and
-    * lifts it on completion. That also makes a completed
-    * rebuild-from-source the self-healing recovery for a fenced index —
-    * both halves are rewritten from one generation, so the marker (from
-    * this build, a crashed maintain, or a crashed earlier build) is
-    * deleted instead of demanding manual restoration. The build also
-    * HOLDS the `.mutating` writer lease (acquire-or-create — a fresh
-    * root works): a build racing a live append refuses at acquisition
-    * instead of replacing `data/` under the append's in-flight write.
-    * Consequently a crashed WRITER'S leftover lease blocks the rebuild
-    * too — the refusal quotes the stamped holder (op/time/host/pid);
-    * after confirming that writer is dead, delete `.mutating` and rerun,
-    * and the completed build self-heals the `.rebuilding` fence as
-    * before. */
-  def ivfBuild(corpus: DataFrame, vecCol: String, path: String,
-               nCells: Int = 0, seed: Long = 42L,
-               fitSampleFraction: Double = 0.0,
-               fitSampleRows: Int = 4096): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    // fail fast (advisory; acquisition below still decides atomically):
-    // the auto-sizing count next is a FULL corpus scan at scale — it must
-    // not be paid ahead of a certain scheme refusal or a held lease
-    buildPrecheck(spark, fs, root, "ivfBuild")
-    val known = if (nCells > 0) -1L else corpus.count()
-    val cells = if (nCells > 0) nCells else autoCells(known)
-    val centroids = fitCentroids(corpus, vecCol, cells, seed,
-      fitSampleFraction, fitSampleRows, knownRows = known)
-    // the build HOLDS the writer lease (acquire-or-create: a fresh root
-    // is created, an existing one leased like any mutation) across every
-    // write below — a build racing a live append would otherwise replace
-    // data/ while the append's write is in flight, silently dropping the
-    // appended rows after their fence advanced
-    withMutationLease(spark, fs, root, "ivfBuild", createRoot = true) {
-      val marker = new org.apache.hadoop.fs.Path(root, RebuildMarker)
-      fs.create(marker, true).close()
-      // a probe-width calibration tuned against the centroids this build
-      // replaces would be silently wrong-generation metadata
-      fs.delete(new org.apache.hadoop.fs.Path(root, NProbeFile), false)
-      corpus
-        .withColumn("__cn", V.norm(col(vecCol)))
-        .withColumn("__cell", nearestCell(col(vecCol), centroids))
-        .write.mode("overwrite").partitionBy("__cell").parquet(s"$path/data")
-      centroids.zipWithIndex
-        .map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cell", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-      writeGeneration(spark, path)
-      fs.delete(marker, false)
-    }
-    // a rebuild over an existing index replaces both halves' part files;
-    // same-session plans may hold cached file listings naming the deleted
-    // ones (the hazard ivfAppend/ivfMaintain already refresh against)
-    spark.catalog.refreshByPath(s"$path/data")
-    spark.catalog.refreshByPath(s"$path/centroids")
-  }
-
-  /** Incrementally extend an index persisted by [[ivfBuild]]: assign the
-    * new rows with the EXISTING quantizer (read from `path/centroids`) and
-    * append them into their cells' directories — no refit, no rewrite of
-    * the standing data; the daily-increment path for an index whose full
-    * rebuild is a 100 TB job. Because probes rank the SAME centroids the
-    * assignment used, [[ivfProbeTopK]] stays exact under full probe and
-    * its partial-probe recall contract is unchanged; what drifts under a
-    * shifting distribution is cell BALANCE (new mass concentrates in few
-    * cells, making their probes more expensive) — watch [[ivfCellStats]]
-    * and rebuild when the skew crosses the caller's bound. `newRows` must
-    * carry the schema the index was built from.
-    *
-    * Concurrency discipline (the same single-writer assumption
-    * [[ivfMaintain]] documents), now mechanically backstopped: the fence
-    * check refuses a `.rebuilding` index (a crashed maintain can no
-    * longer be silently extended with whichever centroids file survived
-    * the torn swap), and the append HOLDS the `.mutating` writer lease
-    * across its centroid read + data write — a maintain/delete whose
-    * staging would silently swap away in-flight appended rows (the one
-    * interleaving the narrow fence alone could not make loud) now
-    * refuses at acquisition, in whichever order the two writers arrive.
-    * Visibility to
-    * CONCURRENT readers: an append writes part files into live `__cell=`
-    * directories non-atomically — each part file appears whole, the
-    * batch does not — so a probe racing an append may score a PREFIX of
-    * the batch (some new rows visible, others not yet). It never sees a
-    * torn row or mixed centroids (append does not touch `centroids`),
-    * and any prefix it does see was assigned with the same quantizer the
-    * probe ranks, so retrieved neighbors are still exactly scored; if
-    * batch atomicity matters, schedule probes around appends
-    * (SimilaritySpec pins the prefix-visibility contract). */
   /** Standing coarse quantizer of a persisted index (tiny: nCells rows). */
   private def loadCentroids(spark: SparkSession,
                             path: String): Array[Array[Double]] =
@@ -404,130 +302,18 @@ object Similarity {
     PqModel(codebooks.length, codebooks(0)(0).length, codebooks)
   }
 
-  def ivfAppend(newRows: DataFrame, vecCol: String, path: String): Unit = {
-    val spark = newRows.sparkSession
-    requireNotRebuilding(spark, path)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    // the lease is HELD across centroid read + data write, not merely
-    // checked at entry: a maintain/delete acquiring it mid-append would
-    // stage from a listing missing the in-flight rows and swap them away
-    // silently — and a swapped quantizer between the read and the write
-    // would file rows under stale cells. Held, both races refuse loudly.
-    withMutationLease(spark, fs, root, "ivfAppend", AppendLeaseHint) {
-      val centroids = loadCentroids(spark, path)
-      newRows
-        .withColumn("__cn", V.norm(col(vecCol)))
-        .withColumn("__cell", nearestCell(col(vecCol), centroids))
-        .write.mode("append").partitionBy("__cell").parquet(s"$path/data")
-    }
-    // same-session probes may hold a cached file listing for the cell
-    // directories; drop it so they see the appended part files
-    spark.catalog.refreshByPath(s"$path/data")
-  }
-
-  /** Per-cell row counts of a persisted index — the [[ivfAppend]] rebuild
-    * trigger (skewed counts = expensive probes on the hot cells). Scans
-    * only the partition column (directory-derived), not the vectors. */
+  /** Per-cell row counts of a persisted index — the [[ivfPqMaintain]]
+    * skew and growth gauge (skewed counts = expensive probes on the hot
+    * cells). Scans only the partition column (directory-derived), not
+    * the vectors. */
   def ivfCellStats(spark: SparkSession, path: String): DataFrame = {
-    requireNotRebuilding(spark, path)
+    requireIndex(spark, path)
     spark.read.parquet(s"$path/data")
       .groupBy("__cell")
       .agg(count(lit(1)).as("n"))
       .select(col("__cell").as("cell"), col("n"))
   }
 
-  /** Append-vs-rebuild automation for an index persisted by [[ivfBuild]]
-    * and grown by [[ivfAppend]]: reads the per-cell counts (bounded by the
-    * cell count — directory metadata, not data) and rebuilds the index
-    * in place when either health bound is crossed, returning `"ok"` or
-    * `"rebuilt"` so callers can log/alert on the decision.
-    *
-    *  - **Skew**: max cell population / mean > `maxSkew` — appended mass
-    *    concentrated in few cells, making their probes expensive and
-    *    recall lopsided (a probe budget spent on one bloated cell).
-    *  - **Growth**: the √n heuristic's cell count for the CURRENT corpus
-    *    exceeds `maxGrowth` × the stored cell count — the quantizer was
-    *    fit for a corpus this one has outgrown, so per-cell scan cost has
-    *    drifted up by the same factor.
-    *
-    * The rebuild refits the quantizer on the current distribution
-    * ([[fitCentroids]] — bounded driver sample) and rewrites the data
-    * partition-by-cell into a staging directory, then swaps directories.
-    * The swap is rename-based and brief but NOT atomic: run maintenance
-    * from the single writer that owns the index (the same assumption
-    * [[ivfAppend]] already makes — concurrent appends during a rebuild
-    * would be lost), while readers hold the previous listing. The torn
-    * window (new data, old centroids — which would silently collapse
-    * recall) is fenced by a `.rebuilding` marker written before the first
-    * rename and removed after the last: [[ivfProbeTopK]] and
-    * [[ivfCellStats]] refuse to open a marked index, every rename result
-    * is checked, and a crashed swap is recovered by restoring the
-    * `.old`/`.staging` halves (both live next to the marker) rather than
-    * by trusting whatever mix the crash left. A crash BEFORE the first
-    * rename leaves only `.staging` to delete; the live index is touched
-    * only after the staging write completed. */
-  def ivfMaintain(spark: SparkSession, path: String, vecCol: String,
-                  maxSkew: Double = 4.0, maxGrowth: Double = 4.0,
-                  seed: Long = 42L, fitSampleRows: Int = 4096,
-                  recallTarget: Option[Double] = None,
-                  recallK: Int = 10): String = {
-    require(maxSkew > 1.0, "maxSkew must exceed 1 (1 = perfectly uniform)")
-    require(maxGrowth >= 1.0, "maxGrowth must be >= 1")
-    // layout guard: an IVF-PQ index ALSO has data/ + centroids/, so this
-    // call would "work" — and its rebuild (via ivfBuild) would silently
-    // DROP the codes/codebooks relations. indexMaintain routes correctly;
-    // the direct call must refuse just as loudly.
-    requireNotIvfPq(spark, path, "ivfMaintain's rebuild would drop them " +
-      "— run ivfPqMaintain or indexMaintain instead")
-    val (total, skew, wantCells, nCellsStored) = cellHealth(spark, path)
-    if (total == 0) return "ok"
-    if (skew <= maxSkew && wantCells <= nCellsStored * maxGrowth) "ok"
-    else {
-      // a calibration tuned against the REPLACED quantizer is stale —
-      // dropped BEFORE the rebuild, because a crash between the fence
-      // lift and a post-swap delete would leave it silently in force on
-      // the refitted index (losing it on an unchanged index only
-      // degrades to the uncalibrated default). When the caller states a
-      // recall target, the width is re-checked against the rebuilt index
-      // immediately (the post-rebuild re-check nProbeForRecall's
-      // contract promises).
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-      // writer lease held from BEFORE the staging read to after the
-      // swap: an append interleaving with that window would be silently
-      // replaced by the swap (its rows are not in the staged files) —
-      // appends HOLD the same lease, so the interleaving is
-      // structurally impossible (see withMutationLease)
-      withMutationLease(spark, fs, root, "ivfMaintain") {
-        fs.delete(new org.apache.hadoop.fs.Path(path, NProbeFile), false)
-        // original columns only: assignment/norm recomputed by the build
-        val data = spark.read.parquet(s"$path/data").drop("__cell", "__cn")
-        stagedRebuild(spark, path, Seq("data", "centroids")) { staging =>
-          ivfBuild(data, vecCol, staging, nCells = wantCells,
-            seed = seed, fitSampleRows = fitSampleRows)
-        }
-      }
-      recallTarget.foreach(t =>
-        nProbeForRecall(spark, path, vecCol, t, k = recallK, seed = seed))
-      "rebuilt"
-    }
-  }
-
-  /** Staged in-place rebuild shared by every index-maintenance path
-    * ([[ivfMaintain]], [[pqMaintain]], [[ivfPqMaintain]]): run `build`
-    * against `<path>/.staging`, then swap the named halves into place.
-    * The swap is rename-based and brief but NOT atomic: the torn window
-    * (some halves new, some old — which would silently corrupt results,
-    * e.g. probing new cells with old centroids) is fenced by the
-    * `.rebuilding` marker written before the first rename and removed
-    * after the last — readers and appenders refuse a marked index, every
-    * rename result is checked, and a crashed swap is recovered by
-    * restoring the halves from `.old`/`.staging` (both live next to the
-    * marker) rather than by trusting whatever mix the crash left. A crash
-    * BEFORE the first rename leaves only `.staging` to delete; the live
-    * index is touched only after the staging build completed.
-    * Single-writer, like every maintenance path. */
   /** Checked rename shared by every fenced mutation ([[stagedRebuild]],
     * [[indexDelete]]): a failed rename mid-swap must stop the swap WITH
     * the recovery story, never continue past a half-moved piece. One
@@ -556,9 +342,8 @@ object Similarity {
   /** Writer lease EVERY index writer holds for the span in which its
     * reads and writes must be mutually consistent: whole-mutation paths
     * ([[stagedRebuild]], [[indexDelete]]) from their FIRST read of the
-    * relations to their last swap, and APPENDS ([[ivfAppend]],
-    * [[pqAppend]], [[ivfPqAppend]]) from their quantizer/codebook read to
-    * their last data write — the mechanical backstop behind the
+    * relations to their last swap, and APPENDS ([[ivfPqAppend]]) from
+    * their quantizer/codebook read to their last data write — the mechanical backstop behind the
     * documented single-writer contract. The `.rebuilding` fence only
     * covers the brief swap, which keeps PROBES live through the long
     * staging build but would leave a silent-loss window for appends that
@@ -568,8 +353,8 @@ object Similarity {
     * hole). HELD for the whole append, the interleaving is structurally
     * impossible: whichever writer acquires second refuses loudly. Probes
     * do NOT touch the lease — their availability is the reason the fence
-    * is narrow. OVERWRITE builds ([[ivfBuild]], [[pqBuild]],
-    * [[ivfPqBuild]]) hold it too, acquire-or-create (a build is the one
+    * is narrow. OVERWRITE builds ([[ivfPqBuild]]) hold it too,
+    * acquire-or-create (a build is the one
     * writer legitimately pointed at an absent root, so it creates the
     * root and then takes the lease like everyone else): although a build
     * stages nothing from the index's own rows, it REPLACES `data/` — a
@@ -602,7 +387,7 @@ object Similarity {
   }
 
   /** Best-effort description of the current lease holder, read from the
-    * marker's payload for the refusal message: "held by ivfMaintain
+    * marker's payload for the refusal message: "held by ivfPqMaintain
     * since 2026-08-16T12:00:00Z (age 42s) on host-7 pid 123". Degrades
     * to naming WHY the holder is unknown (pre-payload marker, read
     * mid-stamp, unreadable) — a diagnostic read must never replace the
@@ -802,6 +587,19 @@ object Similarity {
     try body finally { fs.delete(marker, false); () }
   }
 
+  /** Staged in-place rebuild of [[ivfPqMaintain]]: run `build` against
+    * `<path>/.staging`, then swap the named relations into place. The
+    * swap is rename-based and brief but NOT atomic: the torn window (some
+    * relations new, some old — e.g. probing new cells with old centroids,
+    * which would silently corrupt results) is fenced by the `.rebuilding`
+    * marker written before the first rename and removed after the last —
+    * readers and appenders refuse a marked index, every rename result is
+    * checked, and a crashed swap is recovered by restoring the relations
+    * from `.old`/`.staging` (both live next to the marker) rather than by
+    * trusting whatever mix the crash left. A crash BEFORE the first
+    * rename leaves only `.staging` to delete; the live index is touched
+    * only after the staging build completed. Single-writer, like every
+    * mutation path. */
   private def stagedRebuild(spark: SparkSession, path: String,
                             halves: Seq[String])(
       build: String => Unit): Unit = {
@@ -836,8 +634,7 @@ object Similarity {
     halves.foreach(d => spark.catalog.refreshByPath(s"$path/$d"))
   }
 
-  /** Cell-health kernel shared by [[ivfMaintain]] and [[ivfPqMaintain]]:
-    * (total rows, max/mean skew over STORED cells, `autoCells(total)`,
+  /** Cell-health kernel of [[ivfPqMaintain]]: (total rows, max/mean skew over STORED cells, `autoCells(total)`,
     * stored cell count). The mean is over ALL stored cells — empty cells
     * have no directory but do dilute it: an index where half the cells
     * emptied out is skewed. A bounded read: per-cell counts are directory
@@ -853,20 +650,10 @@ object Similarity {
     (total, skew, autoCells(total), nCellsStored)
   }
 
-  /** Fence file a mid-swap [[ivfMaintain]] (or mid-overwrite [[ivfBuild]])
-    * leaves behind; see [[requireNotRebuilding]]. */
+  /** Fence file a mid-swap [[ivfPqMaintain]]/[[indexDelete]] (or a
+    * mid-overwrite [[ivfPqBuild]]) leaves behind; see
+    * [[requireNotRebuilding]]. */
   private val RebuildMarker = ".rebuilding"
-
-  /** Persisted probe-width calibration (see [[nProbeForRecall]]):
-    * generation-bound metadata — any quantizer refit ([[ivfBuild]]
-    * overwrite, [[ivfMaintain]] rebuild) deletes it, because a probe
-    * width tuned against replaced centroids is silently miscalibrated.
-    * The delete alone cannot close the race where a calibration RUNNING
-    * during the refit lands its file after the delete (the calibrators
-    * are readers and deliberately do not take the writer lease), so the
-    * artifact is also generation-STAMPED and readers ignore a stamp
-    * that does not match the current [[GenerationFile]]. */
-  private val NProbeFile = "nprobe.json"
 
   /** The stamped generation agrees with `gen` — including the
     * "none"=="none" case of an index predating the generation marker.
@@ -877,29 +664,6 @@ object Similarity {
     """"gen"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(calText)
       .map(_.group(1))
       .contains(gen.getOrElse("none"))
-
-  /** The persisted [[nProbeForRecall]] recommendation, if the index has
-    * been calibrated since its last quantizer refit. Requires the
-    * file's trailing completeness sentinel (see [[writeCalFile]]) AND a
-    * generation stamp matching the index's current one: a torn
-    * calibration, a pre-stamp file, or a stale calibration that landed
-    * after a concurrent rebuild's invalidating delete all parse to None
-    * — the conservative uncalibrated default — never to a width
-    * silently installed against the wrong model. */
-  def calibratedNProbe(spark: SparkSession, path: String): Option[Int] =
-    calibratedNProbeAt(spark, path, readGeneration(spark, path))
-
-  /** [[calibratedNProbe]] against an ALREADY-READ generation — the probe
-    * path's form: probes snapshot the generation once at entry and
-    * re-check it post-plan, so the calibration read must not add a
-    * third read of the same small file per query batch. */
-  private[graft] def calibratedNProbeAt(spark: SparkSession, path: String,
-                                        gen: Option[String]): Option[Int] =
-    readCompleteCalFile(spark, path, NProbeFile)
-      .filter(calStampMatches(_, gen))
-      .flatMap(text =>
-        """"nprobe"\s*:\s*(\d+)""".r.findFirstMatchIn(text)
-          .map(_.group(1).toInt))
 
   /** Write a calibration artifact so a crash can never install a torn
     * width: tmp + atomic rename where the filesystem swaps atomically
@@ -938,7 +702,7 @@ object Similarity {
 
   /** Generation marker: a fresh uuid written by every mutation that
     * REPLACES the quantizer/codebooks or re-encodes the relations
-    * (overwrite builds, the maintain family's staged rebuilds) — NOT by
+    * (overwrite builds, [[ivfPqMaintain]]'s staged rebuild) — NOT by
     * appends or [[indexDelete]], which keep the standing model valid.
     * Probes snapshot it at entry and re-check after their plan-time
     * reads ([[requireGenerationUnchanged]]): without it, a rebuild that
@@ -979,112 +743,8 @@ object Similarity {
         "longer matches the data files — retry the probe")
   }
 
-  /** Calibrate the probe width of a persisted index to a RECALL TARGET,
-    * replacing the scaladoc-table-and-judgment step with a measurement:
-    * picks the smallest `nProbe` whose measured recall@k meets `target`
-    * on the index's own data, persists it to `<path>/nprobe.json`, and
-    * returns it — after which [[ivfProbeTopK]]'s DEFAULT probe width is
-    * the calibrated one, so callers get the target recall without
-    * reading any table. Recalibrate after drift (appended mass moves
-    * recall down at a fixed width) or rely on [[ivfMaintain]]'s
-    * `recallTarget` to re-check post-rebuild.
-    *
-    * COST — one bounded measurement, not a sweep: `sampleQueries` rows
-    * sampled from the index itself are brute-force scored in ONE pass
-    * over the index (the same cost class as a single full-probe query
-    * batch). The whole recall-vs-width CURVE then falls out without
-    * re-probing: a true neighbor is retrieved at width `p` iff its
-    * cell ranks ≤ p among the query's centroid distances — exact-scored
-    * probes mean a true top-k member in the probed set always survives
-    * ranking — and that cell rank is computable driver-side from the
-    * (tiny) centroids and collected sample. Driver memory is bounded by
-    * `sampleQueries · k` truth pairs + `sampleQueries` vectors.
-    *
-    * Truth pairs EXCLUDE the query's own row (ranked top-(k+1), best
-    * dropped): self-sampled queries otherwise carry one guaranteed hit
-    * per query — up to 1/k of measured recall — that held-out queries
-    * never get.
-    *
-    * The MEASURED curve is the sample's: recall on future query batches
-    * matches it insofar as they resemble the corpus distribution (the
-    * standard self-calibration assumption; out-of-distribution query
-    * streams should calibrate with their own `sampleQueries`-sized batch
-    * via the same machinery). Returns the cells/8 floor (uncalibrated
-    * default, nothing persisted) on an empty or all-zero-vector index. */
-  def nProbeForRecall(spark: SparkSession, path: String, vecCol: String,
-                      target: Double, k: Int = 10,
-                      sampleQueries: Int = 64, seed: Long = 42L,
-                      confidenceZ: Double = 1.0): Int = {
-    require(target > 0.0 && target <= 1.0,
-      s"recall target must be in (0, 1], got $target")
-    require(confidenceZ >= 0.0, "confidenceZ must be >= 0")
-    requireNotRebuilding(spark, path)
-    // an IVF-PQ index also has data/ + centroids/, so this call would
-    // "work" — but its probes read pqcal.json, never nprobe.json, so the
-    // calibration would be dead metadata the caller believes is in force
-    requireNotIvfPq(spark, path, "its probes read pqcal.json, not " +
-      "nprobe.json — calibrate with ivfPqCalibrate instead")
-    // generation snapshot BEFORE any model/data read: the persisted
-    // artifact carries it, and readers ignore a stamp that no longer
-    // matches — so a rebuild completing anywhere during this
-    // measurement can never leave a stale width silently in force
-    val gen0 = readGeneration(spark, path)
-    val centroids = loadCentroids(spark, path)
-    val nCells = centroids.length
-    val data = spark.read.parquet(s"$path/data")
-    val sampled = selfQuerySample(data, vecCol, sampleQueries, seed)
-    if (sampled.isEmpty) return math.max(1, nCells / 8)
-    val queries = queriesFromSample(spark, sampled, data.schema(vecCol),
-      vecCol)
-    // exact ground truth in ONE scored pass, reusing the persisted norms;
-    // ranking (cosine, cell) directly means no row id is needed — only
-    // each true neighbor's CELL matters for the curve
-    val q = queries.select(col("__sqid"), col(vecCol).as("__qvec"),
-      V.norm(col(vecCol)).as("__qn"))
-    val scored = data
-      .join(broadcast(q))
-      .withColumn("cosine", V.cosineGivenNorms(
-        col(vecCol), col("__qvec"), col("__cn"), col("__qn")))
-    // queries are sampled FROM the index, so each query's raw top-k
-    // contains the query row itself (cosine 1, cell rank 1) — a
-    // guaranteed hit that would inflate measured recall by up to 1/k
-    // (10% at k=10) relative to held-out queries. Rank k+1 candidates
-    // and drop the single best-ranked row per query: the self row always
-    // ranks first (cosine 1 is maximal; among exact duplicates all
-    // copies share the query's vector and hence its cell, so dropping
-    // any one copy removes the same cell), leaving k held-out-style
-    // truth pairs per query.
-    val pairs = rankTopK(scored, "__sqid", "__cell", k + 1)
-      .filter(col("rank") > 1)
-      .select(col("__sqid"), col("__cell").cast("int"))
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(1)))
-    if (pairs.isEmpty) return math.max(1, nCells / 8)
-    val cellRank: Map[Long, Array[Int]] = cellRanks(sampled, centroids)
-    val ranks = pairs.map { case (qid, cell) => cellRank(qid)(cell) }.sorted
-    // recall(p) = |ranks <= p| / |pairs|; smallest p meeting the target —
-    // PLUS a one-sided finite-sample margin: the bare empirical quantile
-    // undershoots on independent queries about half the time (measured
-    // 0.87-0.885 at a 0.9 target with 64 queries before the margin), and
-    // a query's k truth pairs are correlated, so the binomial unit is the
-    // QUERY count, not the pair count. confidenceZ = 1 ≈ 84% one-sided
-    // confidence; 0 restores the raw quantile.
-    val nQueries = math.max(1, pairs.map(_._1).distinct.length)
-    val effTarget = math.min(1.0, target +
-      confidenceZ * math.sqrt(target * (1.0 - target) / nQueries))
-    val need = math.ceil(effTarget * ranks.length).toInt
-    val chosen = if (need <= 0) 1 else ranks(need - 1)
-    val measured = ranks.count(_ <= chosen).toDouble / ranks.length
-    writeCalFile(spark, path, NProbeFile,
-      s""""nprobe":$chosen,"target":$target,"measured_recall":$measured,""" +
-        s""""k":$k,"sample_queries":${sampled.length},"cells":$nCells,""" +
-        s""""gen":"${gen0.getOrElse("none")}"""")
-    chosen
-  }
-
   /** Hash-ordered bounded self-sample of a relation's vector rows — the
-    * recall-calibration query batch ([[nProbeForRecall]],
-    * [[pqShortlistForRecall]], [[ivfPqCalibrate]]). Samples ~4× the
+    * recall-calibration query batch of [[ivfPqCalibrate]]. Samples ~4× the
     * needed rows, then cuts to `sampleQueries` under a HASH order: a
     * bare limit() takes the scan's first partitions — the lowest
     * `__cell=` directories of a cell-partitioned index — and a sample
@@ -1139,10 +799,11 @@ object Similarity {
     }.toMap
 
   /** Exact ground truth for self-sampled calibration queries with the
-    * self row DROPPED (rank-(k+1), best removed — the [[nProbeForRecall]]
-    * discipline: self-sampled queries otherwise carry one guaranteed hit
-    * per query, inflating measured recall by up to 1/k relative to
-    * held-out queries). Returns (`__sqid`, idCol-as-long) pairs. */
+    * self row DROPPED (rank-(k+1), best removed): self-sampled queries
+    * otherwise carry one guaranteed hit per query — cosine 1, its own
+    * cell — inflating measured recall by up to 1/k (10% at k=10)
+    * relative to held-out queries. Returns (`__sqid`, idCol-as-long)
+    * pairs. */
   private def selfTruthPairs(corpus: DataFrame, queries: DataFrame,
                              vecCol: String, idCol: String,
                              k: Int): DataFrame =
@@ -1153,41 +814,47 @@ object Similarity {
   /** Smallest count of truth pairs that must be retrieved to meet
     * `target` plus the one-sided finite-sample margin — the bare
     * empirical quantile undershoots on independent queries about half
-    * the time, and a query's k truth pairs are correlated, so the
-    * binomial unit is the QUERY count, not the pair count
-    * (see [[nProbeForRecall]]'s margin note). */
+    * the time (measured 0.87-0.885 at a 0.9 target with 64 queries
+    * before the margin), and a query's k truth pairs are correlated, so
+    * the binomial unit is the QUERY count, not the pair count. */
   private def neededCount(target: Double, confidenceZ: Double,
                           nQueries: Int, nPairs: Int): Int =
     math.max(1, math.ceil(math.min(1.0, target +
       confidenceZ * math.sqrt(target * (1.0 - target) /
         math.max(1, nQueries))) * nPairs).toInt)
 
-  // --------------------------------------- PQ-family recall calibration
+  // ---------------------------------------------------- recall calibration
 
-  /** Persisted recall calibration for the PQ layouts (see
-    * [[pqShortlistForRecall]] / [[ivfPqCalibrate]]): generation-bound
-    * metadata, deleted by every codebook refit ([[pqBuild]]/
-    * [[ivfPqBuild]] overwrite, the maintain rebuilds) — widths tuned
-    * against replaced codebooks are silently miscalibrated, exactly the
-    * [[NProbeFile]] rationale. */
+  /** Persisted recall calibration (see [[ivfPqCalibrate]]):
+    * generation-bound metadata, deleted by every quantizer/codebook refit
+    * ([[ivfPqBuild]] overwrite, the [[ivfPqMaintain]] rebuild) — widths
+    * tuned against replaced centroids/codebooks are silently
+    * miscalibrated. The delete alone cannot close the race where a
+    * calibration RUNNING during the refit lands its file after the
+    * delete (the calibrator is a reader and deliberately does not take
+    * the writer lease), so the artifact is also generation-STAMPED and
+    * readers ignore a stamp that does not match the current
+    * [[GenerationFile]]. */
   private val PqCalFile = "pqcal.json"
 
   /** Uncalibrated shortlist width: re-rank `4·k` ADC candidates. */
   private val DefaultShortlistFactor = 4
 
-  /** The persisted PQ-family calibration, if the index has been
-    * calibrated since its last codebook refit: (nProbe — 0 on flat-PQ,
-    * which probes no cells — and the ADC shortlist factor). Torn or
-    * pre-sentinel files read as None (see [[readCompleteCalFile]]), and
-    * so does a generation stamp that no longer matches the index — the
-    * stale-calibration-landed-after-a-rebuild race [[NProbeFile]]
+  /** The persisted width calibration, if the index has been
+    * calibrated since its last codebook refit: (nProbe, ADC shortlist
+    * factor). Torn or pre-sentinel files read as None (see
+    * [[readCompleteCalFile]]), and so does a generation stamp that no
+    * longer matches the index — the
+    * stale-calibration-landed-after-a-rebuild race [[PqCalFile]]
     * documents. */
   def calibratedPqWidths(spark: SparkSession,
                          path: String): Option[(Int, Int)] =
     calibratedPqWidthsAt(spark, path, readGeneration(spark, path))
 
-  /** [[calibratedPqWidths]] against an ALREADY-READ generation — see
-    * [[calibratedNProbeAt]]. */
+  /** [[calibratedPqWidths]] against an ALREADY-READ generation — the
+    * probe path's form: probes snapshot the generation once at entry and
+    * re-check it post-plan, so the calibration read must not add a third
+    * read of the same small file per query batch. */
   private[graft] def calibratedPqWidthsAt(spark: SparkSession, path: String,
                                           gen: Option[String])
       : Option[(Int, Int)] =
@@ -1212,120 +879,14 @@ object Similarity {
         s""""sample_queries":$nQueries,"cells":$cells,""" +
         s""""gen":"${gen.getOrElse("none")}"""")
 
-  /** Calibrate a [[pqBuild]] flat-PQ index's SHORTLIST width to a recall
-    * target — the PQ analogue of [[nProbeForRecall]], closing the gap
-    * where a [[pqMaintain]] rebuild restores quantization quality (the
-    * MQE gauge reads ≈ 1 again) but recall stays depressed: the refitted
-    * codebooks spread their capacity over the GROWN corpus, so the
-    * shortlist width that met a recall target before the drift ranks too
-    * few candidates after it. Picks the smallest `shortlistFactor` whose
-    * measured recall@k meets `target` on the index's own data, persists
-    * it to `<path>/pqcal.json`, and returns it — after which
-    * [[pqProbeTopK]]'s DEFAULT shortlist width is the calibrated one.
-    *
-    * COST — one bounded measurement, not a sweep: `sampleQueries`
-    * self-sampled queries are (a) brute-force scored for exact ground
-    * truth (one vectors scan — [[nProbeForRecall]]'s cost class), and
-    * (b) ADC-scored against the NARROW codes relation to locate each
-    * true neighbor's exact shortlist RANK (1 + rows scoring ahead of it
-    * under the shortlist's (cosine desc, id asc) order — one codes scan
-    * with broadcast thresholds). The recall-vs-width CURVE then falls
-    * out driver-side without re-probing: a true neighbor is retrieved at
-    * width S iff its ADC rank ≤ S — exact-scored re-ranking means a true
-    * top-k member in the shortlist always survives. Driver memory:
-    * `sampleQueries`·k truth pairs + `sampleQueries` vectors. Same
-    * self-calibration assumption and one-sided `confidenceZ` margin as
-    * [[nProbeForRecall]], but the PQ-family DEFAULT is z = 2 (vs IVF's
-    * 1): ADC rank quality varies with the codebook DRAW and splits by
-    * query REGIME on mixed corpora — measured per-regime external recall
-    * spread ±0.05 around the on-sample number across k-means draws
-    * (SCALEPROBE `pq_drift`), beyond what the per-query binomial term
-    * covers — so external batches land AT or above the stated target
-    * instead of distributed around it. The stronger margin costs
-    * shortlist width, never scan width.
-    *
-    * The persisted factor is capped at `maxShortlistFactor` — the
-    * re-rank join's fan-in is Q·factor·k, and an unreachable target must
-    * not silently turn every probe into a near-full re-rank; the
-    * artifact's `measured_recall` records what the cap actually achieves.
-    * Returns the uncalibrated default (4), persisting nothing, on an
-    * empty or all-zero-vector index. */
-  def pqShortlistForRecall(spark: SparkSession, path: String,
-                           vecCol: String, idCol: String, target: Double,
-                           k: Int = 10, sampleQueries: Int = 64,
-                           seed: Long = 42L, confidenceZ: Double = 2.0,
-                           maxShortlistFactor: Int = 64): Int = {
-    require(target > 0.0 && target <= 1.0,
-      s"recall target must be in (0, 1], got $target")
-    require(confidenceZ >= 0.0, "confidenceZ must be >= 0")
-    require(maxShortlistFactor >= 1, "maxShortlistFactor must be >= 1")
-    requireNotRebuilding(spark, path)
-    val gen0 = readGeneration(spark, path) // see nProbeForRecall's note
-    val model = loadPqModel(spark, path)
-    val vectors = spark.read.parquet(s"$path/vectors")
-    val sampled = selfQuerySample(vectors, vecCol, sampleQueries, seed)
-    if (sampled.isEmpty) return DefaultShortlistFactor
-    val queries = queriesFromSample(spark, sampled,
-      vectors.schema(vecCol), vecCol)
-    val truth = selfTruthPairs(vectors.select(col(idCol), col(vecCol)),
-      queries, vecCol, idCol, k).localCheckpoint(true)
-    val codes = spark.read.parquet(s"$path/codes")
-    val q = withQueryNorm(queries, Seq(idCol), "__sqid", vecCol)
-    val pairRanks = adcTruthRanks(codes.select(col(idCol), col("__codes"),
-      col("__cn")), q, model, truth, idCol)
-    if (pairRanks.isEmpty) return DefaultShortlistFactor
-    val nQ = pairRanks.map(_._1).distinct.length
-    val need = neededCount(target, confidenceZ, nQ, pairRanks.length)
-    val sorted = pairRanks.map(_._2).sorted
-    val wantK = if (need > sorted.length) sorted.last else sorted(need - 1)
-    val factor = math.min(maxShortlistFactor.toLong,
-      math.max(1L, (wantK + k - 1) / k)).toInt
-    val measured =
-      sorted.count(_ <= factor.toLong * k).toDouble / sorted.length
-    writePqCal(spark, path, 0, factor, target, measured, k,
-      sampled.length, 0, gen0)
-    factor
-  }
-
-  /** Each truth pair's exact ADC shortlist rank: 1 + the number of
-    * corpus rows scoring AHEAD of the true neighbor under the
-    * shortlist's (cosine desc, id asc) order. Two bounded scans of the
-    * narrow encoded relation: thresholds (corpus restricted to the ≤ Q·k
-    * truth ids via a broadcast join), then competitor counts (full ADC
-    * scan against broadcast thresholds, grouped to ≤ Q·k rows). Returns
-    * (`__sqid`, rank) per truth pair. */
-  private def adcTruthRanks(encoded: DataFrame, q: DataFrame,
-                            model: PqModel, truth: DataFrame,
-                            idCol: String): Array[(Long, Long)] = {
-    val truthIds = truth.select(col(idCol)).distinct()
-    val thresholds = adcScored(encoded.join(broadcast(truthIds),
-        Seq(idCol)), q, model, Seq.empty)
-      .join(broadcast(truth), Seq("__sqid", idCol))
-      .filter(col("cosine").isNotNull)
-      .select(col("__sqid"), col(idCol).cast("long").as("__tid"),
-        col("cosine").as("__tcos"))
-      .localCheckpoint(true)
-    val ahead = adcScored(encoded, q, model, Seq.empty)
-      .join(broadcast(thresholds), Seq("__sqid"))
-      .filter(col("cosine").isNotNull &&
-        (col("cosine") > col("__tcos") ||
-          (col("cosine") === col("__tcos") &&
-            col(idCol).cast("long") < col("__tid"))))
-      .groupBy(col("__sqid"), col("__tid"))
-      .agg(count(lit(1)).as("__ahead"))
-      .collect()
-      .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
-    thresholds.select("__sqid", "__tid").collect()
-      .map(r => (r.getLong(0),
-        ahead.getOrElse((r.getLong(0), r.getLong(1)), 0L) + 1L))
-  }
-
   /** Calibrate BOTH probe widths of an [[ivfPqBuild]] index — `nProbe`
     * (cells scanned) and the ADC `shortlistFactor` (candidates re-ranked)
-    * — to a recall target, and persist them as [[ivfPqProbeTopK]]'s
-    * defaults: [[nProbeForRecall]]'s contract for the composed index,
-    * where recall is lost at two stages (the true neighbor's cell not
-    * probed; its ADC rank beyond the shortlist).
+    * — to a recall target, and persist them to `<path>/pqcal.json` as
+    * [[ivfPqProbeTopK]]'s defaults, replacing a table-and-judgment step
+    * with a measurement. Recall is lost at two stages (the true
+    * neighbor's cell not probed; its ADC rank beyond the shortlist).
+    * Recalibrate after drift, or rely on [[ivfPqMaintain]]'s
+    * `recallTarget` to re-check after a rebuild.
     *
     * ONE bounded measurement covers the whole 2-D width plane: exact
     * ground truth (one scan), each truth pair's cell rank (driver-side
@@ -1340,9 +901,23 @@ object Similarity {
     * join's fan-in), then the smallest such shortlist. Falls back to
     * (nCells, `maxShortlistFactor`) when even full probing cannot meet
     * the target under the cap, with the shortfall recorded in the
-    * artifact's `measured_recall`. Returns the chosen (nProbe,
-    * shortlistFactor); uncalibrated defaults, persisting nothing, on an
-    * empty or all-zero-vector index. */
+    * artifact's `measured_recall` (the shortlist factor sizes the
+    * re-rank join's Q·factor·k fan-in, and an unreachable target must
+    * not silently turn every probe into a near-full re-rank).
+    *
+    * The measured curve is the SAMPLE's: `sampleQueries` rows drawn from
+    * the index itself ([[selfQuerySample]]), with each query's own row
+    * dropped from its truth ([[selfTruthPairs]]). Recall on future query
+    * batches matches it insofar as they resemble the corpus distribution
+    * (the standard self-calibration assumption). The one-sided
+    * `confidenceZ` margin ([[neededCount]]) defaults to z = 2: ADC rank
+    * quality varies with the codebook DRAW and splits by query REGIME on
+    * mixed corpora — measured per-regime external recall spread ±0.05
+    * around the on-sample number across k-means draws (SCALEPROBE
+    * `pq_drift`) — so external batches land AT or above the stated
+    * target instead of distributed around it. Returns the chosen
+    * (nProbe, shortlistFactor); uncalibrated defaults, persisting
+    * nothing, on an empty or all-zero-vector index. */
   def ivfPqCalibrate(spark: SparkSession, path: String, vecCol: String,
                      idCol: String, target: Double, k: Int = 10,
                      sampleQueries: Int = 64, seed: Long = 42L,
@@ -1352,8 +927,12 @@ object Similarity {
       s"recall target must be in (0, 1], got $target")
     require(confidenceZ >= 0.0, "confidenceZ must be >= 0")
     require(maxShortlistFactor >= 1, "maxShortlistFactor must be >= 1")
-    requireNotRebuilding(spark, path)
-    val gen0 = readGeneration(spark, path) // see nProbeForRecall's note
+    requireIndex(spark, path)
+    // generation snapshot BEFORE any model/data read: the persisted
+    // artifact carries it, and readers ignore a stamp that no longer
+    // matches — so a rebuild completing anywhere during this measurement
+    // can never leave stale widths silently in force
+    val gen0 = readGeneration(spark, path)
     val centroids = loadCentroids(spark, path)
     val nCells = centroids.length
     val model = loadPqModel(spark, path)
@@ -1433,121 +1012,46 @@ object Similarity {
     (nProbe, factor)
   }
 
-  /** Plain-IVF entry points whose semantics would silently corrupt an
-    * IVF-PQ index (which ALSO carries `data/` + `centroids/`) call this
-    * to refuse it loudly; `hazard` completes the error's "because". */
-  private def requireNotIvfPq(spark: SparkSession, path: String,
-                              hazard: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path, "codebooks")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    require(!fs.exists(p),
-      s"the index at $path has a codebooks/ relation (a PQ-family " +
-        s"layout, not plain IVF); " + hazard)
-  }
-
   /** Readers AND routine writers call this before opening a persisted
-    * index: a present marker means a rebuild crashed between its
-    * directory swaps (or an overwrite build died half-written) and data/
-    * centroids may be MIXED generations — probing would return silently
-    * wrong neighbors, and appending would extend the wrong generation, so
-    * fail loudly instead. */
+    * index: a present marker means a swap crashed midway (or an
+    * overwrite build died half-written) and the relations may be MIXED
+    * generations — probing would return silently wrong neighbors, and
+    * appending would extend the wrong generation, so fail loudly
+    * instead. */
   private def requireNotRebuilding(spark: SparkSession, path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path, RebuildMarker)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(p)) throw new IllegalStateException(
-      s"index at $path is marked $RebuildMarker: a rebuild (ivfMaintain " +
-        "swap or ivfBuild overwrite) did not complete; restore " +
-        "data/centroids from the .old/.staging halves, or rebuild from " +
-        "source — a completed ivfBuild rewrites both halves and lifts " +
-        "the fence itself")
+      s"index at $path is marked $RebuildMarker: a swap (ivfPqMaintain " +
+        "rebuild or indexDelete) or an ivfPqBuild overwrite did not " +
+        "complete; restore the relations from the .old/.staging halves, " +
+        "or rebuild from source — a completed ivfPqBuild rewrites every " +
+        "relation and lifts the fence itself")
   }
 
-  /** Probe a corpus persisted by [[ivfBuild]]: the probed cell set (at most
-    * queries × nProbe distinct cells, collected driver-side — bounded by
-    * nCells) becomes a LITERAL partition filter, so the scan reads only the
-    * probed `__cell=` directories (static partition pruning — verified by
-    * plan inspection in SimilaritySpec). Scoring reuses the persisted
-    * per-row norms. Same output shape and semantics as [[ivfTopK]].
-    *
-    * What `nProbe` buys (measured: SCALEPROBE.json `ivf_recall_curve`,
-    * 20k rotated-replica vectors, 141 √n cells, recall@10 vs brute
-    * force):
-    *
-    *  | nProbe    | scanned | recall@10 |
-    *  |-----------|---------|-----------|
-    *  | cells/16  | ~6%     | 0.32      |
-    *  | cells/8   | ~12%    | 0.47      |
-    *  | cells/4   | ~25%    | 0.72      |
-    *  | all cells | 100%    | 1.00 (exact) |
-    *
-    * Recall grows roughly linearly in the scanned fraction on this
-    * uniform synthetic corpus — there is no free knee; real embedding
-    * corpora cluster, which is what makes small probe budgets pay.
-    * Guidance: don't read this table — CALIBRATE. [[nProbeForRecall]]
-    * measures the index's own recall curve and persists the width that
-    * meets a stated target, which then becomes this method's default
-    * (SCALEPROBE `ivf_autotune`: 0.36–0.48 at the uncalibrated cells/8
-    * floor → 0.92 calibrated at target 0.9 on drifted data). The
-    * `cells/8` fallback only applies to an uncalibrated index; full
-    * probe remains the exactness baseline (equivalent to brute force
-    * over a pruned-nothing scan).
-    *
-    * Racing a concurrent [[indexDelete]]/[[ivfMaintain]] swap: either a
-    * consistent pre-/post-swap answer or a LOUD retryable failure
-    * (fence refusal at plan time, missing-input mid-scan) — never
-    * silent partial results; see [[indexDelete]]'s in-flight-readers
-    * contract. */
-  def ivfProbeTopK(spark: SparkSession, path: String, queries: DataFrame,
-                   vecCol: String, idCol: String, queryIdCol: String,
-                   k: Int, nProbe: Int = 0): DataFrame = {
+  /** The relations [[ivfPqBuild]] writes — the signature every other
+    * entry point checks before it reads or writes anything. */
+  private val IndexRelations = Seq("data", "centroids", "codebooks")
+
+  /** Every entry point that opens an existing index calls this first:
+    * the fence check ([[requireNotRebuilding]]), then the layout check —
+    * a directory without the IVF-PQ relations is refused before any
+    * relation read, lease marker or write. That covers a typo'd path and
+    * the retired flat-PQ (`codes/` + `vectors/`) and plain-IVF (`data/`
+    * + `centroids/` without `codebooks/`) layouts, whose relations these
+    * paths would otherwise misread or silently drop. */
+  private def requireIndex(spark: SparkSession, path: String): Unit = {
     requireNotRebuilding(spark, path)
-    val gen0 = readGeneration(spark, path)
-    val centroids = loadCentroids(spark, path)
-    // nProbe <= 0: a [[nProbeForRecall]]-calibrated index probes its
-    // persisted recommendation (recall-targeted, clamped to the cell
-    // count); otherwise probe 1/8 of the index's cells — tied to the
-    // stored cell count the same way ivfTopK's default is, so a √n-sized
-    // index keeps its scored fraction instead of collapsing recall
-    val probes =
-      if (nProbe > 0) nProbe
-      else calibratedNProbeAt(spark, path, gen0)
-        .map(c => math.min(math.max(1, c), centroids.length))
-        .getOrElse(math.max(1, centroids.length / 8))
-    // The probed cells are known BEFORE `data/` needs to open (they come
-    // from the centroids and the query batch), so the scan opens ONLY the
-    // probed `__cell=` directories instead of discovering the whole tree
-    // (guide §6 — a full open lists every cell dir per probe; at
-    // object-store scale that is cell-count LIST calls for a probe that
-    // touches nProbe of them). One driver-side listStatus of `data/`
-    // answers existence; the query batch's schema needs come from a
-    // single cell directory (basePath keeps `__cell` a partition column,
-    // so the isin filter below stays the PartitionFilters entry the plan
-    // contract asserts). See [[readPartitionDirs]] for the driver-side
-    // listing above 32 dirs and the drained-subset fallback.
-    val existing = partitionDirs(spark, s"$path/data", "__cell")
-    val schemaProbe = readPartitionDirs(spark, s"$path/data",
-      existing.values.take(1).toSeq)
-    // materialize the (small, broadcast-bound) probe-expanded query batch
-    // once: both the collected IN-list below and the join read it, and
-    // without this the nCells dot-product ranking would run twice
-    val q = withProbeCells(
-      withQueryNorm(queries, schemaProbe.columns, queryIdCol, vecCol,
-        allowed = Set("__cell", "__cn")),
-      centroids, probes)
-      .localCheckpoint(true)
-    val probedCells = q.select("__cell").distinct().collect().map(_.getInt(0))
-    val corpus = readPartitionDirs(spark, s"$path/data",
-      probedCells.toIndexedSeq.flatMap(existing.get))
-    // post-plan race check: centroids were loaded and data listed above —
-    // a rebuild completing in between would otherwise prune the NEW
-    // files with the OLD centroids (see requireGenerationUnchanged)
-    requireGenerationUnchanged(spark, path, gen0)
-    val scored = corpus
-      .filter(col("__cell").isin(probedCells.toIndexedSeq: _*))
-      .join(broadcast(q), Seq("__cell"))
-      .withColumn("cosine", V.cosineGivenNorms(
-        col(vecCol), col("__qvec"), col("__cn"), col("__qn")))
-    rankTopK(scored, queryIdCol, idCol, k)
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val missing = IndexRelations.filterNot(r =>
+      fs.exists(new org.apache.hadoop.fs.Path(root, r)))
+    require(missing.isEmpty,
+      s"no IVF-PQ index at $path: missing ${missing.mkString("/, ")}/ " +
+        s"(an IVF-PQ index holds ${IndexRelations.mkString("/, ")}/). " +
+        "Flat-PQ (codes/ + vectors/) and plain-IVF (data/ + centroids/ " +
+        "without codebooks/) indexes are no longer served: rebuild them " +
+        "from source with ivfPqBuild")
   }
 
   /** LSH-bucketed approximate top-k: corpus and queries are assigned
@@ -1850,14 +1354,12 @@ object Similarity {
     * column), which pays exactly at the storage-bandwidth-bound 100 TB
     * scales a local page-cached probe cannot reproduce. The probe also
     * records the caveat: the exact re-rank leg re-reads the vector
-    * relation locally, so THIS inline form's full path only wins where
-    * the re-rank is a point-lookup rather than a second scan — which is
-    * exactly what the persisted index provides: [[pqBuild]] stores the
-    * vectors id-bucketed and [[pqProbeTopK]]'s re-rank statically prunes
-    * to the shortlist's buckets, landing end-to-end bytes well under the
-    * brute leg (SCALEPROBE `pq_bytes_end_to_end`). Prefer the persisted
-    * index for repeated query batches at scale; this inline form is the
-    * zero-setup path. */
+    * relation, so THIS inline form's full path pays a second full scan.
+    * The persisted [[ivfPqBuild]] index removes both scans' breadth:
+    * [[ivfPqProbeTopK]] reads only the probed cells' files, the codes
+    * column for the ADC leg and the vectors for the shortlist. Prefer
+    * the persisted index for repeated query batches at scale; this
+    * inline form is the zero-setup path. */
   def pqTopK(corpus: DataFrame, queries: DataFrame,
              vecCol: String, idCol: String, queryIdCol: String,
              k: Int, m: Int = 8, ksub: Int = 16, shortlistFactor: Int = 4,
@@ -1874,7 +1376,7 @@ object Similarity {
   /** [[pqTopK]]'s amortized form: score a PRE-ENCODED corpus (the
     * [[pqEncode]] output minus the raw vector column, typically persisted
     * once and scanned per query batch — fit + encode are paid once, like
-    * [[ivfBuild]]). `corpus` supplies the raw vectors for the exact
+    * [[ivfPqBuild]]). `corpus` supplies the raw vectors for the exact
     * re-rank scan only. */
   def pqTopKEncoded(encoded: DataFrame, corpus: DataFrame, model: PqModel,
                     queries: DataFrame, vecCol: String, idCol: String,
@@ -1896,143 +1398,6 @@ object Similarity {
     rankTopK(rescored, queryIdCol, idCol, k)
   }
 
-  // ------------------------------------------- persisted flat-PQ index
-
-  /** Id-bucket count for [[pqBuild]]'s vectors relation. What matters is
-    * buckets ≫ per-batch shortlist size: the re-rank touches at most one
-    * bucket per distinct shortlist id (expected touched fraction ≈
-    * shortlist/buckets), so the bytes it reads shrink with the bucket
-    * count, not the corpus. ~128 rows/bucket at probe scales, capped at
-    * 16384 (local file-count sanity; at real scale bucket count grows
-    * with the corpus and the touched fraction only improves). */
-  private[graft] def autoIdBuckets(n: Long): Int =
-    math.max(64L, math.min(16384L, n / 128L)).toInt
-
-  /** Persist a FLAT PQ index under `path` — the layout that closes PQ's
-    * bytes-scanned loop end-to-end (the inline [[pqTopK]] re-rank's full
-    * rescan is exactly what this removes):
-    *
-    *  - `codes/`: (id, __codes, __cn) — the narrow relation the
-    *    exhaustive ADC scan reads (measured 15.6 bytes/row vs the
-    *    vector relation's 158.3 at 1M×64-dim, SCALEPROBE `pq_bytes`).
-    *  - `vectors/`: (id, vector) directory-partitioned by
-    *    `__vb = pmod(xxhash64(id), idBuckets)` and sorted by id within
-    *    each bucket file — the exact re-rank becomes a statically
-    *    partition-pruned POINT LOOKUP of the shortlist's buckets
-    *    (≤ one bucket per shortlist id) instead of a second full scan,
-    *    so the full path's bytes are codes + touched buckets
-    *    (SCALEPROBE `pq_bytes_end_to_end`).
-    *  - `codebooks/` + `meta/`: the frozen model and bucket count —
-    *    probe-time bucket derivation must hash exactly as the build did.
-    *
-    * Ids must be integral (hashed as LONG on both sides — an int-typed
-    * id column is canonicalized before hashing). Shares the IVF family's
-    * `.rebuilding` fence discipline. */
-  def pqBuild(corpus: DataFrame, vecCol: String, idCol: String,
-              path: String, m: Int = 8, ksub: Int = 16, seed: Long = 42L,
-              fitSampleRows: Int = 4096, idBuckets: Int = 0): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    require(idBuckets >= 0, "idBuckets must be non-negative (0 = auto)")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    // fail fast before the auto-bucket count and the codebook fit — see
-    // ivfBuild's precheck rationale
-    buildPrecheck(spark, fs, root, "pqBuild")
-    // the corpus count exists only to size auto-buckets — an explicit
-    // idBuckets must not pay a full corpus scan for it
-    val buckets =
-      if (idBuckets > 0) idBuckets else autoIdBuckets(corpus.count())
-    val (model, fitPoints) =
-      fitPqWithSample(corpus, vecCol, m, ksub, seed, fitSampleRows)
-    // build-time baseline for the codebook-drift gauge (pqDriftStats):
-    // the mean quantization error of the fit sample under the codebooks
-    // just fitted to it. Measured on the TRAINING sample, so it carries
-    // k-means' small in-sample optimism — an undrifted gauge reads
-    // slightly above 1.0, which maxDrift thresholds >= 1.5 clear safely.
-    val fitMqe = meanQuantizationError(fitPoints, model)
-    // writer lease held across all four relation writes (acquire-or-
-    // create) — see ivfBuild: a build racing a live pqAppend must refuse,
-    // not replace codes/vectors mid-append
-    withMutationLease(spark, fs, root, "pqBuild", createRoot = true) {
-      val marker = new org.apache.hadoop.fs.Path(root, RebuildMarker)
-      fs.create(marker, true).close()
-      // a shortlist calibration tuned against the codebooks this build
-      // replaces would be silently wrong-generation metadata (the
-      // NProbeFile rationale)
-      fs.delete(new org.apache.hadoop.fs.Path(root, PqCalFile), false)
-      pqEncode(corpus.select(col(idCol), col(vecCol)), vecCol, model)
-        .drop(vecCol)
-        .write.mode("overwrite").parquet(s"$path/codes")
-      corpus.select(col(idCol), col(vecCol))
-        .withColumn("__vb", pmod(xxhash64(col(idCol).cast("long")),
-          lit(buckets.toLong)).cast("int"))
-        // one exchange on the bucket id, then a task-local sort: each
-        // bucket lands in ONE file, sorted by id (tight row-group min/max
-        // stats for within-bucket pruning at real row-group counts)
-        .repartition(col("__vb"))
-        .sortWithinPartitions(col("__vb"), col(idCol))
-        .write.mode("overwrite").partitionBy("__vb").parquet(s"$path/vectors")
-      model.codebooks.zipWithIndex
-        .flatMap { case (book, j) =>
-          book.zipWithIndex.map { case (c, code) => (j, code, c.toSeq) }
-        }.toSeq
-        .toDF("subspace", "code", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
-      Seq((buckets, fitMqe)).toDF("id_buckets", "fit_mqe")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-      writeGeneration(spark, path)
-      fs.delete(marker, false)
-    }
-    Seq("codes", "vectors", "codebooks", "meta").foreach(d =>
-      spark.catalog.refreshByPath(s"$path/$d"))
-  }
-
-  /** Extend a persisted flat-PQ index in place: new rows are encoded
-    * with the STANDING codebooks and their vectors land in their
-    * id-buckets under the PERSISTED bucket count — append-only part
-    * files into both relations, with [[ivfPqAppend]]'s
-    * prefix-visibility contract (a concurrent probe sees a consistent
-    * smaller index, never torn metadata). Refuses a fenced index. What
-    * drifts under a shifted distribution is codebook FIT quality (ADC
-    * shortlist error, hence recall), never the exact re-rank's scores —
-    * [[pqDriftStats]] gauges it against the build-time baseline and
-    * [[pqMaintain]] rebuilds automatically past a threshold, the IVF
-    * family's maintenance rationale. */
-  def pqAppend(newRows: DataFrame, vecCol: String, idCol: String,
-               path: String): Unit = {
-    val spark = newRows.sparkSession
-    requireNotRebuilding(spark, path)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    // lease HELD across codebook read + both writes (see ivfAppend): a
-    // mutation acquiring it mid-append can no longer swap away the
-    // in-flight rows, and the codes can never be encoded against
-    // codebooks a concurrent rebuild replaced between read and write
-    withMutationLease(spark, fs, root, "pqAppend", AppendLeaseHint) {
-      val model = loadPqModel(spark, path)
-      val buckets = spark.read.parquet(s"$path/meta")
-        .select("id_buckets").collect()(0).getInt(0)
-      // vectors FIRST, codes second: the ADC shortlist scans codes/, the
-      // re-rank joins vectors/ — a probe racing this append must never
-      // shortlist an id whose vector is not yet readable (the inner re-rank
-      // join would silently drop it, displacing true top-k candidates).
-      // Vectors without codes are invisible to the ADC scan, so this order
-      // gives the true consistent-prefix the contract promises.
-      newRows.select(col(idCol), col(vecCol))
-        .withColumn("__vb", pmod(xxhash64(col(idCol).cast("long")),
-          lit(buckets.toLong)).cast("int"))
-        .repartition(col("__vb"))
-        .sortWithinPartitions(col("__vb"), col(idCol))
-        .write.mode("append").partitionBy("__vb").parquet(s"$path/vectors")
-      pqEncode(newRows.select(col(idCol), col(vecCol)), vecCol, model)
-        .drop(vecCol)
-        .write.mode("append").parquet(s"$path/codes")
-    }
-    Seq("codes", "vectors").foreach(d =>
-      spark.catalog.refreshByPath(s"$path/$d"))
-  }
-
   /** Codebook-drift report for a persisted PQ-coded index: `fitMqe` is
     * the build-time mean quantization error (recorded by the build from
     * its own fit sample), `currentMqe` the same statistic over a fresh
@@ -2041,7 +1406,7 @@ object Similarity {
     * shifted distribution quantizes worse, the ratio grows, and with it
     * the ADC shortlist's score error — hence recall — degrades, SILENTLY
     * (the exact re-rank keeps returned scores exact, so nothing else
-    * fails loudly). The maintain paths rebuild past a ratio threshold. */
+    * fails loudly). [[ivfPqMaintain]] rebuilds past a ratio threshold. */
   final case class PqDriftStats(fitMqe: Double, currentMqe: Double) {
     def ratio: Double =
       if (fitMqe > 0) currentMqe / fitMqe
@@ -2051,34 +1416,57 @@ object Similarity {
 
   /** Build-time MQE baseline from an index's `meta/` relation; loud on
     * indexes built before the gauge existed. */
-  private def readFitMqe(spark: SparkSession, path: String,
-                         rebuildHint: String): Double = {
+  private def readFitMqe(spark: SparkSession, path: String): Double = {
     val p = new org.apache.hadoop.fs.Path(path, "meta")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     require(fs.exists(p),
       s"index at $path predates the codebook-drift gauge (no meta/ " +
-        s"relation); rebuild with $rebuildHint to record the baseline")
+        "relation); rebuild with ivfPqBuild to record the baseline")
     val meta = spark.read.parquet(s"$path/meta")
     require(meta.columns.contains("fit_mqe"),
       s"index at $path predates the codebook-drift gauge (no fit_mqe " +
-        s"baseline in meta/); rebuild with $rebuildHint to record one")
+        "baseline in meta/); rebuild with ivfPqBuild to record one")
     meta.select(col("fit_mqe")).collect()(0).getDouble(0)
   }
 
   /** None = nothing to gauge (the relation is empty — e.g. fully drained
-    * by opt-out deletes); maintain paths treat that as "ok". */
-  private def pqDriftFrom(spark: SparkSession, path: String,
-                          vectorsRel: String, vecCol: String,
-                          rebuildHint: String, seed: Long,
-                          sampleRows: Int,
-                          sampleFiles: Int): Option[PqDriftStats] = {
-    requireNotRebuilding(spark, path)
+    * by opt-out deletes); [[ivfPqMaintain]] treats that as "ok". */
+  private def driftFrom(spark: SparkSession, path: String, vecCol: String,
+                        seed: Long, sampleRows: Int,
+                        sampleFiles: Int): Option[PqDriftStats] = {
+    requireIndex(spark, path)
     val model = loadPqModel(spark, path)
-    val fit = readFitMqe(spark, path, rebuildHint)
-    val sample = gaugeSample(spark, s"$path/$vectorsRel", vecCol,
+    val fit = readFitMqe(spark, path)
+    val sample = gaugeSample(spark, s"$path/data", vecCol,
       sampleRows, seed, sampleFiles)
     if (sample.isEmpty) None
     else Some(PqDriftStats(fit, meanQuantizationError(sample, model)))
+  }
+
+  /** Visible parquet part files under `dir`, recursively and lazily —
+    * what Spark's own directory reads see. Uncommitted write debris is
+    * excluded the way Spark excludes it: a path COMPONENT below `dir`
+    * that starts with `.`, or with `_` unless it is a partition
+    * directory (it contains `=`, e.g. `__cell=3`), disqualifies the file
+    * — a crashed append's `_temporary` tree, `_SUCCESS` markers. */
+  private def visibleParquetFiles(fs: org.apache.hadoop.fs.FileSystem,
+                                  dir: org.apache.hadoop.fs.Path)
+      : Iterator[org.apache.hadoop.fs.LocatedFileStatus] = {
+    val baseDepth = fs.makeQualified(dir).depth()
+    def visible(fp: org.apache.hadoop.fs.Path): Boolean = {
+      var q = fp
+      while (q != null && q.depth() > baseDepth) {
+        val n = q.getName
+        if (n.startsWith(".") || (n.startsWith("_") && !n.contains("=")))
+          return false
+        q = q.getParent
+      }
+      true
+    }
+    val it = fs.listFiles(dir, true)
+    Iterator.continually(()).takeWhile(_ => it.hasNext).map(_ => it.next())
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet") &&
+        visible(st.getPath))
   }
 
   /** Bounded gauge sample: fit-sample within a deterministic SUBSET of
@@ -2097,9 +1485,8 @@ object Similarity {
     * negligible is exactly the batch that cannot move the corpus-level
     * MQE ratio this gauge measures. Whole-file (clustered) sampling adds
     * variance a drift-vs-2× threshold easily tolerates. Uncommitted
-    * write debris is excluded the way Spark's own directory reads do it:
-    * any path COMPONENT starting with `_`/`.` (e.g. a crashed append's
-    * `_temporary` tree) disqualifies the file. Cost: one driver file
+    * write debris never enters the sample ([[visibleParquetFiles]]).
+    * Cost: one driver file
     * listing (O(files) metadata) plus a ≤ `maxFiles`-file read; a
     * relation with ≤ `maxFiles` files reads in full, exactly as before. */
   private def gaugeSample(spark: SparkSession, relDir: String,
@@ -2108,37 +1495,15 @@ object Similarity {
     require(maxFiles >= 1, "sampleFiles must be >= 1")
     val p = new org.apache.hadoop.fs.Path(relDir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val baseDepth = fs.makeQualified(p).depth()
-    // visible = no hidden/temporary component anywhere below the relation
-    // root (the leaf name is checked by the same climb)
-    def visible(fp: org.apache.hadoop.fs.Path): Boolean = {
-      var q = fp
-      while (q != null && q.depth() > baseDepth) {
-        val n = q.getName
-        // Spark's own hidden-path rule: `_`-prefixed components are
-        // metadata/temporary (e.g. _temporary, _SUCCESS) UNLESS they are
-        // partition directories (they contain '='— __cell=3, __vb=7)
-        if (n.startsWith(".") || (n.startsWith("_") && !n.contains("=")))
-          return false
-        q = q.getParent
-      }
-      true
-    }
-    val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.endsWith(".parquet") &&
-          visible(st.getPath))
-        files += ((st.getPath.toString, st.getLen))
-    }
+    val files = visibleParquetFiles(fs, p)
+      .map(st => (st.getPath.toString, st.getLen)).toSeq
     // an emptied-out relation (e.g. fully drained by opt-out deletes) has
     // nothing to gauge: empty sample, maintain paths degrade to "ok" the
     // way zOrderMaintain does, instead of crashing the nightly run
     if (files.isEmpty) return Array.empty
     val picked =
-      if (files.size <= maxFiles) files.toSeq.map(_._1)
-      else files.toSeq.sortBy { case (f, len) =>
+      if (files.size <= maxFiles) files.map(_._1)
+      else files.sortBy { case (f, len) =>
         // Efraimidis–Spirakis key: -ln(u)/w with u from the path hash —
         // smallest keys form a size-weighted sample without replacement
         val h = scala.util.hashing.MurmurHash3.stringHash(f, seed.toInt)
@@ -2147,95 +1512,6 @@ object Similarity {
       }.take(maxFiles).map(_._1)
     fitSampleRaw(spark.read.parquet(picked: _*).select(col(vecCol)),
       vecCol, sampleRows, seed)
-  }
-
-  /** Codebook-drift gauge for a [[pqBuild]] flat-PQ index — one bounded
-    * file-sampled read of the vectors relation (never a full scan; see
-    * [[gaugeSample]]) plus driver-side arithmetic; see [[PqDriftStats]].
-    * Loud on an EMPTY vectors relation (a direct gauge of nothing is a
-    * caller error); [[pqMaintain]] degrades the same case to "ok". */
-  def pqDriftStats(spark: SparkSession, path: String, vecCol: String,
-                   seed: Long = 42L, sampleRows: Int = 4096,
-                   sampleFiles: Int = 16): PqDriftStats =
-    pqDriftFrom(spark, path, "vectors", vecCol, "pqBuild", seed,
-      sampleRows, sampleFiles).getOrElse(throw new IllegalStateException(
-      s"nothing to gauge at $path: the vectors relation is empty " +
-        "(fully drained corpus) — pqMaintain reports this case as \"ok\""))
-
-  /** Codebook-drift automation for a [[pqBuild]] flat-PQ index — the
-    * missing leg of the maintenance doctrine ([[ivfMaintain]] watches
-    * cell skew/growth, `Layout.zOrderMaintain` watches rank balance;
-    * until this, [[pqAppend]] could encode a drifting distribution
-    * against frozen codebooks forever with no gauge or trigger). Reads
-    * [[pqDriftStats]] (bounded sample, no full scan) and, when
-    * `currentMqe` exceeds `maxDrift` × the build-time baseline, rebuilds
-    * the whole index from its own stored vectors under the
-    * [[ivfMaintain]]-style staged swap + `.rebuilding` fence: fresh
-    * codebooks fitted on the CURRENT distribution, every row re-encoded,
-    * id-bucket count re-derived for the grown corpus, and a fresh
-    * baseline recorded — so the next gauge reads ≈ 1 again. Returns
-    * `"ok"` or `"rebuilt"` for schedulers to log/alert on.
-    *
-    * `maxDrift` is in baseline units: 2.0 means "typical row quantizes
-    * 2× worse than at build time". The baseline carries k-means'
-    * in-sample optimism (see [[pqBuild]]), so thresholds below ~1.5
-    * would fire on healthy indexes.
-    *
-    * `fitSampleRows` budgets the REBUILD's k-means fit;
-    * `gaugeSampleRows`/`gaugeSampleFiles` budget the nightly drift GAUGE
-    * — two independent knobs (a bigger codebook fit should not silently
-    * make every "ok" night read more of the store, and vice versa). An
-    * EMPTY vectors relation (corpus fully drained by opt-out deletes)
-    * reports "ok" and skips, like `Layout.zOrderMaintain`.
-    *
-    * `recallTarget`: a rebuild restores quantization quality (MQE ≈ 1)
-    * but NOT necessarily recall at the standing shortlist width — the
-    * refitted codebooks now cover the grown corpus, so the width that
-    * met a recall target before the drift may be too narrow after it.
-    * When set, a rebuild is followed by [[pqShortlistForRecall]] at this
-    * target (recall@`recallK`), so [[pqProbeTopK]]'s default width keeps
-    * the recall contract across rebuilds — [[ivfMaintain]]'s
-    * `recallTarget` semantics for the flat-PQ layout. */
-  def pqMaintain(spark: SparkSession, path: String, vecCol: String,
-                 idCol: String, maxDrift: Double = 2.0, seed: Long = 42L,
-                 fitSampleRows: Int = 4096, gaugeSampleRows: Int = 4096,
-                 gaugeSampleFiles: Int = 16,
-                 recallTarget: Option[Double] = None,
-                 recallK: Int = 10,
-                 maxShortlistFactor: Int = 64): String = {
-    require(maxDrift > 1.0, "maxDrift must exceed 1 (1 = freshly fit)")
-    val drift = pqDriftFrom(spark, path, "vectors", vecCol, "pqBuild",
-      seed, gaugeSampleRows, gaugeSampleFiles)
-    if (drift.forall(_.ratio <= maxDrift)) "ok"
-    else {
-      val model = loadPqModel(spark, path)
-      // drop the calibration BEFORE the rebuild: widths tuned against the
-      // codebooks about to be replaced are wrong-generation metadata, and
-      // deleting after the swap would leave them silently in force if a
-      // crash lands between the fence lift and the delete — losing the
-      // calibration on an UNCHANGED index (build crashed pre-swap) only
-      // degrades probes to the conservative defaults
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-      // writer lease across staging-read + swap (see withMutationLease):
-      // an append inside the window would be silently dropped by the
-      // swap — appends hold the same lease, so it cannot start here
-      withMutationLease(spark, fs, root, "pqMaintain") {
-        fs.delete(new org.apache.hadoop.fs.Path(path, PqCalFile), false)
-        // original columns only; bucket count re-derived (idBuckets = 0)
-        // because the corpus has grown since the recorded one was sized
-        val data = spark.read.parquet(s"$path/vectors").drop("__vb")
-        stagedRebuild(spark, path,
-          Seq("codes", "vectors", "codebooks", "meta")) { staging =>
-          pqBuild(data, vecCol, idCol, staging, m = model.m,
-            ksub = model.ksub, seed = seed, fitSampleRows = fitSampleRows)
-        }
-      }
-      recallTarget.foreach(t => pqShortlistForRecall(spark, path, vecCol,
-        idCol, t, k = recallK, seed = seed,
-        maxShortlistFactor = maxShortlistFactor))
-      "rebuilt"
-    }
   }
 
   /** ONE driver-side listing of a directory-partitioned relation's root:
@@ -2268,13 +1544,19 @@ object Similarity {
     * parallel-discovery threshold the listing runs DRIVER-SIDE via a
     * private cloned session with a raised threshold (a |dirs|-task
     * listing job per probe is pure scheduling overhead for a bounded,
-    * shortlist-sized path set). Falls back to the full tree when the
-    * subset holds no data files (schema inference fails — a drain that
-    * deleted every file but left the directories); with `dirs` empty the
-    * full tree is read directly, preserving the callers' empty-input
-    * semantics. */
-  private def readPartitionDirs(spark: SparkSession, root: String,
-                                dirs: Seq[String]): DataFrame =
+    * shortlist-sized path set). With `dirs` empty the full tree is read
+    * directly, preserving the callers' empty-input semantics.
+    *
+    * A subset that holds no visible data file (a drain that deleted
+    * every file but left the directories) cannot infer a schema. Only
+    * then — every listed directory verified present and file-less — does
+    * the read fall back to the full tree, where the caller's `isin`
+    * filter prunes to those same empty directories. Every other failure
+    * is rethrown, a listed directory that vanished included: a silent
+    * full-tree read would turn a listing race or a transient error into
+    * a full-corpus scan. */
+  private[graft] def readPartitionDirs(spark: SparkSession, root: String,
+                                       dirs: Seq[String]): DataFrame =
     if (dirs.isEmpty) spark.read.parquet(root)
     else {
       val reader =
@@ -2287,136 +1569,17 @@ object Similarity {
             math.max(32, dirs.size).toString)
           cloned
         }
+      def drained: Boolean = dirs.forall { d =>
+        val p = new org.apache.hadoop.fs.Path(d)
+        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+        fs.exists(p) && visibleParquetFiles(fs, p).isEmpty
+      }
       try reader.read.option("basePath", root).parquet(dirs: _*)
       catch {
-        case _: org.apache.spark.sql.AnalysisException =>
+        case _: org.apache.spark.sql.AnalysisException if drained =>
           spark.read.parquet(root)
       }
     }
-
-  /** The driver-side loads a flat-PQ probe needs, factored so a caller
-    * issuing SEVERAL probes against the SAME index inside one query
-    * construction (`pq_calibrated_topk` compares the sentinel-default
-    * probe against the explicit calibrated width) pays ONE set of
-    * model/meta/cal/generation reads instead of one per probe. NOT a
-    * cross-run or cross-query cache: a state value lives only as a local
-    * inside one construction, and the race contract is unchanged — every
-    * probe built from it re-checks the generation post-plan against the
-    * snapshot taken here. */
-  private[graft] final case class PqProbeState(
-      gen0: Option[String], model: PqModel, buckets: Int, codes: DataFrame,
-      cal: Option[(Int, Int)])
-
-  private[graft] def pqProbeState(spark: SparkSession,
-                                  path: String): PqProbeState = {
-    requireNotRebuilding(spark, path)
-    val gen0 = readGeneration(spark, path)
-    PqProbeState(gen0, loadPqModel(spark, path),
-      spark.read.parquet(s"$path/meta")
-        .select("id_buckets").collect()(0).getInt(0),
-      spark.read.parquet(s"$path/codes"),
-      calibratedPqWidthsAt(spark, path, gen0))
-  }
-
-  /** Shortlist + touched-bucket set for a [[pqBuild]] index: the ADC
-    * codes-only scan ranks a `shortlistK` shortlist per query, and the
-    * shortlist ids hash (with the PERSISTED bucket count) to the vector
-    * buckets the re-rank must read. The shortlist is eagerly
-    * materialized — it feeds both the bucket-set collect and the re-rank
-    * join, and an unmaterialized plan would run the ADC scan twice.
-    * Driver state: Q·shortlistK (id, bucket) rows. Factored out so the
-    * `pq_bytes_end_to_end` probe can meter the pruned leg's bytes from
-    * the same bucket set the query uses. */
-  private[graft] def pqShortlistAndBuckets(
-      spark: SparkSession, path: String, queries: DataFrame,
-      vecCol: String, idCol: String, queryIdCol: String,
-      shortlistK: Int): (DataFrame, Array[Int]) =
-    pqShortlistAndBucketsFrom(pqProbeState(spark, path), queries,
-      vecCol, idCol, queryIdCol, shortlistK)
-
-  private def pqShortlistAndBucketsFrom(
-      st: PqProbeState, queries: DataFrame,
-      vecCol: String, idCol: String, queryIdCol: String,
-      shortlistK: Int): (DataFrame, Array[Int]) = {
-    val shortlist = rankTopK(
-      adcScored(st.codes, withQueryNorm(queries, Seq(idCol), queryIdCol,
-        vecCol), st.model, Seq.empty),
-      queryIdCol, idCol, shortlistK)
-      .select(col(queryIdCol), col(idCol))
-      .localCheckpoint(true)
-    val touched = shortlist
-      .select(pmod(xxhash64(col(idCol).cast("long")), lit(st.buckets.toLong))
-        .cast("int").as("__vb"))
-      .distinct().collect().map(_.getInt(0))
-    (shortlist, touched)
-  }
-
-  /** Probe a [[pqBuild]] index: exhaustive ADC over the narrow codes
-    * relation, then an exact re-rank that reads ONLY the shortlist ids'
-    * buckets of the vectors relation — a static partition filter, so the
-    * full path's bytes are codes + (touched/buckets)·vectors instead of
-    * codes + vectors (measured 0.2× of the brute leg at 1M vectors,
-    * SCALEPROBE `pq_bytes_end_to_end`; the inline [[pqTopK]] documents
-    * the full-rescan caveat this removes). Same output shape and
-    * exact-returned-cosines contract as [[bruteForceTopK]];
-    * deterministic for the build's seed. Racing a concurrent
-    * [[indexDelete]]/[[pqMaintain]] swap: consistent answer or LOUD
-    * retryable failure, never silent partial results — see
-    * [[indexDelete]]'s in-flight-readers contract. */
-  def pqProbeTopK(spark: SparkSession, path: String, queries: DataFrame,
-                  vecCol: String, idCol: String, queryIdCol: String,
-                  k: Int, shortlistFactor: Int = 0): DataFrame =
-    pqProbeTopKFrom(pqProbeState(spark, path), spark, path, queries,
-      vecCol, idCol, queryIdCol, k, shortlistFactor)
-
-  /** [[pqProbeTopK]] against an already-loaded [[PqProbeState]] — the
-    * multi-probe-per-construction form (see [[pqProbeState]]). */
-  private[graft] def pqProbeTopKFrom(st: PqProbeState, spark: SparkSession,
-                                     path: String, queries: DataFrame,
-                                     vecCol: String, idCol: String,
-                                     queryIdCol: String, k: Int,
-                                     shortlistFactor: Int = 0): DataFrame = {
-    // 0 (the default) = the pqShortlistForRecall-calibrated width when
-    // the index carries one, else the uncalibrated 4 — nProbeForRecall's
-    // calibrated-default contract for the flat-PQ layout
-    require(shortlistFactor >= 0,
-      "shortlistFactor must be >= 0 (0 = calibrated default)")
-    val factor =
-      if (shortlistFactor > 0) shortlistFactor
-      else st.cal.map(_._2).getOrElse(DefaultShortlistFactor)
-    val (shortlist, touched) = pqShortlistAndBucketsFrom(st, queries,
-      vecCol, idCol, queryIdCol, k * factor)
-    // The shortlist names its buckets BEFORE the vectors relation is ever
-    // opened, so list ONLY the touched bucket directories instead of the
-    // whole id-bucketed tree (guide §6: directory listing is the hidden
-    // cost of partitioned reads — a full `vectors/` open lists every
-    // bucket dir, which at the 256-bucket fixture already runs a 256-task
-    // discovery job per probe and at object-store scale is bucket-count
-    // LIST calls for a probe that touches a handful). Dir existence comes
-    // from ONE listStatus of `vectors/` instead of |touched| serial
-    // exists() RPCs; missing dirs (a bucket fully drained by deletes) are
-    // skipped the same way the full listing would; see
-    // [[readPartitionDirs]] for the driver-side listing and the
-    // empty-subset fallback. Empty shortlist → empty result with the
-    // probe's schema, no paths to read.
-    val existing = partitionDirs(spark, s"$path/vectors", "__vb")
-    val vectors = readPartitionDirs(spark, s"$path/vectors",
-        touched.toIndexedSeq.flatMap(existing.get))
-      .filter(col("__vb").isin(touched.toIndexedSeq: _*))
-    // post-plan race check: codebooks were loaded and codes/vectors
-    // listed above — a rebuild completing in between would re-rank a
-    // stale-model shortlist against fresh files
-    requireGenerationUnchanged(spark, path, st.gen0)
-    val qExact = withQueryNorm(queries, Seq(idCol), queryIdCol, vecCol)
-    val rescored = vectors
-      .select(col(idCol).cast("long").as(idCol), col(vecCol),
-        V.norm(col(vecCol)).as("__cn"))
-      .join(broadcast(shortlist), Seq(idCol))
-      .join(broadcast(qExact), Seq(queryIdCol))
-      .withColumn("cosine", V.cosineGivenNorms(
-        col(vecCol), col("__qvec"), col("__cn"), col("__qn")))
-    rankTopK(rescored, queryIdCol, idCol, k)
-  }
 
   /** The ADC shortlist leg of [[pqTopKEncoded]] alone — (queryId, id)
     * candidates from the codes-only scan, before the exact re-rank.
@@ -2509,17 +1672,40 @@ object Similarity {
     rankTopK(rescored, queryIdCol, idCol, k)
   }
 
-  /** Persist an IVF-PQ index under `path`: the corpus cell-partitioned
-    * like [[ivfBuild]] (so probes are statically partition-pruned reads)
-    * with the PQ codes column alongside the raw vectors and norms —
-    * parquet's columnar layout means the ADC pass reads ONLY
-    * (id, codes, norm) from the probed cells' files (column pruning),
-    * and the exact re-rank reads the vector column for just the
-    * shortlist, from the same pruned directories. Codebooks persist next
-    * to the centroids as (subspace, code, centroid) rows. Shares
-    * [[ivfBuild]]'s `.rebuilding` fence discipline: both halves are
-    * rewritten under the fence, and a completed build self-heals a
-    * crashed predecessor. */
+  /** Persist the ANN index under `path` — the one persisted index
+    * layout (FAISS `IndexIVFPQ`'s shape: a coarse quantizer plus a
+    * compressed payload). Fit the coarse quantizer and the PQ codebooks
+    * (bounded driver samples), assign every row its cell, and write:
+    *
+    *  - `data/`: the corpus `partitionBy(__cell)` with the PQ codes and
+    *    per-row norms alongside the raw vectors. Probes are statically
+    *    partition-pruned reads of the probed cells; parquet's columnar
+    *    layout means the ADC pass reads ONLY (id, codes, norm) from those
+    *    files (column pruning), and the exact re-rank reads the vector
+    *    column for just the shortlist, from the same pruned directories.
+    *  - `centroids/` and `codebooks/`: the frozen model, as (cell,
+    *    centroid) and (subspace, code, centroid) rows.
+    *  - `meta/`: the drift and skew baselines [[ivfPqMaintain]] gauges
+    *    against.
+    *
+    * `nCells ≤ 0` (the default) sizes the quantizer as ~√n via
+    * [[autoCells]].
+    *
+    * A build overwrites every relation, so over an EXISTING index it is
+    * itself a torn-window writer: it holds the `.rebuilding` fence for
+    * the whole write and lifts it on completion. That also makes a
+    * completed rebuild-from-source the self-healing recovery for a
+    * fenced index — every relation is rewritten from one generation, so
+    * the marker (from this build, a crashed swap, or a crashed earlier
+    * build) is deleted instead of demanding manual restoration. The build
+    * also HOLDS the `.mutating` writer lease (acquire-or-create — a fresh
+    * root works): a build racing a live append refuses at acquisition
+    * instead of replacing `data/` under the append's in-flight write.
+    * Consequently a crashed WRITER'S leftover lease blocks the rebuild
+    * too — the refusal quotes the stamped holder (op/time/host/pid);
+    * after confirming that writer is dead, delete `.mutating` and rerun,
+    * and the completed build self-heals the `.rebuilding` fence as
+    * before. */
   def ivfPqBuild(corpus: DataFrame, vecCol: String, path: String,
                  nCells: Int = 0, m: Int = 8, ksub: Int = 16,
                  seed: Long = 42L, fitSampleRows: Int = 4096): Unit = {
@@ -2527,8 +1713,10 @@ object Similarity {
     import spark.implicits._
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    // fail fast before the auto-sizing count and the two fits — see
-    // ivfBuild's precheck rationale
+    // fail fast (advisory; acquisition below still decides atomically):
+    // the auto-sizing count next is a FULL corpus scan at scale, and the
+    // two fits follow — none of it may be paid ahead of a certain scheme
+    // refusal or a held lease
     buildPrecheck(spark, fs, root, "ivfPqBuild")
     val known = if (nCells > 0) -1L else corpus.count()
     val cells = if (nCells > 0) nCells else autoCells(known)
@@ -2536,12 +1724,15 @@ object Similarity {
       fitSampleRows, knownRows = known)
     val (model, fitPoints) =
       fitPqWithSample(corpus, vecCol, m, ksub, seed, fitSampleRows)
-    // build-time codebook-fit baseline for ivfPqDriftStats — see
-    // pqBuild's fit_mqe note (training-sample optimism applies alike)
+    // build-time baseline for the codebook-drift gauge (ivfPqDriftStats):
+    // the mean quantization error of the fit sample under the codebooks
+    // just fitted to it. Measured on the TRAINING sample, so it carries
+    // k-means' small in-sample optimism — an undrifted gauge reads
+    // slightly above 1.0, which maxDrift thresholds >= 1.5 clear safely.
     val fitMqe = meanQuantizationError(fitPoints, model)
-    // writer lease held across every write (acquire-or-create) — see
-    // ivfBuild: a build racing a live ivfPqAppend must refuse, not
-    // replace data/ mid-append
+    // writer lease held across every write (acquire-or-create): a build
+    // racing a live ivfPqAppend must refuse, not replace data/ while the
+    // append's write is in flight and silently drop the appended rows
     withMutationLease(spark, fs, root, "ivfPqBuild", createRoot = true) {
       val marker = new org.apache.hadoop.fs.Path(root, RebuildMarker)
       fs.create(marker, true).close()
@@ -2578,30 +1769,48 @@ object Similarity {
       writeGeneration(spark, path)
       fs.delete(marker, false)
     }
+    // a rebuild over an existing index replaces every relation's part
+    // files; same-session plans may hold cached file listings naming the
+    // deleted ones
     Seq("data", "centroids", "codebooks", "meta").foreach(d =>
       spark.catalog.refreshByPath(s"$path/$d"))
   }
 
-  /** Extend a persisted IVF-PQ index in place: new rows are encoded with
-    * the STANDING codebooks and assigned with the STANDING centroids —
+  /** Extend a persisted index in place: new rows are encoded with the
+    * STANDING codebooks and assigned with the STANDING centroids —
     * quantizer, codebooks, and existing cells are untouched, so the
-    * append writes only new part files into the cell directories, with
-    * the same prefix-visibility contract as [[ivfAppend]] (a concurrent
-    * probe sees a consistent smaller index, never torn metadata).
-    * Refuses a fenced index. Codes stay exact FOR THE RETAINED model —
-    * what drifts under a shifted distribution is the fit quality of
-    * cells and codebooks: watch [[ivfCellStats]] for cell skew and
-    * [[ivfPqDriftStats]] for codebook fit, or run [[ivfPqMaintain]] to
-    * gauge + rebuild automatically, exactly as [[ivfMaintain]] does for
-    * the plain IVF index. */
+    * append writes only new part files into the cell directories (no
+    * refit, no rewrite of the standing data: the daily-increment path for
+    * an index whose full rebuild is a 100 TB job). `newRows` must carry
+    * the schema the index was built from. Codes stay exact FOR THE
+    * RETAINED model — what drifts under a shifted distribution is the fit
+    * quality of cells and codebooks: watch [[ivfCellStats]] for cell
+    * skew and [[ivfPqDriftStats]] for codebook fit, or run
+    * [[ivfPqMaintain]] to gauge + rebuild automatically.
+    *
+    * Concurrency: the fence check refuses a `.rebuilding` index (a
+    * crashed swap is never silently extended with whichever model files
+    * survived it), and the append HOLDS the `.mutating` writer lease
+    * across its model read + data write — a maintain/delete whose
+    * staging would silently swap away in-flight appended rows refuses at
+    * acquisition, in whichever order the two writers arrive. Visibility
+    * to CONCURRENT readers: part files appear whole, the batch does not,
+    * so a probe racing an append may score a PREFIX of the batch. It
+    * never sees a torn row or mixed model files (the append does not
+    * touch them), and any prefix it sees was encoded and assigned with
+    * the model the probe ranks, so retrieved neighbors are still exactly
+    * scored; if batch atomicity matters, schedule probes around appends
+    * (SimilaritySpec pins the prefix-visibility contract). */
   def ivfPqAppend(newRows: DataFrame, vecCol: String, path: String): Unit = {
     val spark = newRows.sparkSession
-    requireNotRebuilding(spark, path)
+    requireIndex(spark, path)
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    // lease HELD across quantizer/codebook read + data write (see
-    // ivfAppend): the mid-append swap race refuses loudly instead of
-    // silently dropping the in-flight rows
+    // the lease is HELD across model read + data write, not merely
+    // checked at entry: a maintain/delete acquiring it mid-append would
+    // stage from a listing missing the in-flight rows and swap them away
+    // silently — and a swapped quantizer between the read and the write
+    // would file rows under stale cells. Held, both races refuse loudly.
     withMutationLease(spark, fs, root, "ivfPqAppend", AppendLeaseHint) {
       val centroids = loadCentroids(spark, path)
       val model = loadPqModel(spark, path)
@@ -2609,13 +1818,15 @@ object Similarity {
         .withColumn("__cell", nearestCell(col(vecCol), centroids))
         .write.mode("append").partitionBy("__cell").parquet(s"$path/data")
     }
+    // same-session probes may hold a cached file listing for the cell
+    // directories; drop it so they see the appended part files
     spark.catalog.refreshByPath(s"$path/data")
   }
 
   /** Build-time cell-skew baseline (`fit_skew`), when the index records
-    * one ([[ivfPqBuild]] since it gauged skew); None on older indexes
-    * and on flat-PQ meta (no cells) — callers fall back to 1.0, i.e.
-    * absolute (uniform-equilibrium) skew units. */
+    * one ([[ivfPqBuild]] since it gauged skew); None on older indexes —
+    * callers fall back to 1.0, i.e. absolute (uniform-equilibrium) skew
+    * units. */
   private def readFitSkew(spark: SparkSession, path: String): Option[Double] = {
     val p = new org.apache.hadoop.fs.Path(path, "meta")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -2634,8 +1845,8 @@ object Similarity {
   def ivfPqDriftStats(spark: SparkSession, path: String, vecCol: String,
                       seed: Long = 42L, sampleRows: Int = 4096,
                       sampleFiles: Int = 16): PqDriftStats =
-    pqDriftFrom(spark, path, "data", vecCol, "ivfPqBuild", seed,
-      sampleRows, sampleFiles).getOrElse(throw new IllegalStateException(
+    driftFrom(spark, path, vecCol, seed, sampleRows,
+      sampleFiles).getOrElse(throw new IllegalStateException(
       s"nothing to gauge at $path: the data relation is empty " +
         "(fully drained corpus) — ivfPqMaintain reports this case as \"ok\""))
 
@@ -2643,17 +1854,35 @@ object Similarity {
     * maintenance-doctrine hole [[ivfPqAppend]] documents: appended mass
     * from a shifted distribution quantizes ever worse against the frozen
     * codebooks, degrading ADC shortlist quality (hence recall) gradually
-    * and silently; appended mass can ALSO bloat few cells or outgrow the
-    * quantizer, exactly [[ivfMaintain]]'s skew/growth concerns. All three
-    * triggers are watched — codebook drift via [[ivfPqDriftStats]]
-    * (bounded sample), cell skew and corpus growth via [[ivfCellStats]]
+    * and silently; appended mass can ALSO concentrate in few cells
+    * (making their probes expensive and recall lopsided) or outgrow the
+    * quantizer (the √n cell count for the CURRENT corpus exceeds
+    * `maxGrowth` × the stored one, so per-cell scan cost has drifted up
+    * by the same factor). All three triggers are watched — codebook
+    * drift via [[ivfPqDriftStats]] (bounded sample), cell skew and
+    * corpus growth via [[ivfCellStats]]
     * (directory metadata) — because ONE rebuild cures all three: past any
     * bound the index rebuilds from its own stored rows under the staged
     * swap + `.rebuilding` fence, refitting coarse quantizer AND codebooks
     * on the current distribution, re-deriving the cell count for the
     * grown corpus (`autoCells`), re-assigning + re-encoding every row,
     * and recording fresh drift AND skew baselines. Returns `"ok"` or
-    * `"rebuilt"`; `maxDrift` semantics as in [[pqMaintain]].
+    * `"rebuilt"` so schedulers can log/alert on the decision.
+    *
+    * The rebuild stages into `.staging` and swaps under the fence
+    * ([[stagedRebuild]]) while holding the writer lease from before the
+    * staging read to after the swap, so no append can interleave; probes
+    * stay live until the brief swap and fail loudly (retryably) inside
+    * it. Any width calibration is dropped BEFORE the rebuild: a crash
+    * between the fence lift and a post-swap delete would otherwise leave
+    * widths tuned against the replaced model silently in force, while
+    * losing it on an unchanged index only degrades probes to the
+    * uncalibrated defaults.
+    *
+    * `maxDrift` is in baseline units: 2.0 means "typical row quantizes
+    * 2× worse than at build time". The baseline carries k-means'
+    * in-sample optimism (see [[ivfPqBuild]]), so thresholds below ~1.5
+    * would fire on healthy indexes.
     *
     * `maxSkew` is in BUILD-TIME units — the trigger fires when max/mean
     * cell skew exceeds `maxSkew` × the recorded `fit_skew` baseline, NOT
@@ -2664,12 +1893,14 @@ object Similarity {
     * rebuild records its own equilibrium as the new baseline, the
     * maintain loop converges by construction: the call after a rebuild
     * reads ratio ≈ 1 on every gauge. Indexes built before the baseline
-    * fall back to absolute units ([[ivfMaintain]]'s semantics, which suit
-    * its near-uniform-corpus probe evidence).
+    * fall back to absolute units.
     *
     * `fitSampleRows` budgets the REBUILD's fits;
     * `gaugeSampleRows`/`gaugeSampleFiles` budget the nightly drift gauge
-    * — independent knobs, as in [[pqMaintain]]. `recallTarget`: when
+    * — independent knobs (a bigger fit should not silently make every
+    * "ok" night read more of the index, and vice versa). An index whose
+    * rows have all been deleted reports "ok": nothing to gauge, nothing
+    * to rebuild. `recallTarget`: when
     * set, a rebuild is followed by [[ivfPqCalibrate]] at this target
     * (recall@`recallK`), re-deriving BOTH probe widths (`nProbe` and the
     * ADC shortlist factor) against the refitted index — a rebuild
@@ -2689,26 +1920,24 @@ object Similarity {
     require(maxSkew > 1.0, "maxSkew must exceed 1 (1 = perfectly uniform)")
     require(maxGrowth >= 1.0, "maxGrowth must be >= 1")
     val (total, skew, wantCells, nCellsStored) = cellHealth(spark, path)
-    // an emptied-out index has nothing to gauge — "ok" like ivfMaintain,
-    // and the drift sample (which cannot draw from zero rows) is skipped
+    // an emptied-out index has nothing to gauge — the drift sample (which
+    // cannot draw from zero rows) is skipped
     if (total == 0) return "ok"
-    val drift = pqDriftFrom(spark, path, "data", vecCol, "ivfPqBuild",
-      seed, gaugeSampleRows, gaugeSampleFiles)
+    val drift = driftFrom(spark, path, vecCol, seed, gaugeSampleRows,
+      gaugeSampleFiles)
     val fitSkew = readFitSkew(spark, path).getOrElse(1.0)
     val healthy = drift.forall(_.ratio <= maxDrift) &&
       skew <= maxSkew * fitSkew && wantCells <= nCellsStored * maxGrowth
     if (healthy) "ok"
     else {
       val model = loadPqModel(spark, path)
-      // drop the calibration BEFORE the rebuild (see pqMaintain): a crash
-      // between the fence lift and a post-swap delete would leave widths
-      // tuned against the replaced quantizer+codebooks silently in force
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
       // writer lease across staging-read + swap (see withMutationLease):
       // an append inside the window would be silently dropped by the
       // swap — appends hold the same lease, so it cannot start here
       withMutationLease(spark, fs, root, "ivfPqMaintain") {
+        // calibration dropped BEFORE the rebuild — see the scaladoc
         fs.delete(new org.apache.hadoop.fs.Path(path, PqCalFile), false)
         // original columns only: cell/norm/codes recomputed by the build
         val data = spark.read.parquet(s"$path/data")
@@ -2726,60 +1955,20 @@ object Similarity {
     }
   }
 
-  /** Persisted-index layout detection shared by [[indexMaintain]],
-    * [[indexDelete]], and the streaming ingest sink
-    * (`StreamOps.annAppendSink`) — the relations each build writes are
-    * its signature. None = unrecognized (callers fail loudly: acting
-    * with the WRONG family's semantics silently drops relations). */
-  private[graft] def detectIndexLayout(spark: SparkSession,
-                                       path: String): Option[String] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    def has(rel: String): Boolean =
-      fs.exists(new org.apache.hadoop.fs.Path(root, rel))
-    if (has("codes") && has("vectors")) Some("flat-pq")
-    else if (has("data") && has("codebooks")) Some("ivf-pq")
-    else if (has("data") && has("centroids")) Some("ivf")
-    else None
-  }
-
-  /** The loud half of [[detectIndexLayout]]'s contract, shared wording
-    * for every caller that must refuse an unrecognized directory. */
-  private[graft] def requireIndexLayout(spark: SparkSession,
-                                        path: String): String =
-    detectIndexLayout(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no recognized index layout at $path (expected codes+vectors " +
-          "[flat-PQ], data+codebooks [IVF-PQ], or data+centroids [IVF])"))
-
-  /** One-call nightly maintenance for ANY persisted ANN index — the
-    * [[graft.operators.Layout.storeMaintain]] analogue for the index
-    * family, so a scheduler needs one cron line per index, not one per
-    * index KIND. The layout is detected from what is on disk (the
-    * relations each build writes are its signature) and the matching
-    * measured-trigger maintenance runs:
+  /** One-call nightly maintenance for a persisted index — the
+    * [[graft.operators.Layout.storeMaintain]] analogue, so a scheduler
+    * needs one cron line per index. Runs [[ivfPqMaintain]]'s
+    * measured triggers (codebook drift, cell skew, corpus growth) and,
+    * past any bound, its staged rebuild. `recallTarget` re-derives both
+    * probe widths against the rebuilt index ([[ivfPqCalibrate]]);
+    * `gaugeSampleRows`/`gaugeSampleFiles` budget the nightly drift gauge
+    * independently of the rebuild's `fitSampleRows`. An index whose rows
+    * have been fully drained (e.g. by opt-out deletes) reports "ok".
     *
-    *  - `codes/` + `vectors/`            → flat-PQ ([[pqBuild]]):
-    *    [[pqMaintain]] (codebook drift; needs `idCol`);
-    *  - `data/` + `codebooks/`           → IVF-PQ ([[ivfPqBuild]]):
-    *    [[ivfPqMaintain]] (codebook drift + cell skew + growth);
-    *  - `data/` + `centroids/` alone     → plain IVF ([[ivfBuild]]):
-    *    [[ivfMaintain]] (cell skew + growth).
-    *
-    * `recallTarget` is honored by EVERY layout — each rebuild is
-    * followed by its family's width recalibration at the target
-    * ([[nProbeForRecall]] / [[pqShortlistForRecall]] /
-    * [[ivfPqCalibrate]]), so a mixed index fleet keeps one recall
-    * contract under one cron line. `gaugeSampleRows`/`gaugeSampleFiles`
-    * budget the PQ layouts' nightly drift gauge independently of the
-    * rebuild's `fitSampleRows`. An index whose rows have been fully
-    * drained (e.g. by opt-out deletes) reports "ok" — nothing to gauge,
-    * nothing to rebuild.
-    *
-    * An unrecognized directory fails loudly — running the WRONG family's
-    * rebuild would silently drop relations (e.g. [[ivfMaintain]] over an
-    * IVF-PQ index rebuilds via [[ivfBuild]] and loses the codes).
-    * Returns `(detected layout, decision)`. */
+    * A directory that is not an IVF-PQ index — including the retired
+    * flat-PQ and plain-IVF layouts — fails loudly before anything is
+    * read or written. Returns `(layout, decision)`, the layout always
+    * `"ivf-pq"`. */
   def indexMaintain(spark: SparkSession, path: String, vecCol: String,
                     idCol: String = "id", maxDrift: Double = 2.0,
                     maxSkew: Double = 4.0, maxGrowth: Double = 4.0,
@@ -2790,41 +1979,41 @@ object Similarity {
                     gaugeSampleFiles: Int = 16,
                     recallK: Int = 10,
                     maxShortlistFactor: Int = 64): (String, String) =
-    requireIndexLayout(spark, path) match {
-      case "flat-pq" =>
-        ("flat-pq", pqMaintain(spark, path, vecCol, idCol, maxDrift, seed,
-          fitSampleRows, gaugeSampleRows, gaugeSampleFiles, recallTarget,
-          recallK, maxShortlistFactor))
-      case "ivf-pq" =>
-        ("ivf-pq", ivfPqMaintain(spark, path, vecCol, maxDrift, maxSkew,
-          maxGrowth, seed, fitSampleRows, gaugeSampleRows,
-          gaugeSampleFiles, recallTarget, recallK, idCol,
-          maxShortlistFactor))
-      case _ =>
-        ("ivf", ivfMaintain(spark, path, vecCol, maxSkew, maxGrowth, seed,
-          fitSampleRows, recallTarget, recallK))
-    }
+    ("ivf-pq", ivfPqMaintain(spark, path, vecCol, maxDrift, maxSkew,
+      maxGrowth, seed, fitSampleRows, gaugeSampleRows, gaugeSampleFiles,
+      recallTarget, recallK, idCol, maxShortlistFactor))
 
-  /** Probe an [[ivfPqBuild]] index: the probed cell set becomes a literal
-    * partition filter (same static pruning as [[ivfProbeTopK]]); the ADC
-    * pass projects only (id, codes, norm) — parquet column pruning keeps
-    * the raw vectors unread — and the exact re-rank reads the vector
-    * column for the broadcast shortlist alone, from the same pruned
-    * directories. Same output shape as [[bruteForceTopK]]. Racing a
-    * concurrent [[indexDelete]]/[[ivfPqMaintain]] swap: consistent
-    * answer or LOUD retryable failure, never silent partial results —
-    * see [[indexDelete]]'s in-flight-readers contract (pinned live in
+  /** Probe an [[ivfPqBuild]] index: the probed cell set (at most
+    * queries × nProbe distinct cells, collected driver-side — bounded by
+    * nCells) becomes a LITERAL partition filter, so the scan reads only
+    * the probed `__cell=` directories (static partition pruning —
+    * verified by plan inspection in SimilaritySpec); the ADC pass
+    * projects only (id, codes, norm) — parquet column pruning keeps the
+    * raw vectors unread — and the exact re-rank reads the vector column
+    * for the broadcast shortlist alone, from the same pruned directories.
+    * Same output shape as [[bruteForceTopK]]; returned cosines are exact.
+    *
+    * Widths: `nProbe` sets the scanned fraction (~nProbe/nCells) and
+    * `shortlistFactor` the re-rank depth (factor·k ADC candidates per
+    * query). `0` (the default) reads the widths [[ivfPqCalibrate]]
+    * persisted for a recall target — don't guess widths, calibrate —
+    * else cells/8 and factor 4: tied to the stored cell count, so a
+    * √n-sized index keeps its scanned fraction instead of collapsing
+    * recall. Full probe with a shortlist covering the corpus is the
+    * exactness baseline (equal to brute force).
+    *
+    * Racing a concurrent [[indexDelete]]/[[ivfPqMaintain]] swap:
+    * consistent answer or LOUD retryable failure (fence refusal at plan
+    * time, missing input mid-scan), never silent partial results — see
+    * [[indexDelete]]'s in-flight-readers contract (pinned live in
     * `SimilaritySpec`). */
   def ivfPqProbeTopK(spark: SparkSession, path: String, queries: DataFrame,
                      vecCol: String, idCol: String, queryIdCol: String,
                      k: Int, nProbe: Int = 0,
                      shortlistFactor: Int = 0): DataFrame = {
-    // 0 defaults = the ivfPqCalibrate-persisted widths when the index
-    // carries them (recall-targeted), else cells/8 and factor 4 — the
-    // calibrated-default contract ivfProbeTopK has via nProbeForRecall
     require(shortlistFactor >= 0,
       "shortlistFactor must be >= 0 (0 = calibrated default)")
-    requireNotRebuilding(spark, path)
+    requireIndex(spark, path)
     val gen0 = readGeneration(spark, path)
     val centroids = loadCentroids(spark, path)
     val model = loadPqModel(spark, path)
@@ -2832,17 +2021,22 @@ object Similarity {
     lazy val cal = calibratedPqWidthsAt(spark, path, gen0)
     val probes =
       if (nProbe > 0) nProbe
-      else cal.map(_._1).filter(_ > 0)
-        .map(c => math.min(math.max(1, c), centroids.length))
+      else cal.map(c => math.min(math.max(1, c._1), centroids.length))
         .getOrElse(math.max(1, centroids.length / 8))
     val factor =
       if (shortlistFactor > 0) shortlistFactor
       else cal.map(_._2).getOrElse(DefaultShortlistFactor)
-    // probed-cell-only open of `data/` — same shape and rationale as
-    // [[ivfProbeTopK]]: one driver-side listStatus for existence, one
-    // cell dir for the query batch's schema needs, basePath keeping
-    // `__cell` a partition column so the isin filter stays the
-    // PartitionFilters entry the plan contract asserts
+    // The probed cells are known BEFORE `data/` needs to open (they come
+    // from the centroids and the query batch), so the scan opens ONLY
+    // the probed `__cell=` directories instead of discovering the whole
+    // tree (a full open lists every cell dir per probe; at object-store
+    // scale that is cell-count LIST calls for a probe that touches
+    // nProbe of them). One driver-side listStatus of `data/` answers
+    // existence; the query batch's schema needs come from a single cell
+    // directory (basePath keeps `__cell` a partition column, so the isin
+    // filter below stays the PartitionFilters entry the plan contract
+    // asserts). See [[readPartitionDirs]] for the driver-side listing
+    // above 32 dirs and the drained-subset fallback.
     val existing = partitionDirs(spark, s"$path/data", "__cell")
     val schemaProbe = readPartitionDirs(spark, s"$path/data",
       existing.values.take(1).toSeq)
@@ -2879,45 +2073,34 @@ object Similarity {
 
   // --------------------------------------------------- index opt-out delete
 
-  /** Delete rows from ANY persisted ANN index by id — the governance
+  /** Delete rows from a persisted index by id — the governance
     * primitive that extends the right-to-be-forgotten pipeline
     * (`SnapshotStore.delete` → audit → vacuum; `examples/OptOutExample`)
-    * to the indexes SERVING retrieval: deleting a user from the corpus
+    * to the index SERVING retrieval: deleting a user from the corpus
     * store does nothing to the copies of their vectors an index holds,
     * and every maintenance rebuild re-encodes the index's OWN stored
     * rows, so without this the opted-out vectors would persist — and
     * stay retrievable — forever.
     *
     * Bounded work, never a full rewrite (the `SnapshotStore.delete`
-    * economy, per layout):
-    *
-    *  - **flat-PQ**: the victims' vector buckets are DERIVED
-    *    (`pmod(xxhash64(id), idBuckets)` — no scan at all), and only
-    *    those `__vb=` directories are rewritten; the codes relation is
-    *    unpartitioned, so deletion there is FILE-granular — one scan of
-    *    the narrow codes relation (the cheap one by design: ~10× fewer
-    *    bytes than the vectors) locates the files containing victims,
-    *    and only those files are rewritten.
-    *  - **IVF / IVF-PQ**: the victims' cells are located by one
-    *    COLUMN-PRUNED scan (id + the directory-derived cell only — the
-    *    vector and code columns stay unread), and only those `__cell=`
-    *    directories are rewritten.
+    * economy): the victims' cells are located by one COLUMN-PRUNED scan
+    * (id + the directory-derived cell only — the vector and code columns
+    * stay unread), and only those `__cell=` directories are rewritten.
     *
     * Crash discipline: survivors are staged under `<path>/.staging`
     * FIRST (probes keep running against the untouched live index), then
-    * the touched partitions/files swap under the `.rebuilding` fence —
-    * readers and appenders refuse a fenced index, and a crash mid-swap
-    * leaves the fence plus the `.old`/`.staging` halves for recovery,
-    * exactly the staged-rebuild contract. A partition whose rows are all
-    * deleted is removed outright; deleting EVERY row leaves an empty
-    * index that [[indexMaintain]] gauges as "ok". Width calibrations
-    * (`pqcal.json`/`nprobe.json`) are kept — a bounded opt-out batch
-    * does not shift the corpus distribution; the next
-    * `recallTarget`-bearing maintenance re-checks them anyway.
-    * Single-writer, like every mutation path — and mechanically so: the
-    * whole delete holds the `.mutating` writer lease ([[withMutationLease]]),
-    * under which interleaved appends fail loudly instead of being
-    * silently dropped by the swap.
+    * the touched cells swap under the `.rebuilding` fence — readers and
+    * appenders refuse a fenced index, and a crash mid-swap leaves the
+    * fence plus the `.old`/`.staging` halves for recovery, exactly the
+    * staged-rebuild contract. A cell whose rows are all deleted is
+    * removed outright; deleting EVERY row leaves an empty index that
+    * [[indexMaintain]] gauges as "ok". The width calibration
+    * (`pqcal.json`) is kept — a bounded opt-out batch does not shift the
+    * corpus distribution; the next `recallTarget`-bearing maintenance
+    * re-checks it anyway. Single-writer, like every mutation path — and
+    * mechanically so: the whole delete holds the `.mutating` writer
+    * lease ([[withMutationLease]]), under which interleaved appends fail
+    * loudly instead of being silently dropped by the swap.
     *
     * IN-FLIGHT READERS during the swap (the probe-vs-delete race,
     * pinned live in `SimilaritySpec`): a probe that passed the fence
@@ -2933,96 +2116,57 @@ object Similarity {
     * reader-vs-vacuum contract.
     *
     * `keys` must carry a column named `idCol` (cast to the stored id
-    * type before hashing/joining — an unconformed key would probe the
-    * wrong bucket and silently delete nothing). Returns rows removed
-    * from the primary relation; ids absent from the index are a no-op,
-    * so replaying an opt-out batch converges. */
+    * type before joining — an unconformed key would silently delete
+    * nothing). Returns rows removed; ids absent from the index are a
+    * no-op, so replaying an opt-out batch converges. */
   def indexDelete(spark: SparkSession, path: String, keys: DataFrame,
                   idCol: String = "id"): Long = {
     require(keys.columns.contains(idCol),
       s"keys must carry the id column '$idCol'")
-    requireNotRebuilding(spark, path)
-    val layout = requireIndexLayout(spark, path)
-    val rel = if (layout == "flat-pq") "vectors" else "data"
-    val partCol = if (layout == "flat-pq") "__vb" else "__cell"
+    requireIndex(spark, path)
     val conf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(conf)
-    // writer lease held from BEFORE the primary listing to after the
-    // swap (see withMutationLease): an append interleaving in between
-    // writes rows the staged survivors do not contain — the swap would
-    // drop them silently; appends HOLD the same lease, so the
-    // interleaving is structurally impossible
+    // writer lease held from BEFORE the data listing to after the swap
+    // (see withMutationLease): an append interleaving in between writes
+    // rows the staged survivors do not contain — the swap would drop
+    // them silently; appends HOLD the same lease, so the interleaving is
+    // structurally impossible
     withMutationLease(spark, fs, root, "indexDelete") {
-    val primary = spark.read.parquet(s"$path/$rel")
-    val storedIdType = primary.schema(idCol).dataType
+    val data = spark.read.parquet(s"$path/data")
+    val storedIdType = data.schema(idCol).dataType
     // bounded opt-out batch, materialized once: it feeds several jobs,
     // and a nondeterministic input re-evaluated per job would let
     // victims outside the first evaluation's touched set survive while
     // the count claimed them (SnapshotStore.delete's rationale)
     val k = keys.select(col(idCol).cast(storedIdType).as(idCol))
       .distinct().localCheckpoint(true)
-    val existingParts: Set[Int] = fs.listStatus(
-        new org.apache.hadoop.fs.Path(root, rel)).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith(s"$partCol=") =>
-        n.stripPrefix(s"$partCol=").toInt }.toSet
-    val touched: Set[Int] =
-      if (layout == "flat-pq") {
-        val buckets = spark.read.parquet(s"$path/meta")
-          .select("id_buckets").collect()(0).getInt(0)
-        k.select(pmod(xxhash64(col(idCol).cast("long")),
-            lit(buckets.toLong)).cast("int").as(partCol))
-          .distinct().collect().map(_.getInt(0)).toSet
-          .intersect(existingParts)
-      } else
-        primary.select(col(idCol), col(partCol))
-          .join(broadcast(k), Seq(idCol), "left_semi")
-          .select(partCol).distinct().collect().map(_.getInt(0)).toSet
+    val touched: Set[Int] = data.select(col(idCol), col("__cell"))
+      .join(broadcast(k), Seq(idCol), "left_semi")
+      .select("__cell").distinct().collect().map(_.getInt(0)).toSet
     if (touched.isEmpty) return 0L
-    val target = primary
-      .filter(col(partCol).isin(touched.toIndexedSeq: _*))
+    val target = data.filter(col("__cell").isin(touched.toIndexedSeq: _*))
     val nDel = target.join(broadcast(k), Seq(idCol), "left_semi").count()
     if (nDel == 0L) return 0L
     val staging = new org.apache.hadoop.fs.Path(root, ".staging")
     fs.delete(staging, true)
-    // stage the touched partitions' survivors — live index untouched,
-    // probes keep running. Flat-PQ keeps the build's within-bucket id
-    // sort (tight row-group stats for the re-rank's point lookups).
-    val survivors = target.join(broadcast(k), Seq(idCol), "left_anti")
-    val arranged =
-      if (layout == "flat-pq")
-        survivors.repartition(col(partCol))
-          .sortWithinPartitions(col(partCol), col(idCol))
-      else survivors
-    arranged.write.mode("overwrite").partitionBy(partCol)
-      .parquet(s"$staging/$rel")
-    // flat-PQ: locate and stage the codes files holding victims — one
-    // narrow codes scan; only matched files are rewritten
-    val codesDf =
-      if (layout == "flat-pq") Some(spark.read.parquet(s"$path/codes"))
-      else None
-    val codesFiles: Seq[String] = codesDf.fold(Seq.empty[String])(
-      _.withColumn("__f", input_file_name())
-        .join(broadcast(k), Seq(idCol), "left_semi")
-        .select("__f").distinct().collect().map(_.getString(0)).toSeq)
-    if (codesFiles.nonEmpty)
-      spark.read.parquet(codesFiles: _*)
-        .join(broadcast(k), Seq(idCol), "left_anti")
-        .write.mode("overwrite").parquet(s"$staging/codes")
-    // fenced WHOLE-RELATION swap. Swapping partition directories one at
-    // a time IN PLACE (the pre-r18 scheme) left a window where a racing
-    // probe's file listing could catch SOME partitions swapped and
-    // others not — a READABLE mixed state, i.e. silent partial results,
-    // exactly what the in-flight-readers contract forbids. Instead the
-    // relation directory is renamed AWAY whole, mutated while it sits at
-    // the hidden `.old` path (displaced old partitions parked under
-    // `.old/parts` for crash recovery, staged survivors moved in), and
-    // renamed BACK whole — readers only ever observe all-old, ABSENT (a
-    // loud, retryable listing/scan failure under the default
-    // ignoreMissingFiles=false), or all-new, and the metadata ops stay
-    // O(touched) (2 whole-dir renames + 2 per touched partition), not
-    // O(partitions).
+    // stage the touched cells' survivors — live index untouched, probes
+    // keep running
+    target.join(broadcast(k), Seq(idCol), "left_anti")
+      .write.mode("overwrite").partitionBy("__cell")
+      .parquet(s"$staging/data")
+    // fenced WHOLE-RELATION swap. Swapping cell directories one at a
+    // time IN PLACE left a window where a racing probe's file listing
+    // could catch SOME cells swapped and others not — a READABLE mixed
+    // state, i.e. silent partial results, exactly what the
+    // in-flight-readers contract forbids. Instead the relation directory
+    // is renamed AWAY whole, mutated while it sits at the hidden `.old`
+    // path (displaced old cells parked under `.old/parts` for crash
+    // recovery, staged survivors moved in), and renamed BACK whole —
+    // readers only ever observe all-old, ABSENT (a loud, retryable
+    // listing/scan failure under the default ignoreMissingFiles=false),
+    // or all-new, and the metadata ops stay O(touched) (2 whole-dir
+    // renames + 2 per touched cell), not O(cells).
     val old = new org.apache.hadoop.fs.Path(root, ".old")
     fs.delete(old, true)
     fs.mkdirs(old)
@@ -3030,100 +2174,41 @@ object Similarity {
     fs.mkdirs(parked)
     val rod = renameOrDie(fs, path, "indexDelete") _
     withRebuildFence(fs, root) {
-      val hiddenRel = new org.apache.hadoop.fs.Path(old, rel)
-      rod(new org.apache.hadoop.fs.Path(root, rel), hiddenRel)
-      touched.toSeq.sorted.foreach { p =>
-        rod(new org.apache.hadoop.fs.Path(hiddenRel, s"$partCol=$p"),
-          new org.apache.hadoop.fs.Path(parked, s"$partCol=$p"))
-        val stagedPart =
-          new org.apache.hadoop.fs.Path(staging, s"$rel/$partCol=$p")
-        // a partition whose rows were all victims has no staged
-        // survivors: it is removed outright (the probes' partition
-        // pruning and the maintainers' cell stats stop seeing it)
-        if (fs.exists(stagedPart))
-          rod(stagedPart,
-            new org.apache.hadoop.fs.Path(hiddenRel, s"$partCol=$p"))
+      val live = new org.apache.hadoop.fs.Path(root, "data")
+      val hidden = new org.apache.hadoop.fs.Path(old, "data")
+      rod(live, hidden)
+      touched.toSeq.sorted.foreach { c =>
+        rod(new org.apache.hadoop.fs.Path(hidden, s"__cell=$c"),
+          new org.apache.hadoop.fs.Path(parked, s"__cell=$c"))
+        val stagedCell =
+          new org.apache.hadoop.fs.Path(staging, s"data/__cell=$c")
+        // a cell whose rows were all victims has no staged survivors: it
+        // is removed outright (the probes' partition pruning and the
+        // maintainer's cell stats stop seeing it)
+        if (fs.exists(stagedCell))
+          rod(stagedCell, new org.apache.hadoop.fs.Path(hidden, s"__cell=$c"))
       }
-      rod(hiddenRel, new org.apache.hadoop.fs.Path(root, rel))
-      // flat-PQ codes: the same hidden-path dance at FILE granularity —
-      // victim files deleted while the relation is hidden, rewritten
-      // survivors moved in, the directory renamed back whole
-      if (layout == "flat-pq") {
-        val hiddenCodes = new org.apache.hadoop.fs.Path(old, "codes")
-        rod(new org.apache.hadoop.fs.Path(root, "codes"), hiddenCodes)
-        // input_file_name() returns the scan's URI-encoded path string
-        // (SparkPath.urlEncoded), so the URI round trip is the correct
-        // decode for e.g. %20 under a space-containing root; a string
-        // that is NOT URI-parseable (foreign producer) falls back to the
-        // plain Path constructor instead of aborting the delete mid-fence
-        codesFiles.foreach { f =>
-          val name = (try new org.apache.hadoop.fs.Path(new java.net.URI(f))
-            catch { case _: java.net.URISyntaxException =>
-              new org.apache.hadoop.fs.Path(f) }).getName
-          fs.delete(new org.apache.hadoop.fs.Path(hiddenCodes, name), false)
-        }
-        val stagedCodes = new org.apache.hadoop.fs.Path(staging, "codes")
-        if (fs.exists(stagedCodes))
-          fs.listStatus(stagedCodes).toSeq
-            .filter(st => st.isFile &&
-              st.getPath.getName.endsWith(".parquet"))
-            .foreach(st => rod(st.getPath, new org.apache.hadoop.fs.Path(
-              hiddenCodes, st.getPath.getName)))
-        rod(hiddenCodes, new org.apache.hadoop.fs.Path(root, "codes"))
-      }
+      rod(hidden, live)
       // a FULLY drained relation must stay READABLE: a partitioned write
       // of zero survivors produces no files at all, and a later probe's
       // spark.read.parquet would die on schema inference instead of
       // returning zero rows. Re-seed with ONE empty schema-carrying file
-      // INSIDE a partition-shaped subdir (a bare file at the relation
-      // root would conflict with partition discovery once appends
-      // resume) — the empty file carries the DATA-file schema, the
-      // partition column stays directory-derived, and probes/appends
-      // after a total drain keep working.
-      def ensureReadable(relName: String,
-                         fileSchema: org.apache.spark.sql.types.StructType,
-                         partitioned: Boolean): Unit = {
-        val dir = new org.apache.hadoop.fs.Path(root, relName)
-        val baseDepth = fs.makeQualified(dir).depth()
-        // only VISIBLE parquet counts as readability: a crashed append's
-        // _temporary debris is invisible to Spark's directory reads
-        // (the gaugeSample hidden-path rule), so counting it here would
-        // skip the re-seed and leave the relation unreadable anyway
-        def visible(fp: org.apache.hadoop.fs.Path): Boolean = {
-          var q = fp
-          while (q != null && q.depth() > baseDepth) {
-            val n = q.getName
-            if (n.startsWith(".") || (n.startsWith("_") && !n.contains("=")))
-              return false
-            q = q.getParent
-          }
-          true
-        }
-        val it = fs.listFiles(dir, true)
-        var any = false
-        while (it.hasNext && !any)
-          if ({ val st = it.next()
-                st.isFile && st.getPath.getName.endsWith(".parquet") &&
-                  visible(st.getPath) })
-            any = true
-        if (!any)
-          spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              fileSchema)
-            .repartition(1)
-            .write.mode("append").parquet(
-              if (partitioned) s"$dir/$partCol=0" else dir.toString)
-      }
-      ensureReadable(rel, org.apache.spark.sql.types.StructType(
-        primary.schema.fields.filterNot(_.name == partCol)),
-        partitioned = true)
-      codesDf.foreach(c =>
-        ensureReadable("codes", c.schema, partitioned = false))
+      // INSIDE a cell-shaped subdir (a bare file at the relation root
+      // would conflict with partition discovery once appends resume) —
+      // the empty file carries the DATA-file schema, `__cell` stays
+      // directory-derived, and probes/appends after a total drain keep
+      // working.
+      if (visibleParquetFiles(fs, live).isEmpty)
+        spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            org.apache.spark.sql.types.StructType(
+              data.schema.fields.filterNot(_.name == "__cell")))
+          .repartition(1)
+          .write.mode("append").parquet(s"$live/__cell=0")
     }
     fs.delete(old, true)
     fs.delete(staging, true)
-    (rel +: (if (layout == "flat-pq") Seq("codes") else Nil))
-      .foreach(r => spark.catalog.refreshByPath(s"$path/$r"))
+    spark.catalog.refreshByPath(s"$path/data")
     nDel
     } // withMutationLease
   }

@@ -179,11 +179,4 @@ object InsertOrUpdate {
     cfg.fetchColumns.foldLeft(written) { case (df, (alias, column)) =>
       if (alias == column) df else df.withColumn(alias, col(column))
     }
-
-  /** Snapshot-merge convenience for the parquet backend: read the target
-    * table, merge, and return the new snapshot to be written by the caller
-    * (writing is the action boundary; kept out of this pure function). */
-  def mergeSnapshot(targetSnapshot: DataFrame, updates: DataFrame,
-                    cfg: UpsertConfig = UpsertConfig()): DataFrame =
-    merge(targetSnapshot, updates, cfg).target
 }

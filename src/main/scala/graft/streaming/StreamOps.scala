@@ -1047,14 +1047,13 @@ object StreamOps {
   }
 
   /** Streaming ANN-index ingest: append each micro-batch into a
-    * persisted index with the STANDING model —
-    * `graft.examples.AnnIngestExample`'s ingest day as a `foreachBatch`
-    * sink. The layout is detected from the index's relations exactly as
-    * `Similarity.indexMaintain` does (codes+vectors → `pqAppend`,
-    * data+codebooks → `ivfPqAppend`, data+centroids → `ivfAppend`), so
-    * one sink serves the whole index family; nightly `indexMaintain`
-    * runs on its own schedule from the single writer that owns the
-    * index. Appends and maintenance must not interleave — and since the
+    * persisted index (`Similarity.ivfPqBuild`) with the STANDING model
+    * via `Similarity.ivfPqAppend` — `graft.examples.AnnIngestExample`'s
+    * ingest day as a `foreachBatch` sink. An epoch aimed at a directory
+    * that is not an IVF-PQ index fails loudly, naming the path, before
+    * anything is written (the fence does not advance); nightly
+    * `indexMaintain` runs on its own schedule from the single writer
+    * that owns the index. Appends and maintenance must not interleave — and since the
     * appends HOLD the `.mutating` writer lease, they cannot: an epoch
     * arriving while a maintain/delete holds the lease fails loudly,
     * advances no fence state, and is redelivered (and appended exactly
@@ -1122,7 +1121,7 @@ object StreamOps {
     * [[dedupeEmbeddingsAgainstStore]]/[[dedupeKeysWithTTL]] stage, where
     * exact contents matter across crashes. */
   def annAppendSink(stream: DataFrame, vecCol: String, path: String,
-                    idCol: String = "id", strictFence: Boolean = false,
+                    strictFence: Boolean = false,
                     checkpointLocation: Option[String] = None,
                     fencePath: Option[String] = None)(
       onEpoch: Long => Unit = _ => ())
@@ -1245,11 +1244,7 @@ object StreamOps {
               "redelivered and appended under this lineage")
       }
       if (recorded.forall(_._1 < epoch)) {
-        Similarity.requireIndexLayout(spark, path) match {
-          case "flat-pq" => Similarity.pqAppend(batch, vecCol, idCol, path)
-          case "ivf-pq"  => Similarity.ivfPqAppend(batch, vecCol, path)
-          case _         => Similarity.ivfAppend(batch, vecCol, path)
-        }
+        Similarity.ivfPqAppend(batch, vecCol, path)
         // tmp + atomic rename where the filesystem can swap atomically;
         // object stores (no atomic rename) fall back to a plain
         // overwrite so the sink stays AVAILABLE there — unless

@@ -277,18 +277,6 @@ class DedupSpec extends SparkSpec {
       maxBucket = Int.MaxValue).count() shouldBe 45
   }
 
-  test("hashedCandidates opt-in path returns pairs identical to the default " +
-    "single-pass string join") {
-    val base = Dedup.ngramJaccardPairs(docs, "text", "doc_id",
-      shingleSize = 3, threshold = 0.1, maxDf = 4)
-      .orderBy("id_a", "id_b").collect().toSeq
-    val hashed = Dedup.ngramJaccardPairs(docs, "text", "doc_id",
-      shingleSize = 3, threshold = 0.1, maxDf = 4, hashedCandidates = true)
-      .orderBy("id_a", "id_b").collect().toSeq
-    base.nonEmpty shouldBe true
-    hashed shouldBe base
-  }
-
   test("minhash-prefilter strategy reproduces the exact path's pairs and " +
     "values on a high-jaccard corpus, including the maxDf union arithmetic") {
     // defaults (128 hashes / 64 bands, r = 2) give near-total recall for
@@ -306,22 +294,17 @@ class DedupSpec extends SparkSpec {
   }
 
   test("strategy=auto is stats-gated: sparse corpora stay on the exact " +
-    "single-pass path, dense-shingle corpora escalate to the minhash " +
-    "prefilter, and the legacy hashedCandidates boolean still wins") {
+    "single-pass path, and dense-shingle corpora escalate to the minhash " +
+    "prefilter") {
     val shingled = docs.select(col("doc_id"),
       graft.functions.HashFunctions
         .charShingles(trim(lower(col("text"))), 5).as("__shs"))
     // the fixture is tiny: the measured default knee keeps it exact
-    Dedup.autoStrategy(shingled, "doc_id",
-      hashedCandidates = false) shouldBe "single"
+    Dedup.autoStrategy(shingled, "doc_id") shouldBe "single"
     // a knee below the fixture's volume escalates — the same gate that
     // fires on a dense-shingle corpus, exercised by shrinking the knee
     // instead of materializing 10M shingle rows in a unit test
-    Dedup.autoStrategy(shingled, "doc_id",
-      hashedCandidates = false, knee = 10L) shouldBe "minhash"
-    // explicit legacy opt-in beats the gate
-    Dedup.autoStrategy(shingled, "doc_id",
-      hashedCandidates = true, knee = 10L) shouldBe "hashed"
+    Dedup.autoStrategy(shingled, "doc_id", knee = 10L) shouldBe "minhash"
     // end-to-end: below the knee auto IS the exact path, output-identical
     val auto = Dedup.ngramJaccardPairs(docs, "text", "doc_id",
       shingleSize = 3, threshold = 0.1, strategy = "auto")
@@ -342,10 +325,8 @@ class DedupSpec extends SparkSpec {
     val biased = spark.range(0, 2000).select(col("id").as("doc_id"),
       when(col("id") < 1000, array(lit("s")))
         .otherwise(array((1 to 100).map(i => lit(s"s$i")): _*)).as("__shs"))
-    Dedup.autoStrategy(biased, "doc_id",
-      hashedCandidates = false, knee = 10000L) shouldBe "minhash"
-    Dedup.autoStrategy(biased.limit(0), "doc_id",
-      hashedCandidates = false) shouldBe "single"
+    Dedup.autoStrategy(biased, "doc_id", knee = 10000L) shouldBe "minhash"
+    Dedup.autoStrategy(biased.limit(0), "doc_id") shouldBe "single"
   }
 
   test("autoBands picks the most selective banding that keeps >=95% recall " +
@@ -399,7 +380,7 @@ class DedupSpec extends SparkSpec {
         spark.catalog.clearCache()
         Dedup.ngramJaccardPairs(
           corpus, "text", "doc_id", shingleSize = 3, threshold = 0.1,
-          maxDf = 5, hashedCandidates = true,
+          maxDf = 5, strategy = "single",
           maxBroadcastRows = maxBroadcastRows).orderBy("id_a", "id_b")
       }
       val gated = run(0L)

@@ -44,7 +44,7 @@ class StreamAnnIngestSpec extends SparkSpec {
     @volatile var crash = true
     val mem1 = MemoryStream[(Long, Seq[Double])]
     val q1 = StreamOps.annAppendSink(mem1.toDF.toDF("vec_id", "embedding"),
-      "embedding", path, idCol = "vec_id",
+      "embedding", path,
       checkpointLocation = Some(cp)) { e =>
       epochs += e
       if (crash) throw new RuntimeException("injected crash after fence")
@@ -64,7 +64,7 @@ class StreamAnnIngestSpec extends SparkSpec {
     // skipped whole (no duplicate vectors, callback not fired), and a
     // genuinely new epoch lands normally
     val q2 = StreamOps.annAppendSink(mem1.toDF.toDF("vec_id", "embedding"),
-      "embedding", path, idCol = "vec_id",
+      "embedding", path,
       checkpointLocation = Some(cp))(epochs += _)
     try {
       q2.processAllAvailable()
@@ -89,7 +89,7 @@ class StreamAnnIngestSpec extends SparkSpec {
     // line first — loud, whatever its epoch arithmetic says
     val memL = MemoryStream[(Long, Seq[Double])]
     val qL = StreamOps.annAppendSink(memL.toDF.toDF("vec_id", "embedding"),
-      "embedding", path, idCol = "vec_id")()
+      "embedding", path)()
     try {
       memL.addData((103L, vec(103)))
       val lex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
@@ -106,7 +106,7 @@ class StreamAnnIngestSpec extends SparkSpec {
       "5\n5".getBytes("UTF-8"))
     val memB = MemoryStream[(Long, Seq[Double])]
     val qB = StreamOps.annAppendSink(memB.toDF.toDF("vec_id", "embedding"),
-      "embedding", path, idCol = "vec_id")()
+      "embedding", path)()
     try {
       memB.addData((105L, vec(105)))
       val bex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
@@ -125,7 +125,7 @@ class StreamAnnIngestSpec extends SparkSpec {
         body.getBytes("UTF-8"))
       val memC = MemoryStream[(Long, Seq[Double])]
       val qC = StreamOps.annAppendSink(memC.toDF.toDF("vec_id", "embedding"),
-        "embedding", path, idCol = "vec_id")()
+        "embedding", path)()
       try {
         memC.addData((104L, vec(104)))
         val cex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
@@ -135,17 +135,17 @@ class StreamAnnIngestSpec extends SparkSpec {
       } finally qC.stop()
     }
 
-    // an unbuilt path refuses loudly instead of inventing a layout
+    // an unbuilt path refuses loudly, naming it
     val junk = tmp("graft_annstream_junk")
     val mem3 = MemoryStream[(Long, Seq[Double])]
     val q3 = StreamOps.annAppendSink(mem3.toDF.toDF("vec_id", "embedding"),
-      "embedding", junk, idCol = "vec_id")()
+      "embedding", junk)()
     try {
       mem3.addData((1L, vec(1)))
       val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
         q3.processAllAvailable()
       }
-      ex.getMessage should include("no recognized index layout")
+      ex.getMessage should include(s"no IVF-PQ index at $junk")
     } finally q3.stop()
   }
 
@@ -161,7 +161,7 @@ class StreamAnnIngestSpec extends SparkSpec {
     // owner lineage appends epoch 0 — fence now (0, owner-id)
     val mem1 = MemoryStream[(Long, Seq[Double])]
     val q1 = StreamOps.annAppendSink(mem1.toDF.toDF("vec_id", "embedding"),
-      "embedding", path, idCol = "vec_id")()
+      "embedding", path)()
     try { mem1.addData((100L, vec(100))); q1.processAllAvailable() }
     finally q1.stop()
     spark.read.parquet(s"$path/data").count() shouldBe 41L
@@ -170,7 +170,7 @@ class StreamAnnIngestSpec extends SparkSpec {
     // skipped (0 == 0); the lineage line makes it loud instead
     val mem2 = MemoryStream[(Long, Seq[Double])]
     val q2 = StreamOps.annAppendSink(mem2.toDF.toDF("vec_id", "embedding"),
-      "embedding", path, idCol = "vec_id")()
+      "embedding", path)()
     try {
       mem2.addData((200L, vec(200)))
       val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
@@ -189,7 +189,7 @@ class StreamAnnIngestSpec extends SparkSpec {
       "0\n0".getBytes("UTF-8"))
     val mem3 = MemoryStream[(Long, Seq[Double])]
     val q3 = StreamOps.annAppendSink(mem3.toDF.toDF("vec_id", "embedding"),
-      "embedding", path, idCol = "vec_id")()
+      "embedding", path)()
     try {
       mem3.addData((300L, vec(300)))
       val lex3 = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
@@ -206,7 +206,7 @@ class StreamAnnIngestSpec extends SparkSpec {
     java.nio.file.Files.delete(java.nio.file.Paths.get(path, ".ingest_epoch"))
     val mem4 = MemoryStream[(Long, Seq[Double])]
     val q4 = StreamOps.annAppendSink(mem4.toDF.toDF("vec_id", "embedding"),
-      "embedding", path, idCol = "vec_id")()
+      "embedding", path)()
     try { mem4.addData((300L, vec(300))); q4.processAllAvailable() }
     finally q4.stop()
     spark.read.parquet(s"$path/data").count() shouldBe 42L
@@ -229,7 +229,7 @@ class StreamAnnIngestSpec extends SparkSpec {
     val mem5 = MemoryStream[(Long, Seq[Double])]
     def sinkB() = StreamOps.annAppendSink(
       mem5.toDF.toDF("vec_id", "embedding"), "embedding", path,
-      idCol = "vec_id", checkpointLocation = Some(cpB)) { _ =>
+      checkpointLocation = Some(cpB)) { _ =>
       if (crashB) throw new RuntimeException("injected crash after fence")
     }
     val q5 = sinkB()
@@ -328,7 +328,7 @@ class StreamAnnIngestSpec extends SparkSpec {
     val mem = MemoryStream[(Long, Seq[Double])]
     val ex = intercept[IllegalArgumentException] {
       StreamOps.annAppendSink(mem.toDF.toDF("vec_id", "embedding"),
-        "embedding", "s3a:/graft/never/created", idCol = "vec_id",
+        "embedding", "s3a:/graft/never/created",
         strictFence = true)()
     }
     ex.getMessage should include("no atomic rename")
@@ -340,7 +340,7 @@ class StreamAnnIngestSpec extends SparkSpec {
     // cannot lift it
     val lex = intercept[IllegalArgumentException] {
       StreamOps.annAppendSink(mem.toDF.toDF("vec_id", "embedding"),
-        "embedding", "s3a:/graft/never/created", idCol = "vec_id")()
+        "embedding", "s3a:/graft/never/created")()
     }
     lex.getMessage should include("allowNonExclusiveLease")
     lex.getMessage should include("fencePath/strictFence govern only")
@@ -349,11 +349,12 @@ class StreamAnnIngestSpec extends SparkSpec {
     hc.setBoolean("graft.index.allowNonExclusiveLease", true)
     try {
       val localIdx = s"${tmp("graft_annstream_s3idx")}/index"
-      Similarity.ivfBuild((20L to 39L).map(i => (i, vec(i)))
-        .toDF("vec_id", "embedding"), "embedding", localIdx, nCells = 2)
+      Similarity.ivfPqBuild((20L to 39L).map(i => (i, vec(i)))
+        .toDF("vec_id", "embedding"), "embedding", localIdx, nCells = 2,
+        m = 4, ksub = 8)
       val memI = MemoryStream[(Long, Seq[Double])]
       val qI = StreamOps.annAppendSink(memI.toDF.toDF("vec_id", "embedding"),
-        "embedding", s"s3a:$localIdx", idCol = "vec_id")()
+        "embedding", s"s3a:$localIdx")()
       try { memI.addData((700L, vec(700))); qI.processAllAvailable() }
       finally qI.stop()
       spark.read.parquet(s"$localIdx/data").count() shouldBe 21L
@@ -361,10 +362,11 @@ class StreamAnnIngestSpec extends SparkSpec {
     // strict mode on an atomic-rename filesystem starts and runs normally
     val path = s"${tmp("graft_annstream_strict")}/index"
     val base = (20L to 39L).map(i => (i, vec(i))).toDF("vec_id", "embedding")
-    Similarity.ivfBuild(base, "embedding", path, nCells = 2)
+    Similarity.ivfPqBuild(base, "embedding", path, nCells = 2,
+      m = 4, ksub = 8)
     val memS = MemoryStream[(Long, Seq[Double])]
     val qS = StreamOps.annAppendSink(memS.toDF.toDF("vec_id", "embedding"),
-      "embedding", path, idCol = "vec_id", strictFence = true)()
+      "embedding", path, strictFence = true)()
     try { memS.addData((500L, vec(500))); qS.processAllAvailable() }
     finally qS.stop()
     spark.read.parquet(s"$path/data").count() shouldBe 21L
@@ -373,11 +375,12 @@ class StreamAnnIngestSpec extends SparkSpec {
     // fence-on-HDFS recipe): the fence lands at the given location and
     // nothing is written at the index root
     val path2 = s"${tmp("graft_annstream_fp")}/index"
-    Similarity.ivfBuild(base, "embedding", path2, nCells = 2)
+    Similarity.ivfPqBuild(base, "embedding", path2, nCells = 2,
+      m = 4, ksub = 8)
     val fence = s"${tmp("graft_annstream_fpf")}/my_fence"
     val memF = MemoryStream[(Long, Seq[Double])]
     val qF = StreamOps.annAppendSink(memF.toDF.toDF("vec_id", "embedding"),
-      "embedding", path2, idCol = "vec_id", strictFence = true,
+      "embedding", path2, strictFence = true,
       fencePath = Some(fence))()
     try { memF.addData((600L, vec(600))); qF.processAllAvailable() }
     finally qF.stop()
@@ -409,11 +412,12 @@ class StreamAnnIngestSpec extends SparkSpec {
     val cp = tmp("graft_annstream_mnt_cp")
     // tiny base so the streamed mass trips the growth gauge (> 4x)
     val base = (20L to 27L).map(i => (i, vec(i))).toDF("vec_id", "embedding")
-    Similarity.ivfBuild(base, "embedding", path, nCells = 2)
+    Similarity.ivfPqBuild(base, "embedding", path, nCells = 2,
+      m = 4, ksub = 8)
     val mem = MemoryStream[(Long, Seq[Double])]
     def sink() = StreamOps.annAppendSink(
       mem.toDF.toDF("vec_id", "embedding"), "embedding", path,
-      idCol = "vec_id", checkpointLocation = Some(cp))()
+      checkpointLocation = Some(cp))()
     // ingest day: two epochs land under the standing model
     val q1 = sink()
     try {
@@ -428,8 +432,8 @@ class StreamAnnIngestSpec extends SparkSpec {
     // a real staged REBUILD (fresh quantizer, swapped relations, new
     // generation marker), not a no-op gauge
     val (layout, decision) = Similarity.indexMaintain(spark, path,
-      "embedding", idCol = "vec_id")
-    layout shouldBe "ivf"
+      "embedding")
+    layout shouldBe "ivf-pq"
     decision shouldBe "rebuilt"
     // RESUME from the same checkpoint: the rebuild swapped relations but
     // kept the fence — same lineage, so the stream continues without
@@ -443,8 +447,8 @@ class StreamAnnIngestSpec extends SparkSpec {
     val nCells = spark.read.parquet(s"$path/centroids").count().toInt
     val queries = Seq(100L, 139L, 140L).map(i => (i, vec(i)))
       .toDF("query_id", "embedding")
-    val top = Similarity.ivfProbeTopK(spark, path, queries, "embedding",
-        "vec_id", "query_id", k = 1, nProbe = nCells)
+    val top = Similarity.ivfPqProbeTopK(spark, path, queries, "embedding",
+        "vec_id", "query_id", k = 1, nProbe = nCells, shortlistFactor = 64)
       .select("query_id", "vec_id", "cosine")
       .as[(Long, Long, Double)].collect().toSet
     top shouldBe Set((100L, 100L, 1.0), (139L, 139L, 1.0),
@@ -459,11 +463,12 @@ class StreamAnnIngestSpec extends SparkSpec {
     val path = s"${tmp("graft_annstream_lease")}/index"
     val cp = tmp("graft_annstream_lease_cp")
     val base = (20L to 59L).map(i => (i, vec(i))).toDF("vec_id", "embedding")
-    Similarity.ivfBuild(base, "embedding", path, nCells = 4)
+    Similarity.ivfPqBuild(base, "embedding", path, nCells = 4,
+      m = 4, ksub = 8)
     val mem = MemoryStream[(Long, Seq[Double])]
     def sink() = StreamOps.annAppendSink(
       mem.toDF.toDF("vec_id", "embedding"), "embedding", path,
-      idCol = "vec_id", checkpointLocation = Some(cp))()
+      checkpointLocation = Some(cp))()
     // epoch 0 lands normally; fence records it
     val q1 = sink()
     try { mem.addData((400L, vec(400))); q1.processAllAvailable() }
@@ -502,33 +507,5 @@ class StreamAnnIngestSpec extends SparkSpec {
     spark.read.parquet(s"$path/data").count() shouldBe 43L
     spark.read.parquet(s"$path/data")
       .filter($"vec_id" === 401L).count() shouldBe 1L // no duplicate
-  }
-
-  test("streaming ANN ingest serves the flat-PQ layout through the same " +
-    "sink (layout detected from the relations, pqAppend path)") {
-    implicit val sql = spark.sqlContext
-    val path = s"${tmp("graft_annstream_pq")}/index"
-    val base = (20L to 59L).map(i => (i, vec(i))).toDF("vec_id", "embedding")
-    Similarity.pqBuild(base, "embedding", "vec_id", path, m = 4, ksub = 8,
-      idBuckets = 16)
-    val mem = MemoryStream[(Long, Seq[Double])]
-    val q = StreamOps.annAppendSink(mem.toDF.toDF("vec_id", "embedding"),
-      "embedding", path, idCol = "vec_id")()
-    try { mem.addData((200L, vec(200))); q.processAllAvailable() }
-    finally q.stop()
-    spark.read.parquet(s"$path/vectors").count() shouldBe 41L
-    spark.read.parquet(s"$path/codes").count() shouldBe 41L
-    // the hidden epoch file never pollutes the drift gauge's file sample
-    Similarity.pqDriftStats(spark, path, "embedding").ratio should be >= 0.0
-
-    // plain-IVF leg of the routing matrix (ivfAppend path)
-    val ivfPath = s"${tmp("graft_annstream_ivf")}/index"
-    Similarity.ivfBuild(base, "embedding", ivfPath, nCells = 4)
-    val memV = MemoryStream[(Long, Seq[Double])]
-    val qV = StreamOps.annAppendSink(memV.toDF.toDF("vec_id", "embedding"),
-      "embedding", ivfPath, idCol = "vec_id")()
-    try { memV.addData((300L, vec(300))); qV.processAllAvailable() }
-    finally qV.stop()
-    spark.read.parquet(s"$ivfPath/data").count() shouldBe 41L
   }
 }
