@@ -10,10 +10,13 @@
 #   default : compile main + test sources (fast, ~10 s warm) — the minimum
 #             bar for ANY commit.
 #   --full  : also run the whole ScalaTest suite, the sf0.01 oracle
-#             check and the benchmark self-test — the bar for end-of-round
-#             snapshots. The benchmark (perfbench/) is its own sbt build
-#             that the root build does not compile, so its self-test is
-#             what catches a library change that breaks its calls.
+#             check, the driver's smoke check (`graft.Smoke`: entry rows
+#             > 0), one `graft.tools.Dev explain` at sf0.001 (keeps the
+#             shared session factory and the dev CLI from rotting) and the
+#             benchmark self-test — the bar for end-of-round snapshots.
+#             The benchmark (perfbench/) is its own sbt build that the
+#             root build does not compile, so its self-test is what
+#             catches a library change that breaks its calls.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -24,6 +27,9 @@ if [[ "${1:-}" == "--full" ]]; then
   rm -rf /tmp/preflight_vout
   sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/preflight_vout"
   python3 scripts/check_oracle.py /root/testdata/sf0.01 /tmp/preflight_vout
+  sbt -batch "runMain graft.Smoke" | grep -E "SMOKE rows=[1-9]"
+  sbt -batch "runMain graft.tools.Dev explain /root/testdata/sf0.001 q1_agg" \
+    | grep "##PLAN q1_agg" >/dev/null
   python3 perfbench/run.py --selftest
 fi
 

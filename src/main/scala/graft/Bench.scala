@@ -1,18 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.tools.DevSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val runStart = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = DevSession.cpus
+    val spark = DevSession.create()
     // Warm up JIT, codegen and the parquet reader once so the first timed
     // query doesn't absorb JVM startup cost.
     spark.range(0, 1000000).selectExpr("sum(id)").collect()

@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.tools.DevSession
 
 /** Dev smoke main mirroring the driver's t1 check: `entry` must return
   * rows > 0 on sf0.001. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevSession.create()
     val df = SparkEntry.entry(spark)
     df.show(truncate = false)
     println(s"SMOKE rows=${df.count()}")

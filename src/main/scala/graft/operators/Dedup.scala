@@ -300,7 +300,7 @@ object Dedup {
     // The None path deliberately keeps the plain union: its old side is
     // re-tokenized in full anyway, and the r22 A/B measured the semi
     // join's extra gate probe + plan growth at ~+0.4 s steady-state on
-    // incremental_ingest (QueryProfile 2.3–2.9 s → 2.7–3.3 s, 29 → 36
+    // incremental_ingest (`Dev profile` 2.3–2.9 s → 2.7–3.3 s, 29 → 36
     // jobs) against a KiB-scale exchange saving at sf0.1.
     val kOld = oldKeys match {
       case Some(keys) => sizeGatedFilterJoin(
@@ -462,8 +462,7 @@ object Dedup {
   /** Join `big` against a derived small relation (`left_semi`/`left_anti`
     * filter joins, or `inner` when the matched rows themselves are
     * needed), broadcasting the small side only when it is MEASURED to
-    * be small: the small side is persisted and counted (one tiny job over
-    * an already-cached input), and above `maxBroadcastRows` the join falls
+    * be small ([[sizeGated]]): above `maxBroadcastRows` the join falls
     * back to a shuffled exchange. An unconditional `broadcast()` here is
     * the 100 TB failure mode — on a high-duplication corpus the candidate
     * set is a large fraction of all documents and an unbounded broadcast
@@ -471,7 +470,16 @@ object Dedup {
     * degrades to a shuffle instead of an OOM on the degenerate one. */
   private[operators] def sizeGatedFilterJoin(big: DataFrame, small: DataFrame,
                                              keys: Seq[String], joinType: String,
-                                             maxBroadcastRows: Long): DataFrame = {
+                                             maxBroadcastRows: Long): DataFrame =
+    big.join(sizeGated(small, maxBroadcastRows), keys, joinType)
+
+  /** The eager broadcast gate: persist `small`, probe its size, and return
+    * it broadcast-hinted when it holds at most `maxBroadcastRows` rows,
+    * plain otherwise. The small side is only ever read through the query
+    * the caller builds on the result, so its cache is dropped once the
+    * first consuming query finishes (armed AFTER the probe, so the probe
+    * itself cannot fire it). */
+  private def sizeGated(small: DataFrame, maxBroadcastRows: Long): DataFrame = {
     val s = small.persist(StorageLevel.MEMORY_AND_DISK)
     // Short-circuiting membership probe: LocalLimit stops each task once
     // the gate is exceeded, so an over-the-gate small side costs O(gate)
@@ -487,12 +495,8 @@ object Dedup {
     val probeLimit = math.min(maxBroadcastRows + 1, Int.MaxValue.toLong).toInt
     val hinted =
       if (s.limit(probeLimit).count() <= maxBroadcastRows) broadcast(s) else s
-    val joined = big.join(hinted, keys, joinType)
-    // The small side is only ever read through `joined`; drop its cache
-    // once the first consuming query finishes. Registered AFTER the probe
-    // so the probe itself cannot fire it.
     graft.core.CacheAutoRelease.afterFirstUse(s)
-    joined
+    hinted
   }
 
   /** Shared exact-Jaccard tail of the word- and char-shingle pair
@@ -537,18 +541,9 @@ object Dedup {
     // unconditionally broadcast. The eager limit-probe count doubles as
     // the `shingled` cache populate: it runs at construction time, before
     // the action's join sides could race the cold cache (the r21 lesson).
-    lazy val sizesHinted: DataFrame = {
-      val sizes = shingled
-        .select(col(idCol), size(col("__shs")).cast("long").as("__n"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val probeLimit = math.min(maxBroadcastRows + 1, Int.MaxValue.toLong).toInt
-      val hinted =
-        if (sizes.limit(probeLimit).count() <= maxBroadcastRows)
-          broadcast(sizes)
-        else sizes
-      graft.core.CacheAutoRelease.afterFirstUse(sizes)
-      hinted
-    }
+    lazy val sizesHinted: DataFrame = sizeGated(shingled
+      .select(col(idCol), size(col("__shs")).cast("long").as("__n")),
+      maxBroadcastRows)
     def attachSizes(pairs: DataFrame): DataFrame = pairs
       .join(sizesHinted.select(col(idCol).as("id_a"), col("__n").as("__na")),
         Seq("id_a"))
@@ -899,18 +894,12 @@ object Dedup {
     // is corpus-sized at 100 TB — above the gate the join degrades to a
     // shuffled join of the aggregated pairs, far fewer rows than the
     // partials the exchange used to carry)
-    val sizes = shingled
-      .select(col(idCol), size(col("__shs")).cast("long").as("__n"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val probeLimit = math.min(maxBroadcastRows + 1, Int.MaxValue.toLong).toInt
-    val sizesHinted =
-      if (sizes.limit(probeLimit).count() <= maxBroadcastRows)
-        broadcast(sizes)
-      else sizes
+    val sizesHinted = sizeGated(shingled
+      .select(col(idCol), size(col("__shs")).cast("long").as("__n")),
+      maxBroadcastRows)
     val a = based.select(col(idCol).as("id_a"), col("__sh"))
     val b = based.select(col(idCol).as("id_b"), col("__sh"))
     graft.core.CacheAutoRelease.afterFirstUse(based)
-    graft.core.CacheAutoRelease.afterFirstUse(sizes)
     graft.core.CacheAutoRelease.afterFirstUse(shingled)
     a.join(b, Seq("__sh"))
       .filter(col("id_a") < col("id_b"))

@@ -1138,7 +1138,7 @@ object Similarity {
       "idCol must not be named query_id — the self-join needs both roles")
     // NOT persisted, although three consumers read it (sizing count, fit
     // sample, cell assignment): r22 A/B'd the semanticDedupPairs persist
-    // pattern here and it measured ~2× SLOWER steady-state (QueryProfile
+    // pattern here and it measured ~2× SLOWER steady-state (`Dev profile`
     // knn_join 5-pass action 0.9–1.5 s → 2.5–3.3 s) — columnar-caching
     // the float vector + double __unit array columns costs more to write
     // and re-read than recomputing the codegen'd norm/normalize from the
