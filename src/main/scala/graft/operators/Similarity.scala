@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 import graft.functions.{VectorFunctions => V}
 
@@ -92,10 +93,46 @@ object Similarity {
   private def cellDistStructs(vec: org.apache.spark.sql.Column,
                               centroids: Array[Array[Double]]) =
     array(centroids.zipWithIndex.map { case (c, i) =>
-      val cNorm2 = c.map(x => x * x).sum
-      struct((lit(cNorm2) - lit(2.0) * V.dot(vec, lit(c))).as("d"),
+      struct((lit(squaredNorm(c)) - lit(2.0) * V.dot(vec, lit(c))).as("d"),
         lit(i).as("cell"))
     }.toIndexedSeq: _*)
+
+  private def squaredNorm(c: Array[Double]): Double = c.map(x => x * x).sum
+
+  /** One query's cells in probe order, on the driver: the [[cellDistStructs]]
+    * + `array_sort` order [[withProbeCells]] computes in Spark, bit for bit —
+    * the same left-to-right f64 dot, the same (‖c‖² − 2 q·c, cell) key, and
+    * Spark's double ordering (NaN last, −0.0 = 0.0). A null vector or a
+    * dimension mismatch makes every distance null; nulls sort first, so the
+    * order is then plain cell-id order. Shared by the probe and
+    * [[ivfPqCalibrate]]. */
+  private[graft] def rankCells(q: Array[Double],
+                               centroids: Array[Array[Double]]): Array[Int] = {
+    val cells = Array.range(0, centroids.length)
+    if (q == null || centroids.isEmpty || q.length != centroids(0).length)
+      cells
+    else {
+      val d = centroids.map { c =>
+        var dot = 0.0; var j = 0
+        while (j < c.length) { dot += q(j) * c(j); j += 1 }
+        squaredNorm(c) - 2.0 * dot
+      }
+      cells.sortWith { (a, b) =>
+        val o = org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+          .compareDoubles(d(a), d(b))
+        if (o != 0) o < 0 else a < b
+      }
+    }
+  }
+
+  /** A collected array column as doubles (float elements widen exactly;
+    * a null element reads as 0.0, as the native kernels read it). */
+  private def doubles(v: scala.collection.Seq[Any]): Array[Double] =
+    if (v == null) null
+    else v.iterator.map {
+      case x: Number => x.doubleValue
+      case _ => 0.0
+    }.toArray
 
   /** Nearest-centroid cell id for a corpus row (the quantizer assignment):
     * the native fused argmin ([[graft.functions.NearestCellExpr]] — zero
@@ -126,8 +163,9 @@ object Similarity {
   }
 
   /** Attach one row per (query, probed cell): the `nProbe` nearest cells. */
-  private def withProbeCells(q: DataFrame, centroids: Array[Array[Double]],
-                             nProbe: Int): DataFrame =
+  private[graft] def withProbeCells(q: DataFrame,
+                                    centroids: Array[Array[Double]],
+                                    nProbe: Int): DataFrame =
     q.withColumn("__probe",
         slice(array_sort(cellDistStructs(col("__qvec"), centroids)), 1, nProbe))
       .withColumn("__cell", explode(col("__probe.cell")))
@@ -285,22 +323,80 @@ object Similarity {
     rankTopK(scored, queryIdCol, idCol, k)
   }
 
-  /** Standing coarse quantizer of a persisted index (tiny: nCells rows). */
+  /** Standing coarse quantizer of a persisted index (tiny: nCells rows,
+    * ordered on the driver). */
   private def loadCentroids(spark: SparkSession,
                             path: String): Array[Array[Double]] =
-    spark.read.parquet(s"$path/centroids")
-      .orderBy("cell").collect()
+    spark.read.parquet(s"$path/centroids").collect()
+      .sortBy(_.getInt(0))
       .map(_.getSeq[Double](1).toArray)
 
-  /** Standing PQ codebooks of a persisted IVF-PQ index (m·ksub rows). */
+  /** Standing PQ codebooks of a persisted IVF-PQ index (m·ksub rows,
+    * ordered on the driver). */
   private def loadPqModel(spark: SparkSession, path: String): PqModel = {
-    val books = spark.read.parquet(s"$path/codebooks")
-      .orderBy("subspace", "code").collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](2).toArray))
+    val books = spark.read.parquet(s"$path/codebooks").collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+      .sortBy(b => (b._1, b._2))
     val codebooks = books.groupBy(_._1).toSeq.sortBy(_._1)
-      .map(_._2.map(_._2)).toArray
+      .map(_._2.map(_._3)).toArray
     PqModel(codebooks.length, codebooks(0)(0).length, codebooks)
   }
+
+  /** The frozen model of a persisted index as of ONE generation: the
+    * coarse quantizer, the PQ codebooks and the `data/` schema. Every
+    * write that replaces the model writes a new [[GenerationFile]]
+    * ([[ivfPqBuild]], [[stagedRebuild]]); appends and [[indexDelete]]
+    * keep the model and the schema, so a handle stays valid for exactly
+    * its generation. */
+  private final case class IndexModel(centroids: Array[Array[Double]],
+                                      pq: PqModel, dataSchema: StructType)
+
+  /** Handles by (qualified index path, generation uuid), the least
+    * recently used evicted past `MaxModels`. Only a probe stores one, and
+    * only after its post-plan [[requireGenerationUnchanged]] passed, so a
+    * stored model always matches its generation's files; an index with no
+    * generation marker is never cached. */
+  private val MaxModels = 16
+  private val models =
+    new java.util.LinkedHashMap[(String, String), IndexModel](MaxModels,
+        0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, String), IndexModel]): Boolean =
+        size() > MaxModels
+    }
+
+  private def modelKey(spark: SparkSession, path: String,
+                       gen: Option[String]): Option[(String, String)] =
+    gen.map { g =>
+      val p = new org.apache.hadoop.fs.Path(path)
+      (p.getFileSystem(spark.sessionState.newHadoopConf())
+        .makeQualified(p).toString, g)
+    }
+
+  /** The stored handle of generation `gen` of the index at `path`, if any. */
+  private def cachedModel(spark: SparkSession, path: String,
+                          gen: Option[String]): Option[IndexModel] =
+    modelKey(spark, path, gen).flatMap(k =>
+      models.synchronized(Option(models.get(k))))
+
+  private def storeModel(spark: SparkSession, path: String,
+                         gen: Option[String], model: IndexModel): Unit =
+    modelKey(spark, path, gen).foreach(k =>
+      models.synchronized(models.put(k, model)))
+
+  /** (centroids, codebooks) from `handle`, else read from the relations. */
+  private def quantizers(spark: SparkSession, path: String,
+                         handle: Option[IndexModel])
+      : (Array[Array[Double]], PqModel) =
+    handle.fold((loadCentroids(spark, path), loadPqModel(spark, path)))(h =>
+      (h.centroids, h.pq))
+
+  /** The whole `data/` relation, read with the handle's schema when there
+    * is one (no schema-inference job). */
+  private def readData(spark: SparkSession, path: String,
+                       handle: Option[IndexModel]): DataFrame =
+    handle.fold(spark.read)(h => spark.read.schema(h.dataSchema))
+      .parquet(s"$path/data")
 
   /** Per-cell row counts of a persisted index — the [[ivfPqMaintain]]
     * skew and growth gauge (skewed counts = expensive probes on the hot
@@ -642,7 +738,9 @@ object Similarity {
   private def cellHealth(spark: SparkSession,
                          path: String): (Long, Double, Int, Int) = {
     val counts = ivfCellStats(spark, path).collect().map(_.getLong(1))
-    val nCellsStored = spark.read.parquet(s"$path/centroids").count().toInt
+    val nCellsStored = cachedModel(spark, path, readGeneration(spark, path))
+      .fold(spark.read.parquet(s"$path/centroids").count().toInt)(
+        _.centroids.length)
     val total = counts.sum
     val skew =
       if (counts.isEmpty || total == 0) 0.0
@@ -781,20 +879,15 @@ object Similarity {
         vecField.copy(name = vecCol))))
 
   /** Per-query cell ranking by quantizer distance — driver-side over the
-    * in-hand sample and the (nCells-bounded) centroids, identical order
-    * to [[cellDistStructs]]: (‖c‖² − 2 q·c, cellId) ascending. */
+    * in-hand sample and the (nCells-bounded) centroids, in [[rankCells]]'
+    * order. */
   private def cellRanks(sampled: Array[(Long, org.apache.spark.sql.Row)],
                         centroids: Array[Array[Double]])
       : Map[Long, Array[Int]] =
     sampled.map { case (qid, r) =>
-      val q = r.getSeq[Number](0).map(_.doubleValue).toArray
-      val order = centroids.zipWithIndex.map { case (c, i) =>
-        var dot = 0.0; var n2 = 0.0; var j = 0
-        while (j < c.length) { dot += q(j) * c(j); n2 += c(j) * c(j); j += 1 }
-        (n2 - 2.0 * dot, i)
-      }.sortBy(identity).map(_._2)
       val rank = new Array[Int](centroids.length)
-      order.zipWithIndex.foreach { case (cell, idx) => rank(cell) = idx + 1 }
+      rankCells(doubles(r.getSeq[Any](0)), centroids).zipWithIndex
+        .foreach { case (cell, idx) => rank(cell) = idx + 1 }
       qid -> rank
     }.toMap
 
@@ -933,10 +1026,10 @@ object Similarity {
     // matches — so a rebuild completing anywhere during this measurement
     // can never leave stale widths silently in force
     val gen0 = readGeneration(spark, path)
-    val centroids = loadCentroids(spark, path)
+    val handle = cachedModel(spark, path, gen0)
+    val (centroids, model) = quantizers(spark, path, handle)
     val nCells = centroids.length
-    val model = loadPqModel(spark, path)
-    val data = spark.read.parquet(s"$path/data")
+    val data = readData(spark, path, handle)
     val uncalibrated = (math.max(1, nCells / 8), DefaultShortlistFactor)
     val sampled = selfQuerySample(data, vecCol, sampleQueries, seed)
     if (sampled.isEmpty) return uncalibrated
@@ -1554,12 +1647,19 @@ object Similarity {
     * filter prunes to those same empty directories. Every other failure
     * is rethrown, a listed directory that vanished included: a silent
     * full-tree read would turn a listing race or a transient error into
-    * a full-corpus scan. */
+    * a full-corpus scan.
+    *
+    * With `schema` given (the relation's full schema, partition column
+    * included) no read infers one: no schema-inference job, and a drained
+    * subset reads as zero rows directly. */
   private[graft] def readPartitionDirs(spark: SparkSession, root: String,
-                                       dirs: Seq[String]): DataFrame =
-    if (dirs.isEmpty) spark.read.parquet(root)
+                                       dirs: Seq[String],
+                                       schema: Option[StructType] = None)
+      : DataFrame = {
+    def reader(s: SparkSession) = schema.fold(s.read)(s.read.schema)
+    if (dirs.isEmpty) reader(spark).parquet(root)
     else {
-      val reader =
+      val session =
         if (dirs.size <= 32) spark
         else {
           val cloned = org.apache.spark.sql.graftbridge.Bridge
@@ -1574,12 +1674,13 @@ object Similarity {
         val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
         fs.exists(p) && visibleParquetFiles(fs, p).isEmpty
       }
-      try reader.read.option("basePath", root).parquet(dirs: _*)
+      try reader(session).option("basePath", root).parquet(dirs: _*)
       catch {
         case _: org.apache.spark.sql.AnalysisException if drained =>
-          spark.read.parquet(root)
+          reader(spark).parquet(root)
       }
     }
+  }
 
   /** The ADC shortlist leg of [[pqTopKEncoded]] alone — (queryId, id)
     * candidates from the codes-only scan, before the exact re-rank.
@@ -1812,8 +1913,8 @@ object Similarity {
     // silently — and a swapped quantizer between the read and the write
     // would file rows under stale cells. Held, both races refuse loudly.
     withMutationLease(spark, fs, root, "ivfPqAppend", AppendLeaseHint) {
-      val centroids = loadCentroids(spark, path)
-      val model = loadPqModel(spark, path)
+      val (centroids, model) = quantizers(spark, path,
+        cachedModel(spark, path, readGeneration(spark, path)))
       pqEncode(newRows, vecCol, model)
         .withColumn("__cell", nearestCell(col(vecCol), centroids))
         .write.mode("append").partitionBy("__cell").parquet(s"$path/data")
@@ -1984,7 +2085,7 @@ object Similarity {
       recallTarget, recallK, idCol, maxShortlistFactor))
 
   /** Probe an [[ivfPqBuild]] index: the probed cell set (at most
-    * queries × nProbe distinct cells, collected driver-side — bounded by
+    * queries × nProbe distinct cells, ranked driver-side — bounded by
     * nCells) becomes a LITERAL partition filter, so the scan reads only
     * the probed `__cell=` directories (static partition pruning —
     * verified by plan inspection in SimilaritySpec); the ADC pass
@@ -1992,6 +2093,19 @@ object Similarity {
     * raw vectors unread — and the exact re-rank reads the vector column
     * for the broadcast shortlist alone, from the same pruned directories.
     * Same output shape as [[bruteForceTopK]]; returned cosines are exact.
+    *
+    * Planning runs no Spark job on a warm index. The query batch is
+    * COLLECTED ONCE (it is broadcast anyway, so it must be small; a
+    * local batch collects without a job) and each query's cells are
+    * ranked on the driver ([[rankCells]]); both the ADC leg and the exact
+    * re-rank read those rows as local relations, so a nondeterministic
+    * `queries` is evaluated exactly once and both legs see the same
+    * vectors. The model (centroids, codebooks, `data/` schema) comes from
+    * a JVM-wide handle valid for ONE generation of the index: the first
+    * probe of a generation reads the relations and stores the handle
+    * once its post-plan generation check has passed; a rebuild writes a
+    * new generation, so no probe is ever planned with a replaced model.
+    * An index without a generation marker is read afresh on every probe.
     *
     * Widths: `nProbe` sets the scanned fraction (~nProbe/nCells) and
     * `shortlistFactor` the re-rank depth (factor·k ADC candidates per
@@ -2015,8 +2129,24 @@ object Similarity {
       "shortlistFactor must be >= 0 (0 = calibrated default)")
     requireIndex(spark, path)
     val gen0 = readGeneration(spark, path)
-    val centroids = loadCentroids(spark, path)
-    val model = loadPqModel(spark, path)
+    // The probed cells are known BEFORE `data/` needs to open (they come
+    // from the centroids and the query batch), so the scan opens ONLY
+    // the probed `__cell=` directories instead of discovering the whole
+    // tree (a full open lists every cell dir per probe; at object-store
+    // scale that is cell-count LIST calls for a probe that touches
+    // nProbe of them). One driver-side listStatus of `data/` answers
+    // existence; on a cold generation the schema comes from a single cell
+    // directory (basePath keeps `__cell` a partition column, so the isin
+    // filter below stays the PartitionFilters entry the plan contract
+    // asserts). See [[readPartitionDirs]] for the driver-side listing
+    // above 32 dirs and the drained-subset fallback.
+    val existing = partitionDirs(spark, s"$path/data", "__cell")
+    val model = cachedModel(spark, path, gen0).getOrElse {
+      val (centroids, pq) = quantizers(spark, path, None)
+      IndexModel(centroids, pq, readPartitionDirs(spark, s"$path/data",
+        existing.values.take(1).toSeq).schema)
+    }
+    val centroids = model.centroids
     // lazy: a probe with both widths explicit never reads the cal file
     lazy val cal = calibratedPqWidthsAt(spark, path, gen0)
     val probes =
@@ -2026,42 +2156,30 @@ object Similarity {
     val factor =
       if (shortlistFactor > 0) shortlistFactor
       else cal.map(_._2).getOrElse(DefaultShortlistFactor)
-    // The probed cells are known BEFORE `data/` needs to open (they come
-    // from the centroids and the query batch), so the scan opens ONLY
-    // the probed `__cell=` directories instead of discovering the whole
-    // tree (a full open lists every cell dir per probe; at object-store
-    // scale that is cell-count LIST calls for a probe that touches
-    // nProbe of them). One driver-side listStatus of `data/` answers
-    // existence; the query batch's schema needs come from a single cell
-    // directory (basePath keeps `__cell` a partition column, so the isin
-    // filter below stays the PartitionFilters entry the plan contract
-    // asserts). See [[readPartitionDirs]] for the driver-side listing
-    // above 32 dirs and the drained-subset fallback.
-    val existing = partitionDirs(spark, s"$path/data", "__cell")
-    val schemaProbe = readPartitionDirs(spark, s"$path/data",
-      existing.values.take(1).toSeq)
-    val q = withProbeCells(
-      withQueryNorm(queries, schemaProbe.columns, queryIdCol, vecCol,
-        allowed = Set("__cell", "__cn", "__codes")),
-      centroids, probes)
-      .localCheckpoint(true)
-    val probedCells = q.select("__cell").distinct().collect().map(_.getInt(0))
+    val qNorm = withQueryNorm(queries, model.dataSchema.fieldNames.toIndexedSeq,
+      queryIdCol, vecCol, allowed = Set("__cell", "__cn", "__codes"))
+    val qRows = qNorm.collect()
+    val qCells = probeCellRows(qRows, centroids, probes)
+    val probedCells = qCells.map(r => r.getInt(r.length - 1)).distinct.sorted
     val corpus = readPartitionDirs(spark, s"$path/data",
-      probedCells.toIndexedSeq.flatMap(existing.get))
-    // post-plan race check: centroids+codebooks were loaded and data
-    // listed above — a rebuild completing in between would prune the NEW
-    // files with the OLD quantizer (see requireGenerationUnchanged)
+      probedCells.toIndexedSeq.flatMap(existing.get), Some(model.dataSchema))
+    // post-plan race check: the model was loaded (or looked up by gen0)
+    // and data listed above — a rebuild completing in between would
+    // prune the NEW files with the OLD quantizer (see
+    // requireGenerationUnchanged)
     requireGenerationUnchanged(spark, path, gen0)
+    storeModel(spark, path, gen0, model)
+    val q = localFrame(spark, qCells,
+      qNorm.schema.add("__cell", IntegerType, nullable = false))
+    val qExact = localFrame(spark, qRows, qNorm.schema)
     val pruned = corpus
       .filter(col("__cell").isin(probedCells.toIndexedSeq: _*))
     // ADC leg: explicit narrow projection — the scan reads no vectors
     val shortlist = rankTopK(
       adcScored(pruned.select(col(idCol), col("__cell"), col("__codes"),
-        col("__cn")), q, model, Seq("__cell")),
+        col("__cn")), q, model.pq, Seq("__cell")),
       queryIdCol, idCol, k * factor)
       .select(col(queryIdCol), col(idCol))
-    val qExact = withQueryNorm(queries, corpus.columns, queryIdCol, vecCol,
-      allowed = Set("__cell", "__cn", "__codes"))
     val rescored = pruned
       .select(col(idCol).cast("long").as(idCol), col(vecCol), col("__cn"))
       .join(broadcast(shortlist), Seq(idCol))
@@ -2070,6 +2188,23 @@ object Similarity {
         col(vecCol), col("__qvec"), col("__cn"), col("__qn")))
     rankTopK(rescored, queryIdCol, idCol, k)
   }
+
+  /** [[withProbeCells]] on the driver, over collected [[withQueryNorm]]
+    * rows: each row repeated once per probed cell, in the same order,
+    * with the cell appended. */
+  private[graft] def probeCellRows(q: Array[Row],
+                                   centroids: Array[Array[Double]],
+                                   nProbe: Int): Array[Row] =
+    q.flatMap { r =>
+      val vec = doubles(r.getSeq[Any](r.fieldIndex("__qvec")))
+      rankCells(vec, centroids).take(nProbe).map(c =>
+        Row.fromSeq(r.toSeq :+ c))
+    }
+
+  /** Driver-side rows as a local relation: planning over it runs no job. */
+  private def localFrame(spark: SparkSession, rows: Array[Row],
+                         schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   // --------------------------------------------------- index opt-out delete
 
@@ -2133,7 +2268,8 @@ object Similarity {
     // them silently; appends HOLD the same lease, so the interleaving is
     // structurally impossible
     withMutationLease(spark, fs, root, "indexDelete") {
-    val data = spark.read.parquet(s"$path/data")
+    val data = readData(spark, path,
+      cachedModel(spark, path, readGeneration(spark, path)))
     val storedIdType = data.schema(idCol).dataType
     // bounded opt-out batch, materialized once: it feeds several jobs,
     // and a nondeterministic input re-evaluated per job would let
