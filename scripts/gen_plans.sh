@@ -23,12 +23,12 @@ What to look for: `PushedFilters`/`ReadSchema` on every parquet scan
 `HashAggregate` pairs (partial then final = map-side combine), and
 `ObjectHashAggregate` for the bounded top-k.
 EOF
-  # program stdout arrives through sbt's info logger; strip the prefix and
-  # start at the first section header (everything before is sbt/Spark noise)
+  # program stdout arrives unprefixed (build.sbt's `run / outputStrategy`);
+  # drop sbt's own `[...]` lines and blank lines (PLANS.md's layout) and
+  # start at the first section header
   SPARK_GRAFT_CPUS=8 sbt -batch "runMain graft.tools.Dev plans" 2>/dev/null \
-    | sed -e 's/^\[info\] \{0,1\}//' -e '/^\[/d' \
-    | awk '/^## /{found=1} found' \
-    | sed -e '/^\[success\]/d' -e '/^\[total\]/d'
+    | sed -e '/^\[/d' -e '/^$/d' \
+    | awk '/^## /{found=1} found'
   echo
   cat "$appendix"
 } > PLANS.md.new

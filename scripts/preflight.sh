@@ -12,7 +12,9 @@
 #   --full  : also run the whole ScalaTest suite, the sf0.01 oracle
 #             check, the driver's smoke check (`graft.Smoke`: entry rows
 #             > 0), one `graft.tools.Dev explain` at sf0.001 (keeps the
-#             shared session factory and the dev CLI from rotting) and the
+#             shared session factory and the dev CLI from rotting), a
+#             one-query `graft.Bench` whose last stdout line must parse as
+#             JSON with `n_failed` 0 (the bench's output contract) and the
 #             benchmark self-test — the bar for end-of-round snapshots.
 #             The benchmark (perfbench/) is its own sbt build that the
 #             root build does not compile, so its self-test is what
@@ -30,6 +32,11 @@ if [[ "${1:-}" == "--full" ]]; then
   sbt -batch "runMain graft.Smoke" | grep -E "SMOKE rows=[1-9]"
   sbt -batch "runMain graft.tools.Dev explain /root/testdata/sf0.001 q1_agg" \
     | grep "##PLAN q1_agg" >/dev/null
+  # the bench's LAST stdout line is its machine-readable JSON summary
+  SPARK_GRAFT_BENCH_ONLY=q1_agg SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 \
+    SPARK_GRAFT_BENCH_OUT=/tmp/preflight_bench.json \
+    sbt -batch "runMain graft.Bench" | tail -n 1 \
+    | python3 -c 'import json, sys; assert json.load(sys.stdin)["n_failed"] == 0'
   python3 perfbench/run.py --selftest
 fi
 

@@ -4,16 +4,62 @@ package graft
   * `main` so the measurement policy is spec-testable without a SparkSession.
   *
   * Policy (see Bench.scala's comments for the measured motivation):
+  *   - one fixed schedule over the whole suite: [[WarmupPasses]] discarded
+  *     warm-up passes, one noop-writer honesty pass, then
+  *     [[RecordedPasses]] recorded passes. The [[BudgetSeconds]] wall
+  *     budget can skip only the honesty pass and the last recorded pass;
   *   - per-query headline = MINIMUM over recorded passes (least-contended
   *     observation; a failed pass reports -1 and is excluded);
   *   - environment noise = the delta between the two FASTEST pass totals —
   *     a lone ambient spike stays visible in the raw `pass_totals` without
-  *     polluting the steady-state figure;
-  *   - the recorded-pass count is adaptive: after `passes` runs, keep
-  *     measuring (bounded by `maxPasses`) until that fastest-pair delta
-  *     drops under `deltaTargetPct`.
+  *     polluting the steady-state figure; past [[NoiseFlagPct]] the
+  *     artifact marks itself `noise_flagged`.
   */
 object BenchRuns {
+  val WarmupPasses = 2
+  val RecordedPasses = 3
+  /** Recorded passes that run even with the wall budget spent: the two the
+    * noise fence compares. */
+  val MinRecordedPasses = 2
+  /** Wall budget for the whole run, warm-up included, from JVM start. */
+  val BudgetSeconds = 1200.0
+  val NoiseFlagPct = 8.0
+  val RegressFactor = 1.5
+
+  /** The queries a `SPARK_GRAFT_BENCH_ONLY`-style comma list selects from
+    * `known` (all of them when unset). A name that is not registered — or
+    * a list naming none — fails loudly with the known names: a typo must
+    * not bench zero queries and overwrite the tripwire base with it. */
+  def select[T](known: Map[String, T], only: Option[String]): Map[String, T] =
+    only.fold(known) { list =>
+      val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names -- known.keySet
+      require(names.nonEmpty && unknown.isEmpty,
+        s"SPARK_GRAFT_BENCH_ONLY='$list': unknown query names " +
+          s"${unknown.toSeq.sorted.mkString("[", ", ", "]")}; known: " +
+          known.keys.toSeq.sorted.mkString(", "))
+      known.filter { case (n, _) => names(n) }
+    }
+
+  /** The passes one bench run executed, each a query -> seconds map. */
+  final case class Passes(warmup: Seq[Map[String, Double]],
+                          noop: Seq[Map[String, Double]],
+                          recorded: Seq[Map[String, Double]])
+
+  /** Run the fixed schedule; `runPass(noop)` times one pass over the
+    * suite (`noop` = materialize through the noop writer). `outOfTime` is
+    * consulted before the honesty pass and before the last recorded pass
+    * only — no other pass is ever skipped or added. */
+  def schedule(outOfTime: () => Boolean)(
+      runPass: Boolean => Map[String, Double]): Passes = {
+    val warmup = Vector.fill(WarmupPasses)(runPass(false))
+    val noop = if (outOfTime()) Vector.empty else Vector(runPass(true))
+    val recorded = (1 to RecordedPasses).iterator
+      .takeWhile(i => i <= MinRecordedPasses || !outOfTime())
+      .map(_ => runPass(false)).toVector
+    Passes(warmup, noop, recorded)
+  }
+
   /** Percent gap between the two smallest positive totals; 0 when fewer
     * than two positive observations exist (nothing to disagree).
     */
@@ -25,132 +71,6 @@ object BenchRuns {
   /** Sum of the successful (non-negative) per-query times in one pass. */
   def passTotal(pass: Map[String, Double]): Double =
     pass.values.filter(_ >= 0.0).sum
-
-  /** Median of the positive pass totals (mean of the middle two for an
-    * even count; 0 with no positive observations) — the burst-robust
-    * steady-state aggregate: the min-based headline answers "what does
-    * the code cost uncontended", this answers "what does a typical pass
-    * cost on this box", and a lone lucky-fast or spiked pass moves
-    * neither. */
-  def medianTotal(totals: Seq[Double]): Double = {
-    val ok = totals.filter(_ > 0).sorted
-    if (ok.isEmpty) 0.0
-    else if (ok.size % 2 == 1) ok(ok.size / 2)
-    else (ok(ok.size / 2 - 1) + ok(ok.size / 2)) / 2.0
-  }
-
-  /** Split positive pass totals into (kept, outliers): totals more than
-    * `factor` × the median of all positive totals are contaminated
-    * observations (an ambient burst, a background job landing mid-pass)
-    * — still recorded raw in the artifact, but excluded from the summary
-    * statistics, which otherwise pay for box noise (r16: two of ten
-    * recorded passes ran 1.4×/2.2× the median and inflated the
-    * pass-total median ~25%). The detection median is itself mildly
-    * inflated by the outliers it is hunting, which only makes the test
-    * conservative: in the motivating artifact (totals ≈ [13–19, 26.8,
-    * 41.2], median 19.1) both contaminated passes still clear
-    * 1.3 × 19.1. Order within each side is preserved. */
-  def splitOutliers(totals: Seq[Double], factor: Double = 1.3)
-      : (Seq[Double], Seq[Double]) = {
-    val med = medianTotal(totals)
-    if (med <= 0) (totals, Nil)
-    else totals.filter(_ > 0).partition(_ <= med * factor)
-  }
-
-  /** Run `passes` recorded passes, then extend one at a time — never past
-    * `maxPasses`, and never once `outOfTime()` reports the run's wall
-    * budget spent — while the two fastest pass totals disagree by more
-    * than `deltaTargetPct` percent. The configured minimum always runs:
-    * the budget bounds the CHASE for two quiet passes (unbounded, a
-    * bursty box turns convergence into a 15-minute wait the harness
-    * running this may not tolerate), not the baseline measurement.
-    *
-    * EMERGENCY PASS: when the budget stops the chase while the fastest
-    * pair still disagrees past `emergencyAbovePct` (the noise FENCE, not
-    * the chase target), exactly ONE more pass runs anyway. Rationale
-    * (r18): the ext tier recorded totals of 98 s and 423 s — one of the
-    * two is contamination — and the budget-stopped chase shipped a
-    * self-invalidating artifact (`noise_flagged: true`) that the next
-    * round's tripwire must refuse, which costs strictly more than one
-    * overdraft pass would have. The overdraft is bounded at one pass and
-    * never breaches `maxPasses`; a fence-level disagreement that survives
-    * it is genuine sustained contamination and flags honestly.
-    */
-  def adaptivePasses(passes: Int, maxPasses: Int, deltaTargetPct: Double,
-                     outOfTime: () => Boolean = () => false,
-                     emergencyAbovePct: Double = Double.PositiveInfinity)(
-      runPass: () => Map[String, Double]): Chase = {
-    var acc = (1 to math.max(1, passes)).map(_ => runPass()).toVector
-    def totals = acc.map(passTotal)
-    while (acc.size < maxPasses && !outOfTime() &&
-        fastestPairDeltaPct(totals) > deltaTargetPct)
-      acc = acc :+ runPass()
-    // fire only past BOTH thresholds: a fence configured below the chase
-    // target must not turn a CONVERGED chase (delta <= target, which is
-    // how the loop exits healthy) into a perpetual overdraft
-    val emergency = acc.size < maxPasses &&
-      fastestPairDeltaPct(totals) > math.max(emergencyAbovePct, deltaTargetPct)
-    if (emergency) acc = acc :+ runPass()
-    Chase(acc, emergency)
-  }
-
-  /** Result of an adaptive chase: the recorded passes plus whether the
-    * bounded emergency overdraft fired (a budget-stopped chase whose
-    * fastest pair still disagreed past the noise fence). The flag lands in
-    * the bench artifact (`core_emergency_pass`/`ext_emergency_pass`) so a
-    * reader can distinguish "converged in budget" from "rescued by
-    * overdraft" — pass counts alone cannot: an overdrafted chase and a
-    * normally-extended one can record the same size. */
-  final case class Chase(passes: Vector[Map[String, Double]],
-                         emergencyPass: Boolean)
-
-  /** Predictive budget check for scheduling one more full-suite pass:
-    * true when `remainingSeconds` plausibly covers it, estimated as the
-    * slowest positive full-suite observation so far times `pad`. With no
-    * observation the pass runs — there is nothing to predict from, and
-    * refusing would starve a fresh run of its only measurement. Motivation
-    * (r19): the driver's degraded-box run spent 1163 s on the single no-op
-    * honesty pass — the `outOfTime()` check before the pass was green, the
-    * pass itself then ate the whole remaining budget and starved both
-    * chases. The warm-up totals had already measured the degradation; this
-    * check reads them. */
-  def passFitsBudget(remainingSeconds: Double, observedTotals: Seq[Double],
-                     pad: Double = 1.25): Boolean = {
-    val est = passEstimate(observedTotals, pad)
-    est == 0.0 || remainingSeconds > est
-  }
-
-  /** The padded cost estimate [[passFitsBudget]] compares against: the
-    * slowest POSITIVE observation times `pad`, 0 with none (the check
-    * then always passes — nothing to predict from). Exposed so the skip
-    * log line and the skip decision read one expression and can never
-    * desynchronize (e.g. an unfiltered max over failed 0.0-total passes
-    * printing an estimate the decision never used). */
-  def passEstimate(observedTotals: Seq[Double], pad: Double = 1.25): Double = {
-    val ok = observedTotals.filter(_ > 0)
-    if (ok.isEmpty) 0.0 else ok.max * pad
-  }
-
-  /** Why a chase stopped, for the bench artifact: "agreed" (fastest pair
-    * within target), "budget" (wall budget spent while still disagreeing),
-    * or "pass-cap" (hit `maxPasses` still disagreeing, with budget left).
-    * A budget-stopped tier's numbers are a cut measurement, not a
-    * converged one — r18's artifact couldn't say which, so a 331% ext
-    * disagreement read as either box noise or a real regression until
-    * hand-adjudicated. `budgetSpent` must be sampled right after the
-    * chase: size alone cannot attribute the stop (an emergency overdraft
-    * can land a budget-stopped chase exactly at `maxPasses`), and when a
-    * disagreeing chase hit the cap with budget already gone, the budget
-    * is named — it would have stopped the chase regardless. */
-  def chaseStop(totals: Seq[Double], maxPasses: Int,
-                deltaTargetPct: Double, budgetSpent: Boolean): String =
-    if (fastestPairDeltaPct(totals) <= deltaTargetPct) "agreed"
-    else if (budgetSpent) "budget"
-    else if (totals.size >= maxPasses) "pass-cap"
-    // disagreeing, under the cap, with budget left: unreachable from
-    // adaptivePasses (the loop would have kept extending) — name the
-    // budget rather than a cap that demonstrably was not hit
-    else "budget"
 
   /** Per-query headline times plus health classification.
     *
@@ -179,7 +99,7 @@ object BenchRuns {
   }
 
   /** Extract the `"queries":{...}` per-query seconds map from a bench
-    * artifact JSON line (`bench_queries.json` / `BASELINE_BENCH.json`).
+    * artifact (`bench_queries.json` or its `_c<cpus>` sibling).
     * Values are plain numbers and keys plain identifiers, so a targeted
     * scan suffices — no JSON library in the unmanaged classpath. Returns
     * empty on any shape surprise (missing file content, renamed key,
@@ -212,7 +132,7 @@ object BenchRuns {
     * regressions. Sub-100ms pairs are ignored: at that magnitude the
     * ratio measures scheduler jitter, not code. */
   def regressions(prev: Map[String, Double], now: Seq[(String, Double)],
-                  factor: Double = 1.5,
+                  factor: Double = RegressFactor,
                   minSeconds: Double = 0.1): Seq[(String, Double)] =
     now.collect {
       case (n, t) if t > 0 && prev.get(n).exists(p =>

@@ -46,6 +46,23 @@ object Similarity {
         (col("__pos") + 1).cast("int").as("rank"))
   }
 
+  /** Exact re-rank of an ANN shortlist: `rows` carries `(idCol, vecCol,
+    * __cn)` (the stored or computed corpus norm); the shortlist's
+    * `(queryIdCol, idCol)` pairs and the `qExact` query batch (see
+    * [[withQueryNorm]]) broadcast into it, so fan-in is bounded by
+    * Q·shortlist rows, and exact cosines feed [[rankTopK]]. */
+  private def exactRerank(rows: DataFrame, shortlist: DataFrame,
+                          qExact: DataFrame, vecCol: String, idCol: String,
+                          queryIdCol: String, k: Int): DataFrame = {
+    val rescored = rows
+      .select(col(idCol).cast("long").as(idCol), col(vecCol), col("__cn"))
+      .join(broadcast(shortlist), Seq(idCol))
+      .join(broadcast(qExact), Seq(queryIdCol))
+      .withColumn("cosine", V.cosineGivenNorms(
+        col(vecCol), col("__qvec"), col("__cn"), col("__qn")))
+    rankTopK(rescored, queryIdCol, idCol, k)
+  }
+
   /** Query batch with its norm precomputed, vector aliased for the join.
     * Fails fast on column collisions that would otherwise surface as an
     * ambiguous-reference error deep inside the plan. `allowed` names are
@@ -1480,15 +1497,9 @@ object Similarity {
       vecCol, idCol, queryIdCol, k * shortlistFactor)
     // exact re-rank: shortlist ids broadcast back into the corpus — one
     // more corpus scan, fan-in bounded by Q·shortlist rows
-    val qExact = withQueryNorm(queries, corpus.columns, queryIdCol, vecCol)
-    val rescored = corpus
-      .select(col(idCol).cast("long").as(idCol), col(vecCol),
-        V.norm(col(vecCol)).as("__cn"))
-      .join(broadcast(shortlist), Seq(idCol))
-      .join(broadcast(qExact), Seq(queryIdCol))
-      .withColumn("cosine", V.cosineGivenNorms(
-        col(vecCol), col("__qvec"), col("__cn"), col("__qn")))
-    rankTopK(rescored, queryIdCol, idCol, k)
+    exactRerank(corpus.withColumn("__cn", V.norm(col(vecCol))), shortlist,
+      withQueryNorm(queries, corpus.columns, queryIdCol, vecCol),
+      vecCol, idCol, queryIdCol, k)
   }
 
   /** Codebook-drift report for a persisted PQ-coded index: `fitMqe` is
@@ -1762,15 +1773,9 @@ object Similarity {
     val shortlist = rankTopK(adcScored(encoded, q, model, Seq("__cell")),
       queryIdCol, idCol, k * shortlistFactor)
       .select(col(queryIdCol), col(idCol))
-    val qExact = withQueryNorm(queries, corpus.columns, queryIdCol, vecCol)
-    val rescored = corpus
-      .select(col(idCol).cast("long").as(idCol), col(vecCol),
-        V.norm(col(vecCol)).as("__cn"))
-      .join(broadcast(shortlist), Seq(idCol))
-      .join(broadcast(qExact), Seq(queryIdCol))
-      .withColumn("cosine", V.cosineGivenNorms(
-        col(vecCol), col("__qvec"), col("__cn"), col("__qn")))
-    rankTopK(rescored, queryIdCol, idCol, k)
+    exactRerank(corpus.withColumn("__cn", V.norm(col(vecCol))), shortlist,
+      withQueryNorm(queries, corpus.columns, queryIdCol, vecCol),
+      vecCol, idCol, queryIdCol, k)
   }
 
   /** Persist the ANN index under `path` — the one persisted index
@@ -2180,13 +2185,7 @@ object Similarity {
         col("__cn")), q, model.pq, Seq("__cell")),
       queryIdCol, idCol, k * factor)
       .select(col(queryIdCol), col(idCol))
-    val rescored = pruned
-      .select(col(idCol).cast("long").as(idCol), col(vecCol), col("__cn"))
-      .join(broadcast(shortlist), Seq(idCol))
-      .join(broadcast(qExact), Seq(queryIdCol))
-      .withColumn("cosine", V.cosineGivenNorms(
-        col(vecCol), col("__qvec"), col("__cn"), col("__qn")))
-    rankTopK(rescored, queryIdCol, idCol, k)
+    exactRerank(pruned, shortlist, qExact, vecCol, idCol, queryIdCol, k)
   }
 
   /** [[withProbeCells]] on the driver, over collected [[withQueryNorm]]

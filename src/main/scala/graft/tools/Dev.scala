@@ -105,9 +105,7 @@ object Dev {
           }
         }
     }
-    // the bench's warm-up
-    spark.range(0, 1000000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
+    DevSession.warmUp(spark, sfDir)
     val fn = query(name)
     (1 to passes).foreach { p =>
       spark.sparkContext.addSparkListener(listener)

@@ -25,4 +25,11 @@ object DevSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Warm JIT, codegen and the parquet reader once, so the first timed
+    * query does not absorb JVM start-up cost (`Bench`, `Dev profile`). */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(0, 1000000).selectExpr("sum(id)").collect()
+    spark.read.parquet(s"$sfDir/region.parquet").count()
+  }
 }

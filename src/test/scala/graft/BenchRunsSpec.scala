@@ -3,9 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-/** Pins the bench measurement policy (no SparkSession needed):
-  * min-of-passes headline, fastest-pair noise figure, adaptive pass
-  * extension, and failed/flaky classification.
+/** Pins the bench measurement policy (no SparkSession needed): the
+  * fixed pass schedule, query selection, min-of-passes headline,
+  * fastest-pair noise figure, failed/flaky classification and the
+  * cross-round tripwire's artifact parsing.
   */
 class BenchRunsSpec extends AnyFunSuite with Matchers {
   import BenchRuns._
@@ -23,172 +24,6 @@ class BenchRunsSpec extends AnyFunSuite with Matchers {
 
   test("passTotal sums only successful (non-negative) query times") {
     passTotal(Map("a" -> 1.5, "b" -> -1.0, "c" -> 2.5)) shouldBe 4.0
-  }
-
-  test("medianTotal is burst-robust: odd/even counts, skips non-positive, " +
-    "and a lone outlier pass moves it less than the mean") {
-    medianTotal(Seq(3.0, 1.0, 2.0)) shouldBe 2.0
-    medianTotal(Seq(4.0, 1.0, 2.0, 3.0)) shouldBe 2.5
-    medianTotal(Seq(-1.0, 0.0, 5.0)) shouldBe 5.0
-    medianTotal(Nil) shouldBe 0.0
-    // five steady passes + one 2x spike: median stays on the cluster
-    medianTotal(Seq(60.0, 62.0, 61.0, 63.0, 62.0, 120.0)) shouldBe 62.0
-  }
-
-  test("adaptivePasses stops at the configured count when converged") {
-    var calls = 0
-    val out = adaptivePasses(passes = 3, maxPasses = 6, deltaTargetPct = 3.0) {
-      () => calls += 1; Map("q" -> 10.0) // identical totals -> 0% delta
-    }
-    calls shouldBe 3
-    out.passes should have size 3
-    out.emergencyPass shouldBe false
-  }
-
-  test("adaptivePasses extends while the two fastest disagree, bounded by max") {
-    // Totals 30, 20, 10, 10: after 3 passes the fastest pair is (10, 20) ->
-    // 100% > target, so one more pass runs; then (10, 10) -> 0% and it stops
-    // before maxPasses.
-    val script = Iterator(30.0, 20.0, 10.0, 10.0, 999.0)
-    var calls = 0
-    val out = adaptivePasses(passes = 3, maxPasses = 6, deltaTargetPct = 3.0) {
-      () => calls += 1; Map("q" -> script.next())
-    }
-    calls shouldBe 4
-    BenchRuns.fastestPairDeltaPct(out.passes.map(passTotal)) shouldBe 0.0
-  }
-
-  test("adaptivePasses honors the wall budget: a spent budget stops the " +
-    "unconverged chase but never the configured minimum") {
-    var calls = 0
-    adaptivePasses(passes = 3, maxPasses = 10, deltaTargetPct = 3.0,
-      outOfTime = () => true) {
-      () => calls += 1; Map("q" -> (calls * 100.0)) // never converges
-    }
-    calls shouldBe 3
-    // budget that expires after the fourth pass: one extension happens,
-    // further ones are cut off even though the deltas still disagree
-    var calls2 = 0
-    adaptivePasses(passes = 3, maxPasses = 10, deltaTargetPct = 3.0,
-      outOfTime = () => calls2 >= 4) {
-      () => calls2 += 1; Map("q" -> (calls2 * 100.0))
-    }
-    calls2 shouldBe 4
-  }
-
-  test("adaptivePasses emergency pass: a budget-stopped chase whose " +
-    "fastest pair disagrees past the FENCE buys exactly one overdraft " +
-    "pass (the r18 ext tier: totals 98/423, budget spent at 2 passes, " +
-    "shipped self-invalidated)") {
-    // budget expires immediately after the configured 2 passes; totals
-    // disagree 331% > fence 8% -> one emergency pass runs, pairs with the
-    // fast total, and the artifact records agreement instead of noise
-    val script = Iterator(98.1, 423.3, 99.0)
-    var calls = 0
-    val out = adaptivePasses(passes = 2, maxPasses = 5, deltaTargetPct = 4.0,
-      outOfTime = () => calls >= 2, emergencyAbovePct = 8.0) {
-      () => calls += 1; Map("q" -> script.next())
-    }
-    calls shouldBe 3
-    fastestPairDeltaPct(out.passes.map(passTotal)) should be < 4.0
-    // the Chase result NAMES the overdraft — the artifact's
-    // core/ext_emergency_pass field distinguishes "rescued by overdraft"
-    // from "converged in budget" (same pass count either way)
-    out.emergencyPass shouldBe true
-    // the overdraft is bounded at ONE pass: sustained contamination
-    // (every pass a different number) does not loop
-    var calls2 = 0
-    val out2 = adaptivePasses(passes = 2, maxPasses = 5, deltaTargetPct = 4.0,
-      outOfTime = () => calls2 >= 2, emergencyAbovePct = 8.0) {
-      () => calls2 += 1; Map("q" -> (calls2 * 100.0))
-    }
-    calls2 shouldBe 3
-    out2.emergencyPass shouldBe true // fired (and failed to pair) — still named
-  }
-
-  test("adaptivePasses emergency pass does not fire on a CONVERGED chase " +
-    "even when the fence is configured below the chase target") {
-    // fence 3 < target 4, pair agreed at 3.5%: the loop exited healthy
-    // and the overdraft must not turn every run into an extra pass
-    val script = Iterator(100.0, 103.5)
-    var calls = 0
-    val out = adaptivePasses(passes = 2, maxPasses = 5, deltaTargetPct = 4.0,
-      emergencyAbovePct = 3.0) {
-      () => calls += 1; Map("q" -> script.next())
-    }
-    calls shouldBe 2
-    out.emergencyPass shouldBe false
-  }
-
-  test("adaptivePasses emergency pass does not fire under the fence, " +
-    "past maxPasses, or when the chase converged") {
-    // disagreement 5% is past the 4% chase target but under the 8% fence:
-    // budget-stopped run ships as-is (it will not self-invalidate)
-    val script = Iterator(100.0, 105.0)
-    var calls = 0
-    val r1 = adaptivePasses(passes = 2, maxPasses = 5, deltaTargetPct = 4.0,
-      outOfTime = () => calls >= 2, emergencyAbovePct = 8.0) {
-      () => calls += 1; Map("q" -> script.next())
-    }
-    calls shouldBe 2
-    r1.emergencyPass shouldBe false
-    // maxPasses is a hard cap even for the emergency pass
-    var calls2 = 0
-    val r2 = adaptivePasses(passes = 2, maxPasses = 2, deltaTargetPct = 4.0,
-      emergencyAbovePct = 8.0) {
-      () => calls2 += 1; Map("q" -> (calls2 * 100.0))
-    }
-    calls2 shouldBe 2
-    r2.emergencyPass shouldBe false
-    // a converged chase never overdrafts
-    var calls3 = 0
-    val r3 = adaptivePasses(passes = 2, maxPasses = 5, deltaTargetPct = 4.0,
-      emergencyAbovePct = 8.0) {
-      () => calls3 += 1; Map("q" -> 10.0)
-    }
-    calls3 shouldBe 2
-    r3.emergencyPass shouldBe false
-  }
-
-  test("passFitsBudget skips a full-suite pass the remaining budget " +
-    "cannot plausibly cover (the r19 no-op pass that ate 1163 s after " +
-    "its pre-pass budget check passed)") {
-    // slowest observed pass 500 s, pad 1.25 -> estimate 625 s: a 200 s
-    // remainder refuses, a 700 s remainder proceeds
-    passFitsBudget(200.0, Seq(480.0, 500.0)) shouldBe false
-    passFitsBudget(700.0, Seq(480.0, 500.0)) shouldBe true
-    // no observation yet -> nothing to predict from, the pass runs
-    passFitsBudget(10.0, Nil) shouldBe true
-    // failed passes (non-positive totals) carry no cost signal
-    passFitsBudget(10.0, Seq(-1.0, 0.0)) shouldBe true
-    passFitsBudget(10.0, Seq(-1.0, 100.0)) shouldBe false
-  }
-
-  test("chaseStop names why a chase ended: agreed / pass-cap / budget") {
-    chaseStop(Seq(10.0, 10.1), maxPasses = 5, deltaTargetPct = 4.0,
-      budgetSpent = false) shouldBe "agreed"
-    // still disagreeing at the cap with budget left -> the cap bound it
-    chaseStop(Seq(100.0, 200.0, 300.0, 400.0, 500.0), maxPasses = 5,
-      deltaTargetPct = 4.0, budgetSpent = false) shouldBe "pass-cap"
-    // disagreeing short of the cap: only the wall budget can have stopped it
-    chaseStop(Seq(98.1, 423.3), maxPasses = 5, deltaTargetPct = 4.0,
-      budgetSpent = true) shouldBe "budget"
-    // a budget-stopped chase whose emergency overdraft landed it exactly
-    // at maxPasses is still a BUDGET stop — size alone cannot attribute
-    chaseStop(Seq(100.0, 200.0, 300.0, 400.0, 500.0), maxPasses = 5,
-      deltaTargetPct = 4.0, budgetSpent = true) shouldBe "budget"
-    // fewer than two observations cannot disagree
-    chaseStop(Seq(98.1), maxPasses = 5, deltaTargetPct = 4.0,
-      budgetSpent = true) shouldBe "agreed"
-  }
-
-  test("adaptivePasses never exceeds maxPasses even when never converging") {
-    val script = Iterator.from(1).map(_ * 100.0) // strictly growing: min pair fixed at (100, 200)
-    var calls = 0
-    adaptivePasses(passes = 2, maxPasses = 5, deltaTargetPct = 3.0) {
-      () => calls += 1; Map("q" -> script.next())
-    }
-    calls shouldBe 5
   }
 
   test("summarize reports per-query minimum over successful passes") {
@@ -255,25 +90,36 @@ class BenchRunsSpec extends AnyFunSuite with Matchers {
       .map(_._1) shouldBe Seq("grew")
   }
 
-  test("splitOutliers trims contaminated passes from the summary " +
-    "statistics while keeping them visible: totals past factor x median " +
-    "land on the outlier side, everything else (order preserved) feeds " +
-    "the median") {
-    // the r16 artifact that motivated the trim: two of ten passes at
-    // 1.4x/2.2x the median inflated the pass-total median ~25%
-    val r16 = Seq(14.1, 13.2, 26.8, 21.3, 18.7, 18.8, 19.3, 18.9, 19.4,
-      41.2)
-    val (kept, out) = splitOutliers(r16)
-    out shouldBe Seq(26.8, 41.2)
-    kept shouldBe Seq(14.1, 13.2, 21.3, 18.7, 18.8, 19.3, 18.9, 19.4)
-    medianTotal(kept) should be < medianTotal(r16)
-    // quiet run: nothing trimmed
-    splitOutliers(Seq(10.0, 10.2, 9.9)) shouldBe
-      ((Seq(10.0, 10.2, 9.9), Nil))
-    // failed passes (non-positive totals) never count as outliers or kept
-    splitOutliers(Seq(10.0, 0.0, 10.1))._1 shouldBe Seq(10.0, 10.1)
-    // degenerate inputs degrade to no-trim
-    splitOutliers(Nil) shouldBe ((Nil, Nil))
-    splitOutliers(Seq(0.0))._2 shouldBe empty
+  test("schedule runs 2 warm-ups, 1 honesty pass and 3 recorded passes; " +
+    "a spent budget skips only the honesty pass and the third recorded") {
+    var modes = Vector.empty[Boolean]
+    val full = schedule(() => false) { noop => modes :+= noop; Map("q" -> 1.0) }
+    (full.warmup.size, full.noop.size, full.recorded.size) shouldBe ((2, 1, 3))
+    modes shouldBe Vector(false, false, true, false, false, false)
+    modes = Vector.empty
+    val spent = schedule(() => true) { noop => modes :+= noop; Map("q" -> 1.0) }
+    (spent.warmup.size, spent.noop.size, spent.recorded.size) shouldBe ((2, 0, 2))
+    modes shouldBe Vector(false, false, false, false)
+  }
+
+  test("select keeps the named queries and fails on an unknown name, " +
+    "listing the known ones") {
+    val known = Map("q1_agg" -> 1, "asof_join" -> 2, "pq_topk" -> 3)
+    select(known, None) shouldBe known
+    select(known, Some(" q1_agg, pq_topk ")) shouldBe
+      Map("q1_agg" -> 1, "pq_topk" -> 3)
+    val e = intercept[IllegalArgumentException](select(known, Some("q1_agg,q1_agh")))
+    e.getMessage should include("q1_agh")
+    e.getMessage should include("asof_join, pq_topk, q1_agg")
+    an[IllegalArgumentException] should be thrownBy select(known, Some(" , "))
+  }
+
+  test("the committed c32 artifact, written in the tiered format with " +
+    "ext_* keys, still parses as a tripwire base") {
+    val json = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("bench_queries_c32.json")), "UTF-8")
+    json should include("\"ext_passes\"")
+    parseQueryTimes(json) should have size 121
+    parseNoiseFlag(json) shouldBe false
   }
 }
