@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.functions.{HashFunctions => H, TextFunctions => T}
+import graft.functions.{HashFunctions => H, TextFunctions => T, VectorFunctions => V}
 
 /** Deduplication operators for training-data pipelines, designed for the
   * 100 TB shape: signatures are computed scan-side in one pass (no UDFs,
@@ -24,12 +24,70 @@ import graft.functions.{HashFunctions => H, TextFunctions => T}
   * NOTE: constructing a pair/dedup/decontaminate operator runs small EAGER
   * jobs (the size-gate membership probes) before any caller action — plan
   * construction is not free here, by design: the probe is what lets the
-  * plan choose broadcast vs shuffle from the MEASURED size. Re-executing a
-  * returned DataFrame after its first action recomputes the intermediates
-  * (correct, uncached); `spark.catalog.clearCache()` remains the big
-  * hammer (graft.Verify/Bench still use it between queries).
+  * plan choose broadcast vs shuffle from the MEASURED size. The gate is
+  * fixed: a small side of at most 1,000,000 rows is broadcast
+  * (10,000,000 for the decontaminate operators), a larger one joins
+  * shuffled. Re-executing a returned DataFrame after its first action
+  * recomputes the intermediates (correct, uncached);
+  * `spark.catalog.clearCache()` remains the big hammer (graft.Verify/Bench
+  * still use it between queries).
+  *
+  * The pair operators share one copy of each block: band keys
+  * ([[bandKeys]]), the overfull-key cap ([[overfullKeys]]), the
+  * shingle-intersection core ([[sharedShingles]]) and the cosine verify
+  * ([[cosineVerified]]).
   */
 object Dedup {
+
+  /** Row gate of the size-gated broadcasts ([[sizeGated]]). */
+  private val BroadcastGateRows = 1000000L
+
+  /** The decontaminate operators' gate: their small sides (the eval set's
+    * shingles, the contaminated ids) are tiny next to the corpus. */
+  private val DecontaminateGateRows = 10000000L
+
+  /** Signature length of the minhash prefilter of the Jaccard pair
+    * operators; the band count follows the threshold ([[autoBands]]). */
+  private val PrefilterHashes = 128
+
+  /** The word-shingle set of a text column: lower-cased, tokenized word
+    * `n`-grams, distinct per document. */
+  private def wordShingles(textCol: String, n: Int): Column =
+    H.wordShingles(T.tokens(lower(col(textCol))), n)
+
+  /** Per-document LSH band keys: native MinHash signature over `shingles`
+    * → `bands` band hashes → one (idCol, `keyCol`) row per band, key as a
+    * string. Documents with empty shingle sets (null signature) have
+    * nothing to band and are dropped. */
+  private def bandKeys(rel: DataFrame, idCol: String, shingles: Column,
+                       numHashes: Int, bands: Int,
+                       keyCol: String = "__key"): DataFrame = {
+    val rows = math.max(1, numHashes / bands)
+    rel.select(col(idCol), H.minHash(shingles, numHashes).as("__sig"))
+      .filter(col("__sig").isNotNull)
+      .select(col(idCol),
+        explode(H.lshBands(col("__sig"), bands, rows)).as("__band"))
+      .select(col(idCol), col("__band").cast("string").as(keyCol))
+  }
+
+  /** The overfull-key cap of every bucketed join here: the values of `key`
+    * held by more than `cap` rows of `counted`, size-gated ([[sizeGated]])
+    * for an anti join off the relation they cap (`counted` may differ from
+    * it: a document-frequency cap counts distinct (id, key) rows). Sizes
+    * come from a group-by (map-side partial counts — a hot key combines per
+    * task), NOT a `count over (partition by key)` window: the window would
+    * route every row of a degenerate key to one task and sort-buffer it
+    * there BEFORE the cap could drop it, recreating at the sizing step the
+    * very hot spot the cap exists to prevent. The set is ≤ |counted|/cap
+    * entries by construction, so the anti join broadcasts in the common
+    * case and degrades to a shuffled join past the gate. Gate once and
+    * reuse the result: each gate persists its input. */
+  private def overfullKeys(counted: DataFrame, key: String,
+                           cap: Long): DataFrame =
+    sizeGated(counted.groupBy(key)
+      .agg(count(lit(1)).as("__bucket_n"))
+      .filter(col("__bucket_n") > cap)
+      .select(key))
 
   /** Exact dedup: keep exactly one row per key set — the minimal `keepBy`
     * row (deterministic, unlike `dropDuplicates` which keeps an arbitrary
@@ -69,32 +127,20 @@ object Dedup {
     * key buckets, capped at `maxBucket` ids per key to guard against skew
     * (a degenerate key — empty docs, boilerplate — would otherwise create a
     * quadratic bucket; the cap drops only those keys, and typical
-    * near-duplicates co-occur in several bands so recall survives).
-    *
-    * Bucket sizes come from a group-by (map-side partial counts — a hot
-    * key combines per task) and the cap is applied by removing the
-    * OVERFULL keys with a size-gated broadcast anti join — NOT a
-    * `count over (partition by key)` window: the window would route every
-    * row of a degenerate key to one task and sort-buffer it there BEFORE
-    * the cap could drop it, recreating at the sizing step the very hot
-    * spot the cap exists to prevent. The overfull-key set is ≤
-    * |rows|/maxBucket entries by construction, so the anti join broadcasts
-    * in the common case (no exchange of the keyed relation) and degrades
-    * to a shuffled join past the gate. */
+    * near-duplicates co-occur in several bands so recall survives). The
+    * OVERFULL keys are removed with [[overfullKeys]]' size-gated anti
+    * join, so the keyed relation is not exchanged for the cap in the
+    * common case. */
   private def pairsFromBuckets(keyed: DataFrame, idCol: String,
                                maxBucket: Int): DataFrame = {
     // (id, key) rows are consumed by the sizing aggregate (forced eagerly
     // by the gate's count) and by both pair-join sides; persist so the
     // band/bucket keys are derived from the documents exactly once
     val k = keyed.persist(StorageLevel.MEMORY_AND_DISK)
-    val bigKeys = k.groupBy("__key")
-      .agg(count(lit(1)).as("__bucket_n"))
-      .filter(col("__bucket_n") > maxBucket)
-      .select("__key")
-    val sized = sizeGatedFilterJoin(k, bigKeys, Seq("__key"), "left_anti",
-      maxBroadcastRows = 1000000L)
+    val sized = k.join(overfullKeys(k, "__key", maxBucket), Seq("__key"),
+      "left_anti")
     // NOTE a bucket-grouped positional pair emission (one exchange — see
-    // groupedExactPairs in jaccardPairsFromShingles) was tried here and
+    // groupedExactPairs in sharedShingles) was tried here and
     // REVERTED: LSH band/chunk buckets are mostly 1-2 ids, where the
     // collect_list + double-explode machinery measured SLOWER than this
     // self-join (embcos_pairs 0.67 -> 1.04 s steady-state at sf0.1); the
@@ -109,24 +155,6 @@ object Dedup {
     // registered after the gate probe above populated the cache
     graft.core.CacheAutoRelease.afterFirstUse(k)
     pairs
-  }
-
-  /** Banded-MinHash candidate generation shared by [[minHashLsh]] and
-    * [[minhashPrefilterPairs]]: native scan-side signature over
-    * `shinglesCol` → band keys → size-capped bucket self-join. Documents
-    * with empty shingle sets (null signature) have nothing to band and are
-    * dropped. */
-  private def bandedCandidates(rel: DataFrame, idCol: String,
-                               shinglesCol: String, numHashes: Int,
-                               bands: Int, maxBucket: Int): DataFrame = {
-    val rows = math.max(1, numHashes / bands)
-    val keyed = rel
-      .select(col(idCol), H.minHash(col(shinglesCol), numHashes).as("__sig"))
-      .filter(col("__sig").isNotNull)
-      .select(col(idCol),
-        explode(H.lshBands(col("__sig"), bands, rows)).as("__band"))
-      .select(col(idCol), col("__band").cast("string").as("__key"))
-    pairsFromBuckets(keyed, idCol, maxBucket)
   }
 
   /** Default band count for the minhash prefilter at a given `threshold`:
@@ -175,17 +203,17 @@ object Dedup {
     // persist it once instead of recomputing per branch. MEMORY_AND_DISK:
     // at cluster scale this relation exceeds memory and spills, which is
     // still far cheaper than re-tokenizing the corpus per branch.
-    // The signature inside bandedCandidates is the native MinHashSigExpr:
+    // The signature inside bandKeys is the native MinHashSigExpr:
     // one compiled pass per document, entirely scan-side. The previous
     // explode + 64-min-aggregate plan produced identical values but
     // exchanged every exploded shingle hash to regroup by document — at
     // corpus scale that shuffle carries |corpus|·|shingles| rows and
     // dwarfs the band-key exchange LSH actually needs.
     val shingled = graft.core.ScanParallelism.ensure(df).select(col(idCol),
-      H.wordShingles(T.tokens(lower(col(textCol))), shingleSize).as("__shingles"))
+      wordShingles(textCol, shingleSize).as("__shingles"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val pairs = bandedCandidates(shingled, idCol, "__shingles",
-      numHashes, bands, maxBucket)
+    val pairs = pairsFromBuckets(bandKeys(shingled, idCol, col("__shingles"),
+      numHashes, bands), idCol, maxBucket)
     val shingles = shingled.select(col(idCol), col("__shingles"))
     val result = withPairPayloads(pairs, shingles, idCol)
       .withColumn("jaccard", H.jaccard(col("__shingles_a"), col("__shingles_b")))
@@ -207,16 +235,9 @@ object Dedup {
     * keys and the queries that consume them. */
   def minHashBandKeys(df: DataFrame, textCol: String, idCol: String,
                       shingleSize: Int = 3, numHashes: Int = 64,
-                      bands: Int = 16): DataFrame = {
-    val rows = math.max(1, numHashes / bands)
-    df.select(col(idCol),
-      H.minHash(H.wordShingles(T.tokens(lower(col(textCol))), shingleSize),
-        numHashes).as("__sig"))
-      .filter(col("__sig").isNotNull)
-      .select(col(idCol),
-        explode(H.lshBands(col("__sig"), bands, rows)).as("__band"))
-      .select(col(idCol), col("__band").cast("string").as("band_key"))
-  }
+                      bands: Int = 16): DataFrame =
+    bandKeys(df, idCol, wordShingles(textCol, shingleSize), numHashes, bands,
+      keyCol = "band_key")
 
   /** Incremental MinHash-LSH: near-duplicate pairs of an incoming batch
     * against an existing corpus PLUS within the batch itself — never
@@ -256,24 +277,18 @@ object Dedup {
                         shingleSize: Int = 3, numHashes: Int = 64,
                         bands: Int = 16, threshold: Double = 0.5,
                         maxBucket: Int = 1000,
-                        maxBroadcastRows: Long = 1000000L,
                         oldKeys: Option[DataFrame] = None): DataFrame = {
     // NOTE deliberately NOT routed through ScanParallelism.ensure: the
     // word-shingle pass over a small batch is cheap enough that the gated
     // repartition's extra exchange + task fan-out measured SLOWER
     // (incremental_dedup 1.46 s → 2.29 s steady-state at sf0.1)
     def shingle(d: DataFrame) = d.select(col(idCol),
-      H.wordShingles(T.tokens(lower(col(textCol))), shingleSize).as("__shingles"))
+      wordShingles(textCol, shingleSize).as("__shingles"))
     // the batch's shingles feed the band-key branch and both verification
     // branches; persist so batch tokenization runs once
     val shNew = shingle(newDf).persist(StorageLevel.MEMORY_AND_DISK)
-    val rows = math.max(1, numHashes / bands)
-    def keyed(rel: DataFrame) = rel
-      .select(col(idCol), H.minHash(col("__shingles"), numHashes).as("__sig"))
-      .filter(col("__sig").isNotNull)
-      .select(col(idCol),
-        explode(H.lshBands(col("__sig"), bands, rows)).as("__band"))
-      .select(col(idCol), col("__band").cast("string").as("__key"))
+    def keyed(rel: DataFrame) =
+      bandKeys(rel, idCol, col("__shingles"), numHashes, bands)
     // the new side's keys are both a join input and part of the union —
     // persist so the signature pass over the batch runs once
     val kNew = keyed(shNew).persist(StorageLevel.MEMORY_AND_DISK)
@@ -305,21 +320,17 @@ object Dedup {
     val kOld = oldKeys match {
       case Some(keys) => sizeGatedFilterJoin(
         keys.select(col(idCol), col("band_key").as("__key")),
-        kNew.select("__key").distinct(), Seq("__key"), "left_semi",
-        maxBroadcastRows)
+        kNew.select("__key").distinct(), Seq("__key"), "left_semi")
       case None => keyed(shOldFull.get)
     }
     val kAll = kNew.withColumn("__onew", lit(true))
       .unionByName(kOld.withColumn("__onew", lit(false)))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val bigKeys = kAll.groupBy("__key")
-      .agg(count(lit(1)).as("__bucket_n"))
-      .filter(col("__bucket_n") > maxBucket)
-      .select("__key")
-    val candNew = sizeGatedFilterJoin(kNew, bigKeys, Seq("__key"), "left_anti",
-      maxBroadcastRows).select(col("__key"), col(idCol).as("id_new"))
-    val candAll = sizeGatedFilterJoin(kAll, bigKeys, Seq("__key"), "left_anti",
-      maxBroadcastRows)
+    // gated once, read by both anti joins
+    val bigKeys = overfullKeys(kAll, "__key", maxBucket)
+    val candNew = kNew.join(bigKeys, Seq("__key"), "left_anti")
+      .select(col("__key"), col(idCol).as("id_new"))
+    val candAll = kAll.join(bigKeys, Seq("__key"), "left_anti")
       .select(col("__key"), col(idCol).as("id_other"), col("__onew"))
     val cands = candNew.join(candAll, Seq("__key"))
       // within-batch pairs once each; old-side pairs keep every id match
@@ -334,8 +345,7 @@ object Dedup {
     val shOldVerify = shOldFull.getOrElse {
       val candOldIds = cands.filter(!col("__onew"))
         .select(col("id_other").as(idCol)).distinct()
-      shingle(sizeGatedFilterJoin(oldDf, candOldIds, Seq(idCol), "left_semi",
-        maxBroadcastRows))
+      shingle(sizeGatedFilterJoin(oldDf, candOldIds, Seq(idCol), "left_semi"))
     }
     // verification joins pick the side the candidate actually came from,
     // so overlapping id spaces can never pair an id with the wrong text
@@ -422,19 +432,19 @@ object Dedup {
     * oracle-checkable, unlike MinHash whose signatures depend on the hash
     * family). `maxDf` drops shingles appearing in more than that many docs
     * (stop-shingles) — the skew guard that keeps the self-join from going
-    * quadratic on boilerplate at 100 TB; 0 disables. `maxBroadcastRows`
-    * caps the small-side broadcasts (stop set, per-document set sizes) —
-    * above it they degrade to shuffled joins instead of unbounded driver
+    * quadratic on boilerplate at 100 TB; 0 disables. The small-side
+    * broadcasts (stop set, per-document set sizes) are broadcast only
+    * while measured at ≤ 1,000,000 rows ([[BroadcastGateRows]]) — above
+    * that they degrade to shuffled joins instead of unbounded driver
     * broadcasts.
     * `strategy = "minhash"` swaps candidate generation for a banded
     * MinHash prefilter with exact per-pair verification
     * ([[minhashPrefilterPairs]]) — identical values on every emitted
-    * pair, probabilistic recall, skew-capped by `maxBucket`;
-    * `minhashBands ≤ 0` (the default) derives the banding from the
-    * threshold ([[autoBands]], ≥95% per-pair recall at jaccard =
-    * threshold). The default `strategy = "auto"` stays on the exact
-    * single-pass join below a measured shingle-volume knee and escalates
-    * to the minhash prefilter above it ([[autoStrategy]], logged
+    * pair, probabilistic recall, skew-capped by `maxBucket`; its 128-hash
+    * banding is derived from the threshold ([[autoBands]], ≥95% per-pair
+    * recall at jaccard = threshold). The default `strategy = "auto"` stays
+    * on the exact single-pass join below a measured shingle-volume knee and
+    * escalates to the minhash prefilter above it ([[autoStrategy]], logged
     * decision) — so recall becomes probabilistic (≥95% per pair at
     * jaccard = threshold) exactly on corpora dense enough that the exact
     * join was measured unusable; pin `"single"` when the contract is
@@ -449,15 +459,12 @@ object Dedup {
   def ngramJaccardPairs(df: DataFrame, textCol: String, idCol: String,
                         shingleSize: Int = 3, threshold: Double = 0.1,
                         maxDf: Long = 0L,
-                        maxBroadcastRows: Long = 1000000L,
                         strategy: String = "auto",
-                        minhashHashes: Int = 128, minhashBands: Int = 0,
                         maxBucket: Int = 2000): DataFrame =
     jaccardPairsDispatch(
       graft.core.ScanParallelism.ensure(df).select(col(idCol),
-        H.wordShingles(T.tokens(lower(col(textCol))), shingleSize).as("__shs")),
-      idCol, threshold, maxDf, maxBroadcastRows, strategy,
-      minhashHashes, minhashBands, maxBucket)
+        wordShingles(textCol, shingleSize).as("__shs")),
+      idCol, threshold, maxDf, strategy, maxBucket)
 
   /** Join `big` against a derived small relation (`left_semi`/`left_anti`
     * filter joins, or `inner` when the matched rows themselves are
@@ -467,10 +474,11 @@ object Dedup {
     * the 100 TB failure mode — on a high-duplication corpus the candidate
     * set is a large fraction of all documents and an unbounded broadcast
     * OOMs the driver; the gate keeps the fast path for the common case and
-    * degrades to a shuffle instead of an OOM on the degenerate one. */
-  private[operators] def sizeGatedFilterJoin(big: DataFrame, small: DataFrame,
-                                             keys: Seq[String], joinType: String,
-                                             maxBroadcastRows: Long): DataFrame =
+    * degrades to a shuffle instead of an OOM on the degenerate one.
+    * Operators keep the fixed default; only tests pass another gate. */
+  private[graft] def sizeGatedFilterJoin(
+      big: DataFrame, small: DataFrame, keys: Seq[String], joinType: String,
+      maxBroadcastRows: Long = BroadcastGateRows): DataFrame =
     big.join(sizeGated(small, maxBroadcastRows), keys, joinType)
 
   /** The eager broadcast gate: persist `small`, probe its size, and return
@@ -479,7 +487,8 @@ object Dedup {
     * the caller builds on the result, so its cache is dropped once the
     * first consuming query finishes (armed AFTER the probe, so the probe
     * itself cannot fire it). */
-  private def sizeGated(small: DataFrame, maxBroadcastRows: Long): DataFrame = {
+  private def sizeGated(small: DataFrame,
+                        maxBroadcastRows: Long = BroadcastGateRows): DataFrame = {
     val s = small.persist(StorageLevel.MEMORY_AND_DISK)
     // Short-circuiting membership probe: LocalLimit stops each task once
     // the gate is exceeded, so an over-the-gate small side costs O(gate)
@@ -499,22 +508,25 @@ object Dedup {
     hinted
   }
 
-  /** Shared exact-Jaccard tail of the word- and char-shingle pair
-    * operators: inverted-index self-join over a pre-shingled relation.
+  /** The shingle-intersection core of the exact pair operators
+    * ([[ngramJaccardPairs]], [[charJaccardPairs]], [[containmentPairs]]):
+    * inverted-index self-join over a pre-shingled (idCol, `__shs`)
+    * relation, returning (id_a, id_b, inter, __na, __nb) for every pair
+    * with id_a < id_b sharing at least one non-stop shingle — `inter`
+    * counts the shared non-stop shingles, `__na`/`__nb` are the PRE-drop
+    * set sizes. Each operator applies only its own score and threshold.
     *
     * Default path (one pass): explode distinct shingles, drop `maxDf`
     * stop-shingles (size-gated broadcast anti join — see
-    * [[sizeGatedFilterJoin]]), self-join on the shingle string, count
-    * shared shingles per pair, exact integer Jaccard. Engine-independent
-    * and oracle-checkable. For DENSE shingle sets (char-grams) the
-    * measured scale path is the MinHash prefilter instead
-    * ([[minhashPrefilterPairs]], `strategy = "minhash"`): 18.5 s on a
-    * 50k-document chargram workload — 5.2× over the single pass with
-    * identical emitted pairs — at the price of probabilistic recall; see
-    * PLANS.md for the adoption decision. */
-  private def jaccardPairsFromShingles(shingledIn: DataFrame, idCol: String,
-                                       threshold: Double, maxDf: Long,
-                                       maxBroadcastRows: Long = 1000000L): DataFrame = {
+    * [[overfullKeys]]), self-join on the shingle string, count shared
+    * shingles per pair. Engine-independent and oracle-checkable. For
+    * DENSE shingle sets (char-grams) the measured scale path is the
+    * MinHash prefilter instead ([[minhashPrefilterPairs]],
+    * `strategy = "minhash"`): 18.5 s on a 50k-document chargram workload —
+    * 5.2× over the single pass with identical emitted pairs — at the price
+    * of probabilistic recall; see PLANS.md for the adoption decision. */
+  private def sharedShingles(shingledIn: DataFrame, idCol: String,
+                             maxDf: Long): DataFrame = {
     // Persist at the ARRAY level: the shingle expression runs exactly once
     // per document; the size() projection and both join-side explodes then
     // read the cached arrays (projection collapse would otherwise re-run it
@@ -532,50 +544,37 @@ object Dedup {
     val sh = shingled.select(col(idCol), explode(col("__shs")).as("__sh"))
     // Per-document PRE-drop set size (the stop anti join must not change
     // the union arithmetic — same contract as before this refactor, where
-    // __n was computed before the drop). One row per input document,
-    // derived from the cached array relation — no extra shingle pass.
-    // Broadcast under the measured row gate; above it the join degrades
-    // to a shuffled join of the AGGREGATED pairs (far fewer rows than the
-    // pair partials the exchange used to carry) against the sizes
+    // __n was computed before the drop; containment on stop-heavy
+    // documents underestimates, never overestimates). One row per input
+    // document, derived from the cached array relation — no extra shingle
+    // pass. Broadcast under the measured row gate; above it the join
+    // degrades to a shuffled join of the AGGREGATED pairs (far fewer rows
+    // than the pair partials the exchange used to carry) against the sizes
     // relation — the sizes side is corpus-sized at 100 TB and must never
     // unconditionally broadcast. The eager limit-probe count doubles as
     // the `shingled` cache populate: it runs at construction time, before
     // the action's join sides could race the cold cache (the r21 lesson).
     lazy val sizesHinted: DataFrame = sizeGated(shingled
-      .select(col(idCol), size(col("__shs")).cast("long").as("__n")),
-      maxBroadcastRows)
+      .select(col(idCol), size(col("__shs")).cast("long").as("__n")))
+    // Sizes join back onto the aggregated (id_a, id_b, inter) pairs —
+    // AFTER the pair aggregation, so the caller's threshold filter still
+    // sees them — instead of riding through every exchanged row.
+    // (r21 correction, still true: the two sides' exchanges are NOT
+    // shared by ReusedExchange in practice — hence the persisted,
+    // eagerly-populated input below, and the grouped single-exchange form
+    // for bounded maxDf.)
     def attachSizes(pairs: DataFrame): DataFrame = pairs
       .join(sizesHinted.select(col(idCol).as("id_a"), col("__n").as("__na")),
         Seq("id_a"))
       .join(sizesHinted.select(col(idCol).as("id_b"), col("__n").as("__nb")),
         Seq("id_b"))
-    // The stop set is ≤ |shingles|/maxDf entries by construction, so the
-    // gated join takes the broadcast branch except on degenerate corpora.
     def dropStopShingles(rel: DataFrame): DataFrame =
       if (maxDf <= 0) rel
-      else {
-        val stop = sh.groupBy("__sh").agg(count(lit(1)).as("__df"))
-          .filter(col("__df") > maxDf)
-          .select("__sh")
-        sizeGatedFilterJoin(rel, stop, Seq("__sh"), "left_anti", maxBroadcastRows)
-      }
-    // Scores from the aggregated (id_a, id_b, inter) pairs: sizes join
-    // back here — AFTER the pair aggregation, so the threshold filter
-    // still sees them — instead of riding through every exchanged row.
-    // (r21 correction, still true: the two sides' exchanges are NOT
-    // shared by ReusedExchange in practice — hence the persisted,
-    // eagerly-populated input below, and the grouped single-exchange form
-    // for bounded maxDf.)
-    def pairScores(aggregated: DataFrame): DataFrame = attachSizes(aggregated)
-      .withColumn("uni", col("__na") + col("__nb") - col("inter"))
-      .withColumn("jaccard", col("inter").cast("double") / col("uni"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("inter"), col("uni"),
-        round(col("jaccard"), 6).as("jaccard"))
+      else rel.join(overfullKeys(sh, "__sh", maxDf), Seq("__sh"), "left_anti")
     def exactPairs(rel: DataFrame): DataFrame = {
       val a = rel.select(col(idCol).as("id_a"), col("__sh"))
       val b = rel.select(col(idCol).as("id_b"), col("__sh"))
-      pairScores(a.join(b, Seq("__sh"))
+      attachSizes(a.join(b, Seq("__sh"))
         .filter(col("id_a") < col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(count(lit(1)).as("inter")))
@@ -587,12 +586,12 @@ object Dedup {
     // exchanging the same relation twice and sort-merging it (guide
     // §2.4: remove shuffles outright). sort_array orders the ids with
     // the same comparator as the join's `<` filter, so the emitted pair
-    // multiset — and hence every (inter, uni, jaccard) — is identical.
+    // multiset — and hence every (inter, __na, __nb) — is identical.
     // Only taken when the cap makes
     // the per-key array provably small; the unbounded (maxDf = 0) path
     // keeps the streaming sort-merge join, which no single degenerate
     // key can OOM.
-    def groupedExactPairs(rel: DataFrame): DataFrame = pairScores(rel
+    def groupedExactPairs(rel: DataFrame): DataFrame = attachSizes(rel
       // defensive: the join form drops null keys structurally; groupBy
       // would keep a null-key bucket (and the maxDf stop anti join never
       // removes null keys, so it would be unbounded). The shingle
@@ -658,10 +657,9 @@ object Dedup {
     * the exact inverted-index path computes, but recall is probabilistic:
     * a true pair whose signature never collides in any band is missed
     * (P[candidate] = 1−(1−j^r)^b at exact Jaccard j, r = hashes/bands).
-    * The dispatcher derives the banding from the threshold by default
-    * ([[autoBands]]: the most selective r that still keeps ≥95% per-pair
-    * recall at j = threshold — e.g. 128 hashes → r = 2/b = 64 at t = 0.3,
-    * r = 1/b = 128 at t = 0.1); explicit `bands` overrides it.
+    * The banding is derived from the threshold ([[autoBands]]: the most
+    * selective r that still keeps ≥95% per-pair recall at j = threshold —
+    * e.g. 128 hashes → r = 2/b = 64 at t = 0.3, r = 1/b = 128 at t = 0.1).
     *
     * What this buys at scale: the exact paths aggregate one row per
     * SHARED SHINGLE per pair (boilerplate-heavy corpora make that
@@ -674,8 +672,6 @@ object Dedup {
     * inverted-index join. */
   private def minhashPrefilterPairs(shingledIn: DataFrame, idCol: String,
                                     threshold: Double, maxDf: Long,
-                                    maxBroadcastRows: Long,
-                                    numHashes: Int, bands: Int,
                                     maxBucket: Int): DataFrame = {
     // `__n0` carries the PRE-drop set size: the exact paths size the union
     // from the full shingle sets while intersecting only non-stop shingles
@@ -687,17 +683,14 @@ object Dedup {
       else {
         val sh = shingledIn.select(col(idCol),
           size(col("__shs")).cast("long").as("__n0"), explode(col("__shs")).as("__sh"))
-        val stop = sh.groupBy("__sh").agg(count(lit(1)).as("__df"))
-          .filter(col("__df") > maxDf)
-          .select("__sh")
-        sizeGatedFilterJoin(sh, stop, Seq("__sh"), "left_anti", maxBroadcastRows)
+        sh.join(overfullKeys(sh, "__sh", maxDf), Seq("__sh"), "left_anti")
           .groupBy(col(idCol))
           .agg(min(col("__n0")).as("__n0"), collect_set(col("__sh")).as("__shs"))
       }
     // consumed by the signature branch and both verification joins
     val shingled = base.persist(StorageLevel.MEMORY_AND_DISK)
-    val pairs = bandedCandidates(shingled, idCol, "__shs",
-      numHashes, bands, maxBucket)
+    val pairs = pairsFromBuckets(bandKeys(shingled, idCol, col("__shs"),
+      PrefilterHashes, autoBands(PrefilterHashes, threshold)), idCol, maxBucket)
     val result = withPairPayloads(pairs, shingled, idCol)
       .withColumn("inter",
         size(array_intersect(col("__shs_a"), col("__shs_b"))).cast("long"))
@@ -769,10 +762,7 @@ object Dedup {
     * is exactness at ANY volume must pin `"single"`. */
   private def jaccardPairsDispatch(shingled: DataFrame, idCol: String,
                                    threshold: Double, maxDf: Long,
-                                   maxBroadcastRows: Long,
                                    strategy: String,
-                                   minhashHashes: Int,
-                                   minhashBands: Int,
                                    maxBucket: Int): DataFrame = {
     val resolved = strategy match {
       case "auto" => autoStrategy(shingled, idCol)
@@ -780,18 +770,15 @@ object Dedup {
     }
     resolved match {
       case "single" =>
-        jaccardPairsFromShingles(shingled, idCol, threshold, maxDf,
-          maxBroadcastRows)
+        // exact Jaccard: inter / (|A| + |B| − inter)
+        sharedShingles(shingled, idCol, maxDf)
+          .withColumn("uni", col("__na") + col("__nb") - col("inter"))
+          .withColumn("jaccard", col("inter").cast("double") / col("uni"))
+          .filter(col("jaccard") >= threshold)
+          .select(col("id_a"), col("id_b"), col("inter"), col("uni"),
+            round(col("jaccard"), 6).as("jaccard"))
       case "minhash" =>
-        // bands <= 0: derive the banding from the threshold (autoBands) —
-        // a fixed default composes badly with low thresholds (recall
-        // collapses), so the knee follows the caller's threshold unless
-        // they pin the banding explicitly
-        val bands =
-          if (minhashBands > 0) minhashBands
-          else autoBands(minhashHashes, threshold)
-        minhashPrefilterPairs(shingled, idCol, threshold, maxDf,
-          maxBroadcastRows, minhashHashes, bands, maxBucket)
+        minhashPrefilterPairs(shingled, idCol, threshold, maxDf, maxBucket)
       case other => throw new IllegalArgumentException(
         s"unknown jaccard pair strategy '$other' " +
           "(expected auto|single|minhash)")
@@ -804,7 +791,7 @@ object Dedup {
     * (CJK) and on heavily-concatenated text, at the cost of denser shingle
     * sets. Same inverted-index self-join, same exact integer arithmetic
     * (engine-independent, oracle-checkable), same `maxDf` stop-shingle
-    * skew guard.
+    * skew guard, same fixed broadcast gate.
     *
     * NOTE (eager construction): building the returned DataFrame runs
     * bounded probe/populate jobs (size-gate limit counts, cache
@@ -815,15 +802,12 @@ object Dedup {
   def charJaccardPairs(df: DataFrame, textCol: String, idCol: String,
                        shingleSize: Int = 5, threshold: Double = 0.1,
                        maxDf: Long = 0L,
-                       maxBroadcastRows: Long = 1000000L,
                        strategy: String = "auto",
-                       minhashHashes: Int = 128, minhashBands: Int = 0,
                        maxBucket: Int = 2000): DataFrame =
     jaccardPairsDispatch(
       graft.core.ScanParallelism.ensure(df).select(col(idCol),
         H.charShingles(trim(lower(col(textCol))), shingleSize).as("__shs")),
-      idCol, threshold, maxDf, maxBroadcastRows, strategy,
-      minhashHashes, minhashBands, maxBucket)
+      idCol, threshold, maxDf, strategy, maxBucket)
 
   /** Asymmetric shingle-CONTAINMENT pairs: for each document pair,
     * C(A→B) = |A∩B| / |A| over distinct word `shingleSize`-grams — the
@@ -836,10 +820,9 @@ object Dedup {
     * directions' values are returned so the caller can tell subset
     * (one-sided) from near-equality (both-sided, ≈ Jaccard).
     *
-    * Same single-pass inverted-index join as the exact Jaccard path: one
-    * scan-side shingle pass, self-join on the shingle string (the two
-    * join inputs are identical subplans → the exchange is computed once
-    * and reused), one count per shared shingle per pair. Exact integer
+    * Same single-pass inverted-index join as the exact Jaccard path
+    * ([[sharedShingles]]): one scan-side shingle pass, self-join on the
+    * shingle string, one count per shared shingle per pair. Exact integer
     * arithmetic — engine-independent and oracle-checkable. `maxDf` drops
     * stop-shingles from the index while each document's DENOMINATOR still
     * counts them (consistent with the Jaccard path), so containment on
@@ -857,58 +840,9 @@ object Dedup {
     * them (CacheAutoRelease) or the caller clears the cache. */
   def containmentPairs(df: DataFrame, textCol: String, idCol: String,
                        shingleSize: Int = 3, threshold: Double = 0.8,
-                       maxDf: Long = 0L,
-                       maxBroadcastRows: Long = 1000000L): DataFrame = {
-    // array-level persist: the shingle pass feeds the exploded join input
-    // AND the per-document sizes relation (jaccardPairsFromShingles'
-    // structure — sizes no longer ride the exploded rows, see below)
-    val shingled = graft.core.ScanParallelism.ensure(df).select(col(idCol),
-        H.wordShingles(T.tokens(lower(col(textCol))), shingleSize).as("__shs"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // (id, shingle) only: the per-document set size is functionally
-    // dependent on the id, so carrying it through the explode, both join
-    // sides and the pair-aggregation exchange was dead weight on every
-    // exchanged row (guide §2.3); it joins back onto the aggregated pairs
-    // below. PRE-drop size, as before — stop-shingles stay in the
-    // denominator (containment on stop-heavy documents underestimates,
-    // never overestimates).
-    val sh = shingled.select(col(idCol), explode(col("__shs")).as("__sh"))
-    val base =
-      if (maxDf <= 0) sh
-      else {
-        val stop = sh.groupBy("__sh").agg(count(lit(1)).as("__df"))
-          .filter(col("__df") > maxDf)
-          .select("__sh")
-        sizeGatedFilterJoin(sh, stop, Seq("__sh"), "left_anti", maxBroadcastRows)
-      }
-    // both join sides read the exploded relation — persist so the explode
-    // (+ stop anti join) runs once, not once per side (the ReusedExchange
-    // the subplans theoretically share does not fire under a broadcast
-    // stop set; see jaccardPairsFromShingles)
-    val based = base.persist(StorageLevel.MEMORY_AND_DISK)
-    // eager populate — the join sides race a cold cache otherwise (see
-    // jaccardPairsFromShingles); also populates the array-level cache the
-    // sizes probe below then reads warm
-    based.count()
-    // sizes join-back, broadcast under the measured gate (the sizes side
-    // is corpus-sized at 100 TB — above the gate the join degrades to a
-    // shuffled join of the aggregated pairs, far fewer rows than the
-    // partials the exchange used to carry)
-    val sizesHinted = sizeGated(shingled
-      .select(col(idCol), size(col("__shs")).cast("long").as("__n")),
-      maxBroadcastRows)
-    val a = based.select(col(idCol).as("id_a"), col("__sh"))
-    val b = based.select(col(idCol).as("id_b"), col("__sh"))
-    graft.core.CacheAutoRelease.afterFirstUse(based)
-    graft.core.CacheAutoRelease.afterFirstUse(shingled)
-    a.join(b, Seq("__sh"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("inter"))
-      .join(sizesHinted.select(col(idCol).as("id_a"), col("__n").as("__na")),
-        Seq("id_a"))
-      .join(sizesHinted.select(col(idCol).as("id_b"), col("__n").as("__nb")),
-        Seq("id_b"))
+                       maxDf: Long = 0L): DataFrame =
+    sharedShingles(graft.core.ScanParallelism.ensure(df).select(col(idCol),
+        wordShingles(textCol, shingleSize).as("__shs")), idCol, maxDf)
       .withColumn("cont_a",
         round(col("inter").cast("double") / col("__na").cast("double"), 6))
       .withColumn("cont_b",
@@ -917,7 +851,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("inter"),
         col("__na").as("n_a"), col("__nb").as("n_b"),
         col("cont_a"), col("cont_b"))
-  }
 
   /** LINE-level boilerplate removal — the CCNet/RefinedWeb paragraph-hash
     * step of web-corpus curation: split each document on newlines, count
@@ -934,7 +867,7 @@ object Dedup {
     * aggregation is map-side combined on the line key (distinct-per-doc
     * first, so in-document repetition counts once); the boilerplate
     * relation is by construction ≤ corpus-lines / maxDocFreq rows and
-    * joins back under the measured broadcast gate
+    * joins back under the fixed 1 M-row broadcast gate
     * ([[sizeGatedFilterJoin]], anti-join — degrading to a shuffle on a
     * template-heavy corpus rather than an unbounded driver broadcast);
     * reassembly is one exchange on the document id with a per-document
@@ -945,7 +878,6 @@ object Dedup {
     * arithmetic — engine-independent and oracle-checkable (`line_dedup`). */
   def dropBoilerplateLines(df: DataFrame, textCol: String, idCol: String,
                            maxDocFreq: Long,
-                           maxBroadcastRows: Long = 1000000L,
                            model: Option[DataFrame] = None): DataFrame = {
     require(maxDocFreq >= 1, s"maxDocFreq must be >= 1, got $maxDocFreq")
     // line splitting is cheap scan-side work; the gated repartition
@@ -958,8 +890,7 @@ object Dedup {
       .map(_.select(col("line").as("__l")))
       .getOrElse(boilerplateLines(dfp, textCol, idCol, maxDocFreq)
         .select(col("line").as("__l")))
-    val kept = sizeGatedFilterJoin(lines, boiler, Seq("__l"), "left_anti",
-      maxBroadcastRows)
+    val kept = sizeGatedFilterJoin(lines, boiler, Seq("__l"), "left_anti")
     val rebuilt = kept.groupBy(col(idCol))
       .agg(
         concat_ws("\n", transform(
@@ -1031,29 +962,29 @@ object Dedup {
     * operator needed on this path (use [[sharedSpans]] when the span
     * LENGTHS themselves are the output). The eval side is
     * tiny relative to the corpus (benchmark suites vs a 100 TB corpus):
-    * its distinct shingles broadcast under the size gate, so the corpus is
+    * its distinct shingles broadcast under the size gate (fixed at
+    * 10,000,000 rows, [[DecontaminateGateRows]]), so the corpus is
     * shingled in one scan-side pass and only the (rare) matching rows
     * reach the per-document overlap count; the contaminated-id set is
     * removed with a second size-gated anti join. Exact integer arithmetic
     * throughout — engine-independent and oracle-checkable. */
   def decontaminate(corpus: DataFrame, evalSet: DataFrame, textCol: String,
                     idCol: String, shingleSize: Int = 8,
-                    minOverlap: Long = 1L,
-                    maxBroadcastRows: Long = 10000000L): DataFrame = {
-    def shingles(df: DataFrame) =
-      H.wordShingles(T.tokens(lower(col(textCol))), shingleSize)
+                    minOverlap: Long = 1L): DataFrame = {
     val corpusP = graft.core.ScanParallelism.ensure(corpus)
-    val cSh = corpusP.select(col(idCol), explode(shingles(corpusP)).as("__sh"))
-    val eSh = evalSet.select(explode(shingles(evalSet)).as("__sh")).distinct()
+    val cSh = corpusP.select(col(idCol),
+      explode(wordShingles(textCol, shingleSize)).as("__sh"))
+    val eSh = evalSet.select(explode(wordShingles(textCol, shingleSize)).as("__sh"))
+      .distinct()
     // shingle sets are distinct per doc (WordShingleExpr) and the eval set
     // is distinct, so count(*) == number of distinct shared shingles
     val doomed = sizeGatedFilterJoin(cSh, eSh, Seq("__sh"), "inner",
-        maxBroadcastRows)
+        DecontaminateGateRows)
       .groupBy(col(idCol)).agg(count(lit(1)).as("__overlap"))
       .filter(col("__overlap") >= minOverlap)
       .select(col(idCol))
     sizeGatedFilterJoin(corpusP, doomed, Seq(idCol), "left_anti",
-      maxBroadcastRows)
+      DecontaminateGateRows)
   }
 
   /** Bloom-gated decontamination: result-identical to [[decontaminate]],
@@ -1090,29 +1021,29 @@ object Dedup {
   def decontaminateBloom(corpus: DataFrame, evalSet: DataFrame,
                          textCol: String, idCol: String,
                          shingleSize: Int = 8, minOverlap: Long = 1L,
-                         expectedItems: Long = 10000000L, fpp: Double = 0.01,
-                         maxBroadcastRows: Long = 10000000L): DataFrame = {
+                         expectedItems: Long = 10000000L,
+                         fpp: Double = 0.01): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     import org.apache.spark.sql.graftbridge.Bridge
     require(expectedItems > 0, "expectedItems must be positive")
     require(fpp > 0.0 && fpp < 1.0, "fpp must be in (0,1)")
-    def shingles(df: DataFrame) =
-      H.wordShingles(T.tokens(lower(col(textCol))), shingleSize)
-    val eSh = evalSet.select(explode(shingles(evalSet)).as("__sh")).distinct()
+    val eSh = evalSet.select(explode(wordShingles(textCol, shingleSize)).as("__sh"))
+      .distinct()
     val bloomBytes = buildShingleBloom(eSh, expectedItems, fpp)
     if (bloomBytes == null) return corpus // empty eval set: nothing to remove
     val corpusP = graft.core.ScanParallelism.ensure(corpus)
-    val cSh = corpusP.select(col(idCol), explode(shingles(corpusP)).as("__sh"))
+    val cSh = corpusP.select(col(idCol),
+      explode(wordShingles(textCol, shingleSize)).as("__sh"))
     val mightContain = Bridge.column(new BloomFilterMightContain(
       Literal(bloomBytes, org.apache.spark.sql.types.BinaryType),
       Bridge.expression(xxhash64(col("__sh")))))
     val doomed = sizeGatedFilterJoin(cSh.filter(mightContain), eSh,
-        Seq("__sh"), "inner", maxBroadcastRows)
+        Seq("__sh"), "inner", DecontaminateGateRows)
       .groupBy(col(idCol)).agg(count(lit(1)).as("__overlap"))
       .filter(col("__overlap") >= minOverlap)
       .select(col(idCol))
     sizeGatedFilterJoin(corpusP, doomed, Seq(idCol), "left_anti",
-      maxBroadcastRows)
+      DecontaminateGateRows)
   }
 
   /** Verbatim shared-span detection: for every document pair sharing at
@@ -1148,8 +1079,7 @@ object Dedup {
     * them (CacheAutoRelease) or the caller clears the cache. */
   def sharedSpans(df: DataFrame, textCol: String, idCol: String,
                   shingleSize: Int = 8, minSpanTokens: Int = 16,
-                  maxDf: Long = 1000L,
-                  maxBroadcastRows: Long = 1000000L): DataFrame = {
+                  maxDf: Long = 1000L): DataFrame = {
     require(shingleSize >= 1, "shingleSize must be >= 1")
     require(minSpanTokens >= shingleSize,
       "a span cannot be shorter than one shingle")
@@ -1165,19 +1095,14 @@ object Dedup {
           i => concat_ws(" ", slice(col("__t"), i + 1, lit(shingleSize)))))
           .as(Seq("__pos", "__g")))
     // document-frequency stop-gram guard (count each doc once per gram)
-    val sized = if (maxDf <= 0) grams else {
-      val stop = grams.select(col(idCol), col("__g")).distinct()
-        .groupBy("__g").agg(count(lit(1)).as("__df"))
-        .filter(col("__df") > maxDf)
-        .select("__g")
-      sizeGatedFilterJoin(grams, stop, Seq("__g"), "left_anti",
-        maxBroadcastRows)
-    }
+    val sized = if (maxDf <= 0) grams else grams.join(overfullKeys(
+      grams.select(col(idCol), col("__g")).distinct(), "__g", maxDf),
+      Seq("__g"), "left_anti")
     // both join sides read the positional-gram relation — persist so the
     // explode (+ stop anti join) runs once, not once per side
     val sizedP = sized.persist(StorageLevel.MEMORY_AND_DISK)
     // eager populate — the join sides race a cold cache otherwise (see
-    // jaccardPairsFromShingles)
+    // sharedShingles)
     sizedP.count()
     val a = sizedP.select(col(idCol).as("id_a"), col("__pos").as("__pa"), col("__g"))
     val b = sizedP.select(col(idCol).as("id_b"), col("__pos").as("__pb"), col("__g"))
@@ -1289,7 +1214,6 @@ object Dedup {
     val sym = edges
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
     // SIZE-GATED DRIVER FAST PATH (optimization guide §1.2: fix the
     // distributed algorithm first). The propagation loop below costs
     // O(hops) Spark jobs — each hop is a join + aggregation + (lazy)
@@ -1307,22 +1231,30 @@ object Dedup {
     // Above the gate — the genuinely massive-duplication regime — the
     // distributed loop runs exactly as before. `maxDriverEdges = 0`
     // force-disables the fast path (the loop's own specs pin it).
+    // One bounded collect both measures and fetches the edges: at most
+    // maxDriverEdges + 1 rows reach the driver, and one more than the gate
+    // means "above it". Trade-off: above the gate the edge relation is
+    // computed again for the loop (its persist starts there); that is the
+    // massive-duplication regime, where the loop's own hops dominate.
     val idType = edges.schema.head.dataType
-    if (maxDriverEdges > 0 && driverMinOrdering(idType).isDefined &&
-        sym.count() <= maxDriverEdges) {
-      val labeled = driverClusters(sym.collect(), driverMinOrdering(idType).get)
+    val driverEdges =
+      if (maxDriverEdges > 0 && driverMinOrdering(idType).isDefined)
+        Some(sym.limit(math.min(maxDriverEdges + 1, Int.MaxValue.toLong).toInt)
+          .collect()).filter(_.length <= maxDriverEdges)
+      else None
+    if (driverEdges.isDefined) {
+      val labeled = driverClusters(driverEdges.get, driverMinOrdering(idType).get)
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("id", idType),
         org.apache.spark.sql.types.StructField("cluster", idType)))
-      val out = pairs.sparkSession.createDataFrame(
+      return pairs.sparkSession.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           labeled.map { case (id, cl) =>
             org.apache.spark.sql.Row(id, cl): org.apache.spark.sql.Row
           }.asJava),
         schema)
-      sym.unpersist()
-      return out
     }
+    sym.persist(StorageLevel.MEMORY_AND_DISK)
     // Every hop is localCheckpoint-ed (lazily) so each hop's output enters
     // the next hop's plan as ONE cached RDD — a fused un-checkpointed
     // double-hop was tried and reverted: the inner hop is referenced twice
@@ -1483,18 +1415,9 @@ object Dedup {
     * engine-independent and oracle-checkable (DuckDB
     * `list_cosine_similarity` over DOUBLE[] is bit-identical). */
   def embeddingCosineExact(df: DataFrame, vecCol: String, idCol: String,
-                           threshold: Double = 0.95): DataFrame = {
-    import graft.functions.{VectorFunctions => V}
-    // norms once per row, not once per pair
-    val vecs = df.select(col(idCol), col(vecCol), V.norm(col(vecCol)).as("__nrm"))
-    val a = vecs.toDF("id_a", "__v_a", "__n_a")
-    val b = vecs.toDF("id_b", "__v_b", "__n_b")
-    a.join(broadcast(b), col("id_a") < col("id_b"))
-      .withColumn("cosine", V.cosineGivenNorms(
-        col("__v_a"), col("__v_b"), col("__n_a"), col("__n_b")))
-      .filter(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
-  }
+                           threshold: Double = 0.95): DataFrame =
+    cosineVerified(df, vecCol, idCol, threshold)((a, b) =>
+      a.join(broadcast(b), col("id_a") < col("id_b")))
 
   /** Embedding-cosine near-duplicate pairs: sign-LSH bucketing then exact
     * cosine verification ≥ threshold. `tables` independent hyperplane sets
@@ -1507,7 +1430,6 @@ object Dedup {
                       threshold: Double = 0.95, nPlanes: Int = 12,
                       dim: Int = 64, tables: Int = 4,
                       maxBucket: Int = 2000): DataFrame = {
-    import graft.functions.{VectorFunctions => V}
     val allPlanes = (0 until tables).map(t =>
       V.hyperplanes(nPlanes, dim, seed = 42L + t))
     // all tables' buckets in ONE compiled pass over the vector
@@ -1516,12 +1438,22 @@ object Dedup {
         posexplode(V.signBuckets(col(vecCol), allPlanes)).as(Seq("__t", "__b")))
       .select(col(idCol), concat_ws(":", col("__t"), col("__b")).as("__key"))
     val pairs = pairsFromBuckets(keyed, idCol, maxBucket)
-    // norms once per row, not once per candidate pair
+    cosineVerified(df, vecCol, idCol, threshold)((a, b) =>
+      pairs.join(a, Seq("id_a")).join(b, Seq("id_b")))
+  }
+
+  /** Exact-cosine verify shared by the embedding pair operators: `pairUp`
+    * joins the two sides (id_a, __v_a, __n_a) and (id_b, __v_b, __n_b) of
+    * `df`'s vectors, and every joined pair is kept at cosine ≥ threshold
+    * (rounded to 6 places). Norms are computed once per row, not once per
+    * pair. */
+  private def cosineVerified(df: DataFrame, vecCol: String, idCol: String,
+                             threshold: Double)
+                            (pairUp: (DataFrame, DataFrame) => DataFrame)
+      : DataFrame = {
     val vecs = df.select(col(idCol), col(vecCol),
       V.norm(col(vecCol)).as("__nrm"))
-    pairs
-      .join(vecs.toDF("id_a", "__v_a", "__n_a"), Seq("id_a"))
-      .join(vecs.toDF("id_b", "__v_b", "__n_b"), Seq("id_b"))
+    pairUp(vecs.toDF("id_a", "__v_a", "__n_a"), vecs.toDF("id_b", "__v_b", "__n_b"))
       .withColumn("cosine", V.cosineGivenNorms(
         col("__v_a"), col("__v_b"), col("__n_a"), col("__n_b")))
       .filter(col("cosine") >= threshold)
@@ -1561,7 +1493,6 @@ object Dedup {
   def semanticDedupPairs(df: DataFrame, vecCol: String, idCol: String,
                          threshold: Double = 0.95, nCells: Int = 0,
                          seed: Long = 42L, maxCell: Int = 2000): DataFrame = {
-    import graft.functions.{VectorFunctions => V}
     // consumed by the sizing count, the quantizer-fit sample AND the cell
     // assignment — persist so the (possibly expensive — unions, planted
     // transforms, quality filters upstream) input pipeline and the
@@ -1578,17 +1509,10 @@ object Dedup {
         .cast("string").as("__key"))
     val pairs = pairsFromBuckets(keyed, idCol, maxCell)
     graft.core.CacheAutoRelease.afterFirstUse(unit)
-    // norms once per row, not once per candidate pair; cosine on the
-    // ORIGINAL vectors — normalization only steered the bucketing
-    val vecs = df.select(col(idCol), col(vecCol),
-      V.norm(col(vecCol)).as("__nrm"))
-    pairs
-      .join(vecs.toDF("id_a", "__v_a", "__n_a"), Seq("id_a"))
-      .join(vecs.toDF("id_b", "__v_b", "__n_b"), Seq("id_b"))
-      .withColumn("cosine", V.cosineGivenNorms(
-        col("__v_a"), col("__v_b"), col("__n_a"), col("__n_b")))
-      .filter(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
+    // cosine on the ORIGINAL vectors — normalization only steered the
+    // bucketing
+    cosineVerified(df, vecCol, idCol, threshold)((a, b) =>
+      pairs.join(a, Seq("id_a")).join(b, Seq("id_b")))
   }
 
   /** End-to-end SemDeDup: [[semanticDedupPairs]] → connected components →

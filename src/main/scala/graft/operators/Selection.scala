@@ -120,20 +120,18 @@ object Selection {
     * their stratum; ties at the threshold are all kept, so the kept count
     * is approximate in exchange for the missing sort (the documented
     * trade-off vs the exact variant). The thresholds relation has one row
-    * per stratum: it is broadcast only while MEASURED under
-    * `maxBroadcastRows` (via [[Dedup.sizeGatedFilterJoin]]) — a
+    * per stratum: it is broadcast only while MEASURED under Dedup's fixed
+    * broadcast gate (via [[Dedup.sizeGatedFilterJoin]]) — a
     * high-cardinality strata column (e.g. domain) degrades to a shuffled
     * join instead of an unbounded driver broadcast. */
   def topFractionApproxPerStratum(df: DataFrame, strataCol: String,
                                   scoreCol: String, fraction: Double,
-                                  accuracy: Int = 10000,
-                                  maxBroadcastRows: Long = 1000000L): DataFrame = {
+                                  accuracy: Int = 10000): DataFrame = {
     require(fraction >= 0.0 && fraction <= 1.0, "fraction must be in [0,1]")
     val thresholds = df.groupBy(strataCol).agg(
       percentile_approx(col(scoreCol), lit(1.0 - fraction), lit(accuracy))
         .as("__thr"))
-    Dedup.sizeGatedFilterJoin(df, thresholds, Seq(strataCol), "inner",
-        maxBroadcastRows)
+    Dedup.sizeGatedFilterJoin(df, thresholds, Seq(strataCol), "inner")
       .filter(col(scoreCol) >= col("__thr"))
       .drop("__thr")
   }
@@ -141,7 +139,7 @@ object Selection {
   /** Scale path for [[quantileBinsPerStratum]]: per-stratum bin THRESHOLDS
     * from one `approx_percentile` aggregation pass (the interior
     * `(1/bins … (bins−1)/bins)` quantiles of `scoreCol`, error bounded by
-    * `accuracy`), joined back under the measured broadcast gate and
+    * `accuracy`), joined back under Dedup's fixed broadcast gate and
     * assigned scan-side — no per-stratum sort, no single-task stratum,
     * the plan that survives an unbounded 100 TB stratum. Bin 1 is best
     * (highest scores), mirroring the exact variant's rank order; a score
@@ -156,10 +154,9 @@ object Selection {
     * the equal-count property is approximate. */
   def quantileBinsApproxPerStratum(df: DataFrame, strataCol: String,
                                    scoreCol: String, tokensCol: String,
-                                   bins: Int = 10, accuracy: Int = 10000,
-                                   maxBroadcastRows: Long = 1000000L): DataFrame =
-    assignQuantileBinsApproxPerStratum(df, strataCol, scoreCol, bins,
-        accuracy, maxBroadcastRows)
+                                   bins: Int = 10,
+                                   accuracy: Int = 10000): DataFrame =
+    assignQuantileBinsApproxPerStratum(df, strataCol, scoreCol, bins, accuracy)
       .groupBy(col(strataCol), col("bin"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col(tokensCol).cast("long")).as("tokens"),
@@ -175,9 +172,7 @@ object Selection {
     * per-stratum sort anywhere. */
   def assignQuantileBinsApproxPerStratum(df: DataFrame, strataCol: String,
                                          scoreCol: String, bins: Int = 10,
-                                         accuracy: Int = 10000,
-                                         maxBroadcastRows: Long = 1000000L)
-      : DataFrame = {
+                                         accuracy: Int = 10000): DataFrame = {
     require(bins > 0, s"bins must be positive, got $bins")
     // NULL scores must land in a NULL bin, not silently in the worst one:
     // `t < score` evaluates to NULL for a NULL score, the filter HOF drops
@@ -190,8 +185,7 @@ object Selection {
       val qs = array((1 until bins).map(i => lit(i.toDouble / bins)): _*)
       val thresholds = df.groupBy(strataCol).agg(
         percentile_approx(col(scoreCol), qs, lit(accuracy)).as("__thrs"))
-      Dedup.sizeGatedFilterJoin(df, thresholds, Seq(strataCol),
-          "inner", maxBroadcastRows)
+      Dedup.sizeGatedFilterJoin(df, thresholds, Seq(strataCol), "inner")
         // thresholds ascend; c = how many sit strictly below this score;
         // bins − c maps the top segment to bin 1, the bottom to bin `bins`
         .withColumn("bin",
@@ -266,7 +260,7 @@ object Selection {
     * maps (per-domain, per-url-host — strata counts far past
     * [[MaxRecipeStrata]]): `ratesDf` is a (strataCol, `rate` DOUBLE)
     * relation; each row's md5 coin is compared against its stratum's
-    * threshold after a size-gated join (broadcast under the row cap,
+    * threshold after a size-gated join (broadcast under Dedup's fixed gate,
     * shuffled past it — never an unbounded driver broadcast). Strata
     * absent from `ratesDf` fall back to `defaultRate`. Rate-for-rate
     * IDENTICAL survivors to [[sampleStrata]] — the same md5 coin and the
@@ -285,8 +279,8 @@ object Selection {
     * silently take the default), and rates outside [0, 1] fail at
     * evaluation time via an engine-side check constraint. */
   def sampleStrataJoin(df: DataFrame, strataCol: String, keyCol: String,
-                       ratesDf: DataFrame, defaultRate: Double = 0.0,
-                       maxBroadcastRows: Long = 1000000L): DataFrame = {
+                       ratesDf: DataFrame,
+                       defaultRate: Double = 0.0): DataFrame = {
     require(defaultRate >= 0.0 && defaultRate <= 1.0,
       "defaultRate must be in [0,1]")
     // one rate per stratum is a correctness precondition, so it is
@@ -305,7 +299,7 @@ object Selection {
             col(strataCol).cast("string"))))
           .otherwise(col("__rate")).as("__rate"))
     graft.operators.Dedup.sizeGatedFilterJoin(
-        df, rates, Seq(strataCol), "left_outer", maxBroadcastRows)
+        df, rates, Seq(strataCol), "left_outer")
       .filter(substring(md5(col(keyCol).cast("string")), 1, 8)
         < thresholdExpr(coalesce(col("__rate"), lit(defaultRate))))
       .drop("__rate")

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -132,6 +134,42 @@ class DedupSpec extends SparkSpec {
     val stored = run(Some(keys))
     stored shouldBe direct
     stored shouldBe Set((11L, 3L, false))
+  }
+
+  test("minHashLshAgainst never asks Spark to cache a relation that is " +
+    "already cached, with or without stored keys") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val old = Seq((0L, "the quick brown fox jumps over the lazy dog"),
+      (1L, "completely different content about spark engines and shuffles"))
+      .toDF("doc_id", "text")
+    val fresh = Seq((10L, "the quick brown fox jumps over the lazy dog"))
+      .toDF("doc_id", "text")
+    val keys = Dedup.minHashBandKeys(old, "text", "doc_id")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("dedup-double-cache", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.execution.CacheManager").asInstanceOf[CoreLogger]
+    logger.addAppender(appender)
+    try {
+      Seq(None, Some(keys)).foreach { ok =>
+        spark.catalog.clearCache()
+        Dedup.minHashLshAgainst(fresh, old, "text", "doc_id", threshold = 1.0,
+          oldKeys = ok).select("id_new", "id_other").as[(Long, Long)]
+          .collect().toSet shouldBe Set((10L, 0L))
+      }
+    } finally {
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+    seen.asScala.filter(_.contains("Asked to cache already cached data")) shouldBe empty
   }
 
   test("PROPERTY: minHashLshAgainst equals the full self-join restricted to " +
@@ -362,31 +400,37 @@ class DedupSpec extends SparkSpec {
     val savedAqe = conf.getOption("spark.sql.adaptive.autoBroadcastJoinThreshold")
     try {
       // kill automatic broadcasts so any BroadcastExchange in the plan can
-      // only come from this operator's explicit size-gated hint
+      // only come from the explicit size-gated hint
       conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
       // high-duplication corpus: ten docs sharing boilerplate shingles
       // (df=10 > maxDf=5 -> NONEMPTY stop set; an empty one would count
-      // 0 <= 0 and legitimately broadcast) plus one near-dup pair that
-      // survives stop-shingle removal (nonempty candidate-id set)
+      // 0 <= 0 and legitimately broadcast) plus one near-dup pair whose
+      // shingles survive stop-shingle removal
       val corpus = ((0L to 9L).map(i =>
           (i, s"common header boilerplate prefix line number $i")) ++ Seq(
           (10L, "alpha beta gamma delta epsilon"),
           (11L, "alpha beta gamma delta zeta"))).toDF("doc_id", "text")
+      // the exploded shingles and the maxDf = 5 stop set, as the exact
+      // pair operators build them
+      val sh = corpus.select(col("doc_id"), explode(
+        graft.functions.HashFunctions.wordShingles(
+          graft.functions.TextFunctions.tokens(lower(col("text"))), 3)).as("__sh"))
+      val stop = sh.groupBy("__sh").agg(count(lit(1)).as("__df"))
+        .filter(col("__df") > 5).select("__sh")
       // an earlier test's persisted fragments would splice InMemoryRelations
       // (with their ORIGINAL physical plans, broadcasts included) into this
       // test's plans — inspect fresh plans only
-      def run(maxBroadcastRows: Long) = {
+      def run(join: => org.apache.spark.sql.DataFrame) = {
         spark.catalog.clearCache()
-        Dedup.ngramJaccardPairs(
-          corpus, "text", "doc_id", shingleSize = 3, threshold = 0.1,
-          maxDf = 5, strategy = "single",
-          maxBroadcastRows = maxBroadcastRows).orderBy("id_a", "id_b")
+        join.orderBy("doc_id", "__sh")
       }
-      val gated = run(0L)
+      val gated = run(Dedup.sizeGatedFilterJoin(sh, stop, Seq("__sh"),
+        "left_anti", maxBroadcastRows = 0L))
       val gatedRows = gated.collect().toSeq
       gated.queryExecution.executedPlan.toString should not include "BroadcastExchange"
-      val hinted = run(1000000L)
+      val hinted = run(Dedup.sizeGatedFilterJoin(sh, stop, Seq("__sh"),
+        "left_anti"))
       val hintedRows = hinted.collect().toSeq
       hinted.queryExecution.executedPlan.toString should include("BroadcastExchange")
       gatedRows.nonEmpty shouldBe true
