@@ -26,8 +26,12 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, Codegen
   *
   * A kernel may return null for a non-null input (e.g. an empty-signature
   * document): the generated code maps that to `isNull`, matching the
-  * interpreted `eval` contract. */
+  * interpreted `eval` contract. So the expression is always nullable: for
+  * a non-nullable child Spark declares no `isNull` variable, and the
+  * generated assignment would not compile. */
 trait KernelCodegen extends UnaryExpression {
+
+  override def nullable: Boolean = true
 
   /** Public bridge so generated Java can reach the protected kernel. */
   final def kernel(input: Any): Any = nullSafeEval(input)

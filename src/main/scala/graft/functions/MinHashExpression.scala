@@ -33,7 +33,6 @@ case class MinHashSigExpr(child: Expression, numHashes: Int, seed: Long = 42L)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_sig"
-  override def nullable: Boolean = true
 
   private val prime = HashFunctions.Prime
   // coefficient pairs flattened once at plan time

@@ -245,14 +245,18 @@ object SnapshotStore {
   def numBuckets(spark: SparkSession, root: String): Option[Int] =
     getProperty(spark, root, "nBuckets").map(_.toInt)
 
+  /** A comma-separated column list property; empty when absent. */
+  private def columnsProp(props: Map[String, String], key: String): Seq[String] =
+    props.get(key)
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .getOrElse(Nil)
+
   /** Cluster columns fixed at store creation (empty when the store is
     * unclustered). Every rewrite path ([[upsert]], [[compact]]) keeps each
     * written file sorted by these columns — see the `clusterBy` doc on
     * [[upsert]]. */
   def clusterColumns(spark: SparkSession, root: String): Seq[String] =
-    getProperty(spark, root, "clusterBy")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil)
+    columnsProp(readProps(fs(spark, root), root), "clusterBy")
 
   /** Discriminant (merge-key) columns recorded at store creation. Bucket
     * assignment hashes these columns, so they are a PHYSICAL-LAYOUT
@@ -264,9 +268,7 @@ object SnapshotStore {
     * Empty only for stores created before the property existed; the next
     * upsert records it. */
   def discriminantColumns(spark: SparkSession, root: String): Seq[String] =
-    getProperty(spark, root, "discriminant")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil)
+    columnsProp(readProps(fs(spark, root), root), "discriminant")
 
   private def bucketExpr(disc: Seq[Column], nBuckets: Int): Column =
     pmod(hash(disc: _*), lit(nBuckets))
@@ -302,12 +304,18 @@ object SnapshotStore {
   private def bucketPath(root: String, version: Long, bucket: Int): String =
     s"$root/snapshot=$version/$bucketCol=$bucket"
 
+  /** An empty frame the optimizer KNOWS is empty (a local relation, not an
+    * empty RDD): a merge against it loses its join at plan time, so the
+    * write keeps the batch's own partitioning instead of depending on
+    * whether AQE saw the empty side before the batch's shuffle finished. */
+  private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+
   private def readBuckets(spark: SparkSession, root: String, m: Manifest,
                           only: Option[Set[Int]]): DataFrame = {
     val entries = only.fold(m.buckets)(s => m.buckets.view.filterKeys(s).toMap)
-    if (entries.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
+    if (entries.isEmpty) emptyFrame(spark, m.schema)
     else {
       val paths = entries.toSeq.sorted.map { case (b, v) => bucketPath(root, v, b) }
       spark.read.schema(m.schema).parquet(paths: _*)
@@ -885,6 +893,23 @@ object SnapshotStore {
     * own materialization pass; pass a fixed `cfg.clock` when exact stamp
     * equality between snapshot and written-rows output matters.
     *
+    * `updates` is evaluated ONCE (eager localCheckpoint of the batch
+    * conformed to the stored types — bounded: about |batch| rows, the
+    * same order `written` holds): the touched-bucket set is observed by
+    * that materializing job, and the merge write and both result frames
+    * read the materialization. A
+    * nondeterministic input (a live JDBC source, limit/sample, a
+    * nondeterministic expression) re-evaluated per job would
+    * desynchronize them — a key that moved between evaluations would be
+    * written to a bucket the touched set never read, and the manifest
+    * would point that bucket at a directory holding only the moved row,
+    * silently dropping the bucket's stored rows. The full outer merge over
+    * the touched buckets runs once, for the write; `written`/`errors` come
+    * from a merge of the batch-keyed slice (touched target rows
+    * left-semi-joined to the batch keys on the same plain `=`): every row
+    * of either output carries a batch key, so they are row for row the
+    * full merge's, at O(batch) instead of O(touched buckets).
+    *
     * `nBuckets` applies only when the store is created by this call; an
     * existing store keeps its recorded bucket count. The touched-bucket set
     * is collected to the driver, but it is bounded by `nBuckets`, not by
@@ -926,7 +951,10 @@ object SnapshotStore {
       "discriminant column names must be non-empty and comma-free")
     val f = fs(spark, root)
     val currentOpt = currentVersion(spark, root)
-    val buckets = numBuckets(spark, root).getOrElse(nBuckets)
+    // the meta file is read once; bucket count, clustering, discriminant
+    // and the backfill decision below all come from this map
+    val props = readProps(f, root)
+    val buckets = props.get("nBuckets").map(_.toInt).getOrElse(nBuckets)
     // legacy (pre-manifest) committed stores have no manifest: read the
     // full snapshot and rewrite everything once — a one-shot migration to
     // the bucketed layout
@@ -948,7 +976,7 @@ object SnapshotStore {
       case (Some(v), None) => Some(readVersion(spark, root, v).schema) // legacy
       case _ => None
     }
-    val u = storedSchema.fold(updates) { sch =>
+    val conformed = storedSchema.fold(updates) { sch =>
       updates.columns.foldLeft(updates) { (d, c) =>
         sch.fields.find(_.name == c) match {
           case Some(fld) if fld.dataType != d.schema(c).dataType =>
@@ -957,26 +985,42 @@ object SnapshotStore {
         }
       }
     }
-    val touched: Set[Int] = u
-      .select(bucketExpr(cfg.discriminant.map(col), buckets).as(bucketCol))
-      .distinct()
-      .collect().map(_.getInt(0)).toSet
+    // Materialized ONCE (see the evaluated-once contract above): every job
+    // below reads this checkpoint, never the caller's lineage. The touched
+    // bucket set is observed by the materializing job itself, from the
+    // very rows the later jobs read, so it costs no job of its own; it is
+    // read from the checkpoint's own query execution, whose accumulators
+    // are complete when the eager checkpoint returns.
+    val metric = "__graft_touched_buckets"
+    val observed = conformed.observe(metric,
+      collect_set(bucketExpr(cfg.discriminant.map(col), buckets)).as(bucketCol))
+    val u = observed.localCheckpoint(true)
+    val touched: Set[Int] = observed.queryExecution.observedMetrics(metric)
+      .getSeq[Int](0).toSet
 
     // merge sees only the touched buckets' rows — the pruned multi-path
     // scan is what makes a small batch O(touched), not O(table)
     val target = (currentOpt, oldManifest) match {
       case (Some(_), Some(m)) => readBuckets(spark, root, m, Some(touched))
       case (Some(v), None) => readVersion(spark, root, v) // legacy: full table
-      case (None, _) => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], u.schema)
+      case (None, _) => emptyFrame(spark, u.schema)
     }
 
-    val result = InsertOrUpdate.merge(target, u, cfg)
+    // the full merge only supplies the new bucket contents: its errors are
+    // the slice's, so the errorsAsData = false fail-fast check runs once,
+    // in the slice's merge (still before any claim)
+    val merged = InsertOrUpdate.merge(target, u, cfg.copy(errorsAsData = true))
+      .target
+    // `written`/`errors` from the batch-keyed slice
+    val sliced = InsertOrUpdate.merge(
+      target.join(u.select(cfg.discriminant.map(col): _*),
+        cfg.discriminant, "left_semi"),
+      u, cfg)
     // an existing store's recorded clustering wins (creation-time, like
     // nBuckets); validate BEFORE claiming the version so a typo fails
     // without leaving a stale claim behind
     val cluster: Seq[String] =
-      if (currentOpt.isDefined) clusterColumns(spark, root) else clusterBy
+      if (currentOpt.isDefined) columnsProp(props, "clusterBy") else clusterBy
     // a conflicting layout request on an existing store fails LOUDLY —
     // silently dropping it would hand the caller unclustered (or
     // differently-clustered) files while they believe clusterBy held
@@ -988,7 +1032,7 @@ object SnapshotStore {
           s"but this upsert requested ${clusterBy.mkString(",")}; the " +
           "recorded creation-time layout wins — re-create the store to " +
           "change it")
-    cluster.foreach(c => require(result.target.columns.contains(c),
+    cluster.foreach(c => require(merged.columns.contains(c),
       s"clusterBy column '$c' is not a stored column"))
     // the discriminant is layout-load-bearing (bucket assignment hashes
     // it): an upsert with a different key set would probe the wrong
@@ -996,7 +1040,7 @@ object SnapshotStore {
     // against the recorded creation-time discriminant fails loudly BEFORE
     // claiming (stores created before the property record it on their
     // next upsert instead)
-    val recordedDisc = discriminantColumns(spark, root)
+    val recordedDisc = columnsProp(props, "discriminant")
     if (currentOpt.isDefined && recordedDisc.nonEmpty)
       require(cfg.discriminant == recordedDisc,
         s"store at $root records discriminant=${recordedDisc.mkString(",")} " +
@@ -1006,7 +1050,7 @@ object SnapshotStore {
     val next = currentOpt.getOrElse(-1L) + 1L
     claim(f, root, next)
 
-    val withBucket = result.target
+    val withBucket = merged
       .withColumn(bucketCol, bucketExpr(cfg.discriminant.map(col), buckets))
     val arranged =
       if (cluster.isEmpty) withBucket
@@ -1028,18 +1072,16 @@ object SnapshotStore {
     val newBuckets =
       oldManifest.fold(Map.empty[Int, Long])(_.buckets.view.filterKeys(!touched(_)).toMap) ++
         writtenBuckets.map(_ -> next)
-    writeManifest(f, root, next,
-      Manifest(result.target.schema, newBuckets))
+    writeManifest(f, root, next, Manifest(merged.schema, newBuckets))
 
     // absent for new stores AND legacy stores being migrated; merged so
     // application properties set before the first commit survive. The
     // discriminant backfill also upgrades pre-property stores on their
     // next upsert (their recorded nBuckets is preserved — `buckets`
     // already resolved to it above).
-    val existingProps = readProps(f, root)
-    if (numBuckets(spark, root).isEmpty ||
-        existingProps.get("discriminant").forall(_.trim.isEmpty))
-      writeProps(f, root, existingProps +
+    if (!props.contains("nBuckets") ||
+        props.get("discriminant").forall(_.trim.isEmpty))
+      writeProps(f, root, props +
         ("nBuckets" -> buckets.toString) +
         ("discriminant" -> cfg.discriminant.mkString(",")) ++
         (if (cluster.nonEmpty) Map("clusterBy" -> cluster.mkString(","))
@@ -1047,8 +1089,8 @@ object SnapshotStore {
     commitPointer(f, root, next)
     MergeResult(
       target = readVersion(spark, root, next),
-      written = result.written.localCheckpoint(true),
-      errors = result.errors.localCheckpoint(true))
+      written = sliced.written.localCheckpoint(true),
+      errors = sliced.errors.localCheckpoint(true))
   }
 
   /** Create-exclusive claim on `version`: exactly one writer can ever hold

@@ -471,4 +471,24 @@ class FunctionsSpec extends SparkSpec {
       graft.functions.MisraGriesAgg(col("toks"), 0)
     }
   }
+
+  test("KernelCodegen over a non-nullable child compiles: SimHashExpr over " +
+    "flatten(collect_list(...)) gives the same rows under CODEGEN_ONLY as " +
+    "under NO_CODEGEN") {
+    val df = Seq(("en", Seq("the", "cat", "and")), ("en", Seq("dog", "the")),
+        ("es", Seq("el", "que")), ("und", Seq.empty[String])).toDF("g", "toks")
+      .groupBy("g").agg(flatten(collect_list(col("toks"))).as("all"))
+    df.schema("all").nullable shouldBe false
+    val key = "spark.sql.codegen.factoryMode"
+    def sketches(mode: String): Seq[(String, Long)] = {
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key, mode)
+      try df.select(col("g"), graft.functions.SimHashExpr(col("all")))
+        .orderBy("g").as[(String, Long)].collect().toSeq
+      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    val generated = sketches("CODEGEN_ONLY")
+    generated.map(_._1) shouldBe Seq("en", "es", "und")
+    generated shouldBe sketches("NO_CODEGEN")
+  }
 }

@@ -721,6 +721,51 @@ class SnapshotStoreSpec extends SparkSpec
     r.errors.count() shouldBe 0
   }
 
+  test("upsert evaluates its batch once: a one-row batch whose key changes " +
+    "between evaluations lands whole and drops no stored bucket") {
+    val root = tempRoot("graft_snap_once")
+    val nb = 4
+    SnapshotStore.upsert(spark, root,
+      (0L until 100L).map(i => (i, s"v$i")).toDF("id", "value"), cfg,
+      nBuckets = nb)
+    def bucketOf(k: Long): Int =
+      spark.range(1).select(pmod(hash(lit(k)), lit(nb))).head().getInt(0)
+    val keyA = 1000L
+    val keyB = (1001L to 1100L).find(k => bucketOf(k) != bucketOf(keyA)).get
+    // first call returns keyA, every later call keyB (a live source or a
+    // nondeterministic expression read twice); the counter is JVM-global,
+    // which holds because the suite runs on a local master
+    SnapshotStoreSpec.batchEvaluations.set(0)
+    val movingKey = udf { () =>
+      if (SnapshotStoreSpec.batchEvaluations.incrementAndGet() == 1) keyA
+      else keyB
+    }.asNondeterministic()
+    val r = SnapshotStore.upsert(spark, root,
+      spark.range(1).select(movingKey().as("id"), lit("new").as("value")), cfg)
+    r.written.select("id").as[Long].collect() shouldBe Array(keyA)
+    r.errors.count() shouldBe 0
+    SnapshotStoreSpec.batchEvaluations.get() shouldBe 1
+    SnapshotStore.read(spark, root).get.orderBy("id").as[(Long, String)]
+      .collect().toSeq shouldBe
+      (0L until 100L).map(i => (i, s"v$i")) :+ ((keyA, "new"))
+  }
+
+  test("an empty batch, with or without partitions, commits a version " +
+    "that reads the same rows and writes nothing") {
+    val root = tempRoot("graft_snap_emptybatch")
+    SnapshotStore.upsert(spark, root,
+      Seq((1L, "a"), (2L, "b")).toDF("id", "value"), cfg)
+    val noPartitions = Seq.empty[(Long, String)].toDF("id", "value")
+    val noRows = spark.range(100).select(col("id"), lit("x").as("value"))
+      .filter(col("id") < 0)
+    for ((batch, v) <- Seq(noPartitions, noRows).zip(Seq(1L, 2L))) {
+      SnapshotStore.upsert(spark, root, batch, cfg).written.count() shouldBe 0
+      SnapshotStore.currentVersion(spark, root) shouldBe Some(v)
+      SnapshotStore.read(spark, root).get.orderBy("id").as[(Long, String)]
+        .collect().toSeq shouldBe Seq((1L, "a"), (2L, "b"))
+    }
+  }
+
   /** All parquet data files under every snapshot dir of `root`. */
   private def dataFiles(root: String): Seq[java.nio.file.Path] = {
     val s = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
@@ -1047,4 +1092,9 @@ class SnapshotStoreSpec extends SparkSpec
     finally in2.close()
     text2 shouldBe "k=w\n"
   }
+}
+
+object SnapshotStoreSpec {
+  /** Evaluations of the moving-key batch in the evaluated-once test. */
+  val batchEvaluations = new java.util.concurrent.atomic.AtomicInteger()
 }
