@@ -127,8 +127,8 @@ object Layout {
     * estimate's cost is `sampleBuckets/nBuckets` of the full scan; its
     * fidelity is measured in SCALEPROBE `zorder_gauge`). `occupied` and
     * `rows` describe the SAMPLE, not the store, under sampling. A store
-    * with ≤ `sampleBuckets` manifest buckets (or a legacy pre-manifest
-    * store) reads in full — sampling never costs a second pass. */
+    * with ≤ `sampleBuckets` manifest buckets reads in full — sampling never
+    * costs a second pass. */
   def zOrderDriftStats(spark: SparkSession, root: String,
                        sampleBuckets: Int = 0): DataFrame =
     driftStatsFrom(spark, driftSource(spark, root, sampleBuckets)._1,
@@ -139,7 +139,7 @@ object Layout {
     * whether it ACTUALLY sampled — the single owner of the sampling
     * predicate, so [[zOrderMaintain]]'s escalation logic can never
     * disagree with what the gauge read (a store with ≤ `sampleBuckets`
-    * manifest buckets, or a legacy pre-manifest store, reads in full). */
+    * manifest buckets reads in full). */
   private def driftSource(spark: SparkSession, root: String,
                           sampleBuckets: Int): (DataFrame, Boolean) = {
     val ids = SnapshotStore.manifestBucketIds(spark, root)

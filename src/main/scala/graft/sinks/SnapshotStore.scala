@@ -23,11 +23,10 @@ import org.apache.spark.sql.types.StructType
   * writes only those bucket directories; the new manifest points untouched
   * buckets at the older snapshot directories that already hold their data.
   * This is what makes the store hold at 100 TB: a small update batch costs
-  * O(touched buckets) read+write, not O(table) — the previous full-snapshot
-  * design re-wrote the entire table per batch. Readers resolve the pointer,
-  * read that version's manifest, and scan the referenced bucket directories
-  * (a plain multi-path parquet scan; time-travel reads any retained
-  * manifest the same way).
+  * O(touched buckets) read+write, not O(table). Readers resolve the
+  * pointer, read that version's manifest, and scan the referenced bucket
+  * directories (a plain multi-path parquet scan; time-travel reads any
+  * retained manifest the same way).
   *
   * Commit protocol: a writer first CLAIMS its target version by creating
   * `claim=N` with create-exclusive semantics — two concurrent writers that
@@ -66,10 +65,13 @@ object SnapshotStore {
   private def fs(spark: SparkSession, root: String): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def readSmallFile(f: FileSystem, p: Path): String = {
-    val in = f.open(p)
-    try new String(in.readAllBytes(), "UTF-8") finally in.close()
-  }
+  /** A small control file's content, None when it does not exist — one
+    * `open`, no separate existence probe. */
+  private def readSmallFile(f: FileSystem, p: Path): Option[String] =
+    try {
+      val in = f.open(p)
+      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
 
   private def writeSmallFile(f: FileSystem, p: Path, s: String,
                              overwrite: Boolean): Unit = {
@@ -78,22 +80,20 @@ object SnapshotStore {
   }
 
   /** Committed snapshot version, if any. */
-  def currentVersion(spark: SparkSession, root: String): Option[Long] = {
-    val f = fs(spark, root)
-    val p = new Path(root, pointerName)
-    if (!f.exists(p)) None else Some(readSmallFile(f, p).trim.toLong)
-  }
+  def currentVersion(spark: SparkSession, root: String): Option[Long] =
+    committedVersion(fs(spark, root), root)
 
-  private def readProps(f: FileSystem, root: String): Map[String, String] = {
-    val p = new Path(root, metaName)
-    if (!f.exists(p)) Map.empty
-    else readSmallFile(f, p).linesIterator.flatMap { l =>
+  private def committedVersion(f: FileSystem, root: String): Option[Long] =
+    readSmallFile(f, new Path(root, pointerName)).map(_.trim.toLong)
+
+  private def readProps(f: FileSystem, root: String): Map[String, String] =
+    readSmallFile(f, new Path(root, metaName)).fold(
+      Map.empty[String, String])(_.linesIterator.flatMap { l =>
       l.split("=", 2) match {
         case Array(k, v) if k.trim.nonEmpty => Some(k.trim -> v.trim)
         case _ => None
       }
-    }.toMap
-  }
+    }.toMap)
 
   private def writeProps(f: FileSystem, root: String,
                          props: Map[String, String]): Unit =
@@ -150,12 +150,7 @@ object SnapshotStore {
                                                   name: String,
                                                   content: String): Unit =
     if (atomicRenameCapable(f)) atomicReplaceSmallFile(f, root, name, content)
-    else {
-      val out = f.create(new Path(root, name), true)
-      try out.write(content.getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
+    else writeSmallFile(f, new Path(root, name), content, overwrite = true)
 
   private[graft] def atomicReplaceSmallFile(f: FileSystem, root: String,
                                             name: String,
@@ -265,10 +260,22 @@ object SnapshotStore {
     * keys across buckets (the stored row lives in hash(keyA)'s bucket,
     * the update lands in hash(keyB)'s). [[upsert]] therefore validates
     * its config against this recording and fails loudly on a mismatch.
-    * Empty only for stores created before the property existed; the next
-    * upsert records it. */
+    * Empty only for a store whose recording is missing; [[upsert]],
+    * [[delete]] and [[changes]] refuse such a store. */
   def discriminantColumns(spark: SparkSession, root: String): Seq[String] =
     columnsProp(readProps(fs(spark, root), root), "discriminant")
+
+  /** The recorded discriminant; every path that hashes or joins on the
+    * merge key refuses a store without one rather than guess it. */
+  private def requireDiscriminant(root: String,
+                                  props: Map[String, String]): Seq[String] = {
+    val disc = columnsProp(props, "discriminant")
+    require(disc.nonEmpty,
+      s"store at $root has no recorded discriminant — bucket assignment " +
+        "hashes it, so record the merge key first: setProperty(spark, " +
+        "root, \"discriminant\", \"<comma-separated key columns>\")")
+    disc
+  }
 
   private def bucketExpr(disc: Seq[Column], nBuckets: Int): Column =
     pmod(hash(disc: _*), lit(nBuckets))
@@ -286,10 +293,17 @@ object SnapshotStore {
     writeSmallFile(f, manifestPath(root, version), body, overwrite = false)
   }
 
-  private def readManifest(spark: SparkSession, root: String,
+  /** The manifest of `version`; a version without one fails loudly,
+    * naming the missing file. */
+  private def readManifest(f: FileSystem, root: String,
                            version: Long): Manifest = {
-    val f = fs(spark, root)
-    val lines = readSmallFile(f, manifestPath(root, version)).linesIterator.toSeq
+    val p = manifestPath(root, version)
+    val lines = readSmallFile(f, p).getOrElse(throw
+      new IllegalArgumentException(s"snapshot=$version of $root has no " +
+        s"$manifestName ($p) — either the version never committed, " +
+        "vacuum() reclaimed it (raise `keep` to cover the slowest " +
+        "reader's or change-feed consumer's lag), or it was not written " +
+        "in the bucketed-manifest format")).linesIterator.toSeq
     val schema = lines.collectFirst { case l if l.startsWith("schema=") =>
       StructType.fromDDL(l.stripPrefix("schema=")) }
       .getOrElse(throw new IllegalStateException(
@@ -299,6 +313,24 @@ object SnapshotStore {
       b.trim.toInt -> v.trim.toLong
     }.toMap
     Manifest(schema, buckets)
+  }
+
+  /** A store's control files as one call sees them, each read once: the
+    * properties, and the committed version with its manifest (`head`,
+    * None before the first commit). */
+  private final case class Opened(f: FileSystem, root: String,
+                                  props: Map[String, String],
+                                  head: Option[(Long, Manifest)]) {
+    def committed: (Long, Manifest) = head.getOrElse(throw
+      new IllegalArgumentException(s"store at $root has no committed version"))
+    def nBuckets: Option[Int] = props.get("nBuckets").map(_.toInt)
+    def cluster: Seq[String] = columnsProp(props, "clusterBy")
+  }
+
+  private def open(spark: SparkSession, root: String): Opened = {
+    val f = fs(spark, root)
+    Opened(f, root, readProps(f, root),
+      committedVersion(f, root).map(v => v -> readManifest(f, root, v)))
   }
 
   private def bucketPath(root: String, version: Long, bucket: Int): String =
@@ -322,6 +354,25 @@ object SnapshotStore {
     }
   }
 
+  /** `buckets` (non-empty) of `m` WITH their `__bucket` column, the input
+    * of the whole-bucket rewrites ([[compact]], [[rewrite]]): one
+    * basePath-anchored multi-path read per HOLDING VERSION, so the plan is
+    * O(referenced versions) legs, not a bucket-count-deep union of
+    * per-bucket relations (thousands of serial footer/listing reads). */
+  private def readHeld(spark: SparkSession, root: String, m: Manifest,
+                       buckets: Set[Int]): DataFrame =
+    buckets.toSeq.groupBy(m.buckets).toSeq.sortBy(_._1)
+      .map { case (ver, bs) =>
+        spark.read.schema(m.schema)
+          .option("basePath", s"$root/snapshot=$ver")
+          .parquet(bs.sorted.map(b => bucketPath(root, ver, b)): _*)
+      }.reduce(_ unionByName _)
+      // the recovered partition column's type follows
+      // spark.sql.sources.partitionColumnTypeInference (StringType when
+      // disabled); pin it so repartition/partitionBy always see the
+      // IntegerType the manifest records, independent of session config
+      .withColumn(bucketCol, col(bucketCol).cast("int"))
+
   // ----------------------------------------------------------------- reads
 
   /** Read the committed snapshot (None if the store is empty).
@@ -343,20 +394,13 @@ object SnapshotStore {
   /** Time-travel read of any retained version: resolve that version's
     * manifest, scan the bucket directories it references (which may live in
     * older `snapshot=` directories — that sharing is the incrementality).
-    * Versions committed by the pre-manifest format (a plain full-snapshot
-    * parquet directory) are read directly — old stores stay readable, and
-    * the next upsert migrates them to the bucketed layout. Carries
-    * [[read]]'s reader-vs-vacuum contract: a `vacuum` that reclaims THIS
-    * version makes actions on the returned DataFrame fail loudly, never
-    * return partial rows — time-travel readers lagging behind the vacuum
-    * horizon must retry against a retained version. */
-  def readVersion(spark: SparkSession, root: String, version: Long): DataFrame = {
-    val f = fs(spark, root)
-    if (f.exists(manifestPath(root, version)))
-      readBuckets(spark, root, readManifest(spark, root, version), None)
-    else
-      spark.read.parquet(s"$root/snapshot=$version") // legacy full snapshot
-  }
+    * A version without a manifest fails loudly. Carries [[read]]'s
+    * reader-vs-vacuum contract: a `vacuum` that reclaims THIS version
+    * makes actions on the returned DataFrame fail loudly, never return
+    * partial rows — time-travel readers lagging behind the vacuum horizon
+    * must retry against a retained version. */
+  def readVersion(spark: SparkSession, root: String, version: Long): DataFrame =
+    readBuckets(spark, root, readManifest(fs(spark, root), root, version), None)
 
   /** Versions whose manifests are still retained — readable for time
     * travel and usable as [[changes]] endpoints — ascending, up to the
@@ -366,27 +410,20 @@ object SnapshotStore {
     * this BEFORE vacuuming. */
   def retainedVersions(spark: SparkSession, root: String): Seq[Long] = {
     val f = fs(spark, root)
-    if (!f.exists(new Path(root))) Seq.empty
-    else currentVersion(spark, root) match {
-      case None => Seq.empty
-      case Some(current) =>
-        f.listStatus(new Path(root)).toSeq.map(_.getPath.getName)
-          .collect { case n if n.startsWith("snapshot=") =>
-            n.stripPrefix("snapshot=").toLong }
-          .filter(v => v <= current && f.exists(manifestPath(root, v)))
-          .sorted
+    committedVersion(f, root).fold(Seq.empty[Long]) { current =>
+      f.listStatus(new Path(root)).toSeq.map(_.getPath.getName)
+        .collect { case n if n.startsWith("snapshot=") =>
+          n.stripPrefix("snapshot=").toLong }
+        .filter(v => v <= current && f.exists(manifestPath(root, v)))
+        .sorted
     }
   }
 
   /** Bucket ids the committed manifest references — empty when the store
-    * has no committed version or predates the bucketed-manifest format.
-    * A driver-side metadata read (one small file), no data scan. */
+    * has no committed version. A driver-side metadata read, no data
+    * scan. */
   def manifestBucketIds(spark: SparkSession, root: String): Set[Int] =
-    currentVersion(spark, root) match {
-      case Some(v) if fs(spark, root).exists(manifestPath(root, v)) =>
-        readManifest(spark, root, v).buckets.keySet
-      case _ => Set.empty
-    }
+    open(spark, root).head.fold(Set.empty[Int])(_._2.buckets.keySet)
 
   /** Pruned read of ONLY the given buckets of the committed version — the
     * primitive behind bucket-SAMPLED health gauges
@@ -398,29 +435,18 @@ object SnapshotStore {
     * cost. Ids absent from the manifest are ignored (a bucket can be
     * empty). */
   def readBucketSubset(spark: SparkSession, root: String,
-                       buckets: Set[Int]): DataFrame = {
-    val v = currentVersion(spark, root).getOrElse(throw
-      new IllegalArgumentException(s"store at $root has no committed version"))
-    require(fs(spark, root).exists(manifestPath(root, v)),
-      s"store at $root predates the bucketed-manifest format; run one " +
-        "upsert to migrate it, then read bucket subsets")
-    readBuckets(spark, root, readManifest(spark, root, v), Some(buckets))
-  }
+                       buckets: Set[Int]): DataFrame =
+    readBuckets(spark, root, open(spark, root).committed._2, Some(buckets))
 
   // ----------------------------------------------------------- change feed
 
-  /** Manifest for `version` if it is still retained, with a vacuum-aware
-    * error when it is not (change-feed reads need BOTH endpoint manifests;
-    * `vacuum(keep=N)` bounds how far back a consumer may lag). */
-  private def retainedManifest(spark: SparkSession, root: String,
-                               version: Long): Manifest = {
-    val f = fs(spark, root)
-    require(f.exists(manifestPath(root, version)),
-      s"snapshot=$version of $root has no retained manifest — either the " +
-        "version never committed, vacuum() reclaimed it (raise `keep` to " +
-        "cover the slowest change-feed consumer's lag), or it predates the " +
-        "bucketed-manifest format")
-    readManifest(spark, root, version)
+  /** Both endpoint manifests of a change-feed window (change-feed reads
+    * need BOTH; `vacuum(keep=N)` bounds how far back a consumer may lag). */
+  private def endpoints(f: FileSystem, root: String, fromVersion: Long,
+                        toVersion: Long): (Manifest, Manifest) = {
+    require(fromVersion <= toVersion,
+      s"fromVersion $fromVersion must be <= toVersion $toVersion")
+    (readManifest(f, root, fromVersion), readManifest(f, root, toVersion))
   }
 
   /** Bucket-granular change feed: the buckets whose data location moved
@@ -432,10 +458,7 @@ object SnapshotStore {
     * row-level [[changes]] diff of such a bucket is empty). */
   def changedBuckets(spark: SparkSession, root: String,
                      fromVersion: Long, toVersion: Long): Set[Int] = {
-    require(fromVersion <= toVersion,
-      s"fromVersion $fromVersion must be <= toVersion $toVersion")
-    val mFrom = retainedManifest(spark, root, fromVersion)
-    val mTo = retainedManifest(spark, root, toVersion)
+    val (mFrom, mTo) = endpoints(fs(spark, root), root, fromVersion, toVersion)
     diffBucketIds(mFrom.buckets, mTo.buckets)
   }
 
@@ -476,18 +499,14 @@ object SnapshotStore {
     * granularity walk (v, v+1) pairs, bounded by vacuum retention. */
   def changes(spark: SparkSession, root: String,
               fromVersion: Long, toVersion: Long): DataFrame = {
-    val spark0 = spark
-    val keys = discriminantColumns(spark, root)
-    require(keys.nonEmpty,
-      s"store at $root has no recorded discriminant (created before the " +
-        "property existed) — run one upsert to backfill it, then diff")
-    val mFrom = retainedManifest(spark, root, fromVersion)
-    val mTo = retainedManifest(spark, root, toVersion)
+    val f = fs(spark, root)
+    val keys = requireDiscriminant(root, readProps(f, root))
+    val (mFrom, mTo) = endpoints(f, root, fromVersion, toVersion)
     require(mFrom.schema == mTo.schema,
       s"schema changed between snapshot=$fromVersion and snapshot=$toVersion")
-    val changed = changedBuckets(spark, root, fromVersion, toVersion)
-    val pre = readBuckets(spark0, root, mFrom, Some(changed))
-    val post = readBuckets(spark0, root, mTo, Some(changed))
+    val changed = diffBucketIds(mFrom.buckets, mTo.buckets)
+    val pre = readBuckets(spark, root, mFrom, Some(changed))
+    val post = readBuckets(spark, root, mTo, Some(changed))
     val dataCols = mTo.schema.fieldNames.toSeq
     val preS = pre.select(
       keys.map(col) :+ struct(dataCols.map(col): _*).as("__pre"): _*)
@@ -522,82 +541,53 @@ object SnapshotStore {
     * readability was removed this call. Single-process only — do not run
     * concurrently with a writer.
     *
-    * Concurrent READERS are safe in the no-silent-partial sense: the
+    * Concurrent READERS are safe in [[read]]'s no-silent-partial sense: the
     * committed version is always retained, and a reader whose resolved
-    * version this call reclaims fails LOUDLY on its next action (absent
-    * inputs are errors under `ignoreMissingFiles=false`) and re-resolves
-    * — it can never read a partial state ([[read]]'s contract; pinned by
-    * SnapshotStoreSpec's reader-vs-vacuum race). Size `keep` to cover
-    * the slowest reader's/change-feed consumer's lag. */
+    * version this call reclaims fails LOUDLY and re-resolves. Size `keep`
+    * to cover the slowest reader's/change-feed consumer's lag. */
   def vacuum(spark: SparkSession, root: String, keep: Int = 2): Seq[Long] = {
     val f = fs(spark, root)
     if (!f.exists(new Path(root))) return Seq.empty
-    val currentOpt = currentVersion(spark, root)
+    val currentOpt = committedVersion(f, root)
     val current = currentOpt.getOrElse(-1L)
     val names = f.listStatus(new Path(root)).toSeq.map(_.getPath.getName)
     val versions = names
       .collect { case n if n.startsWith("snapshot=") => n.stripPrefix("snapshot=").toLong }
       .sorted
-    // one listing per snapshot dir per vacuum, shared by the legacy-data
-    // readability probe below and the sweep loop further down — a second
-    // listStatus per dir doubles driver round-trips on object stores, and
-    // previously-vacuumed shells would otherwise be re-listed on every
-    // vacuum forever
-    val dirEntries: Map[Long, Seq[org.apache.hadoop.fs.FileStatus]] =
-      versions.map(v =>
-        v -> f.listStatus(new Path(root, s"snapshot=$v")).toSeq).toMap
-    // a version is readable either through its manifest or — legacy
-    // pre-manifest format — through bare part files directly under its
-    // snapshot dir; BOTH count toward `keep` retention. Versions already
-    // vacuumed (manifest gone, no bare data) are shells, not candidates —
-    // without this, raising `keep` after a vacuum would try to read a
-    // deleted manifest
-    def hasLegacyData(v: Long): Boolean =
-      dirEntries(v)
-        .exists(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+    // a version is readable through its manifest. Versions already
+    // vacuumed (manifest gone) are shells, not candidates — without this,
+    // raising `keep` after a vacuum would try to read a deleted manifest
     val readableOld = versions
-      .filter(v => v <= current &&
-        (f.exists(manifestPath(root, v)) || hasLegacyData(v)))
+      .filter(v => v <= current && f.exists(manifestPath(root, v)))
     val retained = (readableOld.takeRight(keep.max(1)) ++ currentOpt).distinct
     // every (version, bucket) still referenced by a retained manifest
-    // (legacy pre-manifest current versions contribute nothing — their data
-    // lives directly under their own snapshot dir, untouched below)
     val live: Set[(Long, Int)] = retained
-      .filter(v => f.exists(manifestPath(root, v)))
+      .filter(readableOld.contains)
       .flatMap { v =>
-        // .toSeq FIRST: mapping the Map[bucket -> version] directly
-        // through a pair-swapping function rebuilds a MAP keyed by
-        // version, silently collapsing every bucket that shares a holding
-        // version to ONE surviving entry — vacuum then deleted LIVE
-        // bucket directories (caught by ExamplesSpec's opt-out pipeline:
-        // a store whose manifest pointed seven buckets at version 0 kept
-        // one of them)
-        readManifest(spark, root, v).buckets.toSeq
+        // .toSeq FIRST: swapping the pairs of the Map itself rebuilds a
+        // MAP keyed by version, collapsing all buckets that share a holding
+        // version to ONE entry, and vacuum deleted the others while live
+        readManifest(f, root, v).buckets.toSeq
           .map { case (b, ver) => (ver, b) }
       }.toSet
     val orphans = versions.filter(_ > current)
     val droppedOld = readableOld.filterNot(retained.contains)
     orphans.foreach(v => f.delete(new Path(root, s"snapshot=$v"), true))
-    // also sweep previously-vacuumed shells for buckets nothing points at
-    (droppedOld ++ versions.filter(v =>
-        v <= current && !readableOld.contains(v)))
-      .filterNot(retained.contains).foreach { v =>
-      // drop readability (manifest) and any bucket data nothing points at
+    // every dropped version, and previously-vacuumed shells, loses its
+    // manifest and any bucket data nothing points at
+    versions.filter(v => v <= current && !retained.contains(v)).foreach { v =>
       f.delete(manifestPath(root, v), false)
       var remaining = 0
-      dirEntries(v).foreach { st =>
+      f.listStatus(new Path(root, s"snapshot=$v")).foreach { st =>
         val n = st.getPath.getName
         if (n.startsWith(s"$bucketCol=")) {
           if (!live((v, n.stripPrefix(s"$bucketCol=").toInt)))
             f.delete(st.getPath, true)
           else remaining += 1
         } else
-          // a dropped LEGACY version's full-snapshot part files (and stray
-          // markers): bare files are never shared across versions — only
-          // manifests share buckets — so nothing can reference them once
-          // the version is dropped. Without this a migrated pre-manifest
-          // store leaks every old version's full-table data forever,
-          // still time-travel-readable despite being "vacuumed".
+          // stray non-bucket files (markers): only manifests share data
+          // across versions, so nothing references them once the version
+          // is dropped
           f.delete(st.getPath, true)
       }
       // `remaining` counts the still-live bucket dirs left behind, so the
@@ -637,19 +627,14 @@ object SnapshotStore {
     * `vacuum` already reclaims. Do not run concurrently with a writer
     * (the claim makes the race fail loudly, not silently).
     *
-    * Returns the number of buckets rewritten (0 = store already compact —
-    * nothing claimed, no version consumed). */
+    * Returns the number of buckets rewritten (0 = no committed version or
+    * store already compact — nothing claimed, no version consumed). */
   def compact(spark: SparkSession, root: String,
               maxFilesPerBucket: Int = 1): Int = {
     require(maxFilesPerBucket >= 1, "maxFilesPerBucket must be >= 1")
-    val f = fs(spark, root)
-    val currentOpt = currentVersion(spark, root)
-    if (currentOpt.isEmpty) return 0
-    val v = currentOpt.get
-    // legacy full-snapshot stores have no manifest; the next upsert
-    // migrates them, after which compact applies
-    if (!f.exists(manifestPath(root, v))) return 0
-    val m = readManifest(spark, root, v)
+    val s = open(spark, root)
+    if (s.head.isEmpty) return 0
+    val (v, m) = s.committed
     // one RECURSIVE listing per referenced snapshot directory instead of a
     // listStatus per bucket: at the documented O(10k)-bucket sizing the
     // per-bucket probe is thousands of serial driver round-trips on every
@@ -657,7 +642,7 @@ object SnapshotStore {
     val filesPerBucket: Map[(Long, Int), Int] = m.buckets.values.toSet
       .flatMap { (ver: Long) =>
         val counts = scala.collection.mutable.Map.empty[(Long, Int), Int]
-        val it = f.listFiles(new Path(root, s"snapshot=$ver"), true)
+        val it = s.f.listFiles(new Path(root, s"snapshot=$ver"), true)
         while (it.hasNext) {
           val st = it.next()
           val name = st.getPath.getName
@@ -674,43 +659,13 @@ object SnapshotStore {
       filesPerBucket.getOrElse((ver, b), 0) > maxFilesPerBucket
     }.keySet
     if (frag.isEmpty) return 0
-    val next = v + 1
-    claim(f, root, next)
-    // one read per HOLDING VERSION — multi-path, basePath-anchored so the
-    // bucket partition column is recovered from the directory names —
-    // instead of one relation per fragmented bucket: a long-lived store
-    // compacts thousands of buckets at once, and a per-bucket relation
-    // chain is thousands of serial driver-side footer/listing reads plus
-    // a bucket-count-deep union plan, exactly when compaction is most
-    // needed; grouped, the plan is O(referenced versions) legs.
     // repartition on the bucket column sends each bucket to exactly one
-    // task, so each rewritten directory holds ONE file
-    val union = frag.toSeq.groupBy(b => m.buckets(b)).toSeq.sortBy(_._1)
-      .map { case (ver, bs) =>
-        spark.read.schema(m.schema)
-          .option("basePath", s"$root/snapshot=$ver")
-          .parquet(bs.sorted.map(b => bucketPath(root, ver, b)): _*)
-      }.reduce(_ unionByName _)
-      // the recovered partition column's type follows
-      // spark.sql.sources.partitionColumnTypeInference (StringType when
-      // disabled); pin it so repartition/partitionBy always see the
-      // IntegerType the manifest records, independent of session config
-      .withColumn(bucketCol, col(bucketCol).cast("int"))
-    // a clustered store's compaction re-sorts each bucket (one bucket per
-    // task, so the single rewritten file is FULLY sorted — compaction
-    // also repairs the overlapping per-file ranges multi-task upserts
-    // leave behind)
-    val cluster = clusterColumns(spark, root)
-    val arranged =
-      if (cluster.isEmpty) union.repartition(col(bucketCol))
-      else union.repartition(col(bucketCol))
-        .sortWithinPartitions((bucketCol +: cluster).map(col): _*)
-    arranged
-      .write.mode("overwrite").partitionBy(bucketCol)
-      .parquet(s"$root/snapshot=$next")
-    writeManifest(f, root, next,
-      Manifest(m.schema, m.buckets ++ frag.map(_ -> next)))
-    commitPointer(f, root, next)
+    // task, so each rewritten directory holds ONE file — on a clustered
+    // store a FULLY sorted one, which also repairs the overlapping
+    // per-file ranges multi-task upserts leave behind
+    commit(s.f, root, v + 1,
+      readHeld(spark, root, m, frag).repartition(col(bucketCol)),
+      m.schema, s.cluster, m.buckets -- frag)
     frag.size
   }
 
@@ -740,65 +695,33 @@ object SnapshotStore {
     * bucket lands fully sorted in one file, like [[compact]]. */
   def rewrite(spark: SparkSession, root: String,
               transform: DataFrame => DataFrame): Long = {
-    val f = fs(spark, root)
-    val v = currentVersion(spark, root).getOrElse(throw
-      new IllegalArgumentException(s"store at $root has no committed version"))
-    require(f.exists(manifestPath(root, v)),
-      s"store at $root predates the bucketed-manifest format; run one " +
-        "upsert to migrate it, then rewrite")
-    val m = readManifest(spark, root, v)
+    val s = open(spark, root)
+    val (v, m) = s.committed
     // an emptied-out store (delete() can remove every bucket) has nothing
     // to transform: no-op, no version burn
     if (m.buckets.isEmpty) return v
-    val union = m.buckets.toSeq.groupBy(_._2).toSeq.sortBy(_._1)
-      .map { case (ver, bs) =>
-        spark.read.schema(m.schema)
-          .option("basePath", s"$root/snapshot=$ver")
-          .parquet(bs.map(_._1).sorted.map(b => bucketPath(root, ver, b)): _*)
-      }.reduce(_ unionByName _)
-      .withColumn(bucketCol, col(bucketCol).cast("int"))
-    val transformed = transform(union)
-    require(transformed.columns.sorted.toSeq == union.columns.sorted.toSeq,
+    val held = readHeld(spark, root, m, m.buckets.keySet)
+    val transformed = transform(held)
+    require(transformed.columns.sorted.toSeq == held.columns.sorted.toSeq,
       "rewrite transform must preserve the store's columns (got " +
         s"${transformed.columns.mkString(",")}, expected " +
-        s"${union.columns.mkString(",")})")
+        s"${held.columns.mkString(",")})")
     m.schema.fields.foreach { fld =>
       require(transformed.schema(fld.name).dataType == fld.dataType,
         s"rewrite transform changed the type of '${fld.name}' " +
           s"(${transformed.schema(fld.name).dataType} != ${fld.dataType})")
     }
-    val next = v + 1
-    claim(f, root, next)
-    val cluster = clusterColumns(spark, root)
-    val arranged =
-      if (cluster.isEmpty) transformed.repartition(col(bucketCol))
-      else transformed.repartition(col(bucketCol))
-        .sortWithinPartitions((bucketCol +: cluster).map(col): _*)
-    arranged
-      .write.mode("overwrite").partitionBy(bucketCol)
-      .parquet(s"$root/snapshot=$next")
-    // manifest from the directories the write ACTUALLY produced — a
-    // row-dropping transform (legal: delete-shaped maintenance) can empty
-    // a bucket, and a manifest entry pointing at an unwritten directory
-    // would make every later read of the store throw on a missing path
-    val writtenBuckets = f.listStatus(new Path(root, s"snapshot=$next")).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith(s"$bucketCol=") =>
-        n.stripPrefix(s"$bucketCol=").toInt }
-      .toSet
-    writeManifest(f, root, next,
-      Manifest(m.schema, writtenBuckets.map(_ -> next).toMap))
-    commitPointer(f, root, next)
-    next
+    commit(s.f, root, v + 1, transformed.repartition(col(bucketCol)),
+      m.schema, s.cluster, Map.empty)
+    v + 1
   }
 
   /** Key-granular removal: commit a new version with every row whose
     * discriminant key appears in `keys` deleted — the right-to-be-
     * forgotten / opt-out primitive a training-data store needs, and the
     * write path that makes the change feed's `delete` classification
-    * reachable (until now [[changes]] documented it as "if a removal
-    * path is ever added"; this is that path, and whole-bucket removals
-    * exercise [[diffBucketIds]]' union diff).
+    * reachable (whole-bucket removals exercise [[diffBucketIds]]' union
+    * diff).
     *
     * Scale shape, mirroring [[upsert]]: the keys hash to their buckets
     * (the same conform-to-stored-types discipline — Murmur3 of an INT is
@@ -815,20 +738,12 @@ object SnapshotStore {
     * [[vacuum]] reclaims them — an opt-out pipeline that must FORGET the
     * bytes follows the delete with `vacuum(keep = 1)`. */
   def delete(spark: SparkSession, root: String, keys: DataFrame): Long = {
-    val f = fs(spark, root)
-    val v = currentVersion(spark, root).getOrElse(throw
-      new IllegalArgumentException(s"store at $root has no committed version"))
-    require(f.exists(manifestPath(root, v)),
-      s"store at $root predates the bucketed-manifest format; run one " +
-        "upsert to migrate it, then delete")
-    val disc = discriminantColumns(spark, root)
-    require(disc.nonEmpty,
-      s"store at $root has no recorded discriminant (created before the " +
-        "property existed) — run one upsert to backfill it, then delete")
+    val s = open(spark, root)
+    val (v, m) = s.committed
+    val disc = requireDiscriminant(root, s.props)
     disc.foreach(c => require(keys.columns.contains(c),
       s"keys must carry discriminant column '$c'"))
-    val m = readManifest(spark, root, v)
-    val buckets = numBuckets(spark, root).getOrElse(DefaultBuckets)
+    val buckets = s.nBuckets.getOrElse(DefaultBuckets)
     // conform key types to STORED types before hashing or joining:
     // bucket assignment hashes the stored type, and an unconformed key
     // would probe the wrong bucket and silently delete nothing.
@@ -854,29 +769,12 @@ object SnapshotStore {
     val target = readBuckets(spark, root, m, Some(touched))
     val nDel = target.join(k, disc, "left_semi").count()
     if (nDel == 0L) return 0L
-    val next = v + 1
-    claim(f, root, next)
-    val remaining = target.join(k, disc, "left_anti")
-      .withColumn(bucketCol, bucketExpr(disc.map(col), buckets))
-    val cluster = clusterColumns(spark, root)
-    val arranged =
-      if (cluster.isEmpty) remaining
-      else remaining.sortWithinPartitions((bucketCol +: cluster).map(col): _*)
-    arranged
-      .write.mode("overwrite").partitionBy(bucketCol)
-      .parquet(s"$root/snapshot=$next")
-    val writtenBuckets = f.listStatus(new Path(root, s"snapshot=$next")).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith(s"$bucketCol=") =>
-        n.stripPrefix(s"$bucketCol=").toInt }
-      .toSet
     // touched buckets that produced no surviving rows are NOT re-added:
     // the manifest forgets them (whole-bucket removal)
-    writeManifest(f, root, next,
-      Manifest(m.schema,
-        m.buckets.view.filterKeys(!touched(_)).toMap ++
-          writtenBuckets.map(_ -> next)))
-    commitPointer(f, root, next)
+    commit(s.f, root, v + 1,
+      target.join(k, disc, "left_anti")
+        .withColumn(bucketCol, bucketExpr(disc.map(col), buckets)),
+      m.schema, s.cluster, m.buckets -- touched)
     nDel
   }
 
@@ -911,7 +809,8 @@ object SnapshotStore {
     * full merge's, at O(batch) instead of O(touched buckets).
     *
     * `nBuckets` applies only when the store is created by this call; an
-    * existing store keeps its recorded bucket count. The touched-bucket set
+    * existing store keeps its recorded bucket count (store properties are
+    * written only by the creating commit). The touched-bucket set
     * is collected to the driver, but it is bounded by `nBuckets`, not by
     * the data.
     *
@@ -949,18 +848,8 @@ object SnapshotStore {
     require(cfg.discriminant.nonEmpty &&
       cfg.discriminant.forall(c => c.nonEmpty && !c.contains(",")),
       "discriminant column names must be non-empty and comma-free")
-    val f = fs(spark, root)
-    val currentOpt = currentVersion(spark, root)
-    // the meta file is read once; bucket count, clustering, discriminant
-    // and the backfill decision below all come from this map
-    val props = readProps(f, root)
-    val buckets = props.get("nBuckets").map(_.toInt).getOrElse(nBuckets)
-    // legacy (pre-manifest) committed stores have no manifest: read the
-    // full snapshot and rewrite everything once — a one-shot migration to
-    // the bucketed layout
-    val oldManifest = currentOpt
-      .filter(v => f.exists(manifestPath(root, v)))
-      .map(readManifest(spark, root, _))
+    val s = open(spark, root)
+    val buckets = s.nBuckets.getOrElse(nBuckets)
 
     // Conform the batch to the STORED column types up front (the DB
     // analog: inserting into a typed table coerces values to the columns'
@@ -971,14 +860,9 @@ object SnapshotStore {
     // BIGINT column), and a widened write would both hash rows into
     // buckets the touched set never read AND silently rewrite the store
     // schema in the new manifest.
-    val storedSchema: Option[StructType] = (currentOpt, oldManifest) match {
-      case (_, Some(m)) => Some(m.schema)
-      case (Some(v), None) => Some(readVersion(spark, root, v).schema) // legacy
-      case _ => None
-    }
-    val conformed = storedSchema.fold(updates) { sch =>
+    val conformed = s.head.fold(updates) { case (_, m) =>
       updates.columns.foldLeft(updates) { (d, c) =>
-        sch.fields.find(_.name == c) match {
+        m.schema.fields.find(_.name == c) match {
           case Some(fld) if fld.dataType != d.schema(c).dataType =>
             d.withColumn(c, col(c).cast(fld.dataType))
           case _ => d
@@ -1000,10 +884,8 @@ object SnapshotStore {
 
     // merge sees only the touched buckets' rows — the pruned multi-path
     // scan is what makes a small batch O(touched), not O(table)
-    val target = (currentOpt, oldManifest) match {
-      case (Some(_), Some(m)) => readBuckets(spark, root, m, Some(touched))
-      case (Some(v), None) => readVersion(spark, root, v) // legacy: full table
-      case (None, _) => emptyFrame(spark, u.schema)
+    val target = s.head.fold(emptyFrame(spark, u.schema)) { case (_, m) =>
+      readBuckets(spark, root, m, Some(touched))
     }
 
     // the full merge only supplies the new bucket contents: its errors are
@@ -1016,81 +898,93 @@ object SnapshotStore {
       target.join(u.select(cfg.discriminant.map(col): _*),
         cfg.discriminant, "left_semi"),
       u, cfg)
-    // an existing store's recorded clustering wins (creation-time, like
-    // nBuckets); validate BEFORE claiming the version so a typo fails
-    // without leaving a stale claim behind
-    val cluster: Seq[String] =
-      if (currentOpt.isDefined) columnsProp(props, "clusterBy") else clusterBy
-    // a conflicting layout request on an existing store fails LOUDLY —
-    // silently dropping it would hand the caller unclustered (or
-    // differently-clustered) files while they believe clusterBy held
-    // (same discipline as Layout.zOrderUpsert's model-mismatch check)
-    if (currentOpt.isDefined)
+    // an existing store's recorded clustering and discriminant win
+    // (creation-time, like nBuckets); validate BEFORE claiming the version
+    // so a typo fails without leaving a stale claim behind
+    val cluster: Seq[String] = if (s.head.isDefined) s.cluster else clusterBy
+    if (s.head.isDefined) {
+      // a conflicting layout request on an existing store fails LOUDLY —
+      // silently dropping it would hand the caller unclustered (or
+      // differently-clustered) files while they believe clusterBy held
+      // (same discipline as Layout.zOrderUpsert's model-mismatch check)
       require(clusterBy.isEmpty || clusterBy == cluster,
         s"store at $root records clusterBy=" +
           s"${if (cluster.isEmpty) "(none)" else cluster.mkString(",")} " +
           s"but this upsert requested ${clusterBy.mkString(",")}; the " +
           "recorded creation-time layout wins — re-create the store to " +
           "change it")
-    cluster.foreach(c => require(merged.columns.contains(c),
-      s"clusterBy column '$c' is not a stored column"))
-    // the discriminant is layout-load-bearing (bucket assignment hashes
-    // it): an upsert with a different key set would probe the wrong
-    // buckets and silently duplicate keys across buckets, so a mismatch
-    // against the recorded creation-time discriminant fails loudly BEFORE
-    // claiming (stores created before the property record it on their
-    // next upsert instead)
-    val recordedDisc = columnsProp(props, "discriminant")
-    if (currentOpt.isDefined && recordedDisc.nonEmpty)
+      // bucket assignment hashes the discriminant: an upsert with a
+      // different key set would probe the wrong buckets and silently
+      // duplicate keys across buckets
+      val recordedDisc = requireDiscriminant(root, s.props)
       require(cfg.discriminant == recordedDisc,
         s"store at $root records discriminant=${recordedDisc.mkString(",")} " +
           s"but this upsert used ${cfg.discriminant.mkString(",")}; the " +
           "recorded creation-time merge key wins — re-create the store to " +
           "change it")
-    val next = currentOpt.getOrElse(-1L) + 1L
-    claim(f, root, next)
+    }
+    cluster.foreach(c => require(merged.columns.contains(c),
+      s"clusterBy column '$c' is not a stored column"))
 
-    val withBucket = merged
-      .withColumn(bucketCol, bucketExpr(cfg.discriminant.map(col), buckets))
-    val arranged =
-      if (cluster.isEmpty) withBucket
-      // local sort only — partitionBy splits each task's (bucket, ...)-
-      // sorted stream into per-bucket files that stay sorted by the
-      // cluster columns; no extra exchange
-      else withBucket.sortWithinPartitions((bucketCol +: cluster).map(col): _*)
-    arranged
-      .write.mode("overwrite").partitionBy(bucketCol)
-      .parquet(s"$root/snapshot=$next")
     // manifest: untouched buckets keep their old location; touched buckets
     // point here when they produced data (a touched bucket can end empty
-    // when every row in it was a prohibited insert)
-    val writtenBuckets = f.listStatus(new Path(root, s"snapshot=$next")).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith(s"$bucketCol=") =>
-        n.stripPrefix(s"$bucketCol=").toInt }
-      .toSet
-    val newBuckets =
-      oldManifest.fold(Map.empty[Int, Long])(_.buckets.view.filterKeys(!touched(_)).toMap) ++
-        writtenBuckets.map(_ -> next)
-    writeManifest(f, root, next, Manifest(merged.schema, newBuckets))
-
-    // absent for new stores AND legacy stores being migrated; merged so
-    // application properties set before the first commit survive. The
-    // discriminant backfill also upgrades pre-property stores on their
-    // next upsert (their recorded nBuckets is preserved — `buckets`
-    // already resolved to it above).
-    if (!props.contains("nBuckets") ||
-        props.get("discriminant").forall(_.trim.isEmpty))
-      writeProps(f, root, props +
+    // when every row in it was a prohibited insert). Store properties are
+    // written only by the creating commit, merged over application
+    // properties set before it.
+    val (kept, next) = s.head.fold((Map.empty[Int, Long], 0L)) {
+      case (v, m) => (m.buckets -- touched, v + 1)
+    }
+    val committed = commit(s.f, root, next,
+      merged.withColumn(bucketCol,
+        bucketExpr(cfg.discriminant.map(col), buckets)),
+      merged.schema, cluster, kept,
+      createProps = if (s.head.isDefined) None else Some(s.props +
         ("nBuckets" -> buckets.toString) +
         ("discriminant" -> cfg.discriminant.mkString(",")) ++
         (if (cluster.nonEmpty) Map("clusterBy" -> cluster.mkString(","))
-         else Map.empty))
-    commitPointer(f, root, next)
+         else Map.empty)))
     MergeResult(
-      target = readVersion(spark, root, next),
+      target = readBuckets(spark, root, committed, None),
       written = sliced.written.localCheckpoint(true),
       errors = sliced.errors.localCheckpoint(true))
+  }
+
+  /** The one commit sequence every writer shares, after all validation:
+    * claim `next`; write `rows` (carrying the `__bucket` column) one
+    * directory per bucket, each file sorted by `cluster` when the store
+    * is clustered; record a manifest that keeps `kept` and points every
+    * bucket the write produced at `next`; write `createProps` when this
+    * commit creates the store; publish with the atomic pointer swap.
+    * Returns the committed manifest. */
+  private def commit(f: FileSystem, root: String, next: Long, rows: DataFrame,
+                     schema: StructType, cluster: Seq[String],
+                     kept: Map[Int, Long],
+                     createProps: Option[Map[String, String]] = None
+                    ): Manifest = {
+    claim(f, root, next)
+    val arranged =
+      if (cluster.isEmpty) rows
+      // local sort only — partitionBy splits each task's (bucket, ...)-
+      // sorted stream into per-bucket files that stay sorted by the
+      // cluster columns; no extra exchange
+      else rows.sortWithinPartitions((bucketCol +: cluster).map(col): _*)
+    arranged
+      .write.mode("overwrite").partitionBy(bucketCol)
+      .parquet(s"$root/snapshot=$next")
+    // manifest from the directories the write ACTUALLY produced — a
+    // bucket whose rows were all removed (delete, a row-dropping rewrite,
+    // prohibited inserts) has none, and a manifest entry pointing at an
+    // unwritten directory would make every later read throw on a missing
+    // path
+    val written = f.listStatus(new Path(root, s"snapshot=$next")).toSeq
+      .map(_.getPath.getName)
+      .collect { case n if n.startsWith(s"$bucketCol=") =>
+        n.stripPrefix(s"$bucketCol=").toInt -> next }
+    val m = Manifest(schema, kept ++ written)
+    writeManifest(f, root, next, m)
+    createProps.foreach(writeProps(f, root, _))
+    commitPointer(f, root, next)
+    m
   }
 
   /** Create-exclusive claim on `version`: exactly one writer can ever hold

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.functions.{HashFunctions => H, TextFunctions => T, VectorFunctions => V}
@@ -472,23 +473,62 @@ class FunctionsSpec extends SparkSpec {
     }
   }
 
-  test("KernelCodegen over a non-nullable child compiles: SimHashExpr over " +
-    "flatten(collect_list(...)) gives the same rows under CODEGEN_ONLY as " +
-    "under NO_CODEGEN") {
-    val df = Seq(("en", Seq("the", "cat", "and")), ("en", Seq("dog", "the")),
-        ("es", Seq("el", "que")), ("und", Seq.empty[String])).toDF("g", "toks")
-      .groupBy("g").agg(flatten(collect_list(col("toks"))).as("all"))
-    df.schema("all").nullable shouldBe false
-    val key = "spark.sql.codegen.factoryMode"
-    def sketches(mode: String): Seq[(String, Long)] = {
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, mode)
-      try df.select(col("g"), graft.functions.SimHashExpr(col("all")))
-        .orderBy("g").as[(String, Long)].collect().toSeq
-      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  // Every KernelCodegen expression over a non-nullable, non-foldable
+  // child (an aggregate's output: a literal child would be constant-folded
+  // and never reach generated code). For such a child Spark declares no
+  // isNull variable, so a kernel that assigns one does not compile.
+  private lazy val kernelInputs = Seq(
+      ("en", Seq("the", "cat", "and"), Seq(1.0, -2.0)),
+      ("en", Seq("dog", "the"), Seq(0.5, 3.0)),
+      ("es", Seq("el", "que"), Seq(-1.0, 0.0)),
+      ("es", Seq("la", "casa"), Seq(2.0, 2.0)),
+      ("und", Seq.empty[String], Seq(0.0, -1.0)),
+      ("und", Seq.empty[String], Seq(-3.0, 1.0)))
+    .toDF("g", "toks", "vec").coalesce(1).groupBy("g")
+    .agg(flatten(collect_list(col("toks"))).as("toks"),
+      flatten(collect_list(col("vec"))).as("vec"))
+
+  private val tokens = ("flatten(collect_list(...))", col("toks"))
+  private val text =
+    ("concat_ws(' ', flatten(collect_list(...)))", concat_ws(" ", col("toks")))
+  private val bytes = ("a binary cast of concat_ws(' ', " +
+    "flatten(collect_list(...)))", concat_ws(" ", col("toks")).cast("binary"))
+  private val vector = ("flatten(collect_list(...)) of vectors", col("vec"))
+
+  Seq[(String, (String, Column), Column => Column)](
+    ("SignBucketsExpr", vector, c => graft.functions.VectorExpressions
+      .signBuckets(c, Seq(Seq(Array(1.0, 0.0, 0.0, 0.0),
+        Array(0.0, 1.0, 0.0, 0.0)), Seq(Array(0.0, 0.0, 1.0, -1.0))))),
+    ("MinHashSigExpr", tokens, c => graft.functions.MinHashSigExpr(c, 8)),
+    ("MeanBytesExpr", bytes, c => graft.functions.MeanBytesExpr(c)),
+    ("CharLmScoreExpr", text, c => graft.functions.CharLmScoreExpr(c,
+      Seq("th" -> 3L, "he" -> 2L, "el" -> 1L), 2)),
+    ("BpeEncodeExpr", text, c => graft.functions.BpeEncodeExpr(c,
+      Seq("t" -> "h", "th" -> "e"))),
+    ("SimHashExpr", tokens, c => graft.functions.SimHashExpr(c)),
+    ("PolyHashExpr", text, c => graft.functions.PolyHashExpr(c)),
+    ("MarkerCountsExpr", tokens, c => graft.functions.MarkerCountsExpr(c,
+      Seq(Seq("the", "and"), Seq("el", "que", "la")))),
+    ("WordShingleExpr", tokens, c => graft.functions.WordShingleExpr(c, 2)),
+    ("CharShingleExpr", text, c => graft.functions.CharShingleExpr(c, 3)),
+    ("CharGramsExpr", text, c => graft.functions.CharGramsExpr(c, 3))
+  ).foreach { case (name, (childDesc, child), kernel) =>
+    test(s"KernelCodegen over a non-nullable child compiles: $name over " +
+      s"$childDesc gives the same rows under CODEGEN_ONLY as " +
+      "under NO_CODEGEN") {
+      val df = kernelInputs.select(col("g"), child.as("child"))
+      df.schema("child").nullable shouldBe false
+      val key = "spark.sql.codegen.factoryMode"
+      def rows(mode: String): Seq[org.apache.spark.sql.Row] = {
+        val prev = spark.conf.getOption(key)
+        spark.conf.set(key, mode)
+        try df.select(col("g"), kernel(col("child")))
+          .orderBy("g").collect().toSeq
+        finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      }
+      val generated = rows("CODEGEN_ONLY")
+      generated.map(_.getString(0)) shouldBe Seq("en", "es", "und")
+      generated shouldBe rows("NO_CODEGEN")
     }
-    val generated = sketches("CODEGEN_ONLY")
-    generated.map(_._1) shouldBe Seq("en", "es", "und")
-    generated shouldBe sketches("NO_CODEGEN")
   }
 }

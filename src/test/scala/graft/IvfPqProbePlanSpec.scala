@@ -1,10 +1,5 @@
 package graft
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit, transform, udf}
 
@@ -162,38 +157,14 @@ class IvfPqProbePlanSpec extends SparkSpec {
     val path = tempIndex("graft_handle_jobs")
     build(path, 8)
     val qs = localQueries(3)
-    val sc = spark.sparkContext
-    val phaseKey = "graft.spec.phase"
-    val seen = new ConcurrentLinkedQueue[String]()
-    val marker = new CountDownLatch(1)
-    val tap = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(phaseKey)))
-          .foreach(phase =>
-            if (phase == "marker") marker.countDown() else seen.add(phase))
-    }
     def probe(): DataFrame = Similarity.ivfPqProbeTopK(spark, path, qs,
       "embedding", "vec_id", "query_id", k = 5, nProbe = 2,
       shortlistFactor = 4)
-    sc.addSparkListener(tap)
-    try {
-      sc.setLocalProperty(phaseKey, "cold")
-      probe().collect()
-      sc.setLocalProperty(phaseKey, "construct")
-      val warm = probe()
-      sc.setLocalProperty(phaseKey, "action")
-      warm.collect().length shouldBe 15
-      // listener events arrive in order: once the marker job is seen,
-      // every earlier job has been counted
-      sc.setLocalProperty(phaseKey, "marker")
-      sc.parallelize(Seq(1), 1).count()
-      marker.await(60, TimeUnit.SECONDS) shouldBe true
-    } finally {
-      sc.setLocalProperty(phaseKey, null)
-      sc.removeSparkListener(tap)
+    val jobs = JobTap.count(spark.sparkContext) { phase =>
+      phase("cold")(probe().collect())
+      val warm = phase("construct")(probe())
+      phase("action")(warm.collect()).length shouldBe 15
     }
-    val jobs = seen.asScala.toSeq.groupBy(identity).map { case (p, js) =>
-      p -> js.size }
     jobs.getOrElse("cold", 0) should be > 0 // the tap sees planning jobs
     jobs.getOrElse("action", 0) should be > 0
     jobs.getOrElse("construct", 0) shouldBe 0

@@ -71,37 +71,6 @@ class SnapshotStoreSpec extends SparkSpec
     SnapshotStore.read(spark, root).get.count() shouldBe 2
   }
 
-  test("vacuum reclaims dropped LEGACY (pre-manifest) versions: bare " +
-    "full-snapshot data is deleted and reported, a retained legacy " +
-    "version survives untouched") {
-    val root = tempRoot("graft_snapleg")
-    // hand-build a pre-manifest store: two full-snapshot versions (bare
-    // part files directly under snapshot=N, no manifest) + the pointer
-    Seq((1, "a")).toDF("id", "value")
-      .coalesce(1).write.parquet(s"$root/snapshot=0")
-    Seq((1, "a"), (2, "b")).toDF("id", "value")
-      .coalesce(1).write.parquet(s"$root/snapshot=1")
-    java.nio.file.Files.write(java.nio.file.Paths.get(root, "_LATEST"),
-      "1".getBytes("UTF-8"))
-    SnapshotStore.read(spark, root).get.count() shouldBe 2
-    // keep=2 retains BOTH legacy versions: bare-data readability counts
-    // toward retention exactly like manifest readability
-    SnapshotStore.vacuum(spark, root, keep = 2) shouldBe Seq.empty
-    SnapshotStore.readVersion(spark, root, 0).count() shouldBe 1
-    // migrate: the next upsert commits a bucketed version 2
-    SnapshotStore.upsert(spark, root,
-      Seq((3, "c")).toDF("id", "value"), cfg)
-    SnapshotStore.currentVersion(spark, root) shouldBe Some(2L)
-    // keep=1: both legacy versions are dropped — reported, their
-    // full-table data actually deleted, the store still reads
-    SnapshotStore.vacuum(spark, root, keep = 1) shouldBe Seq(0L, 1L)
-    val f = org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sessionState.newHadoopConf())
-    f.exists(new org.apache.hadoop.fs.Path(s"$root/snapshot=0")) shouldBe false
-    f.exists(new org.apache.hadoop.fs.Path(s"$root/snapshot=1")) shouldBe false
-    SnapshotStore.read(spark, root).get.count() shouldBe 3
-  }
-
   test("streaming foreachBatch upsert persists each epoch durably") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
@@ -301,23 +270,37 @@ class SnapshotStoreSpec extends SparkSpec
     SnapshotStore.read(spark, root).get.count() shouldBe 4
   }
 
-  test("legacy full-snapshot store (pre-manifest layout) stays readable and " +
-    "the next upsert migrates it to the bucketed layout") {
+  test("a committed version without a _MANIFEST is refused loudly by " +
+    "read, upsert, delete and compact, and vacuum deletes none of its " +
+    "files") {
     val root = tempRoot("graft_snap11")
-    // hand-build the old layout: plain parquet under snapshot=0 + pointer
+    // hand-build a committed version holding bare parquet, no manifest
     Seq((1, "a"), (2, "b")).toDF("id", "value")
-      .write.parquet(s"$root/snapshot=0")
+      .coalesce(1).write.parquet(s"$root/snapshot=0")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(root, "_LATEST"), "0")
-    SnapshotStore.read(spark, root).get.count() shouldBe 2
-
-    SnapshotStore.upsert(spark, root,
-      Seq((2, "b2"), (3, "c")).toDF("id", "value"), cfg)
-    val after = SnapshotStore.read(spark, root).get.orderBy("id")
-      .collect().map(r => (r.getInt(0), r.getString(1)))
-    after shouldBe Array((1, "a"), (2, "b2"), (3, "c"))
-    // migrated: version 1 has a manifest and carries ALL the data
-    new java.io.File(s"$root/snapshot=1/_MANIFEST").exists() shouldBe true
+    SnapshotStore.setProperties(spark, root,
+      Map("nBuckets" -> "4", "discriminant" -> "id"))
+    def files(): Seq[String] = {
+      val base = java.nio.file.Paths.get(root)
+      java.nio.file.Files.walk(base).iterator().asScala
+        .map(base.relativize(_).toString).toSeq.sorted
+    }
+    val before = files()
+    Seq[(String, () => Any)](
+      "read" -> (() => SnapshotStore.read(spark, root)),
+      "upsert" -> (() => SnapshotStore.upsert(spark, root,
+        Seq((3, "c")).toDF("id", "value"), cfg)),
+      "delete" -> (() => SnapshotStore.delete(spark, root, Seq(1).toDF("id"))),
+      "compact" -> (() => SnapshotStore.compact(spark, root))
+    ).foreach { case (call, run) =>
+      withClue(s"$call: ") {
+        intercept[IllegalArgumentException](run())
+          .getMessage should include ("snapshot=0/_MANIFEST")
+      }
+    }
+    SnapshotStore.vacuum(spark, root, keep = 1) shouldBe Seq.empty
+    files() shouldBe before
   }
 
   test("composite discriminant: bucket routing and merge agree on " +
@@ -609,10 +592,21 @@ class SnapshotStoreSpec extends SparkSpec
     // simulate a pre-property store by blanking the recording
     SnapshotStore.setProperty(spark, root, "discriminant", "")
     SnapshotStore.discriminantColumns(spark, root) shouldBe Nil
-    val e = intercept[IllegalArgumentException] {
-      SnapshotStore.changes(spark, root, 0L, 1L)
+    // every path that hashes or joins on the merge key refuses it, before
+    // any claim
+    Seq[(String, () => Any)](
+      "changes" -> (() => SnapshotStore.changes(spark, root, 0L, 1L)),
+      "upsert" -> (() => SnapshotStore.upsert(spark, root,
+        Seq(3 -> "c").toDF("id", "value"), cfg)),
+      "delete" -> (() => SnapshotStore.delete(spark, root, Seq(1).toDF("id")))
+    ).foreach { case (call, run) =>
+      withClue(s"$call: ") {
+        intercept[IllegalArgumentException](run())
+          .getMessage should include ("discriminant")
+      }
     }
-    e.getMessage should include ("discriminant")
+    SnapshotStore.currentVersion(spark, root) shouldBe Some(1L)
+    new java.io.File(root, "claim=2").exists() shouldBe false
   }
 
   test("compact rewrites fragmented buckets to one file each behind the " +
@@ -1091,6 +1085,68 @@ class SnapshotStoreSpec extends SparkSpec
     val text2 = try new String(in2.readAllBytes(), "UTF-8")
     finally in2.close()
     text2 shouldBe "k=w\n"
+  }
+
+  /** A 4-bucket store of 40 rows whose creating write keeps the batch's 4
+    * partitions, so each bucket holds several files and compact has work. */
+  private def fragmentedStore(prefix: String): String = {
+    val root = tempRoot(prefix)
+    SnapshotStore.upsert(spark, root,
+      (0 until 40).map(k => (k, s"v$k")).toDF("id", "value").repartition(4),
+      cfg, nBuckets = 4)
+    root
+  }
+
+  test("each call opens each control file once: upsert, changes, delete " +
+    "and compact read _LATEST, _META and each manifest version at most " +
+    "once") {
+    val root = fragmentedStore("graft_snap_opens")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+    val was = keys.map(k => k -> Option(conf.get(k)))
+    conf.set("fs.file.impl", classOf[OpenCountingFileSystem].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    def opens(call: => Any): Map[String, Int] = {
+      OpenCountingFileSystem.reset()
+      call
+      OpenCountingFileSystem.counts.collect {
+        case (p, n) if p.startsWith(root + "/") &&
+            Seq("_LATEST", "_META", "_MANIFEST").exists(p.endsWith) =>
+          p.stripPrefix(root + "/") -> n
+      }
+    }
+    val seen = try Seq(
+      "upsert" -> opens(SnapshotStore.upsert(spark, root,
+        Seq((1, "u")).toDF("id", "value"), cfg)),
+      "changes" -> opens(SnapshotStore.changes(spark, root, 0L, 1L)),
+      "delete" -> opens(SnapshotStore.delete(spark, root, Seq(2).toDF("id"))),
+      "compact" -> opens(SnapshotStore.compact(spark, root)))
+    finally was.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+    seen.toMap shouldBe Map(
+      "upsert" -> Map("_LATEST" -> 1, "_META" -> 1,
+        "snapshot=0/_MANIFEST" -> 1),
+      "changes" -> Map("_META" -> 1, "snapshot=0/_MANIFEST" -> 1,
+        "snapshot=1/_MANIFEST" -> 1),
+      "delete" -> Map("_LATEST" -> 1, "_META" -> 1,
+        "snapshot=1/_MANIFEST" -> 1),
+      "compact" -> Map("_LATEST" -> 1, "_META" -> 1,
+        "snapshot=2/_MANIFEST" -> 1))
+  }
+
+  test("job counts per call are pinned on a fixed 4-bucket store: upsert, " +
+    "changes, delete and compact") {
+    val root = fragmentedStore("graft_snap_jobs")
+    var rewritten = 0
+    val jobs = JobTap.count(spark.sparkContext) { phase =>
+      phase("upsert")(SnapshotStore.upsert(spark, root,
+        Seq((1, "u"), (50, "n")).toDF("id", "value"), cfg))
+      phase("changes")(SnapshotStore.changes(spark, root, 0L, 1L).collect())
+      phase("delete")(SnapshotStore.delete(spark, root, Seq(2).toDF("id")))
+      rewritten = phase("compact")(SnapshotStore.compact(spark, root))
+    }
+    rewritten should be > 0
+    jobs shouldBe Map("upsert" -> 7, "changes" -> 3, "delete" -> 8,
+      "compact" -> 2)
   }
 }
 
