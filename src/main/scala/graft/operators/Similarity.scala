@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StructType}
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 import graft.functions.{VectorFunctions => V}
 
@@ -408,12 +408,44 @@ object Similarity {
     handle.fold((loadCentroids(spark, path), loadPqModel(spark, path)))(h =>
       (h.centroids, h.pq))
 
-  /** The whole `data/` relation, read with the handle's schema when there
-    * is one (no schema-inference job). */
+  /** The whole `data/` relation, opened the way a probe opens its cells:
+    * one driver-side listing of the cell directories ([[partitionDirs]])
+    * read through [[readPartitionDirs]], so no open starts a
+    * |cells|-task parallel-discovery job. With `schema` (the relation's
+    * full schema, or [[CellOnly]]) no schema-inference job runs either. */
   private def readData(spark: SparkSession, path: String,
-                       handle: Option[IndexModel]): DataFrame =
-    handle.fold(spark.read)(h => spark.read.schema(h.dataSchema))
-      .parquet(s"$path/data")
+                       schema: Option[StructType]): DataFrame =
+    readPartitionDirs(spark, s"$path/data",
+      partitionDirs(spark, s"$path/data", "__cell").toSeq.sorted.map(_._2),
+      schema)
+
+  /** A `data/` schema of the directory-derived cell column alone: a read
+    * with it scans no data column (row counts come from the footers). */
+  private val CellOnly = StructType(Seq(StructField("__cell", IntegerType)))
+
+  /** Write index rows into the `__cell=` directories under `dir`, ONE part
+    * file per written cell: the rows are hash-partitioned on `__cell`
+    * into the session's default parallelism first, so each cell lands
+    * whole in one task. Without it every input partition writes its own
+    * file into every cell it holds; each extra file costs ~9 ms to write
+    * and ~1.4 ms at every later full scan (10 k × 64-d rows into 64
+    * cells, local[4] on a 4-core box). A skewed cell lands whole in one
+    * task too. The count is explicit on purpose: a count-less
+    * repartition (or the REBALANCE hint) lets adaptive execution
+    * coalesce a small batch into ONE task that writes every cell's file
+    * serially. */
+  private def writeCells(rows: DataFrame, dir: String, mode: String): Unit =
+    rows.repartition(rows.sparkSession.sparkContext.defaultParallelism,
+        col("__cell"))
+      .write.mode(mode).partitionBy("__cell").parquet(dir)
+
+  /** Per-cell row counts of the `data/` relation at `path`, as (`cell`,
+    * `n`) rows; reads only the directory-derived cell column. */
+  private def cellCounts(spark: SparkSession, path: String): DataFrame =
+    readData(spark, path, Some(CellOnly))
+      .groupBy("__cell")
+      .agg(count(lit(1)).as("n"))
+      .select(col("__cell").as("cell"), col("n"))
 
   /** Per-cell row counts of a persisted index — the [[ivfPqMaintain]]
     * skew and growth gauge (skewed counts = expensive probes on the hot
@@ -421,10 +453,7 @@ object Similarity {
     * the vectors. */
   def ivfCellStats(spark: SparkSession, path: String): DataFrame = {
     requireIndex(spark, path)
-    spark.read.parquet(s"$path/data")
-      .groupBy("__cell")
-      .agg(count(lit(1)).as("n"))
-      .select(col("__cell").as("cell"), col("n"))
+    cellCounts(spark, path)
   }
 
   /** Checked rename shared by every fenced mutation ([[stagedRebuild]],
@@ -1046,7 +1075,7 @@ object Similarity {
     val handle = cachedModel(spark, path, gen0)
     val (centroids, model) = quantizers(spark, path, handle)
     val nCells = centroids.length
-    val data = readData(spark, path, handle)
+    val data = readData(spark, path, handle.map(_.dataSchema))
     val uncalibrated = (math.max(1, nCells / 8), DefaultShortlistFactor)
     val sampled = selfQuerySample(data, vecCol, sampleQueries, seed)
     if (sampled.isEmpty) return uncalibrated
@@ -1784,7 +1813,9 @@ object Similarity {
     * (bounded driver samples), assign every row its cell, and write:
     *
     *  - `data/`: the corpus `partitionBy(__cell)` with the PQ codes and
-    *    per-row norms alongside the raw vectors. Probes are statically
+    *    per-row norms alongside the raw vectors, ONE part file per cell
+    *    whatever the input's partitioning ([[writeCells]]; a skewed cell
+    *    is written whole by one task). Probes are statically
     *    partition-pruned reads of the probed cells; parquet's columnar
     *    layout means the ADC pass reads ONLY (id, codes, norm) from those
     *    files (column pruning), and the exact re-rank reads the vector
@@ -1845,9 +1876,9 @@ object Similarity {
       // width calibrations tuned against the quantizer+codebooks this
       // build replaces would be silently wrong-generation metadata
       fs.delete(new org.apache.hadoop.fs.Path(root, PqCalFile), false)
-      pqEncode(corpus, vecCol, model)
-        .withColumn("__cell", nearestCell(col(vecCol), centroids))
-        .write.mode("overwrite").partitionBy("__cell").parquet(s"$path/data")
+      writeCells(pqEncode(corpus, vecCol, model)
+        .withColumn("__cell", nearestCell(col(vecCol), centroids)),
+        s"$path/data", "overwrite")
       centroids.zipWithIndex
         .map { case (c, i) => (i, c.toSeq) }.toSeq
         .toDF("cell", "centroid")
@@ -1864,12 +1895,11 @@ object Similarity {
       // relative to this equilibrium — an absolute bound would re-fire the
       // rebuild every night on data no quantizer can flatten (observed in
       // the pq_drift probe before this baseline existed)
-      val cellCounts = spark.read.parquet(s"$path/data")
-        .groupBy("__cell").count().collect().map(_.getLong(1))
+      val counts = cellCounts(spark, path).collect().map(_.getLong(1))
       val fitSkew =
-        if (cellCounts.isEmpty || cellCounts.sum == 0) 1.0
-        else cellCounts.max /
-          (cellCounts.sum.toDouble / math.max(1, centroids.length))
+        if (counts.isEmpty || counts.sum == 0) 1.0
+        else counts.max /
+          (counts.sum.toDouble / math.max(1, centroids.length))
       Seq((fitMqe, fitSkew)).toDF("fit_mqe", "fit_skew")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
       writeGeneration(spark, path)
@@ -1885,7 +1915,8 @@ object Similarity {
   /** Extend a persisted index in place: new rows are encoded with the
     * STANDING codebooks and assigned with the STANDING centroids —
     * quantizer, codebooks, and existing cells are untouched, so the
-    * append writes only new part files into the cell directories (no
+    * append writes only new part files into the cell directories, one
+    * part file per touched cell ([[writeCells]]; no
     * refit, no rewrite of the standing data: the daily-increment path for
     * an index whose full rebuild is a 100 TB job). `newRows` must carry
     * the schema the index was built from. Codes stay exact FOR THE
@@ -1920,9 +1951,9 @@ object Similarity {
     withMutationLease(spark, fs, root, "ivfPqAppend", AppendLeaseHint) {
       val (centroids, model) = quantizers(spark, path,
         cachedModel(spark, path, readGeneration(spark, path)))
-      pqEncode(newRows, vecCol, model)
-        .withColumn("__cell", nearestCell(col(vecCol), centroids))
-        .write.mode("append").partitionBy("__cell").parquet(s"$path/data")
+      writeCells(pqEncode(newRows, vecCol, model)
+        .withColumn("__cell", nearestCell(col(vecCol), centroids)),
+        s"$path/data", "append")
     }
     // same-session probes may hold a cached file listing for the cell
     // directories; drop it so they see the appended part files
@@ -2046,7 +2077,8 @@ object Similarity {
         // calibration dropped BEFORE the rebuild — see the scaladoc
         fs.delete(new org.apache.hadoop.fs.Path(path, PqCalFile), false)
         // original columns only: cell/norm/codes recomputed by the build
-        val data = spark.read.parquet(s"$path/data")
+        val data = readData(spark, path, cachedModel(spark, path,
+            readGeneration(spark, path)).map(_.dataSchema))
           .drop("__cell", "__cn", "__codes")
         stagedRebuild(spark, path,
           Seq("data", "centroids", "codebooks", "meta")) { staging =>
@@ -2219,7 +2251,11 @@ object Similarity {
     * Bounded work, never a full rewrite (the `SnapshotStore.delete`
     * economy): the victims' cells are located by one COLUMN-PRUNED scan
     * (id + the directory-derived cell only — the vector and code columns
-    * stay unread), and only those `__cell=` directories are rewritten.
+    * stay unread) whose single collected per-cell count gives both the
+    * touched cells and the rows removed; `data/` opens through one
+    * driver-side listing, not a |cells|-task discovery job. Only those
+    * `__cell=` directories are rewritten, each compacted to ONE part file
+    * ([[writeCells]]); untouched cells keep their exact files.
     *
     * Crash discipline: survivors are staged under `<path>/.staging`
     * FIRST (probes keep running against the untouched live index), then
@@ -2268,7 +2304,7 @@ object Similarity {
     // structurally impossible
     withMutationLease(spark, fs, root, "indexDelete") {
     val data = readData(spark, path,
-      cachedModel(spark, path, readGeneration(spark, path)))
+      cachedModel(spark, path, readGeneration(spark, path)).map(_.dataSchema))
     val storedIdType = data.schema(idCol).dataType
     // bounded opt-out batch, materialized once: it feeds several jobs,
     // and a nondeterministic input re-evaluated per job would let
@@ -2276,20 +2312,20 @@ object Similarity {
     // the count claimed them (SnapshotStore.delete's rationale)
     val k = keys.select(col(idCol).cast(storedIdType).as(idCol))
       .distinct().localCheckpoint(true)
-    val touched: Set[Int] = data.select(col(idCol), col("__cell"))
+    // ONE locate job: victims per cell give the touched set and the count
+    val victimsPerCell = data.select(col(idCol), col("__cell"))
       .join(broadcast(k), Seq(idCol), "left_semi")
-      .select("__cell").distinct().collect().map(_.getInt(0)).toSet
-    if (touched.isEmpty) return 0L
-    val target = data.filter(col("__cell").isin(touched.toIndexedSeq: _*))
-    val nDel = target.join(broadcast(k), Seq(idCol), "left_semi").count()
+      .groupBy("__cell").count().collect()
+    val nDel = victimsPerCell.map(_.getLong(1)).sum
     if (nDel == 0L) return 0L
+    val touched = victimsPerCell.map(_.getInt(0)).toSet
+    val target = data.filter(col("__cell").isin(touched.toIndexedSeq: _*))
     val staging = new org.apache.hadoop.fs.Path(root, ".staging")
     fs.delete(staging, true)
-    // stage the touched cells' survivors — live index untouched, probes
-    // keep running
-    target.join(broadcast(k), Seq(idCol), "left_anti")
-      .write.mode("overwrite").partitionBy("__cell")
-      .parquet(s"$staging/data")
+    // stage the touched cells' survivors, one file per cell — live index
+    // untouched, probes keep running
+    writeCells(target.join(broadcast(k), Seq(idCol), "left_anti"),
+      s"$staging/data", "overwrite")
     // fenced WHOLE-RELATION swap. Swapping cell directories one at a
     // time IN PLACE left a window where a racing probe's file listing
     // could catch SOME cells swapped and others not — a READABLE mixed

@@ -153,6 +153,25 @@ class IvfPqProbePlanSpec extends SparkSpec {
     evals.value shouldBe 3L
   }
 
+  test("on an index of more than 32 cells a warm ivfPqAppend runs 2 jobs " +
+    "and a warm indexDelete 8: data/ opens through the driver-side " +
+    "listing, and one locate job finds the touched cells and the count") {
+    val path = tempIndex("graft_handle_write_jobs")
+    build(path, 64)
+    new java.io.File(path, "data").listFiles()
+      .count(_.getName.startsWith("__cell=")) should be > 32
+    Similarity.ivfPqProbeTopK(spark, path, localQueries(3), "embedding",
+      "vec_id", "query_id", k = 5, nProbe = 2, shortlistFactor = 4)
+      .collect() // stores the generation's handle
+    val extra = emb.filter($"vec_id" < 5).select("vec_id", "embedding")
+    val jobs = JobTap.count(spark.sparkContext) { phase =>
+      phase("append")(Similarity.ivfPqAppend(extra, "embedding", path))
+      phase("delete")(Similarity.indexDelete(spark, path,
+        Seq(5L, 6L, 7L).toDF("vec_id"), idCol = "vec_id")) shouldBe 3L
+    }
+    jobs shouldBe Map("append" -> 2, "delete" -> 8)
+  }
+
   test("a warm probe's construction runs no Spark job") {
     val path = tempIndex("graft_handle_jobs")
     build(path, 8)

@@ -701,7 +701,6 @@ class SimilaritySpec extends SparkSpec {
     val n0 = corp.count()
     val victims = corp.select("vec_id").orderBy("vec_id").limit(5)
     val victimIds = victims.as[Long].collect().toSet
-    val survivors = corp.filter(!$"vec_id".isin(victimIds.toSeq: _*))
     // two plain queries plus two victims' own vectors: a probe with a
     // victim's vector must retrieve its nearest SURVIVOR, never the victim
     val qs = emb.filter($"vec_id" < 2)
@@ -711,27 +710,48 @@ class SimilaritySpec extends SparkSpec {
 
     val ipq = java.nio.file.Files
       .createTempDirectory("graft_idxdel_ipq").toString
-    Similarity.ivfPqBuild(corp, "embedding", ipq, nCells = 8, m = 16,
-      ksub = 16)
+    // multi-partition inputs: every write still emits one file per cell
+    Similarity.ivfPqBuild(corp.repartition(4), "embedding", ipq, nCells = 8,
+      m = 16, ksub = 16)
     def cellFiles(): Map[String, Set[String]] =
       new java.io.File(ipq, "data").listFiles()
         .filter(_.getName.startsWith("__cell="))
         .map(d => d.getName -> d.listFiles().map(_.getName)
           .filter(_.endsWith(".parquet")).toSet).toMap
+    val built = cellFiles()
+    built.values.foreach(_.size shouldBe 1)
+    // an append adds at most one file per cell and keeps the built ones;
+    // its rows are copies of non-victim vectors under fresh ids
+    val extra = corp.filter($"vec_id" >= 100 && $"vec_id" < 140)
+      .withColumn("vec_id", $"vec_id" + 1000000L)
+    Similarity.ivfPqAppend(extra.repartition(4), "embedding", ipq)
+    val survivors = corp.unionByName(extra)
+      .filter(!$"vec_id".isin(victimIds.toSeq: _*))
     val before = cellFiles()
+    before.foreach { case (c, files) =>
+      val kept = built.getOrElse(c, Set.empty[String])
+      files should contain allElementsOf kept
+      (files -- kept).size should be <= 1
+    }
+    val victimCells = spark.read.parquet(s"$ipq/data")
+      .filter($"vec_id".isin(victimIds.toSeq: _*))
+      .select("__cell").as[Int].collect().map(c => s"__cell=$c").toSet
     Similarity.indexDelete(spark, ipq, victims.toDF("vec_id"),
       idCol = "vec_id") shouldBe 5L
     // no debris, no fence, no lease left behind
     Seq(".staging", ".old", ".rebuilding", ".mutating").foreach(
       new java.io.File(ipq, _).exists() shouldBe false)
     val data = spark.read.parquet(s"$ipq/data")
-    data.count() shouldBe n0 - 5
+    data.count() shouldBe n0 + 40 - 5
     data.filter($"vec_id".isin(victimIds.toSeq: _*)).count() shouldBe 0L
     // BOUNDED REWRITE: cells the victims did not live in kept their exact
-    // files (not rewritten, not touched)
+    // files (not rewritten, not touched); each victim cell was compacted
+    // to one file
     val after = cellFiles()
     val changed = before.keySet.filter(c => after.get(c) != before.get(c))
     changed.size should be <= 5 // at most one cell per victim
+    changed shouldBe victimCells
+    changed.foreach(c => after.get(c).foreach(_.size shouldBe 1))
     changed.size should be < before.size
     val cells = spark.read.parquet(s"$ipq/centroids").count().toInt
     val gotIpq = Similarity.ivfPqProbeTopK(spark, ipq, qs, "embedding",
