@@ -24,6 +24,13 @@ holds: the change is better in at least 9 of 10 pairs and its median beats
 the parent's by more than the parent's interquartile range. It also prints
 each side's count of failed operations. It exits 1 if any run failed or
 reported `correct: false`.
+
+Each log line also carries the run's op and write counts (`op_samples`,
+`write_samples`), read from the run's artifact
+<checkout>/.bench_build/artifacts/WORKLOAD-seedN-trace0/summary.json. A
+faster op leaves room for more writes in the fixed run window, and every
+write adds files, so the script also prints store_bytes_per_row and recall
+medians per side grouped by write count: compare those at equal counts.
 """
 
 import argparse
@@ -61,6 +68,22 @@ def run(checkout, workload, seed, seconds):
     return p.returncode, result, p.stderr[-2000:]
 
 
+def samples(checkout, workload, seed):
+    """The run's (op_samples, write_samples) from its summary artifact,
+    None for a count the artifact does not hold."""
+    path = os.path.join(checkout, ".bench_build", "artifacts",
+                        f"{workload}-seed{seed}-trace0", "summary.json")
+    try:
+        with open(path) as fh:
+            facts = json.load(fh).get("facts", {})
+    except (OSError, ValueError):
+        return None, None
+    def count(key):
+        v = facts.get(key)
+        return int(v) if v is not None and v.isdigit() else None
+    return count("op_samples"), count("write_samples")
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("parent_dir")
@@ -83,17 +106,21 @@ def main():
 
     values = {s: {m["name"]: [] for m in metrics} for s in SIDES}
     ops = {s: [0, 0] for s in SIDES}  # attempted, failed
+    # (write count, store_bytes_per_row, recall) of each complete pair's run
+    by_writes = {s: [] for s in SIDES}
     bad = []
     with open(log, "a") as out:
         for i in range(a.pairs):
             seed = a.first_seed + i
             order = SIDES if i % 2 == 0 else SIDES[::-1]
-            pair = {}
+            pair, writes = {}, {}
             for k, side in enumerate(order):
                 code, r, err = run(dirs[side], a.workload, seed,
                                    spec["run_seconds"])
+                op_n, write_n = samples(dirs[side], a.workload, seed)
                 rec = {"pair": i, "seed": seed, "side": side, "order": k,
-                       "exit": code, "result": r}
+                       "exit": code, "op_samples": op_n,
+                       "write_samples": write_n, "result": r}
                 if code != 0 or r is None or not r.get("correct"):
                     rec["stderr_tail"] = err
                     bad.append(f"seed {seed} {side}: exit {code}, "
@@ -101,6 +128,7 @@ def main():
                 out.write(json.dumps(rec) + "\n")
                 out.flush()
                 pair[side] = r
+                writes[side] = write_n
                 status = "ok" if code == 0 and r and r.get("correct") else "FAILED"
                 print(f"pair {i} seed {seed} {side}: {status}", file=sys.stderr)
             # a metric enters the comparison only from pairs where both
@@ -112,6 +140,10 @@ def main():
                     for m in metrics:
                         values[s][m["name"]].append(
                             pair[s]["metrics"][m["name"]]["value"])
+                    by_writes[s].append((
+                        writes[s],
+                        pair[s]["metrics"]["store_bytes_per_row"]["value"],
+                        pair[s]["metrics"]["recall"]["value"]))
 
     n = len(values["parent"][metrics[0]["name"]])
     need = math.ceil(0.9 * n)
@@ -145,6 +177,17 @@ def main():
               f"{'/'.join(f'{v:.4g}' for v in cq):>30}"
               f"{f'{wins}/{n}':>8}{rel:>+9.1%}{m['bound']:>7.0%}"
               f"{regress:>12}  {'holds' if gain else 'no'}")
+    print(f"{'side':<8}{'writes':>7}{'runs':>6}"
+          f"{'store_bytes_per_row med':>25}{'recall med':>12}")
+    for s in SIDES:
+        groups = {}
+        for w, b, r in by_writes[s]:
+            groups.setdefault(w, []).append((b, r))
+        for w in sorted(groups, key=lambda w: (w is None, w or 0)):
+            g = groups[w]
+            print(f"{s:<8}{'?' if w is None else w:>7}{len(g):>6}"
+                  f"{statistics.median(b for b, _ in g):>25.4g}"
+                  f"{statistics.median(r for _, r in g):>12.4g}")
     for s in SIDES:
         att, fail = ops[s]
         print(f"{s}: {fail} of {att} ops failed")

@@ -1720,9 +1720,11 @@ object Queries {
     * [[Similarity.ivfPqProbeTopK]]): the probe opens only the probed
     * cells' directories — the ADC leg reads their codes column, the
     * exact re-rank their vectors for the shortlist alone. Contract:
-    * pq_topk's bounded assertions PLUS a plan assertion that the
-    * re-rank scan read fewer `__cell` directories than the index holds —
-    * all engine-verified booleans DuckDB expects true. Row parity with
+    * pq_topk's bounded assertions PLUS a pruning assertion that the probe
+    * opened fewer `__cell` directories than the index holds (from the
+    * probe's own file listing, so it holds on the driver-served path,
+    * which has no scan node) — all engine-verified booleans DuckDB
+    * expects true. Row parity with
     * the inline [[Similarity.ivfPqTopK]] plan (same seed → same model →
     * identical rows) is pinned in `SimilaritySpec` rather than re-run
     * here: the inline leg re-trains the whole model, doubling the
@@ -1739,21 +1741,16 @@ object Queries {
       Similarity.ivfPqBuild(corpus.select("vec_id", "embedding"),
         "embedding", r, nCells = PqIndexCells, m = 16, ksub = 16)
     }
-    val approx = Similarity.ivfPqProbeTopK(s, path, queries, "embedding",
+    val plan = Similarity.probePlan(s, path, queries, "embedding",
       "vec_id", "query_id", k = 10, nProbe = PqIndexProbe,
       shortlistFactor = 8)
-    // plan assertion: the re-rank scan (the one reading the vectors)
-    // partition-pruned to fewer cells than the index holds
-    val rerankScans = approx.queryExecution.sparkPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec
-        if f.metadata.get("PartitionFilters").exists(_.contains("__cell")) &&
-          f.output.exists(_.name == "embedding") =>
-        f.selectedPartitions.partitionCount
-    }
+    val approx = plan.topK
+    // pruning assertion: the probe opens fewer cells than the index holds
+    // (read from the listing both serving paths read from)
     val dataDir = new org.apache.hadoop.fs.Path(s"$path/data")
     val held = dataDir.getFileSystem(s.sessionState.newHadoopConf())
       .listStatus(dataDir).count(_.getPath.getName.startsWith("__cell="))
-    val pruned = rerankScans.size == 1 && rerankScans.head < held
+    val pruned = plan.cells.nonEmpty && plan.cells.size < held
     val exactTop = Similarity.bruteForceTopK(corpus, queries, "embedding",
         "vec_id", "query_id", k = 10)
       .select(col("query_id"), col("vec_id"), lit(true).as("__in_exact"))

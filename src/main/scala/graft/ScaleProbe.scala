@@ -33,9 +33,9 @@ import graft.tools.DevSession
   * SPARK_GRAFT_SCALE (replicas, default 10), SPARK_GRAFT_SCALE_PASSES
   * (default 2), SPARK_GRAFT_PROBES (comma list of registry names; default:
   * every entry not marked opt-in) and SPARK_GRAFT_CPUS (via
-  * [[graft.tools.DevSession]]). `core_scaling` and `simhash_precision` are
-  * opt-in; `bpe_train` reads SPARK_GRAFT_BPE_MERGES, `core_scaling`
-  * SPARK_GRAFT_CORE_OPS.
+  * [[graft.tools.DevSession]]). `core_scaling`, `simhash_precision` and
+  * `probe_gate` are opt-in; `bpe_train` reads SPARK_GRAFT_BPE_MERGES,
+  * `core_scaling` SPARK_GRAFT_CORE_OPS.
   */
 object ScaleProbe {
 
@@ -304,7 +304,8 @@ object ScaleProbe {
     Probe("delete_scale", deleteScale),
     Probe("index_delete_scale", indexDeleteScale),
     Probe("core_scaling", coreScaling, default = false),
-    Probe("simhash_precision", simhashPrecision, default = false))
+    Probe("simhash_precision", simhashPrecision, default = false),
+    Probe("probe_gate", probeGate, default = false))
 
   /** The pair-join strategies on letter-rotated replicas: the exact
     * single-pass string-keyed inverted-index join, the MinHash prefilter
@@ -423,6 +424,9 @@ object ScaleProbe {
       model
     }
     val pqEncoded = spark.read.parquet(pqPath)
+    val probePath = servedBy(Similarity.probePlan(spark, ivfPath, annQueries,
+      "embedding", "vec_id", "query_id", k = 10, nProbe = nProbe,
+      shortlistFactor = 8))
     val results = timeVariants(
       "brute_force" -> (() => Similarity.bruteForceTopK(
         annCorpus, annQueries, "embedding", "vec_id", "query_id",
@@ -436,7 +440,57 @@ object ScaleProbe {
     emit("ann_scale", obj("scale" -> scale, "vectors" -> nVecs, "queries" -> 20,
       "passes" -> passes, "index_build_sec" -> buildSec, "cells" -> cells,
       "pq_encode_sec" -> pqEncodeSec, "variants" -> perVariant(results, "rows"),
-      "sf" -> sfDir))
+      "ivfpq_probe_path" -> probePath, "sf" -> sfDir))
+  }
+
+  /** Which path serves a planned IVF-PQ probe: "driver" or "spark". */
+  private def servedBy(plan: Similarity.ProbePlan): String =
+    if (plan.servedOnDriver) "driver" else "spark"
+
+  /** The measurement behind [[Similarity]]'s driver-probe gate (opt-in):
+    * warm 16-query top-10 probes (shortlist factor 16, `ann_serve`'s
+    * widths) of 64-cell IVF-PQ indexes of 10 k, 50 k and 200 k 64-d
+    * vectors (rotated embedding replicas), nProbe 1…64, each timed
+    * through both serving paths ([[Similarity.ProbePlan]]'s `onDriver`
+    * and `onSpark`, planning included) with the probed part-file bytes.
+    * Each cell is one warm-up run of either path, then the min of
+    * `passes` runs. */
+  private def probeGate(c: Ctx): Unit = {
+    import c._
+    val base = fixture("embeddings", "vec_id", "embedding")
+    val baseRows = base.count()
+    val batch = base.filter(col("vec_id") < 16)
+      .select(col("vec_id").as("query_id"), col("embedding"))
+    // a local batch, as a service probes with: it collects without a job
+    val queries = spark.createDataFrame(
+      java.util.Arrays.asList(batch.collect(): _*), batch.schema)
+    val rows = Seq(10000, 50000, 200000).flatMap { n =>
+      val reps = math.max(1, math.ceil(n.toDouble / baseRows).toInt)
+      val corpus = staged(embeddingReplicas(rotate = true, reps), "gate")
+        .limit(n)
+      val idx = tempDir("gate_idx").toString
+      Similarity.ivfPqBuild(corpus, "embedding", idx, nCells = 64)
+      Seq(1, 2, 4, 8, 16, 32, 64).map { nProbe =>
+        def plan() = Similarity.probePlan(spark, idx, queries, "embedding",
+          "vec_id", "query_id", k = 10, nProbe = nProbe,
+          shortlistFactor = 16)
+        val bytes = plan().bytes
+        def path(run: Similarity.ProbePlan => DataFrame): Double = {
+          run(plan()).collect()
+          timed(run(plan()).collect())._1
+        }
+        val driverSec = path(_.onDriver)
+        val sparkSec = path(_.onSpark)
+        val row = obj("vectors" -> n, "n_probe" -> nProbe, "bytes" -> bytes,
+          "driver_sec" -> driverSec, "spark_sec" -> sparkSec)
+        println(row)
+        row
+      }
+    }
+    emit("probe_gate", obj("queries" -> 16, "k" -> 10, "cells" -> 64,
+      "shortlist_factor" -> 16, "passes" -> passes, "cpus" -> cpus,
+      "gate_bytes" -> Similarity.DriverProbeBytes,
+      "sweep" -> Json(rows.mkString("[", ",", "]")), "sf" -> sfDir))
   }
 
   /** What the nProbe knob buys: sweep the probed-cell budget on a
@@ -477,7 +531,11 @@ object ScaleProbe {
           shortlistFactor = 32)
         .select("query_id", "vec_id")
         .join(rcBrute, Seq("query_id", "vec_id"), "left_semi").count())
-      label -> obj("n_probe" -> np, "sec" -> secs, "recall_at_10" -> hits / rcBruteN)
+      val probePath = servedBy(Similarity.probePlan(spark, rcIdx, rcQueries,
+        "embedding", "vec_id", "query_id", k = 10, nProbe = np,
+        shortlistFactor = 32))
+      label -> obj("n_probe" -> np, "sec" -> secs,
+        "recall_at_10" -> hits / rcBruteN, "probe_path" -> probePath)
     }
     rcBrute.unpersist()
     emit("ivf_recall_curve", obj("scale" -> scale, "vectors" -> nRcVecs,

@@ -1,8 +1,11 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType,
+  StructField, StructType}
 
 import graft.functions.{VectorFunctions => V}
 
@@ -42,9 +45,17 @@ object Similarity {
       .toDF(queryIdCol, "topk")
       .select(col(queryIdCol), posexplode(col("topk")).as(Seq("__pos", "__item")))
       .select(col(queryIdCol), col("__item._2").as(idCol),
-        round(col("__item._1"), 6).as("cosine"),
+        rounded(col("__item._1")).as("cosine"),
         (col("__pos") + 1).cast("int").as("rank"))
   }
+
+  /** The score a ranked answer returns: the cosine rounded to 6 places. */
+  private def rounded(cosine: org.apache.spark.sql.Column) = round(cosine, 6)
+
+  /** Exact cosine of a corpus vector against the query batch's `__qvec`,
+    * given the stored `__cn` and the query's `__qn`. */
+  private def exactCosine(vecCol: String) = V.cosineGivenNorms(
+    col(vecCol), col("__qvec"), col("__cn"), col("__qn"))
 
   /** Exact re-rank of an ANN shortlist: `rows` carries `(idCol, vecCol,
     * __cn)` (the stored or computed corpus norm); the shortlist's
@@ -58,8 +69,7 @@ object Similarity {
       .select(col(idCol).cast("long").as(idCol), col(vecCol), col("__cn"))
       .join(broadcast(shortlist), Seq(idCol))
       .join(broadcast(qExact), Seq(queryIdCol))
-      .withColumn("cosine", V.cosineGivenNorms(
-        col(vecCol), col("__qvec"), col("__cn"), col("__qn")))
+      .withColumn("cosine", exactCosine(vecCol))
     rankTopK(rescored, queryIdCol, idCol, k)
   }
 
@@ -96,8 +106,7 @@ object Similarity {
     val scored = corpus
       .withColumn("__cn", V.norm(col(vecCol)))
       .join(broadcast(q))
-      .withColumn("cosine", V.cosineGivenNorms(
-        col(vecCol), col("__qvec"), col("__cn"), col("__qn")))
+      .withColumn("cosine", exactCosine(vecCol))
     rankTopK(scored, queryIdCol, idCol, k)
   }
 
@@ -335,8 +344,7 @@ object Similarity {
       centroids, probes)
     val scored = assigned
       .join(broadcast(q), Seq("__cell"))
-      .withColumn("cosine", V.cosineGivenNorms(
-        col(vecCol), col("__qvec"), col("__cn"), col("__qn")))
+      .withColumn("cosine", exactCosine(vecCol))
     rankTopK(scored, queryIdCol, idCol, k)
   }
 
@@ -1234,8 +1242,7 @@ object Similarity {
       .drop("__qcell")
     val scored = c
       .join(broadcast(q), Seq("__cell"))
-      .withColumn("cosine", V.cosineGivenNorms(
-        col(vecCol), col("__qvec"), col("__cn"), col("__qn")))
+      .withColumn("cosine", exactCosine(vecCol))
     rankTopK(scored, queryIdCol, idCol, k)
   }
 
@@ -1746,27 +1753,35 @@ object Similarity {
     * the exact path. `q` must carry `__qvec`/`__qn` ([[withQueryNorm]]). */
   private def adcScored(encoded: DataFrame, q: DataFrame, model: PqModel,
                         joinCols: Seq[String]): DataFrame = {
-    // ONE flattened lut column (m·ksub contiguous doubles) instead of m
-    // separate array columns: the broadcast join then copies a single
-    // contiguous array per scored row, and the per-pair score is one
-    // native m-add loop (PqAdcDotExpr) instead of an m-deep element_at
-    // tree — measured 5.3s -> sub-second for 20 queries x 100k rows
-    // (pq_crossover probe) with bit-identical results (same sub-dots,
-    // same left-to-right f64 accumulation order)
-    val flatLut = array((0 until model.m).flatMap { j =>
-      val qSub = slice(col("__qvec"), j * model.dsub + 1, model.dsub)
-      model.codebooks(j).map(c => V.dot(qSub, lit(c)))
-    }.toIndexedSeq: _*)
-    val withLut = q.withColumn("__lut", flatLut)
-    val adcDot = graft.functions.VectorExpressions.pqAdcDot(
-      col("__codes"), col("__lut"), model.ksub)
+    val withLut = q.withColumn("__lut", flatLut(model))
     val joined =
       if (joinCols.isEmpty) encoded.join(broadcast(withLut))
       else encoded.join(broadcast(withLut), joinCols)
-    joined.withColumn("cosine",
-      when(col("__cn") > 0 && col("__qn") > 0,
-        adcDot / (col("__cn") * col("__qn"))))
+    joined.withColumn("cosine", adcCosine(model))
   }
+
+  /** A query's ADC lookup table over its `__qvec`: LUT(j)(c) =
+    * q_j · codebook(j)(c), as ONE flattened column of m·ksub contiguous
+    * doubles instead of m separate array columns. The broadcast join then
+    * copies a single contiguous array per scored row, and the per-pair
+    * score is one native m-add loop (PqAdcDotExpr) instead of an m-deep
+    * element_at tree — measured 5.3s -> sub-second for 20 queries x 100k
+    * rows (pq_crossover probe) with bit-identical results (same sub-dots,
+    * same left-to-right f64 accumulation order). */
+  private def flatLut(model: PqModel) =
+    array((0 until model.m).flatMap { j =>
+      val qSub = slice(col("__qvec"), j * model.dsub + 1, model.dsub)
+      model.codebooks(j).map(c => V.dot(qSub, lit(c)))
+    }.toIndexedSeq: _*)
+
+  /** Approximate cosine of a coded row (`__codes`, `__cn`) against a
+    * query's `__lut` and `__qn`: ADC-dot / (‖v‖·‖q‖), null for a zero
+    * norm on either side. */
+  private def adcCosine(model: PqModel) =
+    when(col("__cn") > 0 && col("__qn") > 0,
+      graft.functions.VectorExpressions.pqAdcDot(
+        col("__codes"), col("__lut"), model.ksub) /
+        (col("__cn") * col("__qn")))
 
   // --------------------------------------------------------------- IVF-PQ
 
@@ -2123,26 +2138,39 @@ object Similarity {
 
   /** Probe an [[ivfPqBuild]] index: the probed cell set (at most
     * queries × nProbe distinct cells, ranked driver-side — bounded by
-    * nCells) becomes a LITERAL partition filter, so the scan reads only
-    * the probed `__cell=` directories (static partition pruning —
-    * verified by plan inspection in SimilaritySpec); the ADC pass
-    * projects only (id, codes, norm) — parquet column pruning keeps the
-    * raw vectors unread — and the exact re-rank reads the vector column
-    * for the broadcast shortlist alone, from the same pruned directories.
-    * Same output shape as [[bruteForceTopK]]; returned cosines are exact.
+    * nCells) is the only part of `data/` the probe lists and reads. Same
+    * output shape as [[bruteForceTopK]]; returned cosines are exact.
+    *
+    * Two serving paths, one answer. The probe lists the probed cells'
+    * part files once ([[probePlan]]); when their total size is at most
+    * [[DriverProbeBytes]] it reads them on the driver with Spark's own
+    * parquet reader, scores them there and returns a local relation
+    * ([[ProbePlan.onDriver]]): a warm probe then runs no Spark job, in
+    * construction or in its action. Above the gate it returns the Spark
+    * plan ([[ProbePlan.onSpark]]): the probed cells become a LITERAL
+    * partition filter (static partition pruning — verified by plan
+    * inspection in SimilaritySpec); the ADC pass projects only (id,
+    * codes, norm) — parquet column pruning keeps the raw vectors unread —
+    * and the exact re-rank reads the vector column for the broadcast
+    * shortlist alone, from the same pruned directories. Both paths
+    * evaluate the same Catalyst expressions (the ADC cosine, the exact
+    * cosine, the rounding) and rank with [[TopKAggregator]], so they
+    * return the same rows, bit for bit (IvfPqProbePlanSpec). The gate is
+    * a property of the probed bytes alone; its value is measured
+    * (SCALEPROBE.json `probe_gate`, see [[DriverProbeBytes]]).
     *
     * Planning runs no Spark job on a warm index. The query batch is
     * COLLECTED ONCE (it is broadcast anyway, so it must be small; a
     * local batch collects without a job) and each query's cells are
-    * ranked on the driver ([[rankCells]]); both the ADC leg and the exact
-    * re-rank read those rows as local relations, so a nondeterministic
-    * `queries` is evaluated exactly once and both legs see the same
-    * vectors. The model (centroids, codebooks, `data/` schema) comes from
-    * a JVM-wide handle valid for ONE generation of the index: the first
-    * probe of a generation reads the relations and stores the handle
-    * once its post-plan generation check has passed; a rebuild writes a
-    * new generation, so no probe is ever planned with a replaced model.
-    * An index without a generation marker is read afresh on every probe.
+    * ranked on the driver ([[rankCells]]); both legs read those rows, so
+    * a nondeterministic `queries` is evaluated exactly once and both legs
+    * see the same vectors. The model (centroids, codebooks, `data/`
+    * schema) comes from a JVM-wide handle valid for ONE generation of the
+    * index: the first probe of a generation reads the relations and
+    * stores the handle once its post-plan generation check has passed; a
+    * rebuild writes a new generation, so no probe is ever planned with a
+    * replaced model. An index without a generation marker is read afresh
+    * on every probe.
     *
     * Widths: `nProbe` sets the scanned fraction (~nProbe/nCells) and
     * `shortlistFactor` the re-rank depth (factor·k ADC candidates per
@@ -2153,30 +2181,58 @@ object Similarity {
     * recall. Full probe with a shortlist covering the corpus is the
     * exactness baseline (equal to brute force).
     *
-    * Racing a concurrent [[indexDelete]]/[[ivfPqMaintain]] swap:
-    * consistent answer or LOUD retryable failure (fence refusal at plan
-    * time, missing input mid-scan), never silent partial results — see
-    * [[indexDelete]]'s in-flight-readers contract (pinned live in
-    * `SimilaritySpec`). */
+    * Racing a concurrent [[indexDelete]]/[[ivfPqMaintain]] swap, on
+    * either path: consistent answer or LOUD retryable failure (fence
+    * refusal at plan time, a listed file missing mid-read), never silent
+    * partial results — see [[indexDelete]]'s in-flight-readers contract
+    * (pinned live in `SimilaritySpec`). The driver path never skips a
+    * listed file either. */
   def ivfPqProbeTopK(spark: SparkSession, path: String, queries: DataFrame,
                      vecCol: String, idCol: String, queryIdCol: String,
                      k: Int, nProbe: Int = 0,
-                     shortlistFactor: Int = 0): DataFrame = {
+                     shortlistFactor: Int = 0): DataFrame =
+    probePlan(spark, path, queries, vecCol, idCol, queryIdCol, k, nProbe,
+      shortlistFactor).topK
+
+  /** Probed part-file bytes at or below which [[ivfPqProbeTopK]] serves
+    * on the driver (16 MiB). MEASURED (SCALEPROBE.json `probe_gate`: warm
+    * 16-query top-10 probes, shortlist factor 16, of 64-cell indexes of
+    * 10 k, 50 k and 200 k 64-d vectors, nProbe 1…64, local[4] on a 4-core
+    * box): the driver path won every point up to 46.9 MB of probed files
+    * (200 k vectors, nProbe 8: 1.61 s vs 1.84 s) and lost from 49.9 MB
+    * (nProbe 16: 2.23 s vs 2.14 s). Its cost grows with query × row
+    * pairs where the Spark plan's is mostly a fixed per-job cost, so
+    * the worst case is every query scoring every probed row: the
+    * full-probe points (2.8 MB 0.41 s vs 1.32 s, 13.6 MB 1.43 s vs
+    * 2.05 s, 50.7 MB 4.81 s vs 3.22 s) cross near 24 MB. The gate sits
+    * below that, and caps what a probe materializes on the driver at
+    * ~60 k rows of this shape. */
+  private[graft] val DriverProbeBytes: Long = 16L << 20
+
+  /** Plan one [[ivfPqProbeTopK]]: check the index, resolve the model and
+    * the widths, collect the query batch, rank each query's cells and
+    * list the probed cells' files — everything both serving paths read.
+    * No Spark job runs here on a warm index. */
+  private[graft] def probePlan(spark: SparkSession, path: String,
+                               queries: DataFrame, vecCol: String,
+                               idCol: String, queryIdCol: String, k: Int,
+                               nProbe: Int = 0,
+                               shortlistFactor: Int = 0): ProbePlan = {
     require(shortlistFactor >= 0,
       "shortlistFactor must be >= 0 (0 = calibrated default)")
     requireIndex(spark, path)
     val gen0 = readGeneration(spark, path)
     // The probed cells are known BEFORE `data/` needs to open (they come
-    // from the centroids and the query batch), so the scan opens ONLY
+    // from the centroids and the query batch), so the probe opens ONLY
     // the probed `__cell=` directories instead of discovering the whole
     // tree (a full open lists every cell dir per probe; at object-store
     // scale that is cell-count LIST calls for a probe that touches
     // nProbe of them). One driver-side listStatus of `data/` answers
     // existence; on a cold generation the schema comes from a single cell
     // directory (basePath keeps `__cell` a partition column, so the isin
-    // filter below stays the PartitionFilters entry the plan contract
-    // asserts). See [[readPartitionDirs]] for the driver-side listing
-    // above 32 dirs and the drained-subset fallback.
+    // filter of the Spark path stays the PartitionFilters entry the plan
+    // contract asserts). See [[readPartitionDirs]] for the driver-side
+    // listing above 32 dirs.
     val existing = partitionDirs(spark, s"$path/data", "__cell")
     val model = cachedModel(spark, path, gen0).getOrElse {
       val (centroids, pq) = quantizers(spark, path, None)
@@ -2196,29 +2252,201 @@ object Similarity {
     val qNorm = withQueryNorm(queries, model.dataSchema.fieldNames.toIndexedSeq,
       queryIdCol, vecCol, allowed = Set("__cell", "__cn", "__codes"))
     val qRows = qNorm.collect()
-    val qCells = probeCellRows(qRows, centroids, probes)
-    val probedCells = qCells.map(r => r.getInt(r.length - 1)).distinct.sorted
-    val corpus = readPartitionDirs(spark, s"$path/data",
-      probedCells.toIndexedSeq.flatMap(existing.get), Some(model.dataSchema))
+    val cellsOf = qRows.map(probeCells(_, centroids, probes))
+    val probedCells = cellsOf.flatten.distinct.sorted
+    val dirs = probedCells.toIndexedSeq.flatMap(existing.get)
+    // no probed cell has a directory: there is nothing to read, and an
+    // empty directory list would open the whole tree
+    val corpus =
+      if (dirs.isEmpty) None
+      else Some(readPartitionDirs(spark, s"$path/data", dirs,
+        Some(model.dataSchema)))
     // post-plan race check: the model was loaded (or looked up by gen0)
     // and data listed above — a rebuild completing in between would
     // prune the NEW files with the OLD quantizer (see
     // requireGenerationUnchanged)
     requireGenerationUnchanged(spark, path, gen0)
     storeModel(spark, path, gen0, model)
-    val q = localFrame(spark, qCells,
-      qNorm.schema.add("__cell", IntegerType, nullable = false))
-    val qExact = localFrame(spark, qRows, qNorm.schema)
-    val pruned = corpus
-      .filter(col("__cell").isin(probedCells.toIndexedSeq: _*))
-    // ADC leg: explicit narrow projection — the scan reads no vectors
-    val shortlist = rankTopK(
-      adcScored(pruned.select(col(idCol), col("__cell"), col("__codes"),
-        col("__cn")), q, model.pq, Seq("__cell")),
-      queryIdCol, idCol, k * factor)
-      .select(col(queryIdCol), col(idCol))
-    exactRerank(pruned, shortlist, qExact, vecCol, idCol, queryIdCol, k)
+    new ProbePlan(spark, model.pq, qNorm.schema, qRows, cellsOf,
+      probedCells.toIndexedSeq, corpus, vecCol, idCol, queryIdCol, k,
+      factor)
   }
+
+  /** A planned probe: the collected query batch with each query's probed
+    * cells, and the relation over the probed cells' directories (none
+    * when no probed cell has one). [[files]] is that relation's one
+    * listing; both paths read exactly those files. */
+  private[graft] final class ProbePlan private[Similarity] (
+      spark: SparkSession, pq: PqModel, qSchema: StructType,
+      qRows: Array[Row], cellsOf: Array[Seq[Int]], probedCells: Seq[Int],
+      corpus: Option[DataFrame], vecCol: String, idCol: String,
+      queryIdCol: String, k: Int, factor: Int) {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.execution.datasources.{FileStatusWithMetadata,
+      HadoopFsRelation, LogicalRelation}
+
+    private val relation: Option[HadoopFsRelation] = corpus.map(
+      _.queryExecution.analyzed.collectFirst {
+        case l: LogicalRelation => l.relation
+      }.get.asInstanceOf[HadoopFsRelation])
+
+    /** The probed cells' part files, each with its `__cell` partition
+      * value, from the relation's file index: listed once, when the
+      * relation opened. */
+    private val files: Seq[(InternalRow, FileStatusWithMetadata)] =
+      relation.toSeq.flatMap { r =>
+        val wanted = probedCells.toSet
+        r.location.listFiles(Nil, Nil)
+          .filter(d => wanted(d.values.getInt(0)))
+          .flatMap(d => d.files.map(d.values -> _))
+      }
+
+    /** Total bytes of [[files]]: what the gate compares. */
+    def bytes: Long = files.map(_._2.fileStatus.getLen).sum
+
+    /** The cells whose files the probe reads. */
+    def cells: Set[Int] = files.map(_._1.getInt(0)).toSet
+
+    /** Whether [[topK]] serves on the driver. */
+    def servedOnDriver: Boolean = bytes <= DriverProbeBytes
+
+    /** The probe's answer, through the path the gate picks. */
+    def topK: DataFrame = if (servedOnDriver) onDriver else onSpark
+
+    /** The Spark plan: ADC over the pruned codes scan, exact re-rank of
+      * the broadcast shortlist over the pruned vector scan. */
+    def onSpark: DataFrame = corpus.fold(onDriver) { c =>
+      val q = localFrame(spark, withCells(qRows, cellsOf),
+        qSchema.add("__cell", IntegerType, nullable = false))
+      val qExact = localFrame(spark, qRows, qSchema)
+      val pruned = c.filter(col("__cell").isin(probedCells: _*))
+      // ADC leg: explicit narrow projection — the scan reads no vectors
+      val shortlist = rankTopK(
+        adcScored(pruned.select(col(idCol), col("__cell"), col("__codes"),
+          col("__cn")), q, pq, Seq("__cell")),
+        queryIdCol, idCol, k * factor)
+        .select(col(queryIdCol), col(idCol))
+      exactRerank(pruned, shortlist, qExact, vecCol, idCol, queryIdCol, k)
+    }
+
+    /** The same answer computed on the driver, as a local relation: the
+      * listed files read with Spark's parquet reader (a file that
+      * vanished since the listing throws), the ADC and exact cosines
+      * evaluated as the Spark plan's own expressions ([[bound]]), ranked
+      * with [[TopKAggregator]]. Every probed row is held on the driver. */
+    def onDriver: DataFrame = localFrame(spark,
+      relation.fold(Array.empty[Row])(driverRows),
+      probeResultSchema(queryIdCol, idCol))
+
+    private def driverRows(rel: HadoopFsRelation): Array[Row] = {
+      import org.apache.spark.sql.catalyst.expressions.JoinedRow
+      import org.apache.spark.sql.execution.PartitionedFileUtil
+      import org.apache.spark.sql.execution.datasources.FileFormat
+      import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+      val readSchema = StructType(
+        Seq(idCol, "__codes", "__cn", vecCol).map(rel.dataSchema(_)))
+      val read = new ParquetFileFormat().buildReaderWithPartitionValues(
+        spark, rel.dataSchema, rel.partitionSchema, readSchema, Nil,
+        rel.options + (FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        spark.sessionState.newHadoopConfWithOptions(rel.options))
+      val rows = files.flatMap { case (cell, f) =>
+        val st = f.fileStatus
+        read(PartitionedFileUtil.getPartitionedFile(f, st.getPath, cell, 0L,
+          st.getLen)).map(_.copy())
+      }.toArray
+      val rowSchema = StructType(readSchema ++ rel.partitionSchema)
+      val rowId = bound(spark, rowSchema, col(idCol).cast("long")).exprs.head
+      val ids = rows.map(rowId.eval(_))
+      val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToCatalystConverter(qSchema)
+      val query = bound(spark, qSchema,
+        col(queryIdCol).cast("long").as(queryIdCol), col("__qvec"),
+        col("__qn"), flatLut(pq).as("__lut"))
+      val qs = qRows.map(r => query(toCatalyst(r).asInstanceOf[InternalRow]))
+      val scores = bound(spark, StructType(rowSchema ++ query.schema),
+        adcCosine(pq), exactCosine(vecCol))
+      val pair = new JoinedRow
+      def rank(agg: TopKAggregator,
+               ranked: mutable.Map[Long, List[(Double, Long)]], qid: Long,
+               score: Any, id: Any): Unit =
+        if (score != null && id != null && !score.asInstanceOf[Double].isNaN)
+          ranked(qid) = agg.reduce(ranked.getOrElse(qid, agg.zero),
+            (qid, score.asInstanceOf[Double], id.asInstanceOf[Long]))
+      // ADC: each query against every row of each of its probed cells
+      val cellPos = rowSchema.fieldIndex("__cell")
+      val byCell = rows.indices.groupBy(i => rows(i).getInt(cellPos))
+      val adc = scores.exprs(0)
+      val short = new TopKAggregator(k * factor)
+      val shortlists = mutable.LinkedHashMap.empty[Long, List[(Double, Long)]]
+      for (qi <- qs.indices if !qs(qi).isNullAt(0); c <- cellsOf(qi);
+           i <- byCell.getOrElse(c, Nil))
+        rank(short, shortlists, qs(qi).getLong(0),
+          adc.eval(pair(rows(i), qs(qi))), ids(i))
+      // exact re-rank: each shortlisted (query id, id) against every row
+      // with that id and every query with that query id
+      val byId = rows.indices.filter(ids(_) != null)
+        .groupBy(i => ids(i).asInstanceOf[Long])
+      val byQid = qs.filterNot(_.isNullAt(0)).groupBy(_.getLong(0))
+      val exact = scores.exprs(1)
+      val top = new TopKAggregator(k)
+      val tops = mutable.LinkedHashMap.empty[Long, List[(Double, Long)]]
+      for ((qid, cands) <- shortlists; (_, id) <- cands;
+           i <- byId.getOrElse(id, Nil); q <- byQid(qid))
+        rank(top, tops, qid, exact.eval(pair(rows(i), q)), id)
+      val round = bound(spark, StructType(Seq(
+        StructField("cosine", DoubleType))), rounded(col("cosine"))).exprs.head
+      tops.toSeq.sortBy(_._1).flatMap { case (qid, best) =>
+        top.finish(best).zipWithIndex.map { case ((s, id), r) =>
+          Row(qid, id, round.eval(InternalRow(s)), r + 1)
+        }
+      }.toArray
+    }
+  }
+
+  /** The schema of a probe's answer, on either path. */
+  private def probeResultSchema(queryIdCol: String, idCol: String): StructType =
+    StructType(Seq(
+      StructField(queryIdCol, LongType, nullable = false),
+      StructField(idCol, LongType),
+      StructField("cosine", DoubleType),
+      StructField("rank", IntegerType, nullable = false)))
+
+  /** Expressions bound to input positions, with their output `schema`;
+    * `apply` evaluates them all, interpreted, on one input row. */
+  private final class Bound(
+      val exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+      val schema: StructType) {
+    def apply(row: org.apache.spark.sql.catalyst.InternalRow)
+        : org.apache.spark.sql.catalyst.InternalRow =
+      org.apache.spark.sql.catalyst.InternalRow.fromSeq(exprs.map(_.eval(row)))
+  }
+
+  /** `cols` over a relation of `schema`, resolved by the analyzer as in a
+    * Spark plan (the same coercions) and bound to the schema's positions,
+    * for interpreted evaluation on the driver. */
+  private def bound(spark: SparkSession, schema: StructType,
+                    cols: org.apache.spark.sql.Column*): Bound = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeSeq,
+      BindReferences, Expression}
+    val df = localFrame(spark, Array.empty, schema).select(cols: _*)
+    val plan = df.queryExecution.analyzed
+      .asInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Project]
+    new Bound(plan.projectList.map(e => BindReferences.bindReference(
+      e: Expression, AttributeSeq(plan.child.output))), df.schema)
+  }
+
+  /** One query's probed cells, in probe order ([[rankCells]]). */
+  private def probeCells(q: Row, centroids: Array[Array[Double]],
+                         nProbe: Int): Seq[Int] =
+    rankCells(doubles(q.getSeq[Any](q.fieldIndex("__qvec"))), centroids)
+      .take(nProbe).toSeq
+
+  /** Each query row repeated once per cell of `cells`, in the same
+    * order, with the cell appended. */
+  private def withCells(q: Array[Row], cells: Array[Seq[Int]]): Array[Row] =
+    q.zip(cells).flatMap { case (r, cs) =>
+      cs.map(c => Row.fromSeq(r.toSeq :+ c))
+    }
 
   /** [[withProbeCells]] on the driver, over collected [[withQueryNorm]]
     * rows: each row repeated once per probed cell, in the same order,
@@ -2226,11 +2454,7 @@ object Similarity {
   private[graft] def probeCellRows(q: Array[Row],
                                    centroids: Array[Array[Double]],
                                    nProbe: Int): Array[Row] =
-    q.flatMap { r =>
-      val vec = doubles(r.getSeq[Any](r.fieldIndex("__qvec")))
-      rankCells(vec, centroids).take(nProbe).map(c =>
-        Row.fromSeq(r.toSeq :+ c))
-    }
+    withCells(q, q.map(probeCells(_, centroids, nProbe)))
 
   /** Driver-side rows as a local relation: planning over it runs no job. */
   private def localFrame(spark: SparkSession, rows: Array[Row],

@@ -156,7 +156,7 @@ object Dev {
     "pack_sequences" -> "one shard exchange + partition-local sort + O(1)-state scan; no global sort, parallelism = shard count",
     "decontaminate_bloom" -> "bloom might_contain prefilter runs scan-side inside the corpus's WholeStageCodegen; only survivors reach the membership join",
     "pq_topk" -> "PQ-ADC: broadcast per-query LUTs score the (id, codes, norm) scan; bounded shortlist aggregation; exact re-rank joins the tiny shortlist back into one corpus scan",
-    "pq_index_topk" -> "persisted IVF-PQ index: the ADC scan reads (vec_id, __codes, __cn) from only the probed cells' directories (static PartitionFilters on __cell, plus dynamic pruning), and the exact re-rank reads the shortlist's vectors from the same pruned cell set -- the index is never scanned whole; the fixture scans feed the brute-force recall check",
+    "pq_index_topk" -> "persisted IVF-PQ index: the probed cells' files are below the driver gate, so the probe read and scored them on the driver and its answer is a LocalTableScan (no index scan in the plan; the pruned Spark plan above the gate is pinned in SimilaritySpec); the fixture scans feed the brute-force recall check",
     "ivfpq_topk" -> "IVF-PQ composition: probe cells restrict the ADC join on (__cell); shortlist re-ranked exact -- probe-fraction and per-row savings multiply",
     "chargram_lm" -> "model pass map-side combined + TakeOrderedAndProject topV cut; scoring via broadcast model join into the exploded scan, per-doc re-agg partial-aggregated",
     "semdedup_pairs" -> "cluster-then-prune: one cached cell-assignment pass; only (id, cell) keys shuffle into the pair join; per-candidate exact-cosine verify joins payloads by id",

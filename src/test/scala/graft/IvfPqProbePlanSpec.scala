@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, lit, transform, udf}
 
 import graft.operators.Similarity
@@ -185,7 +185,108 @@ class IvfPqProbePlanSpec extends SparkSpec {
       phase("action")(warm.collect()).length shouldBe 15
     }
     jobs.getOrElse("cold", 0) should be > 0 // the tap sees planning jobs
-    jobs.getOrElse("action", 0) should be > 0
+    jobs.getOrElse("action", 0) shouldBe 0
     jobs.getOrElse("construct", 0) shouldBe 0
+  }
+
+  /** (query id, id, raw cosine bits, rank) of a probe's answer, sorted. */
+  private def bits(df: DataFrame): Seq[(Long, Long, Long, Int)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1),
+      java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getInt(3)))
+      .toSeq.sorted
+
+  test("the driver path returns the Spark path's rows bit for bit: narrow, " +
+    "mid and over-full widths, shortlists shorter and longer than the " +
+    "probed rows, k above the rows available, planted ties, a zero " +
+    "vector, float and double vectors, a null query vector") {
+    // planted ties: copies of six corpus vectors under fresh ids
+    val dups = corp.filter($"vec_id" < 11)
+      .select(($"vec_id" + 100000L).as("vec_id"), $"embedding")
+    val zero = Seq((200000L, Array.fill(64)(0f))).toDF("vec_id", "embedding")
+    val planted = corp.unionByName(dups).unionByName(zero)
+    // a query on a planted vector: its top hits tie across two ids
+    val qs = localQueries(3).unionByName(
+      corp.filter($"vec_id" === 5L).select(lit(50L).as("query_id"),
+        $"embedding")).as[(Long, Array[Float])].collect().toSeq
+      .:+((99L, null: Array[Float])).toDF("query_id", "embedding")
+    def asDouble(df: DataFrame): DataFrame = df.withColumn("embedding",
+      transform(col("embedding"), _.cast("double")))
+    for ((rows, queries) <- Seq((planted, qs),
+        (asDouble(planted), asDouble(qs)))) {
+      val path = tempIndex("graft_driver_bits")
+      build(path, 8, rows)
+      for (nProbe <- Seq(1, 3, 8);
+           (k, factor) <- Seq((5, 1), (5, 400), (600, 1))) {
+        val plan = Similarity.probePlan(spark, path, queries, "embedding",
+          "vec_id", "query_id", k, nProbe, factor)
+        val (driver, onSpark) = (plan.onDriver, plan.onSpark)
+        withClue(s"nProbe=$nProbe k=$k factor=$factor " +
+            s"${rows.schema("embedding").dataType.simpleString}: ") {
+          driver.schema shouldBe onSpark.schema
+          val got = bits(driver)
+          got shouldBe bits(onSpark)
+          got should not be empty
+          got.map(_._1).toSet should not contain 99L // null query vector
+          got.map(_._2).toSet should not contain 200000L // zero vector
+          // the planted tie: both ids at cosine 1, the lower id first
+          got.filter(_._1 == 50L).sortBy(_._4).take(2)
+            .map(r => (r._2, r._4)) shouldBe
+            Seq((5L, 1), (100005L, 2))
+        }
+      }
+    }
+  }
+
+  test("a warm probe below the driver gate runs no Spark job, building " +
+    "the answer or collecting it; the Spark entry point still runs its " +
+    "action as jobs") {
+    val path = tempIndex("graft_driver_jobs")
+    build(path, 64)
+    val qs = localQueries(16)
+    def probe(): DataFrame = Similarity.ivfPqProbeTopK(spark, path, qs,
+      "embedding", "vec_id", "query_id", k = 10, nProbe = 2,
+      shortlistFactor = 16)
+    probe().collect() // stores the generation's handle
+    Similarity.probePlan(spark, path, qs, "embedding", "vec_id", "query_id",
+      k = 10, nProbe = 2, shortlistFactor = 16).servedOnDriver shouldBe true
+    var served, planned = Set.empty[Row]
+    val jobs = JobTap.count(spark.sparkContext) { phase =>
+      val warm = phase("construct")(probe())
+      served = phase("action")(warm.collect()).toSet
+      planned = phase("spark")(Similarity.probePlan(spark, path, qs,
+        "embedding", "vec_id", "query_id", k = 10, nProbe = 2,
+        shortlistFactor = 16).onSpark.collect()).toSet
+    }
+    served should not be empty
+    served shouldBe planned
+    jobs.getOrElse("construct", 0) shouldBe 0
+    jobs.getOrElse("action", 0) shouldBe 0
+    jobs.getOrElse("spark", 0) should be > 0
+  }
+
+  test("a probe none of whose probed cells has a directory answers empty " +
+    "on the driver, with no job: the whole data/ tree is never opened") {
+    val path = tempIndex("graft_driver_empty")
+    build(path, 64)
+    val qs = localQueries(1)
+    def probe(): DataFrame = Similarity.ivfPqProbeTopK(spark, path, qs,
+      "embedding", "vec_id", "query_id", k = 5, nProbe = 2,
+      shortlistFactor = 4)
+    probe().collect() should not be empty // stores the generation's handle
+    val cells = Similarity.probePlan(spark, path, qs, "embedding", "vec_id",
+      "query_id", k = 5, nProbe = 2, shortlistFactor = 4).cells
+    cells should not be empty
+    val victims = spark.read.parquet(s"$path/data")
+      .filter($"__cell".isin(cells.toSeq: _*)).select("vec_id").as[Long]
+      .collect().toSeq
+    Similarity.indexDelete(spark, path, victims.toDF("vec_id"),
+      idCol = "vec_id") shouldBe victims.size.toLong
+    cells.foreach(c =>
+      new java.io.File(path, s"data/__cell=$c").exists() shouldBe false)
+    val jobs = JobTap.count(spark.sparkContext) { phase =>
+      val warm = phase("construct")(probe())
+      phase("action")(warm.collect()) shouldBe empty
+    }
+    jobs shouldBe Map.empty
   }
 }

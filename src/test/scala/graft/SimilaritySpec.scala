@@ -112,9 +112,10 @@ class SimilaritySpec extends SparkSpec {
 
     val qs = emb.filter($"vec_id" < 1)
       .select($"vec_id".as("query_id"), $"embedding")
-    val res = Similarity.ivfPqProbeTopK(spark, path, qs,
+    // the Spark entry point: the plan a probe above the driver gate runs
+    val res = Similarity.probePlan(spark, path, qs,
       "embedding", "vec_id", "query_id", k = 5, nProbe = 2,
-      shortlistFactor = 8)
+      shortlistFactor = 8).onSpark
 
     // the re-rank scan (the one reading the vectors) carries a literal
     // partition filter on __cell and selects at most nProbe of the cell
@@ -252,8 +253,9 @@ class SimilaritySpec extends SparkSpec {
       ksub = 16)
     val qs = emb.filter($"vec_id" < 1)
       .select($"vec_id".as("query_id"), $"embedding")
-    val res = Similarity.ivfPqProbeTopK(spark, path, qs, "embedding",
-      "vec_id", "query_id", k = 5, nProbe = 2, shortlistFactor = 8)
+    // the Spark entry point: the plan a probe above the driver gate runs
+    val res = Similarity.probePlan(spark, path, qs, "embedding", "vec_id",
+      "query_id", k = 5, nProbe = 2, shortlistFactor = 8).onSpark
     val scans = res.queryExecution.sparkPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec
         if f.metadata.contains("PartitionFilters") &&
@@ -293,6 +295,40 @@ class SimilaritySpec extends SparkSpec {
       "query_id", k = 5, nProbe = 2, shortlistFactor = 8)
       .select("query_id", "vec_id", "cosine", "rank")
       .as[(Long, Long, Double, Int)].collect().sortBy(_._4) shouldBe inline
+  }
+
+  test("a driver-served probe reads only the probed cells' files: garbage " +
+    "in a cell it does not probe changes nothing, garbage in a probed " +
+    "cell fails loudly") {
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    val path = java.nio.file.Files.createTempDirectory("graft_ivfpq_drv")
+      .toString
+    Similarity.ivfPqBuild(emb.filter($"vec_id" >= 5), "embedding", path,
+      nCells = 8, m = 16, ksub = 16)
+    val qs = emb.filter($"vec_id" < 1)
+      .select($"vec_id".as("query_id"), $"embedding")
+    def probe() = Similarity.ivfPqProbeTopK(spark, path, qs, "embedding",
+        "vec_id", "query_id", k = 5, nProbe = 2, shortlistFactor = 8)
+      .select("query_id", "vec_id", "cosine", "rank")
+      .as[(Long, Long, Double, Int)].collect().toSet
+    val plan = Similarity.probePlan(spark, path, qs, "embedding", "vec_id",
+      "query_id", k = 5, nProbe = 2, shortlistFactor = 8)
+    plan.servedOnDriver shouldBe true
+    val probed = plan.cells
+    val before = probe()
+    before should not be empty
+    def garble(cell: Int): Unit =
+      new java.io.File(path, s"data/__cell=$cell").listFiles()
+        .filter(_.getName.endsWith(".parquet"))
+        .foreach(f => java.nio.file.Files.write(f.toPath,
+          "not a parquet file".getBytes("UTF-8")))
+    val cells = new java.io.File(path, "data").listFiles()
+      .map(_.getName).filter(_.startsWith("__cell="))
+      .map(_.stripPrefix("__cell=").toInt)
+    garble(cells.find(c => !probed(c)).get)
+    probe() shouldBe before
+    garble(probed.head)
+    an[Exception] should be thrownBy probe()
   }
 
   test("ivfPqAppend extends a persisted IVF-PQ index with the standing " +
