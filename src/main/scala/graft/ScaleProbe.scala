@@ -448,48 +448,59 @@ object ScaleProbe {
     if (plan.servedOnDriver) "driver" else "spark"
 
   /** The measurement behind [[Similarity]]'s driver-probe gate (opt-in):
-    * warm 16-query top-10 probes (shortlist factor 16, `ann_serve`'s
-    * widths) of 64-cell IVF-PQ indexes of 10 k, 50 k and 200 k 64-d
-    * vectors (rotated embedding replicas), nProbe 1…64, each timed
-    * through both serving paths ([[Similarity.ProbePlan]]'s `onDriver`
-    * and `onSpark`, planning included) with the probed part-file bytes.
-    * Each cell is one warm-up run of either path, then the min of
-    * `passes` runs. */
+    * warm top-10 probes (shortlist factor 16, `ann_serve`'s widths) of
+    * 64-cell IVF-PQ indexes of 10 k, 50 k and 200 k 64-d vectors (rotated
+    * embedding replicas), in batches of 1, 16, 64 and 256 queries, nProbe
+    * 1…64, each timed through both serving paths
+    * ([[Similarity.ProbePlan]]'s `onDriver` and `onSpark`, planning
+    * included) with the gate's two measures: the probed part-file bytes
+    * and their query-summed bytes. Each point is one warm-up run of
+    * either path, then the min of `passes` runs. The driver's cost only
+    * grows with nProbe, so a (vectors, batch) series stops after the
+    * driver path has lost at two widths in a row. */
   private def probeGate(c: Ctx): Unit = {
     import c._
     val base = fixture("embeddings", "vec_id", "embedding")
     val baseRows = base.count()
-    val batch = base.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("query_id"), col("embedding"))
-    // a local batch, as a service probes with: it collects without a job
-    val queries = spark.createDataFrame(
-      java.util.Arrays.asList(batch.collect(): _*), batch.schema)
     val rows = Seq(10000, 50000, 200000).flatMap { n =>
       val reps = math.max(1, math.ceil(n.toDouble / baseRows).toInt)
       val corpus = staged(embeddingReplicas(rotate = true, reps), "gate")
         .limit(n)
       val idx = tempDir("gate_idx").toString
       Similarity.ivfPqBuild(corpus, "embedding", idx, nCells = 64)
-      Seq(1, 2, 4, 8, 16, 32, 64).map { nProbe =>
-        def plan() = Similarity.probePlan(spark, idx, queries, "embedding",
-          "vec_id", "query_id", k = 10, nProbe = nProbe,
-          shortlistFactor = 16)
-        val bytes = plan().bytes
-        def path(run: Similarity.ProbePlan => DataFrame): Double = {
-          run(plan()).collect()
-          timed(run(plan()).collect())._1
-        }
-        val driverSec = path(_.onDriver)
-        val sparkSec = path(_.onSpark)
-        val row = obj("vectors" -> n, "n_probe" -> nProbe, "bytes" -> bytes,
-          "driver_sec" -> driverSec, "spark_sec" -> sparkSec)
-        println(row)
-        row
+      Seq(1, 16, 64, 256).flatMap { nQueries =>
+        val batch = base.filter(col("vec_id") < nQueries)
+          .select(col("vec_id").as("query_id"), col("embedding"))
+        // a local batch, as a service probes with: it collects without a job
+        val queries = spark.createDataFrame(
+          java.util.Arrays.asList(batch.collect(): _*), batch.schema)
+        require(queries.count() == nQueries, s"fewer than $nQueries queries")
+        var losses = 0
+        Iterator(1, 2, 4, 8, 16, 32, 64).takeWhile(_ => losses < 2).map { nProbe =>
+          def plan() = Similarity.probePlan(spark, idx, queries, "embedding",
+            "vec_id", "query_id", k = 10, nProbe = nProbe,
+            shortlistFactor = 16)
+          val p = plan()
+          def path(run: Similarity.ProbePlan => DataFrame): Double = {
+            run(plan()).collect()
+            timed(run(plan()).collect())._1
+          }
+          val driverSec = path(_.onDriver)
+          val sparkSec = path(_.onSpark)
+          losses = if (driverSec > sparkSec) losses + 1 else 0
+          val row = obj("vectors" -> n, "queries" -> nQueries,
+            "n_probe" -> nProbe, "bytes" -> p.bytes,
+            "query_bytes" -> p.queryBytes, "driver_sec" -> driverSec,
+            "spark_sec" -> sparkSec)
+          println(row)
+          row
+        }.toList
       }
     }
-    emit("probe_gate", obj("queries" -> 16, "k" -> 10, "cells" -> 64,
+    emit("probe_gate", obj("k" -> 10, "cells" -> 64,
       "shortlist_factor" -> 16, "passes" -> passes, "cpus" -> cpus,
       "gate_bytes" -> Similarity.DriverProbeBytes,
+      "gate_query_bytes" -> Similarity.DriverProbeQueryBytes,
       "sweep" -> Json(rows.mkString("[", ",", "]")), "sf" -> sfDir))
   }
 

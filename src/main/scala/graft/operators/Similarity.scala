@@ -2142,21 +2142,24 @@ object Similarity {
     * output shape as [[bruteForceTopK]]; returned cosines are exact.
     *
     * Two serving paths, one answer. The probe lists the probed cells'
-    * part files once ([[probePlan]]); when their total size is at most
-    * [[DriverProbeBytes]] it reads them on the driver with Spark's own
-    * parquet reader, scores them there and returns a local relation
-    * ([[ProbePlan.onDriver]]): a warm probe then runs no Spark job, in
-    * construction or in its action. Above the gate it returns the Spark
-    * plan ([[ProbePlan.onSpark]]): the probed cells become a LITERAL
-    * partition filter (static partition pruning — verified by plan
-    * inspection in SimilaritySpec); the ADC pass projects only (id,
-    * codes, norm) — parquet column pruning keeps the raw vectors unread —
-    * and the exact re-rank reads the vector column for the broadcast
-    * shortlist alone, from the same pruned directories. Both paths
-    * evaluate the same Catalyst expressions (the ADC cosine, the exact
-    * cosine, the rounding) and rank with [[TopKAggregator]], so they
-    * return the same rows, bit for bit (IvfPqProbePlanSpec). The gate is
-    * a property of the probed bytes alone; its value is measured
+    * part files once ([[probePlan]]). When they total at most
+    * [[DriverProbeBytes]] and the bytes of each query's probed cells,
+    * summed over the queries, are at most [[DriverProbeQueryBytes]], it
+    * reads them on the driver with Spark's own parquet reader, scores
+    * them there and returns a local relation ([[ProbePlan.onDriver]]): a
+    * warm probe then runs no Spark job, in construction or in its action.
+    * Otherwise it returns the Spark plan ([[ProbePlan.onSpark]]): the
+    * probed cells become a LITERAL partition filter (static partition
+    * pruning — verified by plan inspection in SimilaritySpec); the ADC
+    * pass projects only (id, codes, norm) — parquet column pruning keeps
+    * the raw vectors unread — and the exact re-rank reads the vector
+    * column for the broadcast shortlist alone, from the same pruned
+    * directories. Both paths evaluate the same Catalyst expressions (the
+    * ADC cosine, the exact cosine, the rounding) and rank with
+    * [[TopKAggregator]], so they return the same rows, bit for bit
+    * (IvfPqProbePlanSpec); a null query or corpus id on a scored pair
+    * fails on both. The gate reads the probe's input alone (its probed
+    * cells' sizes and the query batch); both bounds are measured
     * (SCALEPROBE.json `probe_gate`, see [[DriverProbeBytes]]).
     *
     * Planning runs no Spark job on a warm index. The query batch is
@@ -2185,8 +2188,8 @@ object Similarity {
     * either path: consistent answer or LOUD retryable failure (fence
     * refusal at plan time, a listed file missing mid-read), never silent
     * partial results — see [[indexDelete]]'s in-flight-readers contract
-    * (pinned live in `SimilaritySpec`). The driver path never skips a
-    * listed file either. */
+    * (pinned live on both paths in `SimilaritySpec`). The driver path
+    * never skips a listed file either. */
   def ivfPqProbeTopK(spark: SparkSession, path: String, queries: DataFrame,
                      vecCol: String, idCol: String, queryIdCol: String,
                      k: Int, nProbe: Int = 0,
@@ -2194,20 +2197,39 @@ object Similarity {
     probePlan(spark, path, queries, vecCol, idCol, queryIdCol, k, nProbe,
       shortlistFactor).topK
 
-  /** Probed part-file bytes at or below which [[ivfPqProbeTopK]] serves
-    * on the driver (16 MiB). MEASURED (SCALEPROBE.json `probe_gate`: warm
-    * 16-query top-10 probes, shortlist factor 16, of 64-cell indexes of
-    * 10 k, 50 k and 200 k 64-d vectors, nProbe 1…64, local[4] on a 4-core
-    * box): the driver path won every point up to 46.9 MB of probed files
-    * (200 k vectors, nProbe 8: 1.61 s vs 1.84 s) and lost from 49.9 MB
-    * (nProbe 16: 2.23 s vs 2.14 s). Its cost grows with query × row
-    * pairs where the Spark plan's is mostly a fixed per-job cost, so
-    * the worst case is every query scoring every probed row: the
-    * full-probe points (2.8 MB 0.41 s vs 1.32 s, 13.6 MB 1.43 s vs
-    * 2.05 s, 50.7 MB 4.81 s vs 3.22 s) cross near 24 MB. The gate sits
-    * below that, and caps what a probe materializes on the driver at
-    * ~60 k rows of this shape. */
+  /** Probed part-file bytes ([[ProbePlan.bytes]]) at or below which
+    * [[ivfPqProbeTopK]] may serve on the driver (16 MiB); the
+    * query-summed bytes must also be within [[DriverProbeQueryBytes]].
+    * MEASURED (SCALEPROBE.json `probe_gate`: warm top-10 probes,
+    * shortlist factor 16, of 64-cell indexes of 10 k, 50 k and 200 k 64-d
+    * vectors, in batches of 1, 16, 64 and 256 queries, nProbe 1…64,
+    * local[4] on a 4-core box). The driver path reads every probed file
+    * on one thread and scores each query against its probed cells
+    * interpreted; the Spark plan spreads both over the cores for a fixed
+    * per-job cost. So the driver's cost has two terms, and each bound
+    * caps one. This one caps the single-threaded read: even at small
+    * query sums the driver path lost from 21.5 MB of probed files (200 k
+    * vectors: 16 queries at nProbe 2, 0.63 s vs 0.62 s; one query at
+    * nProbe 32, 25.5 MB, 0.68 s vs 0.48 s), and it won every point up to
+    * 13.6 MB within 438 MB summed. No point fell in between;
+    * interpolating the one-query series (13.0 MB: 0.28 s vs 0.45 s)
+    * puts the crossover near 19 MB, above this bound. It also caps what
+    * a probe materializes on the driver. */
   private[graft] val DriverProbeBytes: Long = 16L << 20
+
+  /** Query-summed probed bytes ([[ProbePlan.queryBytes]]) at or below
+    * which [[ivfPqProbeTopK]] may serve on the driver (256 MiB), with the
+    * probed files within [[DriverProbeBytes]]. This bound caps the
+    * scoring, which grows with the query × row pairs. Measured with
+    * [[DriverProbeBytes]]: within 16 MiB of probed files the driver path
+    * won every point up to 720 MB summed on the 10 k index (256 queries,
+    * nProbe 64: 3.23 s vs 5.42 s) and up to 438 MB on the 50 k index (64
+    * queries, nProbe 32: 2.45 s vs 2.67 s); there it tied at 877 MB
+    * (4.30 s vs 4.36 s) and lost at 872 MB (64 queries probing all
+    * 13.6 MB: 3.82 s vs 3.07 s). The bound sits below that crossover with
+    * margin: at 219 MB the driver path still won by 18% (50 k, 64
+    * queries, nProbe 16: 1.65 s vs 2.02 s). */
+  private[graft] val DriverProbeQueryBytes: Long = 256L << 20
 
   /** Plan one [[ivfPqProbeTopK]]: check the index, resolve the model and
     * the widths, collect the query batch, rank each query's cells and
@@ -2301,14 +2323,25 @@ object Similarity {
           .flatMap(d => d.files.map(d.values -> _))
       }
 
-    /** Total bytes of [[files]]: what the gate compares. */
-    def bytes: Long = files.map(_._2.fileStatus.getLen).sum
+    /** Bytes of each probed cell's [[files]]. */
+    private val cellBytes: Map[Int, Long] =
+      files.groupMapReduce(_._1.getInt(0))(_._2.fileStatus.getLen)(_ + _)
+
+    /** Total bytes of [[files]]: what either path reads, and what the
+      * driver path holds. */
+    def bytes: Long = cellBytes.values.sum
+
+    /** The bytes of each query's probed cells, summed over the queries:
+      * the query × row pairs the ADC pass scores, in bytes. */
+    def queryBytes: Long =
+      cellsOf.iterator.flatMap(_.iterator.map(cellBytes.getOrElse(_, 0L))).sum
 
     /** The cells whose files the probe reads. */
-    def cells: Set[Int] = files.map(_._1.getInt(0)).toSet
+    def cells: Set[Int] = cellBytes.keySet
 
     /** Whether [[topK]] serves on the driver. */
-    def servedOnDriver: Boolean = bytes <= DriverProbeBytes
+    def servedOnDriver: Boolean =
+      bytes <= DriverProbeBytes && queryBytes <= DriverProbeQueryBytes
 
     /** The probe's answer, through the path the gate picks. */
     def topK: DataFrame = if (servedOnDriver) onDriver else onSpark
@@ -2366,24 +2399,31 @@ object Similarity {
       val scores = bound(spark, StructType(rowSchema ++ query.schema),
         adcCosine(pq), exactCosine(vecCol))
       val pair = new JoinedRow
+      // a scored pair with a null id fails, as the Spark path's typed
+      // rank does; a null or NaN score is excluded before the ids are read
       def rank(agg: TopKAggregator,
-               ranked: mutable.Map[Long, List[(Double, Long)]], qid: Long,
+               ranked: mutable.Map[Long, List[(Double, Long)]], qid: Any,
                score: Any, id: Any): Unit =
-        if (score != null && id != null && !score.asInstanceOf[Double].isNaN)
-          ranked(qid) = agg.reduce(ranked.getOrElse(qid, agg.zero),
-            (qid, score.asInstanceOf[Double], id.asInstanceOf[Long]))
+        if (score != null && !score.asInstanceOf[Double].isNaN) {
+          if (qid == null || id == null) throw new NullPointerException(
+            s"NULL value appeared in non-nullable field: a scored probe " +
+              s"pair has a null $queryIdCol or $idCol")
+          val q = qid.asInstanceOf[Long]
+          ranked(q) = agg.reduce(ranked.getOrElse(q, agg.zero),
+            (q, score.asInstanceOf[Double], id.asInstanceOf[Long]))
+        }
       // ADC: each query against every row of each of its probed cells
       val cellPos = rowSchema.fieldIndex("__cell")
       val byCell = rows.indices.groupBy(i => rows(i).getInt(cellPos))
       val adc = scores.exprs(0)
       val short = new TopKAggregator(k * factor)
       val shortlists = mutable.LinkedHashMap.empty[Long, List[(Double, Long)]]
-      for (qi <- qs.indices if !qs(qi).isNullAt(0); c <- cellsOf(qi);
-           i <- byCell.getOrElse(c, Nil))
-        rank(short, shortlists, qs(qi).getLong(0),
+      for (qi <- qs.indices; c <- cellsOf(qi); i <- byCell.getOrElse(c, Nil))
+        rank(short, shortlists, qs(qi).get(0, LongType),
           adc.eval(pair(rows(i), qs(qi))), ids(i))
       // exact re-rank: each shortlisted (query id, id) against every row
-      // with that id and every query with that query id
+      // with that id and every query with that query id (shortlisted ids
+      // are never null)
       val byId = rows.indices.filter(ids(_) != null)
         .groupBy(i => ids(i).asInstanceOf[Long])
       val byQid = qs.filterNot(_.isNullAt(0)).groupBy(_.getLong(0))
@@ -2436,25 +2476,18 @@ object Similarity {
   }
 
   /** One query's probed cells, in probe order ([[rankCells]]). */
-  private def probeCells(q: Row, centroids: Array[Array[Double]],
+  private[graft] def probeCells(q: Row, centroids: Array[Array[Double]],
                          nProbe: Int): Seq[Int] =
     rankCells(doubles(q.getSeq[Any](q.fieldIndex("__qvec"))), centroids)
       .take(nProbe).toSeq
 
   /** Each query row repeated once per cell of `cells`, in the same
-    * order, with the cell appended. */
-  private def withCells(q: Array[Row], cells: Array[Seq[Int]]): Array[Row] =
+    * order, with the cell appended: with [[probeCells]], the driver-side
+    * [[withProbeCells]] over collected [[withQueryNorm]] rows. */
+  private[graft] def withCells(q: Array[Row], cells: Array[Seq[Int]]): Array[Row] =
     q.zip(cells).flatMap { case (r, cs) =>
       cs.map(c => Row.fromSeq(r.toSeq :+ c))
     }
-
-  /** [[withProbeCells]] on the driver, over collected [[withQueryNorm]]
-    * rows: each row repeated once per probed cell, in the same order,
-    * with the cell appended. */
-  private[graft] def probeCellRows(q: Array[Row],
-                                   centroids: Array[Array[Double]],
-                                   nProbe: Int): Array[Row] =
-    withCells(q, q.map(probeCells(_, centroids, nProbe)))
 
   /** Driver-side rows as a local relation: planning over it runs no job. */
   private def localFrame(spark: SparkSession, rows: Array[Row],

@@ -129,7 +129,9 @@ class IvfPqProbePlanSpec extends SparkSpec {
     for (q <- Seq(asFloat, asDouble); p <- Seq(1, 3, nCells, nCells + 5)) {
       val sparkSide = Similarity.withProbeCells(q, centroids, p)
         .select("qid", "__cell").as[(Long, Int)].collect().toSeq
-      val driverSide = Similarity.probeCellRows(q.collect(), centroids, p)
+      val rows = q.collect()
+      val driverSide = Similarity.withCells(rows,
+          rows.map(Similarity.probeCells(_, centroids, p)))
         .map(r => (r.getLong(0), r.getInt(3))).toSeq
       byQuery(driverSide) shouldBe byQuery(sparkSide)
       byQuery(driverSide).values.foreach(_.length shouldBe math.min(p, nCells))
@@ -198,7 +200,8 @@ class IvfPqProbePlanSpec extends SparkSpec {
   test("the driver path returns the Spark path's rows bit for bit: narrow, " +
     "mid and over-full widths, shortlists shorter and longer than the " +
     "probed rows, k above the rows available, planted ties, a zero " +
-    "vector, float and double vectors, a null query vector") {
+    "vector, float and double vectors, a null query vector (its id null " +
+    "or not); a null query or corpus id on a scored pair fails on both") {
     // planted ties: copies of six corpus vectors under fresh ids
     val dups = corp.filter($"vec_id" < 11)
       .select(($"vec_id" + 100000L).as("vec_id"), $"embedding")
@@ -208,7 +211,11 @@ class IvfPqProbePlanSpec extends SparkSpec {
     val qs = localQueries(3).unionByName(
       corp.filter($"vec_id" === 5L).select(lit(50L).as("query_id"),
         $"embedding")).as[(Long, Array[Float])].collect().toSeq
-      .:+((99L, null: Array[Float])).toDF("query_id", "embedding")
+      .map { case (q, v) => (Option(q), v) }
+      .:+((Option(99L), null: Array[Float]))
+      // a null vector scores nothing, so a null id beside one is never read
+      .:+((Option.empty[Long], null: Array[Float]))
+      .toDF("query_id", "embedding")
     def asDouble(df: DataFrame): DataFrame = df.withColumn("embedding",
       transform(col("embedding"), _.cast("double")))
     for ((rows, queries) <- Seq((planted, qs),
@@ -234,7 +241,25 @@ class IvfPqProbePlanSpec extends SparkSpec {
             Seq((5L, 1), (100005L, 2))
         }
       }
+      // a query with a vector and a null id: loud on both paths
+      nullIdFails(path, queries.filter(col("query_id") =!= 50L).unionByName(
+        queries.filter(col("query_id") === 50L)
+          .withColumn("query_id", lit(null).cast("long"))))
     }
+    // a scored corpus row with a null id: loud on both paths
+    val path = tempIndex("graft_driver_null_id")
+    build(path, 8, planted.unionByName(corp.filter($"vec_id" === 5L)
+      .select(lit(null).cast("long").as("vec_id"), $"embedding")))
+    nullIdFails(path, qs.filter(col("query_id") === 50L))
+  }
+
+  /** Both paths fail loudly on a null id in a scored pair. */
+  private def nullIdFails(path: String, queries: DataFrame): Unit = {
+    val plan = Similarity.probePlan(spark, path, queries, "embedding",
+      "vec_id", "query_id", k = 5, nProbe = 3, shortlistFactor = 4)
+    for (run <- Seq[() => DataFrame](() => plan.onDriver, () => plan.onSpark))
+      (the[Exception] thrownBy run().collect()).getMessage should
+        include("NULL value appeared in non-nullable field")
   }
 
   test("a warm probe below the driver gate runs no Spark job, building " +

@@ -2,6 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{lit, transform}
 
 import graft.operators.Similarity
@@ -858,6 +859,19 @@ class SimilaritySpec extends SparkSpec {
       .foreach(_.getLong(1) shouldBe 3L)
   }
 
+  /** A top-5 probe (shortlist factor 128) through each serving path: the
+    * public call, which the gate serves on the driver at test sizes, and
+    * the Spark plan that serves probes above the gate. */
+  private def probePaths(path: String, qs: DataFrame,
+                         nProbe: Int): Seq[(String, () => DataFrame)] = {
+    def plan() = Similarity.probePlan(spark, path, qs, "embedding", "vec_id",
+      "query_id", k = 5, nProbe = nProbe, shortlistFactor = 128)
+    Seq("public" -> (() => Similarity.ivfPqProbeTopK(spark, path, qs,
+        "embedding", "vec_id", "query_id", k = 5, nProbe = nProbe,
+        shortlistFactor = 128)),
+      "spark-plan" -> (() => plan().onSpark))
+  }
+
   test("probe vs indexDelete race, live: probes hammering through three " +
     "concurrent delete batches observe only COMPLETE answers (some " +
     "committed state's exact top-k) or loud retryable failures — never " +
@@ -900,29 +914,31 @@ class SimilaritySpec extends SparkSpec {
       b
     }
     legal.distinct.size shouldBe legal.size // deletes must move the top-k
+    val paths = probePaths(path, qs, nProbe = 8)
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val bad = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val successes = new java.util.concurrent.atomic.AtomicLong(0L)
+    val successes = paths.map(_ => new java.util.concurrent.atomic.AtomicLong(0L))
     val hammer = new Thread(() => {
+      var n = 0
       while (!stop.get()) {
+        val (name, probe) = paths(n % paths.size)
         try {
-          val got = Similarity.ivfPqProbeTopK(spark, path, qs,
-              "embedding", "vec_id", "query_id", k = 5, nProbe = 8,
-              shortlistFactor = 128)
-            .select("query_id", "vec_id")
+          val got = probe().select("query_id", "vec_id")
             .as[(Long, Long)].collect().toSet
-          if (legal.contains(got)) successes.incrementAndGet()
-          else bad.add(s"probe saw a state matching no committed " +
+          if (legal.contains(got)) successes(n % paths.size).incrementAndGet()
+          else bad.add(s"$name probe saw a state matching no committed " +
             s"answer: $got")
         } catch { case _: Throwable => () } // loud + retryable: allowed
+        n += 1
       }
     })
     hammer.start()
     try {
-      // at least one probe lands on the clean pre-delete state, so the
-      // success assertion cannot be starved by mutation windows
+      // at least one probe of each path lands on the clean pre-delete
+      // state, so the success assertion cannot be starved by mutation
+      // windows
       val t0 = System.nanoTime()
-      while (successes.get() == 0L && bad.isEmpty &&
+      while (successes.exists(_.get() == 0L) && bad.isEmpty &&
           System.nanoTime() - t0 < 120e9.toLong) Thread.sleep(50)
       batches.foreach { b =>
         Similarity.indexDelete(spark, path, b.toSeq.toDF("vec_id"),
@@ -934,12 +950,12 @@ class SimilaritySpec extends SparkSpec {
       hammer.join(120000)
     }
     bad.toArray.toSeq shouldBe empty
-    successes.get() should be >= 1L
+    successes.foreach(_.get() should be >= 1L)
     // the settled index serves exactly the final committed answer
-    Similarity.ivfPqProbeTopK(spark, path, qs, "embedding", "vec_id",
-        "query_id", k = 5, nProbe = 8, shortlistFactor = 128)
-      .select("query_id", "vec_id")
-      .as[(Long, Long)].collect().toSet shouldBe legal.last
+    paths.foreach { case (_, probe) =>
+      probe().select("query_id", "vec_id")
+        .as[(Long, Long)].collect().toSet shouldBe legal.last
+    }
   }
 
   test("probe vs rebuild race, live: probes hammering through three " +
@@ -965,26 +981,28 @@ class SimilaritySpec extends SparkSpec {
     val exact = Similarity.bruteForceTopK(corp, qs, "embedding", "vec_id",
         "query_id", k = 5)
       .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
+    val paths = probePaths(path, qs, nProbe = 999)
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val bad = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val successes = new java.util.concurrent.atomic.AtomicLong(0L)
+    val successes = paths.map(_ => new java.util.concurrent.atomic.AtomicLong(0L))
     val hammer = new Thread(() => {
+      var n = 0
       while (!stop.get()) {
+        val (name, probe) = paths(n % paths.size)
         try {
-          val got = Similarity.ivfPqProbeTopK(spark, path, qs, "embedding",
-              "vec_id", "query_id", k = 5, nProbe = 999,
-              shortlistFactor = 128)
-            .select("query_id", "vec_id")
+          val got = probe().select("query_id", "vec_id")
             .as[(Long, Long)].collect().toSet
-          if (got == exact) successes.incrementAndGet()
-          else bad.add(s"probe returned non-exact rows mid-rebuild: $got")
+          if (got == exact) successes(n % paths.size).incrementAndGet()
+          else bad.add(s"$name probe returned non-exact rows " +
+            s"mid-rebuild: $got")
         } catch { case _: Throwable => () } // fence/gen/missing-file: loud
+        n += 1
       }
     })
     hammer.start()
     try {
       val t0 = System.nanoTime()
-      while (successes.get() == 0L && bad.isEmpty &&
+      while (successes.exists(_.get() == 0L) && bad.isEmpty &&
           System.nanoTime() - t0 < 120e9.toLong) Thread.sleep(50)
       // three fenced overwrite rebuilds with DIFFERENT cell counts: the
       // dangerous window is a probe that loaded generation i's centroids
@@ -1000,11 +1018,11 @@ class SimilaritySpec extends SparkSpec {
       hammer.join(120000)
     }
     bad.toArray.toSeq shouldBe empty
-    successes.get() should be >= 1L
-    Similarity.ivfPqProbeTopK(spark, path, qs, "embedding", "vec_id",
-        "query_id", k = 5, nProbe = 999, shortlistFactor = 128)
-      .select("query_id", "vec_id")
-      .as[(Long, Long)].collect().toSet shouldBe exact
+    successes.foreach(_.get() should be >= 1L)
+    paths.foreach { case (_, probe) =>
+      probe().select("query_id", "vec_id")
+        .as[(Long, Long)].collect().toSet shouldBe exact
+    }
   }
 
   test("writer lease: appends into a leased index refuse LOUDLY instead " +
