@@ -33,8 +33,8 @@ import graft.tools.DevSession
   * SPARK_GRAFT_SCALE (replicas, default 10), SPARK_GRAFT_SCALE_PASSES
   * (default 2), SPARK_GRAFT_PROBES (comma list of registry names; default:
   * every entry not marked opt-in) and SPARK_GRAFT_CPUS (via
-  * [[graft.tools.DevSession]]). `core_scaling`, `simhash_precision` and
-  * `probe_gate` are opt-in; `bpe_train` reads SPARK_GRAFT_BPE_MERGES,
+  * [[graft.tools.DevSession]]). `core_scaling`, `simhash_precision`,
+  * `probe_gate` and `dedup_gate` are opt-in; `bpe_train` reads SPARK_GRAFT_BPE_MERGES,
   * `core_scaling` SPARK_GRAFT_CORE_OPS.
   */
 object ScaleProbe {
@@ -305,7 +305,8 @@ object ScaleProbe {
     Probe("index_delete_scale", indexDeleteScale),
     Probe("core_scaling", coreScaling, default = false),
     Probe("simhash_precision", simhashPrecision, default = false),
-    Probe("probe_gate", probeGate, default = false))
+    Probe("probe_gate", probeGate, default = false),
+    Probe("dedup_gate", dedupGate, default = false))
 
   /** The pair-join strategies on letter-rotated replicas: the exact
     * single-pass string-keyed inverted-index join, the MinHash prefilter
@@ -501,6 +502,62 @@ object ScaleProbe {
       "shortlist_factor" -> 16, "passes" -> passes, "cpus" -> cpus,
       "gate_bytes" -> Similarity.DriverProbeBytes,
       "gate_query_bytes" -> Similarity.DriverProbeQueryBytes,
+      "sweep" -> Json(rows.mkString("[", ",", "]")), "sf" -> sfDir))
+  }
+
+  /** The measurement behind [[Dedup]]'s driver gate for `minHashLsh`
+    * (opt-in): warm default-width `minHashLsh` calls (3-word shingles, 64
+    * hashes, 16 bands, threshold 0.5, maxBucket 1000, `curate_sync`'s
+    * widths) over staged letter-rotated corpora of 1 k to 100 k documents,
+    * in four duplication shapes: no planted copies, a 10% coin with one
+    * exact copy each, a 5% coin with seven copies each (families of 8)
+    * and a 2% coin with 63 copies each (clumps of 64: the candidate pairs
+    * grow much faster than the documents). Each point times both paths, construction and `count()`
+    * together, with the gate's two measures: the documents and the
+    * candidate pairs (Σ C(n, 2) over the band buckets within maxBucket,
+    * from the public band keys). Each point is one warm-up run of either
+    * path, then the min of `passes` runs; a shape's series stops after the
+    * driver path has lost at two sizes in a row. */
+  private def dedupGate(c: Ctx): Unit = {
+    import c._
+    val docs = fixture("documents", "doc_id", "text")
+    val baseRows = docs.count()
+    val shapes = Seq(("none", 0.0, 0), ("pairs", 0.1, 1), ("families", 0.05, 7),
+      ("clumps", 0.02, 63))
+    val rows = shapes.flatMap { case (shape, rate, copies) =>
+      var losses = 0
+      Iterator(1000, 3000, 10000, 30000, 100000).takeWhile(_ => losses < 2).map { n =>
+        val reps = math.max(1, math.ceil(n.toDouble / baseRows).toInt)
+        val base = rotatedDocs(reps).limit(n)
+        val planted = base.filter(coin("doc_id", rate))
+        val corpus = staged((1 to copies).foldLeft(base) { (d, k) =>
+          d.unionByName(planted.select(
+            (col("doc_id") + k.toLong * plantOffset).as("doc_id"), col("text")))
+        }, "dedup_gate")
+        val nDocs = corpus.count()
+        val candidates = Dedup.minHashBandKeys(corpus, "text", "doc_id")
+          .groupBy("band_key").count().filter(col("count") <= 1000)
+          .agg(coalesce(sum(col("count") * (col("count") - 1) / 2), lit(0)))
+          .head.get(0).toString.toDouble.toLong
+        def path(driverDocs: Int): (Double, Long) = {
+          def run() = Dedup.minHashLshGated(corpus, "text", "doc_id",
+            driverDocs = driverDocs, driverPairs = Long.MaxValue).count()
+          run()
+          timed(run())
+        }
+        val (driverSec, pairs) = path(Int.MaxValue - 1)
+        val (sparkSec, sparkPairs) = path(0)
+        require(pairs == sparkPairs, s"paths disagree: $pairs vs $sparkPairs pairs")
+        losses = if (driverSec > sparkSec) losses + 1 else 0
+        val row = obj("shape" -> shape, "docs" -> nDocs,
+          "candidate_pairs" -> candidates, "pairs" -> pairs,
+          "driver_sec" -> driverSec, "spark_sec" -> sparkSec)
+        println(row)
+        row
+      }.toList
+    }
+    emit("dedup_gate", obj("passes" -> passes, "cpus" -> cpus,
+      "gate_docs" -> Dedup.DriverDocs, "gate_pairs" -> Dedup.DriverPairs,
       "sweep" -> Json(rows.mkString("[", ",", "]")), "sf" -> sfDir))
   }
 
@@ -2064,14 +2121,25 @@ object ScaleProbe {
     val mhCorpus = mhBase.unionByName(mhPlanted
       .select((col("doc_id") + plantOffset).as("doc_id"), col("text")))
     val (nDocs, nPlanted) = (mhBase.count(), mhPlanted.count())
-    val (secs, found) = timedCold(Dedup.minHashLsh(mhCorpus, "text", "doc_id",
+    val (secs, (found, path)) = timedCold {
+      val pairs = Dedup.minHashLsh(mhCorpus, "text", "doc_id",
         shingleSize = 3, numHashes = 64, bands = 8, threshold = 1.0)
-      .filter(col("id_b") - col("id_a") === plantOffset).count())
+      (pairs.filter(col("id_b") - col("id_a") === plantOffset).count(),
+        lshPath(pairs))
+    }
     emit("minhash_planted_scale", obj("scale" -> scale, "docs" -> nDocs,
       "planted" -> nPlanted, "passes" -> passes, "sec" -> secs,
       "planted_found" -> found, "planted_recall" -> found.toDouble / nPlanted,
-      "sf" -> sfDir))
+      "minhash_path" -> path, "sf" -> sfDir))
   }
+
+  /** Which path served a `minHashLsh` call: "driver" (a local relation of
+    * pairs) or "spark". */
+  private def lshPath(pairs: DataFrame): String =
+    pairs.queryExecution.analyzed match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => "driver"
+      case _ => "spark"
+    }
 
   /** Incremental-ingest regime at SCALE×: the replica-tagged corpus (as
     * minhash_planted_scale) is the already-deduplicated OLD side; the NEW
@@ -2108,16 +2176,19 @@ object ScaleProbe {
     val (storedSec, storedFound) =
       timedCold(plantedFound(Some(spark.read.parquet(keysPath))))
     // the non-incremental alternative the ingest loop would otherwise pay
-    val fullSec = timedCold(Dedup.minHashLsh(oldC.unionByName(newB), "text",
-      "doc_id", shingleSize = 3, numHashes = 64, bands = 8, threshold = 1.0)
-      .count())._1
+    val (fullSec, fullPath) = timedCold {
+      val pairs = Dedup.minHashLsh(oldC.unionByName(newB), "text",
+        "doc_id", shingleSize = 3, numHashes = 64, bands = 8, threshold = 1.0)
+      pairs.count()
+      lshPath(pairs)
+    }
     emit("incremental_dedup_scale", obj("scale" -> scale, "old_docs" -> nOld,
       "new_docs" -> nNew, "passes" -> passes, "incremental_sec" -> incSec,
       "stored_keys_sec" -> storedSec, "full_repair_sec" -> fullSec,
       "ratio" -> incSec / fullSec, "stored_ratio" -> storedSec / fullSec,
       "planted_found" -> incFound, "stored_found" -> storedFound,
       "planted_recall" -> incFound.toDouble / nNew,
-      "sf" -> sfDir))
+      "full_repair_path" -> fullPath, "sf" -> sfDir))
   }
 
   /** The change-data-feed claim: SnapshotStore.changes reads bytes

@@ -1,11 +1,17 @@
 package graft.operators
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
+import graft.core.DriverEval.{bound, localFrame}
 import graft.functions.{HashFunctions => H, TextFunctions => T, VectorFunctions => V}
 
 /** Deduplication operators for training-data pipelines, designed for the
@@ -13,7 +19,9 @@ import graft.functions.{HashFunctions => H, TextFunctions => T, VectorFunctions 
   * no driver collection); the only shuffles are (a) the group-by on short
   * keys for exact dedup and (b) the band-key exchange for LSH candidate
   * generation. Candidate buckets are size-capped so one degenerate key
-  * cannot quadratically blow up a task (skew guard).
+  * cannot quadratically blow up a task (skew guard). Below measured
+  * gates, [[minHashLsh]] and [[clusters]] serve small inputs on the
+  * driver from one bounded collect instead.
   *
   * Cache lifecycle: the pair operators persist their multi-consumer
   * intermediates (shingles / sketches / size-gate small sides) with
@@ -40,7 +48,7 @@ import graft.functions.{HashFunctions => H, TextFunctions => T, VectorFunctions 
 object Dedup {
 
   /** Row gate of the size-gated broadcasts ([[sizeGated]]). */
-  private val BroadcastGateRows = 1000000L
+  private[graft] val BroadcastGateRows = 1000000L
 
   /** The decontaminate operators' gate: their small sides (the eval set's
     * shingles, the contaminated ids) are tiny next to the corpus. */
@@ -61,14 +69,17 @@ object Dedup {
     * nothing to band and are dropped. */
   private def bandKeys(rel: DataFrame, idCol: String, shingles: Column,
                        numHashes: Int, bands: Int,
-                       keyCol: String = "__key"): DataFrame = {
-    val rows = math.max(1, numHashes / bands)
+                       keyCol: String = "__key"): DataFrame =
     rel.select(col(idCol), H.minHash(shingles, numHashes).as("__sig"))
       .filter(col("__sig").isNotNull)
       .select(col(idCol),
-        explode(H.lshBands(col("__sig"), bands, rows)).as("__band"))
-      .select(col(idCol), col("__band").cast("string").as(keyCol))
-  }
+        explode(bandKeyArray(col("__sig"), numHashes, bands)).as(keyCol))
+
+  /** A signature's `bands` band keys, each as a string: the one
+    * definition [[bandKeys]] explodes and [[driverLshPairs]] evaluates. */
+  private def bandKeyArray(sig: Column, numHashes: Int, bands: Int): Column =
+    H.lshBands(sig, bands, math.max(1, numHashes / bands))
+      .cast("array<string>")
 
   /** The overfull-key cap of every bucketed join here: the values of `key`
     * held by more than `cap` rows of `counted`, size-gated ([[sizeGated]])
@@ -194,10 +205,64 @@ object Dedup {
     * verification. Returns (id_a, id_b, jaccard) with jaccard ≥ threshold.
     * Only the (id, bandKey) pairs and the final candidate ids are shuffled;
     * signatures/shingles are recomputed or carried per side as needed.
+    *
+    * Small inputs are served on the driver. The shingled input is
+    * persisted, then probed with one bounded collect of at most
+    * [[DriverDocs]] + 1 rows. When the collect holds at most [[DriverDocs]]
+    * rows and the band buckets within `maxBucket` hold at most
+    * [[DriverPairs]] candidate pairs (Σ C(n, 2), counted before any pair
+    * is emitted), the signatures, band keys and Jaccard scores are the
+    * Spark plan's own expressions, evaluated on the driver
+    * ([[driverLshPairs]]), and the pairs come back as a local relation:
+    * the collect's jobs are the whole cost, and a consumer of the pairs
+    * ([[dropNearDuplicates]], [[clusters]]) plans over them without a job.
+    * Otherwise, or when the id type has no driver ordering (long, int and
+    * string ids have one), the Spark plan runs over the same persisted
+    * input, reading the part of the cache the probe filled. Both paths
+    * return the same rows, `jaccard` bit for bit (DedupSpec).
     */
   def minHashLsh(df: DataFrame, textCol: String, idCol: String,
                  shingleSize: Int = 3, numHashes: Int = 64, bands: Int = 16,
-                 threshold: Double = 0.5, maxBucket: Int = 1000): DataFrame = {
+                 threshold: Double = 0.5, maxBucket: Int = 1000): DataFrame =
+    minHashLshGated(df, textCol, idCol, shingleSize, numHashes, bands,
+      threshold, maxBucket)
+
+  /** Collected input rows at or below which [[minHashLsh]] may serve on
+    * the driver (10,000), with at most [[DriverPairs]] candidate pairs.
+    * MEASURED (SCALEPROBE.json `dedup_gate`: warm default-width calls
+    * over staged letter-rotated sf0.1 documents of ~54 words, 1 k to
+    * 100 k of them, in four duplication shapes, local[4] on a 4-core box).
+    * The driver path evaluates every signature and band key on one thread,
+    * interpreted; the Spark plan spreads them over the cores for a fixed
+    * per-job cost. With few candidate pairs the driver won up to 10 k
+    * documents (1.18 s vs 1.42 s) and 11 k (1.60 s vs 1.70 s), and lost
+    * from 30-33 k (3.26 s vs 3.26 s, 3.66 s vs 3.24 s); at 13.7 k
+    * documents with 252 k candidate pairs the two paths tied (2.03 s vs
+    * 2.02 s). It also caps the rows a call collects to the driver. */
+  private[graft] val DriverDocs: Int = 10000
+
+  /** Candidate pairs (Σ C(n, 2) over the band buckets within `maxBucket`)
+    * at or below which [[minHashLsh]] may serve on the driver (250,000),
+    * with at most [[DriverDocs]] input rows. MEASURED with
+    * [[DriverDocs]]: the driver pays about 3 µs per candidate pair
+    * (emitting it and scoring its distinct pair, interpreted), so in
+    * clumps of 64 copies it won at 2.6 k documents with 840 k candidates
+    * (3.18 s vs 4.77 s) and lost at 7.5 k with 2.3 M (9.02 s vs 4.59 s).
+    * The bound is set where the two bounds meet at no loss: the 13.7 k
+    * document, 252 k candidate point tied. */
+  private[graft] val DriverPairs: Long = 250000L
+
+  /** [[minHashLsh]] with its driver gate as parameters: tests pin either
+    * path with them (`driverDocs = 0` always takes the Spark plan);
+    * operators keep the fixed constants. */
+  private[graft] def minHashLshGated(df: DataFrame, textCol: String,
+                                     idCol: String, shingleSize: Int = 3,
+                                     numHashes: Int = 64, bands: Int = 16,
+                                     threshold: Double = 0.5,
+                                     maxBucket: Int = 1000,
+                                     driverDocs: Int = DriverDocs,
+                                     driverPairs: Long = DriverPairs)
+      : DataFrame = {
     // Shingling is the expensive scan-side computation and is consumed by
     // three branches (signature computation + both verification joins);
     // persist it once instead of recomputing per branch. MEMORY_AND_DISK:
@@ -212,15 +277,95 @@ object Dedup {
     val shingled = graft.core.ScanParallelism.ensure(df).select(col(idCol),
       wordShingles(textCol, shingleSize).as("__shingles"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val pairs = pairsFromBuckets(bandKeys(shingled, idCol, col("__shingles"),
-      numHashes, bands), idCol, maxBucket)
-    val shingles = shingled.select(col(idCol), col("__shingles"))
-    val result = withPairPayloads(pairs, shingles, idCol)
-      .withColumn("jaccard", H.jaccard(col("__shingles_a"), col("__shingles_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-    graft.core.CacheAutoRelease.afterFirstUse(shingled)
-    result
+    // the probe: one bounded collect, which also starts filling the cache
+    // the Spark plan reads when the gate says no
+    val onDriver = driverMinOrdering(shingled.schema(idCol).dataType)
+      .filter(_ => driverDocs > 0).flatMap { ord =>
+        val rows = shingled
+          .limit(math.min(driverDocs + 1L, Int.MaxValue.toLong).toInt).collect()
+        if (rows.length > driverDocs) None
+        else driverLshPairs(shingled, rows, ord, numHashes, bands, threshold,
+          maxBucket, driverPairs)
+      }
+    onDriver match {
+      case Some(pairs) =>
+        shingled.unpersist(blocking = false)
+        pairs
+      case None =>
+        val pairs = pairsFromBuckets(bandKeys(shingled, idCol,
+          col("__shingles"), numHashes, bands), idCol, maxBucket)
+        val shingles = shingled.select(col(idCol), col("__shingles"))
+        val result = withPairPayloads(pairs, shingles, idCol)
+          .withColumn("jaccard", H.jaccard(col("__shingles_a"), col("__shingles_b")))
+          .filter(col("jaccard") >= threshold)
+          .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+        graft.core.CacheAutoRelease.afterFirstUse(shingled)
+        result
+    }
+  }
+
+  /** [[minHashLsh]]'s pairs computed on the driver from the collected
+    * (id, `__shingles`) `rows` of `shingled`, as a local relation, or
+    * None when the band buckets within `maxBucket` hold more than
+    * `maxPairs` candidate pairs. Every step is the Spark plan's: the
+    * signature and band keys ([[bandKeyArray]]) and the Jaccard score,
+    * its threshold and rounding are its expressions, bound and
+    * interpreted; a null signature bands nothing; a key held by more than
+    * `maxBucket` rows is dropped ([[overfullKeys]]' rule); a bucket pairs
+    * its non-null ids with `ord` as the plan's `id_a < id_b`, each pair
+    * once; and each pair is scored for every row of either id, as the
+    * plan's payload joins do. */
+  private def driverLshPairs(shingled: DataFrame, rows: Array[Row],
+                             ord: Ordering[Any], numHashes: Int, bands: Int,
+                             threshold: Double, maxBucket: Int,
+                             maxPairs: Long): Option[DataFrame] = {
+    val spark = shingled.sparkSession
+    val schema = shingled.schema
+    val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(schema)
+    val in = rows.map(r => toCatalyst(r).asInstanceOf[InternalRow])
+    val sig = bound(spark, schema,
+      H.minHash(col("__shingles"), numHashes).as("__sig"))
+    val keys = bound(spark, sig.schema,
+      bandKeyArray(col("__sig"), numHashes, bands)).exprs.head
+    val buckets = mutable.HashMap.empty[UTF8String, mutable.ArrayBuffer[Int]]
+    in.indices.foreach { i =>
+      val s = sig.exprs.head.eval(in(i))
+      if (s != null) {
+        val ks = keys.eval(InternalRow(s)).asInstanceOf[ArrayData]
+        for (j <- 0 until ks.numElements() if !ks.isNullAt(j))
+          buckets.getOrElseUpdate(ks.getUTF8String(j),
+            mutable.ArrayBuffer.empty[Int]) += i
+      }
+    }
+    val kept = buckets.values.filter(_.length <= maxBucket).toSeq
+    if (kept.iterator.map(b => b.length.toLong * (b.length - 1) / 2).sum >
+        maxPairs) return None
+    val ids = rows.map(_.get(0))
+    val pairs = mutable.LinkedHashSet.empty[(Any, Any)]
+    for (b <- kept; x <- b.indices; y <- x + 1 until b.length) {
+      val (a, c) = (ids(b(x)), ids(b(y)))
+      if (a != null && c != null) {
+        val cmp = ord.compare(a, c)
+        if (cmp < 0) pairs += (a -> c) else if (cmp > 0) pairs += (c -> a)
+      }
+    }
+    val shField = schema("__shingles")
+    val jaccard = bound(spark, StructType(Seq(
+        shField.copy(name = "__shingles_a"), shField.copy(name = "__shingles_b"))),
+      H.jaccard(col("__shingles_a"), col("__shingles_b")).as("jaccard"))
+    val scored = bound(spark, jaccard.schema,
+      col("jaccard") >= threshold, round(col("jaccard"), 6).as("jaccard"))
+    val byId = rows.indices.filter(ids(_) != null).groupBy(ids(_))
+    val shingles = in.map(_.get(1, shField.dataType))
+    val out = for ((a, c) <- pairs.toArray; i <- byId(a); j <- byId(c);
+                   r = scored(jaccard(InternalRow(shingles(i), shingles(j))))
+                   if !r.isNullAt(0) && r.getBoolean(0))
+      yield Row(a, c, r.getDouble(1))
+    val idField = schema(0)
+    Some(localFrame(spark, out, StructType(Seq(
+      idField.copy(name = "id_a"), idField.copy(name = "id_b"),
+      scored.schema(1)))))
   }
 
   /** The persistable per-document LSH band keys of a corpus — the
@@ -1205,7 +1350,16 @@ object Dedup {
     * orderable id type works (the label is the component MINIMUM under the
     * type's ordering; strings cluster fine). Deterministic,
     * engine-independent (oracle-checked against a recursive-CTE closure in
-    * DuckDB). */
+    * DuckDB).
+    *
+    * Driver gate: when `pairs` holds at most `maxDriverEdges` rows (RAW
+    * edge rows, as given: reversed and repeated edges count, and nothing
+    * is symmetrized or made distinct first) and the id type is long, int
+    * or string, one bounded collect of the edge projection fetches them
+    * and the closure runs as a union-find on the driver, returned as a
+    * local relation. Over a local `pairs` (a driver-served
+    * [[minHashLsh]]) that collect runs no job. `maxDriverEdges = 0` always
+    * runs the distributed loop. */
   def clusters(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
                maxIter: Int = 20, pointerDoubling: Boolean = false,
                adaptAfter: Int = 6,
@@ -1222,15 +1376,19 @@ object Dedup {
     // clustering query at sf0.1, ~40% of `dedup_clusters`). Near-duplicate
     // pair lists are duplication-bounded, not corpus-bounded: a healthy
     // corpus's edge list is tiny relative to the corpus, so below
-    // `maxDriverEdges` SYMMETRIZED edges the transitive closure runs as an
-    // in-memory union-find on the driver (same bounded-collect discipline
-    // as the size-gated broadcast joins and `fitCentroids`) and returns a
-    // LocalRelation — identical labels by construction (the component
-    // minimum is order-independent), one job instead of ~20, and the
-    // downstream anti/semi joins against it become broadcasts for free.
-    // Above the gate — the genuinely massive-duplication regime — the
-    // distributed loop runs exactly as before. `maxDriverEdges = 0`
-    // force-disables the fast path (the loop's own specs pin it).
+    // `maxDriverEdges` RAW edge rows (as `pairs` holds them) the transitive
+    // closure runs as an in-memory union-find on the driver (same
+    // bounded-collect discipline as the size-gated broadcast joins and
+    // `fitCentroids`) and returns a LocalRelation — identical labels by
+    // construction (the component minimum is order-independent, and
+    // union-find needs neither the reversed edges nor distinct ones), and
+    // the downstream anti/semi joins against it become broadcasts for
+    // free. The collect reads the raw projection, not `sym`: no shuffle
+    // for the union's distinct, and over a local pair relation (a
+    // driver-served [[minHashLsh]]) no job at all. Above the gate — the
+    // genuinely massive-duplication regime — the distributed loop runs
+    // exactly as before. `maxDriverEdges = 0` force-disables the fast
+    // path (the loop's own specs pin it).
     // One bounded collect both measures and fetches the edges: at most
     // maxDriverEdges + 1 rows reach the driver, and one more than the gate
     // means "above it". Trade-off: above the gate the edge relation is
@@ -1239,7 +1397,7 @@ object Dedup {
     val idType = edges.schema.head.dataType
     val driverEdges =
       if (maxDriverEdges > 0 && driverMinOrdering(idType).isDefined)
-        Some(sym.limit(math.min(maxDriverEdges + 1, Int.MaxValue.toLong).toInt)
+        Some(edges.limit(math.min(maxDriverEdges + 1, Int.MaxValue.toLong).toInt)
           .collect()).filter(_.length <= maxDriverEdges)
       else None
     if (driverEdges.isDefined) {
@@ -1332,8 +1490,8 @@ object Dedup {
     case _ => None
   }
 
-  /** In-memory min-label connected components over collected symmetric
-    * edges: union-find with path compression, then one pass labeling every
+  /** In-memory min-label connected components over collected edges, in
+    * either direction and possibly repeated: union-find with path compression, then one pass labeling every
     * node with its component's minimum id under `ord`. Edges touching a
     * NULL endpoint register the endpoints but never merge across the null
     * (SQL join equality never matches NULL — the distributed loop leaves a

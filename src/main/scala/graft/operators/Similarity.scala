@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType,
   StructField, StructType}
 
+import graft.core.DriverEval.{bound, localFrame}
 import graft.functions.{VectorFunctions => V}
 
 /** Approximate-nearest-neighbor search over an embedding column.
@@ -2274,6 +2275,12 @@ object Similarity {
     val qNorm = withQueryNorm(queries, model.dataSchema.fieldNames.toIndexedSeq,
       queryIdCol, vecCol, allowed = Set("__cell", "__cn", "__codes"))
     val qRows = qNorm.collect()
+    // refused before either path runs: the Spark plan drops a batch whose
+    // ids are ALL null (the re-rank join's inferred not-null filter folds
+    // it away) where the driver path fails
+    val qid = qNorm.schema.fieldIndex(queryIdCol)
+    require(!qRows.exists(_.isNullAt(qid)),
+      s"every query needs a non-null $queryIdCol")
     val cellsOf = qRows.map(probeCells(_, centroids, probes))
     val probedCells = cellsOf.flatten.distinct.sorted
     val dirs = probedCells.toIndexedSeq.flatMap(existing.get)
@@ -2365,7 +2372,8 @@ object Similarity {
     /** The same answer computed on the driver, as a local relation: the
       * listed files read with Spark's parquet reader (a file that
       * vanished since the listing throws), the ADC and exact cosines
-      * evaluated as the Spark plan's own expressions ([[bound]]), ranked
+      * evaluated as the Spark plan's own expressions
+      * ([[graft.core.DriverEval.bound]]), ranked
       * with [[TopKAggregator]]. Every probed row is held on the driver. */
     def onDriver: DataFrame = localFrame(spark,
       relation.fold(Array.empty[Row])(driverRows),
@@ -2451,30 +2459,6 @@ object Similarity {
       StructField("cosine", DoubleType),
       StructField("rank", IntegerType, nullable = false)))
 
-  /** Expressions bound to input positions, with their output `schema`;
-    * `apply` evaluates them all, interpreted, on one input row. */
-  private final class Bound(
-      val exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-      val schema: StructType) {
-    def apply(row: org.apache.spark.sql.catalyst.InternalRow)
-        : org.apache.spark.sql.catalyst.InternalRow =
-      org.apache.spark.sql.catalyst.InternalRow.fromSeq(exprs.map(_.eval(row)))
-  }
-
-  /** `cols` over a relation of `schema`, resolved by the analyzer as in a
-    * Spark plan (the same coercions) and bound to the schema's positions,
-    * for interpreted evaluation on the driver. */
-  private def bound(spark: SparkSession, schema: StructType,
-                    cols: org.apache.spark.sql.Column*): Bound = {
-    import org.apache.spark.sql.catalyst.expressions.{AttributeSeq,
-      BindReferences, Expression}
-    val df = localFrame(spark, Array.empty, schema).select(cols: _*)
-    val plan = df.queryExecution.analyzed
-      .asInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Project]
-    new Bound(plan.projectList.map(e => BindReferences.bindReference(
-      e: Expression, AttributeSeq(plan.child.output))), df.schema)
-  }
-
   /** One query's probed cells, in probe order ([[rankCells]]). */
   private[graft] def probeCells(q: Row, centroids: Array[Array[Double]],
                          nProbe: Int): Seq[Int] =
@@ -2488,11 +2472,6 @@ object Similarity {
     q.zip(cells).flatMap { case (r, cs) =>
       cs.map(c => Row.fromSeq(r.toSeq :+ c))
     }
-
-  /** Driver-side rows as a local relation: planning over it runs no job. */
-  private def localFrame(spark: SparkSession, rows: Array[Row],
-                         schema: StructType): DataFrame =
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   // --------------------------------------------------- index opt-out delete
 

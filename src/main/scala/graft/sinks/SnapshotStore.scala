@@ -1,7 +1,7 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -748,23 +748,23 @@ object SnapshotStore {
     // bucket assignment hashes the stored type, and an unconformed key
     // would probe the wrong bucket and silently delete nothing.
     // Materialized ONCE (eager localCheckpoint — bounded: an opt-out
-    // batch is small by design): the key set feeds three separate jobs
-    // (touched-bucket collect, semi count, anti rewrite), and a
-    // nondeterministic input (limit/sample) re-evaluated per job would
-    // desynchronize them — victims outside the first evaluation's
-    // touched set would silently survive while nDel counted them.
-    val k = disc.foldLeft(keys.select(disc.map(col): _*).distinct()) {
+    // batch is small by design): the key set feeds two separate jobs
+    // (semi count, anti rewrite), and a nondeterministic input
+    // (limit/sample) re-evaluated per job would desynchronize them —
+    // victims outside the touched set would silently survive while nDel
+    // counted them. The touched buckets are observed by the
+    // materializing job itself, from the very rows both jobs read.
+    val conformed = disc.foldLeft(keys.select(disc.map(col): _*).distinct()) {
       (d, c) =>
         val stored = m.schema.fields.find(_.name == c).getOrElse(throw
           new IllegalArgumentException(
             s"discriminant '$c' is not a stored column")).dataType
         if (d.schema(c).dataType != stored) d.withColumn(c, col(c).cast(stored))
         else d
-    }.localCheckpoint(true)
-    val touched = k
-      .select(bucketExpr(disc.map(col), buckets).as(bucketCol))
-      .distinct().collect().map(_.getInt(0)).toSet
-      .intersect(m.buckets.keySet)
+    }
+    val (k, seen) = checkpointObserving(conformed,
+      collect_set(bucketExpr(disc.map(col), buckets)).as(bucketCol))
+    val touched = seen.getSeq[Int](0).toSet.intersect(m.buckets.keySet)
     if (touched.isEmpty) return 0L
     val target = readBuckets(spark, root, m, Some(touched))
     val nDel = target.join(k, disc, "left_semi").count()
@@ -871,16 +871,22 @@ object SnapshotStore {
     }
     // Materialized ONCE (see the evaluated-once contract above): every job
     // below reads this checkpoint, never the caller's lineage. The touched
-    // bucket set is observed by the materializing job itself, from the
-    // very rows the later jobs read, so it costs no job of its own; it is
-    // read from the checkpoint's own query execution, whose accumulators
-    // are complete when the eager checkpoint returns.
-    val metric = "__graft_touched_buckets"
-    val observed = conformed.observe(metric,
-      collect_set(bucketExpr(cfg.discriminant.map(col), buckets)).as(bucketCol))
-    val u = observed.localCheckpoint(true)
-    val touched: Set[Int] = observed.queryExecution.observedMetrics(metric)
-      .getSeq[Int](0).toSet
+    // bucket set and the batch's row count are observed by the
+    // materializing job itself, from the very rows the later jobs read,
+    // so they cost no job of their own.
+    val (u, seen) = checkpointObserving(conformed,
+      collect_set(bucketExpr(cfg.discriminant.map(col), buckets)).as(bucketCol),
+      count(lit(1)).as("__rows"))
+    val touched: Set[Int] = seen.getSeq[Int](0).toSet
+    // the checkpoint inherits its upstream's size estimate (a JDBC source's
+    // is the default, far above any broadcast threshold), so the planner
+    // would shuffle both sides of the slice's semi join; the measured row
+    // count plans the batch keys as the broadcast side they are
+    val batchKeys = u.select(cfg.discriminant.map(col): _*)
+    val sliceKeys =
+      if (seen.getLong(1) <= graft.operators.Dedup.BroadcastGateRows)
+        broadcast(batchKeys)
+      else batchKeys
 
     // merge sees only the touched buckets' rows — the pruned multi-path
     // scan is what makes a small batch O(touched), not O(table)
@@ -895,9 +901,7 @@ object SnapshotStore {
       .target
     // `written`/`errors` from the batch-keyed slice
     val sliced = InsertOrUpdate.merge(
-      target.join(u.select(cfg.discriminant.map(col): _*),
-        cfg.discriminant, "left_semi"),
-      u, cfg)
+      target.join(sliceKeys, cfg.discriminant, "left_semi"), u, cfg)
     // an existing store's recorded clustering and discriminant win
     // (creation-time, like nBuckets); validate BEFORE claiming the version
     // so a typo fails without leaving a stale claim behind
@@ -947,6 +951,18 @@ object SnapshotStore {
       target = readBuckets(spark, root, committed, None),
       written = sliced.written.localCheckpoint(true),
       errors = sliced.errors.localCheckpoint(true))
+  }
+
+  /** `df` materialized once (eager localCheckpoint), with `metrics`
+    * observed by the materializing job itself: no job of their own. The
+    * metrics row is read from the checkpoint's own query execution, whose
+    * accumulators are complete when the eager checkpoint returns. */
+  private def checkpointObserving(df: DataFrame,
+                                  metrics: Column*): (DataFrame, Row) = {
+    val name = "__graft_checkpoint"
+    val observed = df.observe(name, metrics.head, metrics.tail: _*)
+    val cp = observed.localCheckpoint(true)
+    (cp, observed.queryExecution.observedMetrics(name))
   }
 
   /** The one commit sequence every writer shares, after all validation:

@@ -44,6 +44,105 @@ class DedupSpec extends SparkSpec {
     pairs.select("jaccard").as[Double].collect().foreach(_ should be >= 0.3)
   }
 
+  /** A seeded corpus shaped for the LSH path comparison: random texts
+    * over a small vocabulary (chance collisions), exact and one-word-off
+    * copies of some of them, an empty and a null text, five copies of
+    * one text (a bucket a small maxBucket overfills) and a repeated id. */
+  private def lshCorpus(seed: Long): Seq[(Long, String)] = {
+    val rng = new scala.util.Random(seed)
+    val vocab = (0 until 30).map(i => s"w$i")
+    def text(n: Int) = Seq.fill(n)(vocab(rng.nextInt(vocab.size))).mkString(" ")
+    val base = (0L until 40L).map(i => (i, text(6 + rng.nextInt(10))))
+    val exact = base.take(6).map { case (i, t) => (i + 1000L, t) }
+    val near = base.slice(6, 12).map { case (i, t) =>
+      (i + 2000L, (t.split(" ").dropRight(1) :+ "changed").mkString(" "))
+    }
+    val boiler = (3000L until 3005L).map(i => (i, "same boilerplate text every time"))
+    base ++ exact ++ near ++ boiler ++
+      Seq((4000L, ""), (4001L, null), (7L, base(8)._2))
+  }
+
+  /** `df`'s (id_a, id_b, jaccard bits) rows, sorted, ids as strings. */
+  private def lshBits(df: org.apache.spark.sql.DataFrame): Seq[(String, String, Long)] =
+    df.collect().map(r => (r.get(0).toString, r.get(1).toString,
+      java.lang.Double.doubleToRawLongBits(r.getDouble(2)))).toSeq.sorted
+
+  private def isLocal(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  test("minHashLsh's driver path returns the Spark plan's rows bit for bit: " +
+    "random corpora with planted exact and near copies, empty and null " +
+    "texts, a repeated id, long and string ids, an overfull bucket under a " +
+    "small maxBucket, maxBucket = Int.MaxValue, thresholds 0.0 and 1.0") {
+    for (seed <- Seq(1L, 2L)) {
+      val longIds = lshCorpus(seed).toDF("doc_id", "text")
+      val stringIds = longIds.withColumn("doc_id", concat(lit("d"), col("doc_id")))
+      for (corpus <- Seq(longIds, stringIds);
+           (maxBucket, threshold) <- Seq((1000, 0.5), (3, 0.0),
+             (Int.MaxValue, 0.0), (Int.MaxValue, 1.0))) {
+        def run(driverDocs: Int) = Dedup.minHashLshGated(corpus, "text",
+          "doc_id", shingleSize = 2, numHashes = 32, bands = 16,
+          threshold = threshold, maxBucket = maxBucket, driverDocs = driverDocs)
+        val (driver, onSpark) = (run(Dedup.DriverDocs), run(0))
+        withClue(s"seed=$seed ${corpus.schema("doc_id").dataType.simpleString} " +
+            s"maxBucket=$maxBucket threshold=$threshold: ") {
+          isLocal(driver) shouldBe true
+          isLocal(onSpark) shouldBe false
+          driver.schema shouldBe onSpark.schema
+          val got = lshBits(driver)
+          got shouldBe lshBits(onSpark)
+          got should not be empty
+        }
+      }
+    }
+  }
+
+  test("a batch over either driver gate of minHashLsh is served by the " +
+    "Spark plan, with the same rows") {
+    val corpus = lshCorpus(3L).toDF("doc_id", "text")
+    def run(driverDocs: Int, driverPairs: Long) = Dedup.minHashLshGated(
+      corpus, "text", "doc_id", shingleSize = 2, numHashes = 32, bands = 16,
+      threshold = 0.3, driverDocs = driverDocs, driverPairs = driverPairs)
+    val served = run(Dedup.DriverDocs, Dedup.DriverPairs)
+    isLocal(served) shouldBe true
+    val rows = corpus.count().toInt
+    // one row over the document gate, and one pair under the candidates
+    for (over <- Seq(run(rows - 1, Dedup.DriverPairs), run(rows, 1L))) {
+      isLocal(over) shouldBe false
+      lshBits(over) shouldBe lshBits(served)
+    }
+    isLocal(run(rows, Dedup.DriverPairs)) shouldBe true
+  }
+
+  test("a warm minHashLsh -> dropNearDuplicates over a small checkpointed " +
+    "batch runs only the bounded collect's jobs, and dropNearDuplicates " +
+    "runs none") {
+    val batch = lshCorpus(4L).toDF("doc_id", "text")
+      .filter(col("text").isNotNull).localCheckpoint(true)
+    var kept = 0L
+    def pass(phase: JobTap.Phase): Unit = {
+      val pairs = phase("minHashLsh")(Dedup.minHashLsh(batch, "text", "doc_id"))
+      val survivors = phase("dropNearDuplicates")(
+        Dedup.dropNearDuplicates(batch, "doc_id", pairs))
+      kept = survivors.count()
+    }
+    JobTap.count(spark.sparkContext)(pass) // warm
+    val jobs = JobTap.count(spark.sparkContext)(pass)
+    // the bounded collect of the persisted shingles, alone
+    val probe = JobTap.count(spark.sparkContext) { phase =>
+      val shingled = batch.select(col("doc_id"),
+        graft.functions.HashFunctions.wordShingles(
+          graft.functions.TextFunctions.tokens(lower(col("text"))), 3))
+        .persist()
+      phase("collect")(shingled.limit(Dedup.DriverDocs + 1).collect())
+      shingled.unpersist()
+    }
+    jobs.get("dropNearDuplicates") shouldBe None
+    jobs("minHashLsh") shouldBe probe("collect")
+    kept should be < batch.count()
+  }
+
   test("minHashLshAgainst pairs the new batch against the corpus and within " +
     "itself, but NEVER re-pairs the old corpus against itself") {
     val old = Seq(
@@ -733,6 +832,19 @@ class DedupSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     viaDriver shouldBe viaLoop
     viaDriver(115L) shouldBe 0L // bridge merged both chains under min id 0
+    // the driver path reads the raw edges: one-directional only (a chain
+    // given high-to-low), every edge repeated, and null endpoints
+    val raw = ((0L until 20L).map(i => (Option(i + 1), Option(i))) ++
+      Seq((Option(50L), Option(51L)), (Option(51L), Option(52L))))
+      .flatMap(e => Seq(e, e)) ++
+      Seq((None, Option(60L)), (Option(61L), None), (Option(60L), Option(62L)))
+    def labels(maxDriverEdges: Long) = Dedup.clusters(
+        raw.toDF("id_a", "id_b"), maxDriverEdges = maxDriverEdges, maxIter = 100)
+      .collect().map(r => (Option(r.get(0)), Option(r.get(1)))).toSet
+    val rawDriver = labels(1000000L)
+    rawDriver shouldBe labels(0L)
+    rawDriver should contain((Option(20L), Option(0L)))
+    rawDriver should contain((None, None))
   }
 
   test("sharedSpans finds maximal verbatim runs: exact span length, " +

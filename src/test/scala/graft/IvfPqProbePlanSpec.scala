@@ -213,8 +213,6 @@ class IvfPqProbePlanSpec extends SparkSpec {
         $"embedding")).as[(Long, Array[Float])].collect().toSeq
       .map { case (q, v) => (Option(q), v) }
       .:+((Option(99L), null: Array[Float]))
-      // a null vector scores nothing, so a null id beside one is never read
-      .:+((Option.empty[Long], null: Array[Float]))
       .toDF("query_id", "embedding")
     def asDouble(df: DataFrame): DataFrame = df.withColumn("embedding",
       transform(col("embedding"), _.cast("double")))
@@ -241,10 +239,17 @@ class IvfPqProbePlanSpec extends SparkSpec {
             Seq((5L, 1), (100005L, 2))
         }
       }
-      // a query with a vector and a null id: loud on both paths
-      nullIdFails(path, queries.filter(col("query_id") =!= 50L).unionByName(
-        queries.filter(col("query_id") === 50L)
-          .withColumn("query_id", lit(null).cast("long"))))
+      // a null query id is refused before either path runs: in a mixed
+      // batch, in a one-query batch whose id is all null, and beside a
+      // null vector
+      def nullId(q: Long) = queries.filter(col("query_id") === q)
+        .withColumn("query_id", lit(null).cast("long"))
+      for (batch <- Seq(
+          queries.filter(col("query_id") =!= 50L).unionByName(nullId(50L)),
+          nullId(50L), nullId(99L)))
+        (the[IllegalArgumentException] thrownBy Similarity.probePlan(spark,
+          path, batch, "embedding", "vec_id", "query_id", k = 5, nProbe = 3,
+          shortlistFactor = 4)).getMessage should include("non-null query_id")
     }
     // a scored corpus row with a null id: loud on both paths
     val path = tempIndex("graft_driver_null_id")
@@ -253,7 +258,7 @@ class IvfPqProbePlanSpec extends SparkSpec {
     nullIdFails(path, qs.filter(col("query_id") === 50L))
   }
 
-  /** Both paths fail loudly on a null id in a scored pair. */
+  /** Both paths fail loudly on a null corpus id in a scored pair. */
   private def nullIdFails(path: String, queries: DataFrame): Unit = {
     val plan = Similarity.probePlan(spark, path, queries, "embedding",
       "vec_id", "query_id", k = 5, nProbe = 3, shortlistFactor = 4)

@@ -1137,16 +1137,23 @@ class SnapshotStoreSpec extends SparkSpec
     "changes, delete and compact") {
     val root = fragmentedStore("graft_snap_jobs")
     var rewritten = 0
+    // an RDD-backed batch carries the default size estimate, as a JDBC
+    // source's does: its measured row count still plans the slice's semi
+    // join as a broadcast
+    val unsized = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(org.apache.spark.sql.Row(3, "r"), org.apache.spark.sql.Row(60, "m"))),
+      Seq((0, "")).toDF("id", "value").schema)
     val jobs = JobTap.count(spark.sparkContext) { phase =>
       phase("upsert")(SnapshotStore.upsert(spark, root,
         Seq((1, "u"), (50, "n")).toDF("id", "value"), cfg))
       phase("changes")(SnapshotStore.changes(spark, root, 0L, 1L).collect())
       phase("delete")(SnapshotStore.delete(spark, root, Seq(2).toDF("id")))
       rewritten = phase("compact")(SnapshotStore.compact(spark, root))
+      phase("upsert unsized")(SnapshotStore.upsert(spark, root, unsized, cfg))
     }
     rewritten should be > 0
-    jobs shouldBe Map("upsert" -> 7, "changes" -> 3, "delete" -> 8,
-      "compact" -> 2)
+    jobs shouldBe Map("upsert" -> 7, "changes" -> 3, "delete" -> 6,
+      "compact" -> 2, "upsert unsized" -> 7)
   }
 }
 
