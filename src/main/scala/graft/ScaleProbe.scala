@@ -506,58 +506,81 @@ object ScaleProbe {
   }
 
   /** The measurement behind [[Dedup]]'s driver gate for `minHashLsh`
-    * (opt-in): warm default-width `minHashLsh` calls (3-word shingles, 64
-    * hashes, 16 bands, threshold 0.5, maxBucket 1000, `curate_sync`'s
-    * widths) over staged letter-rotated corpora of 1 k to 100 k documents,
-    * in four duplication shapes: no planted copies, a 10% coin with one
-    * exact copy each, a 5% coin with seven copies each (families of 8)
-    * and a 2% coin with 63 copies each (clumps of 64: the candidate pairs
-    * grow much faster than the documents). Each point times both paths, construction and `count()`
-    * together, with the gate's two measures: the documents and the
-    * candidate pairs (Σ C(n, 2) over the band buckets within maxBucket,
-    * from the public band keys). Each point is one warm-up run of either
-    * path, then the min of `passes` runs; a shape's series stops after the
-    * driver path has lost at two sizes in a row. */
+    * (opt-in): warm `minHashLsh` calls (3-word shingles, threshold 0.5,
+    * maxBucket 1000, `curate_sync`'s widths) over staged corpora whose
+    * base grows ×2 per size, from 25 k words (`none`) or 5 k words
+    * (`clumps`, before its copies), along three axes: words per document (10, 50, 500 and
+    * 2000: consecutive letter-rotated sf0.1 documents joined, then cut),
+    * the signature width (64 hashes in 16 bands, the default, and 256 in
+    * 64, both 4 rows per band) and duplication (`none`: no planted copies;
+    * `clumps`: a 2% coin with 63 exact copies each, where the candidate
+    * pairs grow much faster than the documents). Each point times both
+    * paths through the gated entry point, construction and `count()`
+    * together: the driver path with both bounds lifted, and the Spark
+    * path after the probe the real gate runs (`serveOnDriver = false`), so
+    * a call over the gate pays its probe here too. It records the gate's
+    * two measures ([[Dedup.gateMeasures]]): the signature work (hash
+    * evaluations) and the candidate-pair work. Each
+    * point is one warm-up run of either path, then the min of `passes`
+    * runs; a series stops after the driver path has lost at two sizes in a
+    * row. */
   private def dedupGate(c: Ctx): Unit = {
     import c._
     val docs = fixture("documents", "doc_id", "text")
     val baseRows = docs.count()
-    val shapes = Seq(("none", 0.0, 0), ("pairs", 0.1, 1), ("families", 0.05, 7),
-      ("clumps", 0.02, 63))
-    val rows = shapes.flatMap { case (shape, rate, copies) =>
+    val baseWords = docs.agg(avg(size(split(col("text"), " ")))).head.getDouble(0)
+    // (shape, planted coin, copies, words of base corpus at the first size)
+    val shapes = Seq(("none", 0.0, 0, 25000), ("clumps", 0.02, 63, 5000))
+    val series = shapes.flatMap { case shape @ (name, _, _, _) =>
+      val widths = if (name == "none") Seq(10, 50, 500, 2000) else Seq(10, 50, 500)
+      widths.map((shape, _, 64)) ++ Seq(50, 500).map((shape, _, 256))
+    }
+    val rows = series.flatMap { case ((shape, rate, copies, first), words, hashes) =>
+      val bands = hashes / 4
+      val per = math.max(1, math.ceil(words / baseWords).toInt)
       var losses = 0
-      Iterator(1000, 3000, 10000, 30000, 100000).takeWhile(_ => losses < 2).map { n =>
-        val reps = math.max(1, math.ceil(n.toDouble / baseRows).toInt)
-        val base = rotatedDocs(reps).limit(n)
-        val planted = base.filter(coin("doc_id", rate))
-        val corpus = staged((1 to copies).foldLeft(base) { (d, k) =>
-          d.unionByName(planted.select(
-            (col("doc_id") + k.toLong * plantOffset).as("doc_id"), col("text")))
-        }, "dedup_gate")
-        val nDocs = corpus.count()
-        val candidates = Dedup.minHashBandKeys(corpus, "text", "doc_id")
-          .groupBy("band_key").count().filter(col("count") <= 1000)
-          .agg(coalesce(sum(col("count") * (col("count") - 1) / 2), lit(0)))
-          .head.get(0).toString.toDouble.toLong
-        def path(driverDocs: Int): (Double, Long) = {
-          def run() = Dedup.minHashLshGated(corpus, "text", "doc_id",
-            driverDocs = driverDocs, driverPairs = Long.MaxValue).count()
-          run()
-          timed(run())
-        }
-        val (driverSec, pairs) = path(Int.MaxValue - 1)
-        val (sparkSec, sparkPairs) = path(0)
-        require(pairs == sparkPairs, s"paths disagree: $pairs vs $sparkPairs pairs")
-        losses = if (driverSec > sparkSec) losses + 1 else 0
-        val row = obj("shape" -> shape, "docs" -> nDocs,
-          "candidate_pairs" -> candidates, "pairs" -> pairs,
-          "driver_sec" -> driverSec, "spark_sec" -> sparkSec)
-        println(row)
-        row
-      }.toList
+      Iterator.iterate(first)(_ * 2).take(9)
+        .takeWhile(_ => losses < 2).map { total =>
+          val n = math.max(1, total / words)
+          val reps = math.max(1, math.ceil(n.toDouble * per / baseRows).toInt)
+          val base = rotatedDocs(reps)
+            .groupBy(floor(col("doc_id") / per).as("doc_id"))
+            .agg(concat_ws(" ", sort_array(collect_list(col("text")))).as("text"))
+            .select(col("doc_id"), concat_ws(" ",
+              slice(split(col("text"), " "), 1, words)).as("text"))
+            .limit(n)
+          val planted = base.filter(coin("doc_id", rate))
+          val corpus = staged((1 to copies).foldLeft(base) { (d, k) =>
+            d.unionByName(planted.select(
+              (col("doc_id") + k.toLong * plantOffset).as("doc_id"), col("text")))
+          }, "dedup_gate")
+          val nDocs = corpus.count()
+          val (hashWork, pairWork) = Dedup.gateMeasures(corpus, "text", "doc_id",
+            numHashes = hashes, bands = bands)
+          def path(onDriver: Boolean): (Double, Long) = {
+            def run() = (if (onDriver) Dedup.minHashLshGated(corpus, "text",
+                "doc_id", numHashes = hashes, bands = bands,
+                driverHashes = Long.MaxValue, driverPairWork = Long.MaxValue)
+              else Dedup.minHashLshGated(corpus, "text", "doc_id",
+                numHashes = hashes, bands = bands, serveOnDriver = false)).count()
+            run()
+            timed(run())
+          }
+          val (driverSec, pairs) = path(onDriver = true)
+          val (sparkSec, sparkPairs) = path(onDriver = false)
+          require(pairs == sparkPairs, s"paths disagree: $pairs vs $sparkPairs pairs")
+          losses = if (driverSec > sparkSec) losses + 1 else 0
+          val gated = hashWork <= Dedup.DriverHashes && pairWork <= Dedup.DriverPairWork
+          val row = obj("shape" -> shape, "words" -> words, "num_hashes" -> hashes,
+            "bands" -> bands, "docs" -> nDocs, "hash_work" -> hashWork,
+            "pair_work" -> pairWork, "pairs" -> pairs, "driver_sec" -> driverSec,
+            "spark_sec" -> sparkSec, "gate_serves" -> (if (gated) "driver" else "spark"))
+          println(row)
+          row
+        }.toList
     }
     emit("dedup_gate", obj("passes" -> passes, "cpus" -> cpus,
-      "gate_docs" -> Dedup.DriverDocs, "gate_pairs" -> Dedup.DriverPairs,
+      "gate_hashes" -> Dedup.DriverHashes, "gate_pair_work" -> Dedup.DriverPairWork,
       "sweep" -> Json(rows.mkString("[", ",", "]")), "sf" -> sfDir))
   }
 

@@ -11,6 +11,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.core.BroadcastGate
 import graft.core.DriverEval.{bound, localFrame}
 import graft.functions.{HashFunctions => H, TextFunctions => T, VectorFunctions => V}
 
@@ -46,9 +47,6 @@ import graft.functions.{HashFunctions => H, TextFunctions => T, VectorFunctions 
   * ([[cosineVerified]]).
   */
 object Dedup {
-
-  /** Row gate of the size-gated broadcasts ([[sizeGated]]). */
-  private[graft] val BroadcastGateRows = 1000000L
 
   /** The decontaminate operators' gate: their small sides (the eval set's
     * shingles, the contaminated ids) are tiny next to the corpus. */
@@ -206,20 +204,24 @@ object Dedup {
     * Only the (id, bandKey) pairs and the final candidate ids are shuffled;
     * signatures/shingles are recomputed or carried per side as needed.
     *
-    * Small inputs are served on the driver. The shingled input is
-    * persisted, then probed with one bounded collect of at most
-    * [[DriverDocs]] + 1 rows. When the collect holds at most [[DriverDocs]]
-    * rows and the band buckets within `maxBucket` hold at most
-    * [[DriverPairs]] candidate pairs (Σ C(n, 2), counted before any pair
-    * is emitted), the signatures, band keys and Jaccard scores are the
-    * Spark plan's own expressions, evaluated on the driver
+    * Small inputs are served on the driver. The gate counts work, not
+    * documents: a document weighs its shingles + 1 ([[shingleWeight]]),
+    * and its signature costs that weight × `numHashes` hash evaluations
+    * (each shingle hashed once per hash function, then one banding pass
+    * over the signature). The shingled input is persisted, then probed
+    * with one collect job ([[probeShingles]]) that ships at most
+    * [[DriverHashes]] / max(`numHashes`, 64) of weight to the driver. When
+    * the whole batch fits in that, and the candidate pairs of the band
+    * buckets within `maxBucket` weigh at most [[DriverPairWork]] (counted
+    * before any pair is emitted), the signatures, band keys and Jaccard
+    * scores are the Spark plan's own expressions, evaluated on the driver
     * ([[driverLshPairs]]), and the pairs come back as a local relation:
-    * the collect's jobs are the whole cost, and a consumer of the pairs
+    * the probe's jobs are the whole cost, and a consumer of the pairs
     * ([[dropNearDuplicates]], [[clusters]]) plans over them without a job.
     * Otherwise, or when the id type has no driver ordering (long, int and
     * string ids have one), the Spark plan runs over the same persisted
-    * input, reading the part of the cache the probe filled. Both paths
-    * return the same rows, `jaccard` bit for bit (DedupSpec).
+    * input, which the probe has filled. Both paths return the same rows,
+    * `jaccard` bit for bit (DedupSpec).
     */
   def minHashLsh(df: DataFrame, textCol: String, idCol: String,
                  shingleSize: Int = 3, numHashes: Int = 64, bands: Int = 16,
@@ -227,41 +229,56 @@ object Dedup {
     minHashLshGated(df, textCol, idCol, shingleSize, numHashes, bands,
       threshold, maxBucket)
 
-  /** Collected input rows at or below which [[minHashLsh]] may serve on
-    * the driver (10,000), with at most [[DriverPairs]] candidate pairs.
-    * MEASURED (SCALEPROBE.json `dedup_gate`: warm default-width calls
-    * over staged letter-rotated sf0.1 documents of ~54 words, 1 k to
-    * 100 k of them, in four duplication shapes, local[4] on a 4-core box).
-    * The driver path evaluates every signature and band key on one thread,
-    * interpreted; the Spark plan spreads them over the cores for a fixed
-    * per-job cost. With few candidate pairs the driver won up to 10 k
-    * documents (1.18 s vs 1.42 s) and 11 k (1.60 s vs 1.70 s), and lost
-    * from 30-33 k (3.26 s vs 3.26 s, 3.66 s vs 3.24 s); at 13.7 k
-    * documents with 252 k candidate pairs the two paths tied (2.03 s vs
-    * 2.02 s). It also caps the rows a call collects to the driver. */
-  private[graft] val DriverDocs: Int = 10000
+  /** Signature work at or below which [[minHashLsh]] may serve on the
+    * driver, in hash evaluations: Σ over the batch's documents of
+    * [[shingleWeight]] × max(`numHashes`, 64) (a narrower signature is
+    * charged as the default width, so the probe never ships more than
+    * DriverHashes / 64 = 500,000 of weight). The driver path computes the
+    * signatures on one thread, interpreted; the Spark plan spreads them
+    * over the cores for a fixed per-job cost.
+    * MEASURED (SCALEPROBE.json `dedup_gate`, local[4] on a 4-core box,
+    * the Spark side timed after the gate's own probe): with no planted
+    * copies, the driver won every point up to at least 49 M in each of six
+    * series (documents of 10, 50, 500 and 2000 words at 64 hashes, 50 and
+    * 500 at 256). The lowest last wins and first losses were at 2000
+    * words, 64 hashes (49.2 M: 0.66 s vs 0.89 s; 98.4 M: 1.24 s vs 1.21
+    * s) and 500 words, 64 hashes (55.4 M: 0.74 s vs 0.79 s; 110.8 M: 1.66
+    * s vs 1.42 s); at 50 words the driver won up to 105 M (16 k
+    * documents, 1.59 s vs 1.88 s at 64 hashes; 4 k documents, 1.53 s vs
+    * 1.86 s at 256). The bound sits below every one of those crossovers. */
+  private[graft] val DriverHashes: Long = 32000000L
 
-  /** Candidate pairs (Σ C(n, 2) over the band buckets within `maxBucket`)
-    * at or below which [[minHashLsh]] may serve on the driver (250,000),
-    * with at most [[DriverDocs]] input rows. MEASURED with
-    * [[DriverDocs]]: the driver pays about 3 µs per candidate pair
-    * (emitting it and scoring its distinct pair, interpreted), so in
-    * clumps of 64 copies it won at 2.6 k documents with 840 k candidates
-    * (3.18 s vs 4.77 s) and lost at 7.5 k with 2.3 M (9.02 s vs 4.59 s).
-    * The bound is set where the two bounds meet at no loss: the 13.7 k
-    * document, 252 k candidate point tied. */
-  private[graft] val DriverPairs: Long = 250000L
+  /** Candidate-pair work at or below which [[minHashLsh]] may serve on the
+    * driver: Σ over the band buckets within `maxBucket` of (n − 1) × the
+    * bucket's summed [[shingleWeight]]s, which is every candidate pair's
+    * two weights, once per bucket the pair shares. The driver emits each
+    * candidate and scores each distinct pair with the interpreted Jaccard,
+    * whose cost grows with both shingle sets.
+    * MEASURED (SCALEPROBE.json `dedup_gate`, as [[DriverHashes]]): in
+    * clumps of 64 exact copies the driver won every point up to at least
+    * 130 M in each of five series (10, 50 and 500 words at 64 hashes, 50
+    * and 500 at 256). The lowest last win was at 500 words, 64 hashes
+    * (130 M: 3.20 s vs 4.37 s; lost at 342 M: 8.94 s vs 4.43 s), then 10
+    * words (195 M: 1.25 s vs 1.61 s; lost at 373 M: 2.55 s vs 2.04 s).
+    * The bound sits well below those crossovers: the Spark side's
+    * timings in these series spread widely from size to size, and a
+    * refusal here comes after the driver has already spent up to
+    * [[DriverHashes]] on signatures. */
+  private[graft] val DriverPairWork: Long = 25000000L
 
-  /** [[minHashLsh]] with its driver gate as parameters: tests pin either
-    * path with them (`driverDocs = 0` always takes the Spark plan);
-    * operators keep the fixed constants. */
+  /** [[minHashLsh]] with its driver gate as parameters: tests and the
+    * `dedup_gate` sweep pin either path with them (`driverHashes = 0`
+    * takes the Spark plan after a probe that ships nothing;
+    * `serveOnDriver = false` takes it after the probe the gate runs, as a
+    * call over the gate does); operators keep the fixed constants. */
   private[graft] def minHashLshGated(df: DataFrame, textCol: String,
                                      idCol: String, shingleSize: Int = 3,
                                      numHashes: Int = 64, bands: Int = 16,
                                      threshold: Double = 0.5,
                                      maxBucket: Int = 1000,
-                                     driverDocs: Int = DriverDocs,
-                                     driverPairs: Long = DriverPairs)
+                                     driverHashes: Long = DriverHashes,
+                                     driverPairWork: Long = DriverPairWork,
+                                     serveOnDriver: Boolean = true)
       : DataFrame = {
     // Shingling is the expensive scan-side computation and is consumed by
     // three branches (signature computation + both verification joins);
@@ -277,15 +294,14 @@ object Dedup {
     val shingled = graft.core.ScanParallelism.ensure(df).select(col(idCol),
       wordShingles(textCol, shingleSize).as("__shingles"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // the probe: one bounded collect, which also starts filling the cache
-    // the Spark plan reads when the gate says no
+    // the probe: one collect job, which also fills the cache the Spark
+    // plan reads when the gate says no
     val onDriver = driverMinOrdering(shingled.schema(idCol).dataType)
-      .filter(_ => driverDocs > 0).flatMap { ord =>
-        val rows = shingled
-          .limit(math.min(driverDocs + 1L, Int.MaxValue.toLong).toInt).collect()
-        if (rows.length > driverDocs) None
-        else driverLshPairs(shingled, rows, ord, numHashes, bands, threshold,
-          maxBucket, driverPairs)
+      .flatMap { ord =>
+        probeShingles(shingled, driverHashes / math.max(numHashes, 64))
+          .filter(_ => serveOnDriver)
+          .flatMap(driverLshPairs(shingled, _, ord, numHashes, bands,
+            threshold, maxBucket, driverPairWork))
       }
     onDriver match {
       case Some(pairs) =>
@@ -304,21 +320,85 @@ object Dedup {
     }
   }
 
+  /** The unit of [[minHashLsh]]'s driver gate: an (id, `__shingles`)
+    * row weighs its shingles + [[DocWeight]] (a null shingle set weighs
+    * [[DocWeight]]). */
+  private def shingleWeight(r: Row): Long =
+    (if (r.isNullAt(1)) 0L else r.getSeq[Any](1).length.toLong) + DocWeight
+
+  /** A document's fixed weight in [[minHashLsh]]'s gate, in shingles.
+    * Its band keys, their bucketing and its row cost the driver path about
+    * as much as 64 more shingles, at either signature width measured:
+    * fitted to a first `dedup_gate` sweep that weighed a document by its
+    * shingles + 1, where at 64 hashes the driver paid ≈ 70 µs per document
+    * beyond ≈ 15 ns per hash evaluation (10-word documents lost from 29 M
+    * hash evaluations, while 2000-word ones still won at 30 M), and at
+    * 256 hashes (4× the band keys) about 3× that per document. */
+  private val DocWeight = 64L
+
+  /** [[minHashLsh]]'s probe: the (id, `__shingles`) rows of `shingled`,
+    * collected in one job, when they weigh at most `weight` in all
+    * ([[shingleWeight]]), else None. Each of the P partitions ships rows
+    * only while they stay within weight / P, so the driver never holds
+    * more than `weight`; a batch under `weight` but skewed across its
+    * partitions is refused, and the Spark plan serves it with the same
+    * rows. A persisted `shingled` is cached in full by the probe. */
+  private[graft] def probeShingles(shingled: DataFrame,
+                                   weight: Long): Option[Array[Row]] = {
+    val rdd = shingled.rdd
+    val share = weight / math.max(1, rdd.getNumPartitions)
+    val parts = rdd.mapPartitions { it =>
+      var left = share
+      val rows = mutable.ArrayBuffer.empty[Row]
+      while (left >= 0 && it.hasNext) {
+        val r = it.next()
+        left -= shingleWeight(r)
+        rows += r
+      }
+      Iterator(if (left >= 0) Some(rows.toArray) else None)
+    }.collect()
+    if (parts.forall(_.isDefined)) Some(parts.flatMap(_.get)) else None
+  }
+
+  /** [[minHashLsh]]'s two gate measures of a corpus, computed by Spark
+    * from the same shingles and band keys: (signature work, candidate-pair
+    * work), as [[DriverHashes]] and [[DriverPairWork]] count them. For the
+    * `dedup_gate` sweep and the specs. */
+  private[graft] def gateMeasures(df: DataFrame, textCol: String,
+                                  idCol: String, shingleSize: Int = 3,
+                                  numHashes: Int = 64, bands: Int = 16,
+                                  maxBucket: Int = 1000): (Long, Long) = {
+    val weighted = df.select(wordShingles(textCol, shingleSize).as("__sh"))
+      .select(col("__sh"), (when(col("__sh").isNull, lit(0L))
+        .otherwise(size(col("__sh")).cast("long")) + DocWeight).as("__w"))
+    val weight = weighted.agg(coalesce(sum(col("__w")), lit(0L))).head.getLong(0)
+    val pairWork = weighted
+      .select(col("__w"), H.minHash(col("__sh"), numHashes).as("__sig"))
+      .filter(col("__sig").isNotNull)
+      .select(col("__w"), explode(bandKeyArray(col("__sig"), numHashes, bands))
+        .as("__key"))
+      .filter(col("__key").isNotNull)
+      .groupBy("__key").agg(count(lit(1)).as("__n"), sum(col("__w")).as("__w"))
+      .filter(col("__n") <= maxBucket)
+      .agg(coalesce(sum((col("__n") - 1) * col("__w")), lit(0L))).head.getLong(0)
+    (weight * math.max(numHashes, 64), pairWork)
+  }
+
   /** [[minHashLsh]]'s pairs computed on the driver from the collected
     * (id, `__shingles`) `rows` of `shingled`, as a local relation, or
-    * None when the band buckets within `maxBucket` hold more than
-    * `maxPairs` candidate pairs. Every step is the Spark plan's: the
-    * signature and band keys ([[bandKeyArray]]) and the Jaccard score,
-    * its threshold and rounding are its expressions, bound and
-    * interpreted; a null signature bands nothing; a key held by more than
-    * `maxBucket` rows is dropped ([[overfullKeys]]' rule); a bucket pairs
-    * its non-null ids with `ord` as the plan's `id_a < id_b`, each pair
-    * once; and each pair is scored for every row of either id, as the
+    * None when the candidate pairs of the band buckets within `maxBucket`
+    * weigh more than `maxPairWork` ([[DriverPairWork]]). Every step is the
+    * Spark plan's: the signature and band keys ([[bandKeyArray]]) and the
+    * Jaccard score, its threshold and rounding are its expressions, bound
+    * and interpreted; a null signature bands nothing; a key held by more
+    * than `maxBucket` rows is dropped ([[overfullKeys]]' rule); a bucket
+    * pairs its non-null ids with `ord` as the plan's `id_a < id_b`, each
+    * pair once; and each pair is scored for every row of either id, as the
     * plan's payload joins do. */
   private def driverLshPairs(shingled: DataFrame, rows: Array[Row],
                              ord: Ordering[Any], numHashes: Int, bands: Int,
                              threshold: Double, maxBucket: Int,
-                             maxPairs: Long): Option[DataFrame] = {
+                             maxPairWork: Long): Option[DataFrame] = {
     val spark = shingled.sparkSession
     val schema = shingled.schema
     val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
@@ -339,8 +419,9 @@ object Dedup {
       }
     }
     val kept = buckets.values.filter(_.length <= maxBucket).toSeq
-    if (kept.iterator.map(b => b.length.toLong * (b.length - 1) / 2).sum >
-        maxPairs) return None
+    val weight = rows.map(shingleWeight)
+    if (kept.iterator.map(b => (b.length - 1L) * b.iterator.map(weight(_)).sum)
+        .sum > maxPairWork) return None
     val ids = rows.map(_.get(0))
     val pairs = mutable.LinkedHashSet.empty[(Any, Any)]
     for (b <- kept; x <- b.indices; y <- x + 1 until b.length) {
@@ -579,7 +660,7 @@ object Dedup {
     * (stop-shingles) — the skew guard that keeps the self-join from going
     * quadratic on boilerplate at 100 TB; 0 disables. The small-side
     * broadcasts (stop set, per-document set sizes) are broadcast only
-    * while measured at ≤ 1,000,000 rows ([[BroadcastGateRows]]) — above
+    * while measured at ≤ 1,000,000 rows ([[BroadcastGate.MaxRows]]) — above
     * that they degrade to shuffled joins instead of unbounded driver
     * broadcasts.
     * `strategy = "minhash"` swaps candidate generation for a banded
@@ -623,7 +704,7 @@ object Dedup {
     * Operators keep the fixed default; only tests pass another gate. */
   private[graft] def sizeGatedFilterJoin(
       big: DataFrame, small: DataFrame, keys: Seq[String], joinType: String,
-      maxBroadcastRows: Long = BroadcastGateRows): DataFrame =
+      maxBroadcastRows: Long = BroadcastGate.MaxRows): DataFrame =
     big.join(sizeGated(small, maxBroadcastRows), keys, joinType)
 
   /** The eager broadcast gate: persist `small`, probe its size, and return
@@ -633,7 +714,7 @@ object Dedup {
     * first consuming query finishes (armed AFTER the probe, so the probe
     * itself cannot fire it). */
   private def sizeGated(small: DataFrame,
-                        maxBroadcastRows: Long = BroadcastGateRows): DataFrame = {
+                        maxBroadcastRows: Long = BroadcastGate.MaxRows): DataFrame = {
     val s = small.persist(StorageLevel.MEMORY_AND_DISK)
     // Short-circuiting membership probe: LocalLimit stops each task once
     // the gate is exceeded, so an over-the-gate small side costs O(gate)
@@ -1358,12 +1439,15 @@ object Dedup {
     * or string, one bounded collect of the edge projection fetches them
     * and the closure runs as a union-find on the driver, returned as a
     * local relation. Over a local `pairs` (a driver-served
-    * [[minHashLsh]]) that collect runs no job. `maxDriverEdges = 0` always
-    * runs the distributed loop. */
+    * [[minHashLsh]]) that collect runs no job. The default, 500,000 raw
+    * rows, is the bound this gate held when it counted symmetrized distinct
+    * edges (1,000,000 of them) for a distinct `id_a < id_b` pair list such
+    * as [[minHashLsh]]'s. `maxDriverEdges = 0` always runs the distributed
+    * loop. */
   def clusters(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
                maxIter: Int = 20, pointerDoubling: Boolean = false,
                adaptAfter: Int = 6,
-               maxDriverEdges: Long = 1000000L): DataFrame = {
+               maxDriverEdges: Long = 500000L): DataFrame = {
     val edges = pairs.select(col(idA).as("src"), col(idB).as("dst"))
     val sym = edges
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))

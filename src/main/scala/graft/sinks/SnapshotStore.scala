@@ -884,7 +884,7 @@ object SnapshotStore {
     // count plans the batch keys as the broadcast side they are
     val batchKeys = u.select(cfg.discriminant.map(col): _*)
     val sliceKeys =
-      if (seen.getLong(1) <= graft.operators.Dedup.BroadcastGateRows)
+      if (seen.getLong(1) <= graft.core.BroadcastGate.MaxRows)
         broadcast(batchKeys)
       else batchKeys
 

@@ -81,10 +81,10 @@ class DedupSpec extends SparkSpec {
       for (corpus <- Seq(longIds, stringIds);
            (maxBucket, threshold) <- Seq((1000, 0.5), (3, 0.0),
              (Int.MaxValue, 0.0), (Int.MaxValue, 1.0))) {
-        def run(driverDocs: Int) = Dedup.minHashLshGated(corpus, "text",
+        def run(onDriver: Boolean) = Dedup.minHashLshGated(corpus, "text",
           "doc_id", shingleSize = 2, numHashes = 32, bands = 16,
-          threshold = threshold, maxBucket = maxBucket, driverDocs = driverDocs)
-        val (driver, onSpark) = (run(Dedup.DriverDocs), run(0))
+          threshold = threshold, maxBucket = maxBucket, serveOnDriver = onDriver)
+        val (driver, onSpark) = (run(true), run(false))
         withClue(s"seed=$seed ${corpus.schema("doc_id").dataType.simpleString} " +
             s"maxBucket=$maxBucket threshold=$threshold: ") {
           isLocal(driver) shouldBe true
@@ -101,18 +101,44 @@ class DedupSpec extends SparkSpec {
   test("a batch over either driver gate of minHashLsh is served by the " +
     "Spark plan, with the same rows") {
     val corpus = lshCorpus(3L).toDF("doc_id", "text")
-    def run(driverDocs: Int, driverPairs: Long) = Dedup.minHashLshGated(
+    def run(driverHashes: Long, driverPairWork: Long) = Dedup.minHashLshGated(
       corpus, "text", "doc_id", shingleSize = 2, numHashes = 32, bands = 16,
-      threshold = 0.3, driverDocs = driverDocs, driverPairs = driverPairs)
-    val served = run(Dedup.DriverDocs, Dedup.DriverPairs)
+      threshold = 0.3, driverHashes = driverHashes, driverPairWork = driverPairWork)
+    val served = run(Dedup.DriverHashes, Dedup.DriverPairWork)
     isLocal(served) shouldBe true
-    val rows = corpus.count().toInt
-    // one row over the document gate, and one pair under the candidates
-    for (over <- Seq(run(rows - 1, Dedup.DriverPairs), run(rows, 1L))) {
+    // the batch's measures (a 32-hash signature is charged as 64 hashes)
+    val (hashWork, pairWork) = Dedup.gateMeasures(corpus, "text", "doc_id",
+      shingleSize = 2, numHashes = 32, bands = 16)
+    pairWork should be > 0L
+    // one hash-width of weight over the signature gate, one unit over the
+    // pair gate
+    for (over <- Seq(run(hashWork - 64, Dedup.DriverPairWork),
+                     run(Dedup.DriverHashes, pairWork - 1))) {
       isLocal(over) shouldBe false
       lshBits(over) shouldBe lshBits(served)
     }
-    isLocal(run(rows, Dedup.DriverPairs)) shouldBe true
+    // the pair gate is global: at exactly the batch's pair work it serves
+    isLocal(run(Dedup.DriverHashes, pairWork)) shouldBe true
+  }
+
+  test("minHashLsh's probe ships at most its weight: each partition stops " +
+    "at its share, and a batch over the weight is refused") {
+    val shingled = lshCorpus(5L).toDF("doc_id", "text").repartition(4)
+      .select(col("doc_id"), graft.functions.HashFunctions.wordShingles(
+        graft.functions.TextFunctions.tokens(lower(col("text"))), 2).as("__shingles"))
+      .localCheckpoint(true)
+    // a document weighs its shingles + 64
+    def weight(r: org.apache.spark.sql.Row): Long =
+      (if (r.isNullAt(1)) 0L else r.getSeq[Any](1).length.toLong) + 64L
+    val all = shingled.collect()
+    val total = all.map(weight).sum
+    val heaviest = shingled.rdd.mapPartitions(it => Iterator(it.map(weight).sum))
+      .collect().max
+    Dedup.probeShingles(shingled, total * 4).map(_.length) shouldBe Some(all.length)
+    // a share one under the heaviest partition's weight refuses the batch
+    Dedup.probeShingles(shingled, (heaviest - 1) * 4) shouldBe None
+    Dedup.probeShingles(shingled, total - 1) shouldBe None
+    Dedup.probeShingles(shingled, 0L) shouldBe None
   }
 
   test("a warm minHashLsh -> dropNearDuplicates over a small checkpointed " +
@@ -129,13 +155,13 @@ class DedupSpec extends SparkSpec {
     }
     JobTap.count(spark.sparkContext)(pass) // warm
     val jobs = JobTap.count(spark.sparkContext)(pass)
-    // the bounded collect of the persisted shingles, alone
+    // the probe of the persisted shingles, alone
     val probe = JobTap.count(spark.sparkContext) { phase =>
       val shingled = batch.select(col("doc_id"),
         graft.functions.HashFunctions.wordShingles(
           graft.functions.TextFunctions.tokens(lower(col("text"))), 3))
         .persist()
-      phase("collect")(shingled.limit(Dedup.DriverDocs + 1).collect())
+      phase("collect")(Dedup.probeShingles(shingled, Dedup.DriverHashes / 64))
       shingled.unpersist()
     }
     jobs.get("dropNearDuplicates") shouldBe None
