@@ -509,21 +509,21 @@ object ScaleProbe {
     * (opt-in): warm `minHashLsh` calls (3-word shingles, threshold 0.5,
     * maxBucket 1000, `curate_sync`'s widths) over staged corpora whose
     * base grows ×2 per size, from 25 k words (`none`) or 5 k words
-    * (`clumps`, before its copies), along three axes: words per document (10, 50, 500 and
-    * 2000: consecutive letter-rotated sf0.1 documents joined, then cut),
-    * the signature width (64 hashes in 16 bands, the default, and 256 in
-    * 64, both 4 rows per band) and duplication (`none`: no planted copies;
-    * `clumps`: a 2% coin with 63 exact copies each, where the candidate
-    * pairs grow much faster than the documents). Each point times both
-    * paths through the gated entry point, construction and `count()`
-    * together: the driver path with both bounds lifted, and the Spark
-    * path after the probe the real gate runs (`serveOnDriver = false`), so
-    * a call over the gate pays its probe here too. It records the gate's
-    * two measures ([[Dedup.gateMeasures]]): the signature work (hash
-    * evaluations) and the candidate-pair work. Each
-    * point is one warm-up run of either path, then the min of `passes`
-    * runs; a series stops after the driver path has lost at two sizes in a
-    * row. */
+    * (`clumps`, before its copies), along three axes: words per document
+    * (10, 50, 500 and 2000: consecutive letter-rotated sf0.1 documents
+    * joined, then cut), the signature width (64 hashes in 16 bands, the
+    * default, and 256 in 64, both 4 rows per band) and duplication
+    * (`none`: no planted copies; `clumps`: a 2% coin with 63 exact copies
+    * each, where the candidate pairs grow much faster than the
+    * documents). Each point times both paths through the gated entry
+    * point, construction and `count()` together: the driver path with
+    * both bounds lifted, and the Spark path after the probe the real gate
+    * runs (`serveOnDriver = false`), so a call over the gate pays its
+    * probe here too. It records the gate's two measures
+    * ([[Dedup.gateMeasures]]): the signature work (hash evaluations) and
+    * the candidate-pair work. Each point is one warm-up run of either
+    * path, then the min of `passes` runs; a series stops after the driver
+    * path has lost at two sizes in a row. */
   private def dedupGate(c: Ctx): Unit = {
     import c._
     val docs = fixture("documents", "doc_id", "text")

@@ -205,11 +205,11 @@ object Dedup {
     * signatures/shingles are recomputed or carried per side as needed.
     *
     * Small inputs are served on the driver. The gate counts work, not
-    * documents: a document weighs its shingles + 1 ([[shingleWeight]]),
-    * and its signature costs that weight × `numHashes` hash evaluations
-    * (each shingle hashed once per hash function, then one banding pass
-    * over the signature). The shingled input is persisted, then probed
-    * with one collect job ([[probeShingles]]) that ships at most
+    * documents: a document weighs its shingles + 64 ([[shingleWeight]]:
+    * each shingle is hashed once per hash function, and the 64 is its
+    * measured fixed cost), and its signature costs that weight ×
+    * `numHashes` hash evaluations. The shingled input is persisted, then
+    * probed with one collect job ([[probeShingles]]) that ships at most
     * [[DriverHashes]] / max(`numHashes`, 64) of weight to the driver. When
     * the whole batch fits in that, and the candidate pairs of the band
     * buckets within `maxBucket` weigh at most [[DriverPairWork]] (counted
