@@ -34,7 +34,7 @@ import graft.tools.DevSession
   * (default 2), SPARK_GRAFT_PROBES (comma list of registry names; default:
   * every entry not marked opt-in) and SPARK_GRAFT_CPUS (via
   * [[graft.tools.DevSession]]). `core_scaling`, `simhash_precision`,
-  * `probe_gate` and `dedup_gate` are opt-in; `bpe_train` reads SPARK_GRAFT_BPE_MERGES,
+  * `probe_gate`, `dedup_gate` and `delete_gate` are opt-in; `bpe_train` reads SPARK_GRAFT_BPE_MERGES,
   * `core_scaling` SPARK_GRAFT_CORE_OPS.
   */
 object ScaleProbe {
@@ -306,7 +306,8 @@ object ScaleProbe {
     Probe("core_scaling", coreScaling, default = false),
     Probe("simhash_precision", simhashPrecision, default = false),
     Probe("probe_gate", probeGate, default = false),
-    Probe("dedup_gate", dedupGate, default = false))
+    Probe("dedup_gate", dedupGate, default = false),
+    Probe("delete_gate", deleteGate, default = false))
 
   /** The pair-join strategies on letter-rotated replicas: the exact
     * single-pass string-keyed inverted-index join, the MinHash prefilter
@@ -582,6 +583,87 @@ object ScaleProbe {
     emit("dedup_gate", obj("passes" -> passes, "cpus" -> cpus,
       "gate_hashes" -> Dedup.DriverHashes, "gate_pair_work" -> Dedup.DriverPairWork,
       "sweep" -> Json(rows.mkString("[", ",", "]")), "sf" -> sfDir))
+  }
+
+  /** The measurement behind the opt-out deletes' key gate,
+    * [[graft.core.DriverKeys.MaxKeys]] (opt-in): warm deletes of key
+    * batches of 10 to 1 M ids, each a local relation (as an opt-out list
+    * reaches the stores), against a 1 M-row SnapshotStore (BIGINT ids 0
+    * to 1 M − 1, 32-char value, 16 buckets) and a 1 M-vector IVF-PQ index
+    * (16-d, 64 cells), in two shapes: `half`, where a batch of n keys
+    * steps over [0, 2 M), so about half of them match and the rewrite
+    * grows with the batch, and `ten`, where 10 keys match and the rest
+    * lie above the stored ids, so the rewrite stays put and the key set's
+    * own cost shows. Each point times both paths through the gated entry
+    * points, each run on a fresh copy of the store: the literal key set
+    * (`driverKeys = n`) and the join plan after the collect a batch just
+    * over the gate pays (`driverKeys = n − 1`). One warm-up run of either
+    * path, then the min of `passes` runs; a series stops after the driver
+    * path has lost at two sizes in a row. */
+  private def deleteGate(c: Ctx): Unit = {
+    import c._
+    import graft.core.DriverKeys
+    import graft.sinks.SnapshotStore
+    import spark.implicits._
+    val rows = 1000000L
+    val store = storePath("delete_gate_store")
+    SnapshotStore.upsert(spark, store, spark.range(rows).select(col("id"),
+        md5(col("id").cast("string")).as("value")),
+      UpsertConfig(discriminant = Seq("id")), nBuckets = 16)
+    val index = tempDir("delete_gate_index").resolve("index").toString
+    Similarity.ivfPqBuild(spark.range(rows).select(col("id"),
+        array((0 until 16).map(j => (rand(j) - 0.5).cast("float")): _*)
+          .as("vec")), "vec", index, nCells = 64, m = 8, ksub = 16)
+    def copy(from: String, to: String): Unit = {
+      val dst = Paths.get(to)
+      if (Files.exists(dst)) Files.walk(dst).sorted(java.util.Comparator
+        .reverseOrder[Path]()).forEach(p => Files.delete(p))
+      val src = Paths.get(from)
+      Files.walk(src).forEach { f =>
+        val t = dst.resolve(src.relativize(f))
+        if (Files.isDirectory(f)) Files.createDirectories(t) else Files.copy(f, t)
+      }
+    }
+    type Delete = (String, DataFrame, Int) => Long
+    val stores = Seq[(String, String, Delete)](
+      ("snapshot_store", store,
+        (r, k, d) => SnapshotStore.deleteGated(spark, r, k, driverKeys = d)),
+      ("ivf_pq_index", index,
+        (r, k, d) => Similarity.indexDeleteGated(spark, r, k, driverKeys = d)))
+    val sizes = Seq(10, 100, 1000, 3000, 10000, 30000, 100000, 300000, 1000000)
+    val shapes = Seq[(String, (Long, Int) => Long)](
+      ("half", (i, n) => i * (2 * rows / n)),
+      ("ten", (i, _) => if (i < 10) i * (rows / 10) else rows + i))
+    def series(name: String, src: String, delete: Delete, shape: String,
+               key: (Long, Int) => Long): List[Json] = {
+      val work = tempDir(s"delete_gate_$name").resolve("work").toString
+      var losses = 0
+      sizes.iterator.takeWhile(_ => losses < 2).map { n =>
+        val keys = (0L until n).map(key(_, n)).toDF("id")
+        def path(driverKeys: Int): (Double, Long) = {
+          def run() = delete(work, keys, driverKeys)
+          copy(src, work)
+          run()
+          minOfPasses(passes, copy(src, work))(run())
+        }
+        val (driverSec, deleted) = path(n)
+        val (sparkSec, sparkDeleted) = path(n - 1)
+        require(deleted == sparkDeleted,
+          s"paths disagree: $deleted vs $sparkDeleted rows")
+        losses = if (driverSec > sparkSec) losses + 1 else 0
+        val row = obj("store" -> name, "shape" -> shape, "keys" -> n,
+          "deleted" -> deleted, "driver_sec" -> driverSec,
+          "spark_sec" -> sparkSec,
+          "gate_serves" -> (if (n <= DriverKeys.MaxKeys) "driver" else "spark"))
+        println(row)
+        row
+      }.toList
+    }
+    val points = for ((name, src, delete) <- stores; (shape, key) <- shapes;
+                      point <- series(name, src, delete, shape, key)) yield point
+    emit("delete_gate", obj("rows" -> rows, "passes" -> passes, "cpus" -> cpus,
+      "gate_keys" -> DriverKeys.MaxKeys,
+      "sweep" -> Json(points.mkString("[", ",", "]"))))
   }
 
   /** What the nProbe knob buys: sweep the probed-cell budget on a

@@ -3,7 +3,7 @@ package graft.core
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BindReferences,
-  Expression}
+  Expression, InterpretedMutableProjection}
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.types.StructType
 
@@ -15,10 +15,14 @@ import org.apache.spark.sql.types.StructType
 object DriverEval {
 
   /** Expressions bound to input positions, with their output `schema`;
-    * `apply` evaluates them all, interpreted, on one input row. */
+    * `apply` evaluates them all, interpreted, on one input row, through
+    * one projection that evaluates a subexpression they share (such as
+    * the intersection in Jaccard's numerator and denominator) once per
+    * row. The returned row is reused by the next call: copy a row that
+    * is kept. */
   final class Bound(val exprs: Seq[Expression], val schema: StructType) {
-    def apply(row: InternalRow): InternalRow =
-      InternalRow.fromSeq(exprs.map(_.eval(row)))
+    private val projection = new InterpretedMutableProjection(exprs)
+    def apply(row: InternalRow): InternalRow = projection(row)
   }
 
   /** `cols` over a relation of `schema`, resolved by the analyzer as in a

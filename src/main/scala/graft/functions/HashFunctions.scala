@@ -100,11 +100,17 @@ object HashFunctions {
     array(keys: _*)
   }
 
-  /** Exact Jaccard similarity of two pre-distinct shingle arrays. */
+  /** Exact Jaccard similarity of two pre-distinct shingle arrays: 0.0
+    * for two empty sets, null when either is null (under ANSI mode,
+    * Spark's default; without it `size` maps a null array to −1). No
+    * conditional: an empty union has an empty intersection, so dividing
+    * by at least 1 gives its 0.0, and the intersection stays an
+    * unconditional subexpression that the generated and interpreted
+    * projections both evaluate once per row. */
   def jaccard(a: Column, b: Column): Column = {
-    val inter = size(array_intersect(a, b)).cast("double")
-    val union = size(a) + size(b) - size(array_intersect(a, b))
-    when(union === 0, lit(0.0)).otherwise(inter / union.cast("double"))
+    val inter = size(array_intersect(a, b))
+    (inter.cast("double") /
+      greatest(size(a) + size(b) - inter, lit(1)).cast("double"))
   }
 
   /** 64-bit SimHash over a token array: per bit position, sum +1/−1 votes

@@ -124,12 +124,19 @@ object Dedup {
 
   /** Exact dedup by content fingerprint (md5 of normalized text): the
     * 100 TB-friendly variant — the shuffle key is 32 bytes instead of the
-    * document body. */
+    * document body. Keeps each fingerprint's rows whose id is its least
+    * id (ties on (fingerprint, id) all survive); rows with a null
+    * fingerprint or a null id are dropped. Planned as ONE exchange: the
+    * least id is a window over the fingerprint, not an aggregate joined
+    * back, which shuffled both sides before adaptive execution could
+    * turn the join into a broadcast. */
   def exactByFingerprint(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val fp = graft.core.ScanParallelism.ensure(df)
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("__fp"))
+    graft.core.ScanParallelism.ensure(df)
       .withColumn("__fp", T.fingerprint(col(textCol)))
-    val keep = fp.groupBy(col("__fp")).agg(min(col(idCol)).as(idCol))
-    fp.join(keep, Seq("__fp", idCol), "left_semi").drop("__fp")
+      .withColumn("__min", min(col(idCol)).over(w))
+      .filter(col("__fp").isNotNull && col(idCol) === col("__min"))
+      .drop("__fp", "__min")
   }
 
   /** Candidate pairs from any exploded (id, key) relation: self-join within
@@ -440,7 +447,8 @@ object Dedup {
     val byId = rows.indices.filter(ids(_) != null).groupBy(ids(_))
     val shingles = in.map(_.get(1, shField.dataType))
     val out = for ((a, c) <- pairs.toArray; i <- byId(a); j <- byId(c);
-                   r = scored(jaccard(InternalRow(shingles(i), shingles(j))))
+                   r = scored(jaccard(
+                     InternalRow(shingles(i), shingles(j)))).copy()
                    if !r.isNullAt(0) && r.getBoolean(0))
       yield Row(a, c, r.getDouble(1))
     val idField = schema(0)

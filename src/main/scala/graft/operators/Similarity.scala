@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType,
   StructField, StructType}
 
+import graft.core.DriverKeys
 import graft.core.DriverEval.{bound, localFrame}
 import graft.functions.{VectorFunctions => V}
 
@@ -2403,7 +2404,8 @@ object Similarity {
       val query = bound(spark, qSchema,
         col(queryIdCol).cast("long").as(queryIdCol), col("__qvec"),
         col("__qn"), flatLut(pq).as("__lut"))
-      val qs = qRows.map(r => query(toCatalyst(r).asInstanceOf[InternalRow]))
+      val qs = qRows.map(r =>
+        query(toCatalyst(r).asInstanceOf[InternalRow]).copy())
       val scores = bound(spark, StructType(rowSchema ++ query.schema),
         adcCosine(pq), exactCosine(vecCol))
       val pair = new JoinedRow
@@ -2487,11 +2489,23 @@ object Similarity {
     * Bounded work, never a full rewrite (the `SnapshotStore.delete`
     * economy): the victims' cells are located by one COLUMN-PRUNED scan
     * (id + the directory-derived cell only — the vector and code columns
-    * stay unread) whose single collected per-cell count gives both the
-    * touched cells and the rows removed; `data/` opens through one
-    * driver-side listing, not a |cells|-task discovery job. Only those
-    * `__cell=` directories are rewritten, each compacted to ONE part file
-    * ([[writeCells]]); untouched cells keep their exact files.
+    * stay unread) whose single collect gives both the touched cells and
+    * the rows removed; `data/` opens through one driver-side listing, not
+    * a |cells|-task discovery job. Only those `__cell=` directories are
+    * rewritten, each compacted to ONE part file ([[writeCells]]);
+    * untouched cells keep their exact files.
+    *
+    * `keys` is evaluated ONCE: the locate and the rewrite read that one
+    * evaluation, so a nondeterministic input cannot let victims outside
+    * the touched set survive while the count claimed them. A batch of at
+    * most [[graft.core.DriverKeys.MaxKeys]] rows is held on the driver as
+    * a literal key set, pushed into the locate scan (which collects the
+    * victims' cells) and into the rewrite (which keeps the rows outside
+    * the set; a stored null id stays, as in the join): one locate job and
+    * the staged write, with no key relation materialized or broadcast. A
+    * larger batch is checkpointed once, broadcast into the locate's semi
+    * join (a per-cell count) and into the rewrite's anti join. Both paths
+    * store the same rows (SimilaritySpec).
     *
     * Crash discipline: survivors are staged under `<path>/.staging`
     * FIRST (probes keep running against the untouched live index), then
@@ -2526,7 +2540,16 @@ object Similarity {
     * nothing). Returns rows removed; ids absent from the index are a
     * no-op, so replaying an opt-out batch converges. */
   def indexDelete(spark: SparkSession, path: String, keys: DataFrame,
-                  idCol: String = "id"): Long = {
+                  idCol: String = "id"): Long =
+    indexDeleteGated(spark, path, keys, idCol)
+
+  /** [[indexDelete]] with its key gate as a parameter: tests and the
+    * `delete_gate` sweep pin either path with it (`driverKeys = 0` takes
+    * the join plan); callers keep [[graft.core.DriverKeys.MaxKeys]]. */
+  private[graft] def indexDeleteGated(spark: SparkSession, path: String,
+                                      keys: DataFrame, idCol: String = "id",
+                                      driverKeys: Int = DriverKeys.MaxKeys)
+      : Long = {
     require(keys.columns.contains(idCol),
       s"keys must carry the id column '$idCol'")
     requireIndex(spark, path)
@@ -2542,26 +2565,34 @@ object Similarity {
     val data = readData(spark, path,
       cachedModel(spark, path, readGeneration(spark, path)).map(_.dataSchema))
     val storedIdType = data.schema(idCol).dataType
-    // bounded opt-out batch, materialized once: it feeds several jobs,
-    // and a nondeterministic input re-evaluated per job would let
-    // victims outside the first evaluation's touched set survive while
-    // the count claimed them (SnapshotStore.delete's rationale)
-    val k = keys.select(col(idCol).cast(storedIdType).as(idCol))
-      .distinct().localCheckpoint(true)
-    // ONE locate job: victims per cell give the touched set and the count
-    val victimsPerCell = data.select(col(idCol), col("__cell"))
-      .join(broadcast(k), Seq(idCol), "left_semi")
-      .groupBy("__cell").count().collect()
-    val nDel = victimsPerCell.map(_.getLong(1)).sum
+    // the key batch, evaluated once (see the scaladoc); ONE locate job
+    // gives the touched cells and the count
+    val located = DriverKeys.collect(keys, Seq(idCol), Seq(storedIdType),
+        driverKeys) match {
+      case Some(held) =>
+        val keyIn = coalesce(DriverKeys.in(Seq(col(idCol)),
+          Seq(storedIdType), held), lit(false))
+        val cells = if (held.isEmpty) Array.empty[Int]
+          else data.filter(keyIn).select("__cell").collect().map(_.getInt(0))
+        (cells.length.toLong, cells.toSet, (t: DataFrame) => t.filter(!keyIn))
+      case None =>
+        val k = keys.select(col(idCol).cast(storedIdType).as(idCol))
+          .distinct().localCheckpoint(true)
+        val victimsPerCell = data.select(col(idCol), col("__cell"))
+          .join(broadcast(k), Seq(idCol), "left_semi")
+          .groupBy("__cell").count().collect()
+        (victimsPerCell.map(_.getLong(1)).sum,
+          victimsPerCell.map(_.getInt(0)).toSet,
+          (t: DataFrame) => t.join(broadcast(k), Seq(idCol), "left_anti"))
+    }
+    val (nDel, touched, survivors) = located
     if (nDel == 0L) return 0L
-    val touched = victimsPerCell.map(_.getInt(0)).toSet
     val target = data.filter(col("__cell").isin(touched.toIndexedSeq: _*))
     val staging = new org.apache.hadoop.fs.Path(root, ".staging")
     fs.delete(staging, true)
     // stage the touched cells' survivors, one file per cell — live index
     // untouched, probes keep running
-    writeCells(target.join(broadcast(k), Seq(idCol), "left_anti"),
-      s"$staging/data", "overwrite")
+    writeCells(survivors(target), s"$staging/data", "overwrite")
     // fenced WHOLE-RELATION swap. Swapping cell directories one at a
     // time IN PLACE left a window where a racing probe's file listing
     // could catch SOME cells swapped and others not — a READABLE mixed

@@ -3,7 +3,9 @@ package graft.sinks
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StructField, StructType}
+
+import graft.core.{DriverEval, DriverKeys}
 
 /** Durable target for [[InsertOrUpdate]] without a DBMS: a versioned,
   * BUCKET-INCREMENTAL parquet store with an atomically-swapped pointer.
@@ -725,55 +727,86 @@ object SnapshotStore {
     *
     * Scale shape, mirroring [[upsert]]: the keys hash to their buckets
     * (the same conform-to-stored-types discipline — Murmur3 of an INT is
-    * not Murmur3 of a BIGINT), ONLY those buckets are read, anti-joined,
-    * and rewritten; untouched buckets keep their manifest location. A
-    * 1k-key opt-out against a 100 TB store costs O(touched buckets), not
-    * O(table). A bucket whose rows are ALL deleted drops out of the
-    * manifest entirely. Deleting keys that match nothing commits
-    * nothing and returns 0 (no claim, no version burn).
+    * not Murmur3 of a BIGINT), ONLY those buckets are read, and only the
+    * ones holding victims are rewritten; untouched buckets keep their
+    * manifest location. A 1k-key opt-out against a 100 TB store costs
+    * O(touched buckets), not O(table). A bucket whose rows are ALL deleted
+    * drops out of the manifest entirely. Deleting keys that match nothing
+    * commits nothing and returns 0 (no claim, no version burn).
+    *
+    * `keys` is evaluated ONCE: the victims' count, their buckets and the
+    * rewrite all read that one evaluation, so a nondeterministic input
+    * (limit/sample) cannot let victims outside the touched set survive
+    * while the count claimed them. A batch of at most
+    * [[graft.core.DriverKeys.MaxKeys]] rows is held on the driver as a
+    * literal key set: its buckets are hashed on the driver, one collect of
+    * the matching rows' buckets gives the count and the buckets to
+    * rewrite, and the rewrite keeps the rows outside the set (a stored
+    * null key stays, as in the join) — two jobs, with no key relation
+    * materialized, broadcast or shuffled. A larger batch is checkpointed
+    * once (its buckets observed by the checkpointing job) and semi/anti-
+    * joined. Both paths store the same rows (SnapshotStoreSpec).
     *
     * `keys` must carry the recorded discriminant columns; extra columns
     * are ignored. Returns the number of rows removed. Versioned like any
     * commit: time-travel still reads the pre-delete versions until
     * [[vacuum]] reclaims them — an opt-out pipeline that must FORGET the
     * bytes follows the delete with `vacuum(keep = 1)`. */
-  def delete(spark: SparkSession, root: String, keys: DataFrame): Long = {
+  def delete(spark: SparkSession, root: String, keys: DataFrame): Long =
+    deleteGated(spark, root, keys)
+
+  /** [[delete]] with its key gate as a parameter: tests and the
+    * `delete_gate` sweep pin either path with it (`driverKeys = 0` takes
+    * the join plan); callers keep [[graft.core.DriverKeys.MaxKeys]]. */
+  private[graft] def deleteGated(spark: SparkSession, root: String,
+                                 keys: DataFrame,
+                                 driverKeys: Int = DriverKeys.MaxKeys): Long = {
     val s = open(spark, root)
     val (v, m) = s.committed
     val disc = requireDiscriminant(root, s.props)
     disc.foreach(c => require(keys.columns.contains(c),
       s"keys must carry discriminant column '$c'"))
     val buckets = s.nBuckets.getOrElse(DefaultBuckets)
-    // conform key types to STORED types before hashing or joining:
+    // conform key types to STORED types before hashing or matching:
     // bucket assignment hashes the stored type, and an unconformed key
-    // would probe the wrong bucket and silently delete nothing.
-    // Materialized ONCE (eager localCheckpoint — bounded: an opt-out
-    // batch is small by design): the key set feeds two separate jobs
-    // (semi count, anti rewrite), and a nondeterministic input
-    // (limit/sample) re-evaluated per job would desynchronize them —
-    // victims outside the touched set would silently survive while nDel
-    // counted them. The touched buckets are observed by the
-    // materializing job itself, from the very rows both jobs read.
-    val conformed = disc.foldLeft(keys.select(disc.map(col): _*).distinct()) {
-      (d, c) =>
-        val stored = m.schema.fields.find(_.name == c).getOrElse(throw
-          new IllegalArgumentException(
-            s"discriminant '$c' is not a stored column")).dataType
-        if (d.schema(c).dataType != stored) d.withColumn(c, col(c).cast(stored))
-        else d
+    // would probe the wrong bucket and silently delete nothing
+    val stored = disc.map(c => m.schema.fields.find(_.name == c)
+      .getOrElse(throw new IllegalArgumentException(
+        s"discriminant '$c' is not a stored column")).dataType)
+    val discCols = disc.map(col)
+    val located = DriverKeys.collect(keys, disc, stored, driverKeys) match {
+      case Some(held) =>
+        val keyBuckets = DriverEval.localFrame(spark, held,
+            StructType(disc.zip(stored).map { case (c, t) => StructField(c, t) }))
+          .select(bucketExpr(discCols, buckets)).collect().map(_.getInt(0))
+          .toSet.intersect(m.buckets.keySet)
+        if (keyBuckets.isEmpty) return 0L
+        val keyIn = coalesce(DriverKeys.in(discCols, stored, held), lit(false))
+        val victims = readBuckets(spark, root, m, Some(keyBuckets))
+          .filter(keyIn).select(bucketExpr(discCols, buckets)).collect()
+          .map(_.getInt(0))
+        val touched = victims.toSet
+        (victims.length.toLong, touched,
+          readBuckets(spark, root, m, Some(touched)).filter(!keyIn))
+      case None =>
+        // the key relation feeds two jobs (semi count, anti rewrite):
+        // materialized once, its buckets observed by the materializing job
+        val conformed = keys.select(disc.zip(stored).map { case (c, t) =>
+          col(c).cast(t).as(c) }: _*).distinct()
+        val (k, seen) = checkpointObserving(conformed,
+          collect_set(bucketExpr(discCols, buckets)).as(bucketCol))
+        val touched = seen.getSeq[Int](0).toSet.intersect(m.buckets.keySet)
+        if (touched.isEmpty) return 0L
+        val target = readBuckets(spark, root, m, Some(touched))
+        (target.join(k, disc, "left_semi").count(), touched,
+          target.join(k, disc, "left_anti"))
     }
-    val (k, seen) = checkpointObserving(conformed,
-      collect_set(bucketExpr(disc.map(col), buckets)).as(bucketCol))
-    val touched = seen.getSeq[Int](0).toSet.intersect(m.buckets.keySet)
-    if (touched.isEmpty) return 0L
-    val target = readBuckets(spark, root, m, Some(touched))
-    val nDel = target.join(k, disc, "left_semi").count()
+    val (nDel, touched, survivors) = located
     if (nDel == 0L) return 0L
     // touched buckets that produced no surviving rows are NOT re-added:
     // the manifest forgets them (whole-bucket removal)
     commit(s.f, root, v + 1,
-      target.join(k, disc, "left_anti")
-        .withColumn(bucketCol, bucketExpr(disc.map(col), buckets)),
+      survivors.withColumn(bucketCol, bucketExpr(discCols, buckets)),
       m.schema, s.cluster, m.buckets -- touched)
     nDel
   }

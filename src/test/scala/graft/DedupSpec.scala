@@ -34,6 +34,23 @@ class DedupSpec extends SparkSpec {
     kept shouldBe Array(0L, 1L, 2L)
   }
 
+  test("fingerprint dedup keeps the rows of a min-id aggregate semi-joined " +
+    "back: ties on (fingerprint, id) all survive, null texts and null ids " +
+    "are dropped") {
+    val df = Seq[(java.lang.Long, String)]((1L, "a b"), (1L, " A  b"),
+      (2L, "a b"), (null, "a b"), (3L, null), (4L, "c"), (null, "d"))
+      .toDF("doc_id", "text")
+    val fp = df.withColumn("__fp",
+      graft.functions.TextFunctions.fingerprint(col("text")))
+    val aggregated = fp.join(fp.groupBy("__fp").agg(min("doc_id").as("doc_id")),
+      Seq("__fp", "doc_id"), "left_semi").drop("__fp")
+    def rows(d: org.apache.spark.sql.DataFrame): Seq[String] =
+      d.collect().map(_.toString).toSeq.sorted
+    val kept = rows(Dedup.exactByFingerprint(df, "text", "doc_id"))
+    kept shouldBe Seq("[1, A  b]", "[1,a b]", "[4,c]")
+    kept shouldBe rows(aggregated)
+  }
+
   test("minhash LSH finds the constructed near-dup pair, and every reported " +
     "pair meets the exact-jaccard threshold (soundness)") {
     val pairs = Dedup.minHashLsh(docs, "text", "doc_id",

@@ -156,8 +156,9 @@ class IvfPqProbePlanSpec extends SparkSpec {
   }
 
   test("on an index of more than 32 cells a warm ivfPqAppend runs 2 jobs " +
-    "and a warm indexDelete 8: data/ opens through the driver-side " +
-    "listing, and one locate job finds the touched cells and the count") {
+    "and a warm indexDelete 3: data/ opens through the driver-side " +
+    "listing, one locate job finds the touched cells and the count, and " +
+    "the staged write runs the other two") {
     val path = tempIndex("graft_handle_write_jobs")
     build(path, 64)
     new java.io.File(path, "data").listFiles()
@@ -171,7 +172,7 @@ class IvfPqProbePlanSpec extends SparkSpec {
       phase("delete")(Similarity.indexDelete(spark, path,
         Seq(5L, 6L, 7L).toDF("vec_id"), idCol = "vec_id")) shouldBe 3L
     }
-    jobs shouldBe Map("append" -> 2, "delete" -> 8)
+    jobs shouldBe Map("append" -> 2, "delete" -> 3)
   }
 
   test("a warm probe's construction runs no Spark job") {

@@ -31,6 +31,7 @@ class ScaleProbeSpec extends AnyFunSuite with Matchers {
     val optIn = ScaleProbe.registry.filterNot(_.default).map(_.name)
     optIn should contain("core_scaling")
     optIn should contain("simhash_precision")
+    optIn should contain("delete_gate")
   }
 
   test("writeArtifact creates the file, then replaces only its own key") {

@@ -823,6 +823,61 @@ class SimilaritySpec extends SparkSpec {
         idCol = "vec_id")
   }
 
+  test("indexDelete's driver key set and its join plan remove and store " +
+    "the same rows: null keys, a stored null id, INT keys on a LONG index, " +
+    "duplicate and no-match keys and an emptied cell") {
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    val corp = emb.filter($"vec_id" >= 5).select("vec_id", "embedding")
+    // a stored null id, carrying a real vector
+    val withNull = corp.unionByName(corp.filter($"vec_id" === 5L)
+      .select(lit(null).cast("long").as("vec_id"), $"embedding"))
+    val onDriver = java.nio.file.Files
+      .createTempDirectory("graft_idxdel_drv").toString
+    Similarity.ivfPqBuild(withNull, "embedding", onDriver, nCells = 8,
+      m = 16, ksub = 16)
+    // the join plan's twin: a copy of the same files
+    val joined = java.nio.file.Files
+      .createTempDirectory("graft_idxdel_join").toString
+    val src = java.nio.file.Paths.get(onDriver)
+    java.nio.file.Files.walk(src).iterator().asScala.foreach { f =>
+      val to = java.nio.file.Paths.get(joined).resolve(src.relativize(f))
+      if (java.nio.file.Files.isDirectory(f))
+        java.nio.file.Files.createDirectories(to)
+      else java.nio.file.Files.copy(f, to)
+    }
+    def stored(path: String): (Seq[String], Seq[String]) = (
+      spark.read.parquet(s"$path/data").collect().map(_.toString).toSeq.sorted,
+      new java.io.File(path, "data").list().filter(_.startsWith("__cell="))
+        .toSeq.sorted)
+    // each batch through the gate (the driver path at these sizes) on one
+    // twin and through the join plan (driverKeys = 0) on the other
+    def agree(keys: DataFrame, expected: Long): Unit = {
+      Similarity.indexDeleteGated(spark, onDriver, keys,
+        idCol = "vec_id") shouldBe expected
+      Similarity.indexDeleteGated(spark, joined, keys, idCol = "vec_id",
+        driverKeys = 0) shouldBe expected
+      stored(onDriver) shouldBe stored(joined)
+    }
+    val ids = corp.select("vec_id").as[Long].collect().sorted
+    // INT keys on the LONG index, a null key, a duplicate, a no-match key
+    agree(Seq[Integer](ids(0).toInt, null, ids(0).toInt, ids(1).toInt,
+      999999).toDF("vec_id"), 2L)
+    agree(Seq(999999L).toDF("vec_id"), 0L)
+    agree(Seq[java.lang.Long](null).toDF("vec_id"), 0L)
+    // every id of one cell: the cell's directory goes on both twins
+    val cellIds = spark.read.parquet(s"$onDriver/data")
+      .filter($"__cell" === 3 && $"vec_id".isNotNull).select("vec_id")
+      .as[Long].collect().toSeq
+    cellIds should not be empty
+    val nullInCell3 = spark.read.parquet(s"$onDriver/data")
+      .filter($"__cell" === 3 && $"vec_id".isNull).count()
+    agree(cellIds.toDF("vec_id"), cellIds.size.toLong)
+    new java.io.File(onDriver, "data/__cell=3").exists() shouldBe
+      (nullInCell3 > 0)
+    spark.read.parquet(s"$onDriver/data").filter($"vec_id".isNull)
+      .count() shouldBe 1L
+  }
+
   test("maintenance over a fully drained corpus (total opt-out) reports " +
     "ok instead of crashing the nightly run: the gauge has nothing to " +
     "sample, and the direct gauge call says so loudly") {

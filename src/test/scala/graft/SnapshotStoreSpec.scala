@@ -459,6 +459,67 @@ class SnapshotStoreSpec extends SparkSpec
       .filter(col("id") === 3).count() shouldBe 1L
   }
 
+  /** The stored rows of `root`, one string per row, sorted: the
+    * bit-for-bit content the two delete paths must agree on. */
+  private def storedRows(root: String): Seq[String] =
+    SnapshotStore.read(spark, root).get.collect().map(_.toString).toSeq.sorted
+
+  test("delete's driver key set and its join plan remove and store the " +
+    "same rows: null keys, stored null keys, LONG keys on an INT store, " +
+    "duplicate and no-match keys, an emptied bucket and a two-column " +
+    "discriminant") {
+    // each batch runs through the gate (the driver path at these sizes)
+    // on one twin and through the join plan (driverKeys = 0) on the other
+    def agree(twins: (String, String), keys: org.apache.spark.sql.DataFrame,
+              expected: Long): Unit = {
+      val (onDriver, joined) = twins
+      SnapshotStore.deleteGated(spark, onDriver, keys) shouldBe expected
+      SnapshotStore.deleteGated(spark, joined, keys, driverKeys = 0) shouldBe
+        expected
+      SnapshotStore.currentVersion(spark, onDriver) shouldBe
+        SnapshotStore.currentVersion(spark, joined)
+      storedRows(onDriver) shouldBe storedRows(joined)
+    }
+    val one = Seq[(Integer, String)]((null, "null key")) ++
+      (0 until 40).map(i => (Integer.valueOf(i), s"v$i"))
+    val single = (tempRoot("graft_del_drv"), tempRoot("graft_del_join"))
+    Seq(single._1, single._2).foreach(r => SnapshotStore.upsert(spark, r,
+      one.toDF("id", "value"), cfg, nBuckets = 4))
+    def nullIds(root: String): Long =
+      SnapshotStore.read(spark, root).get.filter(col("id").isNull).count()
+    nullIds(single._1) shouldBe 1L
+    // LONG keys on the INT store, a null key, a duplicate, a no-match key
+    agree(single, Seq[java.lang.Long](3L, null, 3L, 17L, 999L).toDF("id"), 2L)
+    // no match, only nulls, no keys at all: nothing committed
+    agree(single, Seq(999, 1000).toDF("id"), 0L)
+    agree(single, Seq[Integer](null).toDF("id"), 0L)
+    agree(single, Seq.empty[Int].toDF("id"), 0L)
+    // every row of one bucket: the bucket drops out of both manifests
+    val bucket0 = SnapshotStore.read(spark, single._1).get
+      .filter(pmod(hash(col("id")), lit(4)) === 0).select("id")
+      .as[Int].collect().toSeq
+    bucket0 should not be empty
+    agree(single, bucket0.toDF("id"), bucket0.size.toLong)
+    SnapshotStore.manifestBucketIds(spark, single._1) should not contain 0
+    SnapshotStore.manifestBucketIds(spark, single._2) should not contain 0
+    nullIds(single._1) shouldBe 1L
+
+    val pairCfg = cfg.copy(discriminant = Seq("k", "tag"))
+    val two = Seq[(Integer, String, String)]((1, null, "stored null tag"),
+      (null, "a", "stored null k")) ++
+      (0 until 30).map(i => (Integer.valueOf(i % 10), s"t${i / 10}", s"v$i"))
+    val double = (tempRoot("graft_del2_drv"), tempRoot("graft_del2_join"))
+    Seq(double._1, double._2).foreach(r => SnapshotStore.upsert(spark, r,
+      two.toDF("k", "tag", "value"), pairCfg, nBuckets = 4))
+    // a null in either column matches nothing; (1, t0) twice; (1, t9) no
+    // stored row
+    agree(double, Seq[(Integer, String)]((1, "t0"), (1, "t0"), (1, null),
+      (null, "a"), (2, "t1"), (1, "t9")).toDF("k", "tag"), 2L)
+    agree(double, Seq[(Long, String)]((3L, "t2")).toDF("k", "tag"), 1L)
+    SnapshotStore.read(spark, double._1).get
+      .filter(col("k").isNull || col("tag").isNull).count() shouldBe 2L
+  }
+
   test("streaming opt-out: a key stream applied per epoch through " +
     "StreamOps.upsertSink + delete shrinks the store, the feed reports " +
     "deletes, and a REPLAYED epoch converges (at-least-once safety: " +
@@ -1152,7 +1213,7 @@ class SnapshotStoreSpec extends SparkSpec
       phase("upsert unsized")(SnapshotStore.upsert(spark, root, unsized, cfg))
     }
     rewritten should be > 0
-    jobs shouldBe Map("upsert" -> 7, "changes" -> 3, "delete" -> 6,
+    jobs shouldBe Map("upsert" -> 7, "changes" -> 3, "delete" -> 2,
       "compact" -> 2, "upsert unsized" -> 7)
   }
 }
