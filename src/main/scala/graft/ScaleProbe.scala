@@ -34,8 +34,9 @@ import graft.tools.DevSession
   * (default 2), SPARK_GRAFT_PROBES (comma list of registry names; default:
   * every entry not marked opt-in) and SPARK_GRAFT_CPUS (via
   * [[graft.tools.DevSession]]). `core_scaling`, `simhash_precision`,
-  * `probe_gate`, `dedup_gate` and `delete_gate` are opt-in; `bpe_train` reads SPARK_GRAFT_BPE_MERGES,
-  * `core_scaling` SPARK_GRAFT_CORE_OPS.
+  * `probe_gate`, `dedup_gate`, `delete_gate` and `fingerprint_skew` are
+  * opt-in; `bpe_train` reads SPARK_GRAFT_BPE_MERGES, `core_scaling`
+  * SPARK_GRAFT_CORE_OPS.
   */
 object ScaleProbe {
 
@@ -307,7 +308,8 @@ object ScaleProbe {
     Probe("simhash_precision", simhashPrecision, default = false),
     Probe("probe_gate", probeGate, default = false),
     Probe("dedup_gate", dedupGate, default = false),
-    Probe("delete_gate", deleteGate, default = false))
+    Probe("delete_gate", deleteGate, default = false),
+    Probe("fingerprint_skew", fingerprintSkew, default = false))
 
   /** The pair-join strategies on letter-rotated replicas: the exact
     * single-pass string-keyed inverted-index join, the MinHash prefilter
@@ -597,9 +599,12 @@ object ScaleProbe {
     * own cost shows. Each point times both paths through the gated entry
     * points, each run on a fresh copy of the store: the literal key set
     * (`driverKeys = n`) and the join plan after the collect a batch just
-    * over the gate pays (`driverKeys = n − 1`). One warm-up run of either
-    * path, then the min of `passes` runs; a series stops after the driver
-    * path has lost at two sizes in a row. */
+    * over the gate pays (`driverKeys = n − 1`). One warm-up run of each
+    * path, then `passes` rounds that run both paths back to back,
+    * alternating which goes first, so a drift in machine load falls on
+    * both: each path's min, and the rounds the key set won
+    * (`driver_wins`). A series stops after the driver path's min has lost
+    * at two sizes in a row. */
   private def deleteGate(c: Ctx): Unit = {
     import c._
     import graft.core.DriverKeys
@@ -640,20 +645,27 @@ object ScaleProbe {
       var losses = 0
       sizes.iterator.takeWhile(_ => losses < 2).map { n =>
         val keys = (0L until n).map(key(_, n)).toDF("id")
-        def path(driverKeys: Int): (Double, Long) = {
-          def run() = delete(work, keys, driverKeys)
+        def run(driverKeys: Int): (Double, Long) = {
           copy(src, work)
-          run()
-          minOfPasses(passes, copy(src, work))(run())
+          val t0 = System.nanoTime()
+          val deleted = delete(work, keys, driverKeys)
+          ((System.nanoTime() - t0) / 1e9, deleted)
         }
-        val (driverSec, deleted) = path(n)
-        val (sparkSec, sparkDeleted) = path(n - 1)
+        val (_, deleted) = run(n)
+        val (_, sparkDeleted) = run(n - 1)
         require(deleted == sparkDeleted,
           s"paths disagree: $deleted vs $sparkDeleted rows")
+        val rounds = (0 until passes).map { i =>
+          if (i % 2 == 0) { val d = run(n)._1; (d, run(n - 1)._1) }
+          else { val j = run(n - 1)._1; (run(n)._1, j) }
+        }
+        val driverSec = rounds.map(_._1).min
+        val sparkSec = rounds.map(_._2).min
         losses = if (driverSec > sparkSec) losses + 1 else 0
         val row = obj("store" -> name, "shape" -> shape, "keys" -> n,
           "deleted" -> deleted, "driver_sec" -> driverSec,
           "spark_sec" -> sparkSec,
+          "driver_wins" -> rounds.count { case (d, j) => d < j },
           "gate_serves" -> (if (n <= DriverKeys.MaxKeys) "driver" else "spark"))
         println(row)
         row
@@ -663,6 +675,51 @@ object ScaleProbe {
                       point <- series(name, src, delete, shape, key)) yield point
     emit("delete_gate", obj("rows" -> rows, "passes" -> passes, "cpus" -> cpus,
       "gate_keys" -> DriverKeys.MaxKeys,
+      "sweep" -> Json(points.mkString("[", ",", "]"))))
+  }
+
+  /** `Dedup.exactByFingerprint`'s plan under one heavily copied text
+    * (opt-in): its window of the least id over the fingerprint sends every
+    * copy of one text, with its row, to one task, where the aggregate +
+    * `left_semi` join it replaced (kept here as `aggregate_join`) shrank
+    * the copies in a partial aggregate and spread the full rows by
+    * (fingerprint, id). Corpora of `rows` documents (a distinct ~150-byte
+    * text each) in which a `share` of the rows carry one boilerplate
+    * text of the same length under their own ids, staged as parquet; each
+    * plan's full rows go to the noop sink (min of `passes` after one
+    * warm-up). Both plans keep the same row count. */
+  private def fingerprintSkew(c: Ctx): Unit = {
+    import c._
+    val filler = " lorem ipsum dolor sit amet" * 5
+    def aggregateJoin(df: DataFrame): DataFrame = {
+      val fp = df.withColumn("__fp", TF.fingerprint(col("text")))
+      fp.join(fp.groupBy("__fp").agg(min("doc_id").as("doc_id")),
+        Seq("__fp", "doc_id"), "left_semi").drop("__fp")
+    }
+    val plans = Seq[(String, DataFrame => DataFrame)](
+      "window" -> (d => Dedup.exactByFingerprint(d, "text", "doc_id")),
+      "aggregate_join" -> aggregateJoin)
+    val corpora = Seq((1000000L, 0.1), (1000000L, 0.5), (3000000L, 0.1),
+      (3000000L, 0.5))
+    val points = for ((rows, share) <- corpora) yield {
+      val docs = staged(spark.range(rows).select(col("id").as("doc_id"),
+        when(pmod(col("id"), lit(100)) < lit((share * 100).round),
+          lit(s"boilerplate$filler"))
+          .otherwise(concat(lit("doc "), col("id").cast("string"), lit(filler)))
+          .as("text")), s"fingerprint_skew_$rows")
+      val timed = plans.map { case (name, plan) =>
+        def run(): Unit = plan(docs).write.format("noop").mode("overwrite").save()
+        run()
+        name -> (minOfPasses(passes)(run())._1, plan(docs).count())
+      }
+      val kept = timed.map(_._2._2).distinct
+      require(kept.size == 1, s"plans disagree: $timed")
+      val row = obj("rows" -> rows, "share" -> share, "kept" -> kept.head,
+        "window_sec" -> timed(0)._2._1, "aggregate_join_sec" -> timed(1)._2._1)
+      println(row)
+      row
+    }
+    emit("fingerprint_skew", obj("passes" -> passes, "cpus" -> cpus,
       "sweep" -> Json(points.mkString("[", ",", "]"))))
   }
 

@@ -2,73 +2,67 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.{InSet, Literal}
-import org.apache.spark.sql.functions.{col, struct}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 /** The key gate of the opt-out deletes (`SnapshotStore.delete`,
-  * `Similarity.indexDelete`): a key batch of at most [[MaxKeys]] rows is
-  * evaluated once, on the driver, and applied as a literal key set that
-  * the parquet scan can push down, in place of a materialized key
-  * relation joined against the store. A larger batch keeps the join
-  * plan: its checkpoint, broadcasts and exchanges are fixed costs that a
-  * small batch does not repay, while the key set's own cost (the driver
-  * collect, and the set shipped with every task) grows with the batch. */
+  * `Similarity.indexDelete`): a batch of at most [[MaxKeys]] keys in ONE
+  * integer-valued column is evaluated once, on the driver, and applied as
+  * a literal key set that the parquet scan can push down, in place of a
+  * materialized key relation joined against the store. A larger batch,
+  * or a key of any other shape, keeps the join plan: its checkpoint,
+  * broadcasts and exchanges are fixed costs that a small batch does not
+  * repay, while the key set's own cost (the driver collect, and the set
+  * shipped with every task) grows with the batch. */
 private[graft] object DriverKeys {
 
-  /** The most key rows a delete holds on the driver. MEASURED
+  /** The most keys a delete holds on the driver. MEASURED
     * (SCALEPROBE.json `delete_gate`, local[4] on a 4-core box, warm
-    * deletes of 10 to 1 M keys against a 1 M-row SnapshotStore and a
-    * 1 M-vector IVF-PQ index, with half of the keys matching or only 10):
-    * the key set won at 10 k keys in all four series and lost from 30 k
-    * (store, half matching: 1.69 s vs 1.52 s; index, 10 matching: 2.17 s
-    * vs 1.90 s) or 100 k (the other two). The store's half-matching
-    * series also read a loss at 1 k keys (1.40 s vs 1.29 s, min of 2
-    * runs) that five runs per path did not repeat (0.93 s vs 1.11 s). The
-    * bound sits at the last win common to every series. */
-  val MaxKeys: Int = 10000
+    * deletes of 10 to 1 M BIGINT keys against a 1 M-row SnapshotStore and
+    * a 1 M-vector IVF-PQ index, with half of the keys matching or only
+    * 10; 6 rounds of both paths back to back): at 100 keys the key set
+    * won all 6 rounds in all four series, by 17-41% on the mins. The
+    * store's series and the index's 10-matching series kept winning up
+    * to 10 k keys, but the index's half-matching series, where the
+    * rewrite of every cell dominates, won 1 round of 6 at 1 k keys and
+    * lost on the mins at 3 k (4.17 s vs 3.88 s), so the bound stays at
+    * the last size with a clear win everywhere. */
+  val MaxKeys: Int = 100
 
-  /** The stored types whose literal-set match is the join's key equality:
-    * the float types (NaN, −0.0), binary and collated strings compare
-    * differently in a literal set, so their keys keep the join plan. */
-  private def exact(t: DataType): Boolean = t match {
-    case ByteType | ShortType | IntegerType | LongType | BooleanType |
-         DateType | TimestampType | TimestampNTZType => true
-    case _: DecimalType => true
-    case s: StringType => s == StringType
+  /** Whether a key column of the stored type `t` can be held: the
+    * measured shape, one column whose Catalyst value is an int or a long
+    * (integers, dates, timestamps), whose `InSet` is a hash set pushed
+    * into the scan. Strings, decimals, floats and multi-column keys were
+    * not swept (a struct `InSet` is an interpreted ordered set that the
+    * scan does not push down), so they keep the join plan. */
+  def holds(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType | DateType |
+         TimestampType | TimestampNTZType => true
     case _ => false
   }
 
-  /** The distinct rows of `keys`' columns `cols`, cast to the stored
-    * `types`, without the rows holding a null (they match nothing, as in
-    * the join), from ONE collect of at most `max` + 1 rows (a local
-    * relation's runs no job); None when `keys` holds more than `max` rows
-    * or a type has no exact literal match. */
-  def collect(keys: DataFrame, cols: Seq[String], types: Seq[DataType],
+  /** The distinct non-null keys of `keys`' column `c`, cast to the stored
+    * type `t`, from ONE collect of at most `max` + 1 rows (a local
+    * relation's runs no job); None, with nothing run, when `t` is not
+    * [[holds held]], and None when `keys` holds more than `max` rows. A
+    * null key matches nothing, as in the join. */
+  def collect(keys: DataFrame, c: String, t: DataType,
               max: Int): Option[Array[Row]] =
-    if (!types.forall(exact)) None
+    if (!holds(t)) None
     else {
-      val rows = keys.select(cols.zip(types).map { case (c, t) =>
-        col(c).cast(t).as(c) }: _*).limit(max + 1).collect()
+      val rows = keys.select(col(c).cast(t).as(c)).limit(max + 1).collect()
       if (rows.length > max) None
-      else Some(rows.filterNot(_.anyNull).distinct)
+      else Some(rows.filterNot(_.isNullAt(0)).distinct)
     }
 
-  /** Whether `cols` (of the stored `types`) hold one of the key `rows`:
+  /** Whether `c` (of the stored type `t`) holds one of the key `rows`:
     * one `InSet` of the keys' Catalyst values, which the parquet scan
-    * pushes down for a single column. It is one expression node whatever
-    * the batch size, so planning does not walk a literal per key. A null
-    * column value gives null, so a caller that keeps the non-matching
-    * rows wraps it in `coalesce(…, false)`. */
-  def in(cols: Seq[Column], types: Seq[DataType], rows: Array[Row]): Column =
-    if (cols.length == 1)
-      Bridge.column(InSet(Bridge.expression(cols.head),
-        rows.map(r => Literal.create(r.get(0), types.head).value).toSet))
-    else {
-      val t = StructType(types.zipWithIndex.map { case (d, i) =>
-        StructField(s"k$i", d) })
-      Bridge.column(InSet(Bridge.expression(struct(cols.zipWithIndex.map {
-        case (c, i) => c.as(s"k$i") }: _*)),
-        rows.map(r => Literal.create(r, t).value).toSet))
-    }
+    * pushes down. It is one expression node whatever the batch size, so
+    * planning does not walk a literal per key. A null column value gives
+    * null, so a caller that keeps the non-matching rows wraps it in
+    * `coalesce(…, false)`. */
+  def in(c: Column, t: DataType, rows: Array[Row]): Column =
+    Bridge.column(InSet(Bridge.expression(c),
+      rows.map(r => Literal.create(r.get(0), t).value).toSet))
 }

@@ -2497,15 +2497,21 @@ object Similarity {
     *
     * `keys` is evaluated ONCE: the locate and the rewrite read that one
     * evaluation, so a nondeterministic input cannot let victims outside
-    * the touched set survive while the count claimed them. A batch of at
+    * the touched set survive while the count claimed them. On an
+    * integer-valued id ([[graft.core.DriverKeys.holds]]) a batch of at
     * most [[graft.core.DriverKeys.MaxKeys]] rows is held on the driver as
     * a literal key set, pushed into the locate scan (which collects the
     * victims' cells) and into the rewrite (which keeps the rows outside
     * the set; a stored null id stays, as in the join): one locate job and
     * the staged write, with no key relation materialized or broadcast. A
-    * larger batch is checkpointed once, broadcast into the locate's semi
-    * join (a per-cell count) and into the rewrite's anti join. Both paths
-    * store the same rows (SimilaritySpec).
+    * larger batch, or another id type, is checkpointed once, broadcast
+    * into the locate's semi join (a per-cell count) and into the
+    * rewrite's anti join. Both paths store the same rows (SimilaritySpec).
+    * A held-type batch over the gate that is not a local relation is
+    * computed twice: the bounded collect reads up to MaxKeys + 1 of its
+    * rows and finds it too large, then the checkpoint evaluates it in
+    * full; only the checkpoint feeds the delete, so the cost is paid twice
+    * and the result stays consistent.
     *
     * Crash discipline: survivors are staged under `<path>/.staging`
     * FIRST (probes keep running against the untouched live index), then
@@ -2567,11 +2573,11 @@ object Similarity {
     val storedIdType = data.schema(idCol).dataType
     // the key batch, evaluated once (see the scaladoc); ONE locate job
     // gives the touched cells and the count
-    val located = DriverKeys.collect(keys, Seq(idCol), Seq(storedIdType),
+    val located = DriverKeys.collect(keys, idCol, storedIdType,
         driverKeys) match {
       case Some(held) =>
-        val keyIn = coalesce(DriverKeys.in(Seq(col(idCol)),
-          Seq(storedIdType), held), lit(false))
+        val keyIn = coalesce(DriverKeys.in(col(idCol), storedIdType, held),
+          lit(false))
         val cells = if (held.isEmpty) Array.empty[Int]
           else data.filter(keyIn).select("__cell").collect().map(_.getInt(0))
         (cells.length.toLong, cells.toSet, (t: DataFrame) => t.filter(!keyIn))

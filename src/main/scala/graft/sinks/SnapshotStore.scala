@@ -737,15 +737,21 @@ object SnapshotStore {
     * `keys` is evaluated ONCE: the victims' count, their buckets and the
     * rewrite all read that one evaluation, so a nondeterministic input
     * (limit/sample) cannot let victims outside the touched set survive
-    * while the count claimed them. A batch of at most
+    * while the count claimed them. On a one-column integer-valued
+    * discriminant ([[graft.core.DriverKeys.holds]]) a batch of at most
     * [[graft.core.DriverKeys.MaxKeys]] rows is held on the driver as a
     * literal key set: its buckets are hashed on the driver, one collect of
     * the matching rows' buckets gives the count and the buckets to
     * rewrite, and the rewrite keeps the rows outside the set (a stored
     * null key stays, as in the join) — two jobs, with no key relation
-    * materialized, broadcast or shuffled. A larger batch is checkpointed
-    * once (its buckets observed by the checkpointing job) and semi/anti-
-    * joined. Both paths store the same rows (SnapshotStoreSpec).
+    * materialized, broadcast or shuffled. A larger batch, or any other
+    * discriminant, is checkpointed once (its buckets observed by the
+    * checkpointing job) and semi/anti-joined. Both paths store the same
+    * rows (SnapshotStoreSpec). A held-type batch over the gate that is
+    * not a local relation is computed twice: the bounded collect reads
+    * up to MaxKeys + 1 of its rows and finds it too large, then the
+    * checkpoint evaluates it in full; only the checkpoint feeds the
+    * delete, so the cost is paid twice and the result stays consistent.
     *
     * `keys` must carry the recorded discriminant columns; extra columns
     * are ignored. Returns the number of rows removed. Versioned like any
@@ -774,14 +780,19 @@ object SnapshotStore {
       .getOrElse(throw new IllegalArgumentException(
         s"discriminant '$c' is not a stored column")).dataType)
     val discCols = disc.map(col)
-    val located = DriverKeys.collect(keys, disc, stored, driverKeys) match {
-      case Some(held) =>
-        val keyBuckets = DriverEval.localFrame(spark, held,
-            StructType(disc.zip(stored).map { case (c, t) => StructField(c, t) }))
+    val held = (disc, stored) match {
+      case (Seq(c), Seq(t)) => DriverKeys.collect(keys, c, t, driverKeys)
+      case _ => None
+    }
+    val located = held match {
+      case Some(keyRows) =>
+        val keyBuckets = DriverEval.localFrame(spark, keyRows,
+            StructType(Seq(StructField(disc.head, stored.head))))
           .select(bucketExpr(discCols, buckets)).collect().map(_.getInt(0))
           .toSet.intersect(m.buckets.keySet)
         if (keyBuckets.isEmpty) return 0L
-        val keyIn = coalesce(DriverKeys.in(discCols, stored, held), lit(false))
+        val keyIn = coalesce(DriverKeys.in(discCols.head, stored.head, keyRows),
+          lit(false))
         val victims = readBuckets(spark, root, m, Some(keyBuckets))
           .filter(keyIn).select(bucketExpr(discCols, buckets)).collect()
           .map(_.getInt(0))

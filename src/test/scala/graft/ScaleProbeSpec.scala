@@ -32,6 +32,7 @@ class ScaleProbeSpec extends AnyFunSuite with Matchers {
     optIn should contain("core_scaling")
     optIn should contain("simhash_precision")
     optIn should contain("delete_gate")
+    optIn should contain("fingerprint_skew")
   }
 
   test("writeArtifact creates the file, then replaces only its own key") {

@@ -849,11 +849,12 @@ class SimilaritySpec extends SparkSpec {
       spark.read.parquet(s"$path/data").collect().map(_.toString).toSeq.sorted,
       new java.io.File(path, "data").list().filter(_.startsWith("__cell="))
         .toSeq.sorted)
-    // each batch through the gate (the driver path at these sizes) on one
-    // twin and through the join plan (driverKeys = 0) on the other
+    // each batch through the driver key set (a gate above every batch
+    // here) on one twin and through the join plan (driverKeys = 0) on the
+    // other
     def agree(keys: DataFrame, expected: Long): Unit = {
-      Similarity.indexDeleteGated(spark, onDriver, keys,
-        idCol = "vec_id") shouldBe expected
+      Similarity.indexDeleteGated(spark, onDriver, keys, idCol = "vec_id",
+        driverKeys = 100000) shouldBe expected
       Similarity.indexDeleteGated(spark, joined, keys, idCol = "vec_id",
         driverKeys = 0) shouldBe expected
       stored(onDriver) shouldBe stored(joined)

@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
+import graft.core.DriverKeys
 import graft.sinks.{SnapshotStore, UpsertConfig}
 
 class SnapshotStoreSpec extends SparkSpec
@@ -468,12 +469,14 @@ class SnapshotStoreSpec extends SparkSpec
     "same rows: null keys, stored null keys, LONG keys on an INT store, " +
     "duplicate and no-match keys, an emptied bucket and a two-column " +
     "discriminant") {
-    // each batch runs through the gate (the driver path at these sizes)
-    // on one twin and through the join plan (driverKeys = 0) on the other
+    // each batch runs through the driver key set (a gate above every
+    // batch here) on one twin and through the join plan (driverKeys = 0)
+    // on the other
     def agree(twins: (String, String), keys: org.apache.spark.sql.DataFrame,
               expected: Long): Unit = {
       val (onDriver, joined) = twins
-      SnapshotStore.deleteGated(spark, onDriver, keys) shouldBe expected
+      SnapshotStore.deleteGated(spark, onDriver, keys,
+        driverKeys = 100000) shouldBe expected
       SnapshotStore.deleteGated(spark, joined, keys, driverKeys = 0) shouldBe
         expected
       SnapshotStore.currentVersion(spark, onDriver) shouldBe
@@ -504,6 +507,8 @@ class SnapshotStoreSpec extends SparkSpec
     SnapshotStore.manifestBucketIds(spark, single._2) should not contain 0
     nullIds(single._1) shouldBe 1L
 
+    // a two-column discriminant is not held on the driver: both twins run
+    // the join plan, so this part pins the join path's own null handling
     val pairCfg = cfg.copy(discriminant = Seq("k", "tag"))
     val two = Seq[(Integer, String, String)]((1, null, "stored null tag"),
       (null, "a", "stored null k")) ++
@@ -518,6 +523,36 @@ class SnapshotStoreSpec extends SparkSpec
     agree(double, Seq[(Long, String)]((3L, "t2")).toDF("k", "tag"), 1L)
     SnapshotStore.read(spark, double._1).get
       .filter(col("k").isNull || col("tag").isNull).count() shouldBe 2L
+  }
+
+  test("delete holds only one integer-valued key column on the driver: a " +
+    "string or two-column discriminant runs the join plan's jobs") {
+    def jobs(root: String, keys: org.apache.spark.sql.DataFrame,
+             driverKeys: Int): Int =
+      JobTap.count(spark.sparkContext) { phase =>
+        phase("delete")(SnapshotStore.deleteGated(spark, root, keys,
+          driverKeys = driverKeys) shouldBe 1L)
+      }("delete")
+    def twins(tag: String, rows: org.apache.spark.sql.DataFrame,
+              c: UpsertConfig): (String, String) = {
+      val t = (tempRoot(s"graft_${tag}_a"), tempRoot(s"graft_${tag}_b"))
+      Seq(t._1, t._2).foreach(r =>
+        SnapshotStore.upsert(spark, r, rows, c, nBuckets = 4))
+      t
+    }
+    val held = twins("held", Seq((1, "a"), (2, "b")).toDF("id", "value"), cfg)
+    val driverJobs = jobs(held._1, Seq(1).toDF("id"), DriverKeys.MaxKeys)
+    val joinJobs = jobs(held._2, Seq(1).toDF("id"), 0)
+    driverJobs should be < joinJobs
+    val strings = twins("strkey",
+      Seq(("x", "a"), ("y", "b")).toDF("id", "value"), cfg)
+    jobs(strings._1, Seq("x").toDF("id"), DriverKeys.MaxKeys) shouldBe joinJobs
+    jobs(strings._2, Seq("x").toDF("id"), 0) shouldBe joinJobs
+    val pair = twins("pairkey", Seq((1, "t", "a"), (2, "t", "b"))
+      .toDF("k", "tag", "value"), cfg.copy(discriminant = Seq("k", "tag")))
+    jobs(pair._1, Seq((1, "t")).toDF("k", "tag"), DriverKeys.MaxKeys) shouldBe
+      joinJobs
+    jobs(pair._2, Seq((1, "t")).toDF("k", "tag"), 0) shouldBe joinJobs
   }
 
   test("streaming opt-out: a key stream applied per epoch through " +
